@@ -2459,6 +2459,11 @@ def sparql_select(quads: DataFrame, query: str,
 # CONSTRUCT
 # ---------------------------------------------------------------------------
 
+# string literals, IRIs and comments: text a keyword scan must skip
+_OPAQUE = re.compile(r'"(?:[^"\\\n]|\\.)*"|\'(?:[^\'\\\n]|\\.)*\''
+                     r'|<[^<>"{}|^`\\\s]*>|#[^\n]*')
+
+
 def _parse_construct(text: str):
     text = _strip_comments(text)
     if _UNSUPPORTED.search(text):
@@ -2483,7 +2488,8 @@ def _parse_construct(text: str):
             raise SparqlError("WHERE must be followed by a { group }")
         body, l = _take_braced(text, k)
         if re.search(r"\b(FILTER|OPTIONAL|UNION|GRAPH|BIND|VALUES|"
-                     r"MINUS|SELECT|SERVICE)\b|\{", body, re.IGNORECASE):
+                     r"MINUS|SELECT|SERVICE)\b|\{", _OPAQUE.sub(" ", body),
+                     re.IGNORECASE):
             raise SparqlError(
                 "CONSTRUCT WHERE shorthand allows only a basic graph "
                 "pattern (SPARQL 1.1 §10.2.3)")

@@ -18,16 +18,14 @@ Use: per-predicate distinct-object monitoring of a triple stream
 monitoring of an event stream — any unbounded stream whose distinct
 count must be queryable at any moment without a history rescan.
 
-State layout mirrors the fusion / quantiles / validation siblings:
-versioned parquet (``minima/v={batch_id}``) gated by ``_SUCCESS`` —
-deterministic in (state before batch_id, batch contents), so
-retry-idempotent under Structured Streaming's replay contract.
+State is versioned parquet (``minima/v={batch_id}``) kept by
+:mod:`kgloom.streaming.state`: deterministic in (state before
+batch_id, batch contents), so retry-idempotent under Structured
+Streaming's replay contract.
 """
 
 from __future__ import annotations
 
-import glob
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,32 +33,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..ops.sketch import kmv_estimate, kmv_minima
+from . import state
 
 
 def _ddl(keys: list[str]) -> str:
     return ", ".join(f"{k} string" for k in keys) + ", __f double"
 
 
-def _versions(state_path: str, before: Optional[int] = None) -> list:
-    out = []
-    for d in glob.glob(os.path.join(state_path, "minima", "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            out.append(v)
-    return sorted(out)
-
-
 def read_minima(spark: SparkSession, state_path: str, keys: list[str],
                 before: Optional[int] = None) -> Optional[DataFrame]:
-    versions = _versions(state_path, before)
-    if not versions:
-        return None
-    return spark.read.schema(_ddl(keys)).parquet(
-        os.path.join(state_path, "minima", f"v={versions[-1]}"))
+    return state.read_latest(spark, state_path, "minima", _ddl(keys),
+                             before)
 
 
 def fold_minima(prev: Optional[DataFrame], batch_df: DataFrame,
@@ -84,17 +67,12 @@ def distinct_batch(spark: SparkSession, state_path: str,
                    batch_df: DataFrame, batch_id: int, keys: list[str],
                    value: str, k: int = 64) -> None:
     """Fold one micro-batch into the minima state."""
+    batch_df, observed = state.observe(batch_df, n=F.count(F.lit(1)))
     prev = read_minima(spark, state_path, keys, before=batch_id)
-    new = fold_minima(prev, batch_df, keys, value, k=k)
-    new.write.mode("overwrite").parquet(
-        os.path.join(state_path, "minima", f"v={batch_id}"))
-    written = spark.read.schema(_ddl(keys)).parquet(
-        os.path.join(state_path, "minima", f"v={batch_id}"))
-    metrics = spark.createDataFrame(
-        [(batch_id, batch_df.count(), written.count())],
-        "batch_id long, n_batch_rows long, n_state_rows long")
-    metrics.write.mode("overwrite").parquet(
-        os.path.join(state_path, "metrics", f"batch={batch_id}"))
+    n_state = state.commit(fold_minima(prev, batch_df, keys, value, k=k),
+                           state_path, "minima", batch_id)
+    state.write_metrics(state_path, batch_id,
+                        n_batch_rows=observed()["n"], n_state_rows=n_state)
 
 
 def stream_kmv_distinct(spark: SparkSession, stream_df: DataFrame,

@@ -35,7 +35,8 @@ via ``foreachBatch``:
   materializes a snapshot when read amplification matters.
 - **metrics** (one row per batch): data/edge/map-size counts plus
   ``n_changed`` — how many alias rows this batch added or re-pointed —
-  the per-batch lineage record for merge auditing.
+  the per-batch lineage record for merge auditing.  The sizes cost no
+  job (:mod:`kgloom.streaming.state`); ``n_changed`` is one anti-join.
 
 The reference names streaming targets as enum values only
 (IOType::Kafka/Websocket, operator/src/lib.rs:362-370); this realizes
@@ -44,7 +45,6 @@ the incremental-materialization semantics those targets would need.
 
 from __future__ import annotations
 
-import glob
 import os
 from typing import Optional
 
@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops.reasoning import OWL_SAMEAS, rewrite_canonical
+from . import state
 
 TRIPLE_DDL = "subj string, pred string, obj string"
 _MAP_DDL = "node string, canonical string"
@@ -66,35 +67,11 @@ def read_triple_stream(spark: SparkSession, input_path: str,
             .parquet(input_path))
 
 
-def _map_versions(state_path: str, before: Optional[int] = None) -> list:
-    """Complete map versions (ascending).  Listing uses the local
-    filesystem (the sandbox's state store); for DFS-resident state the
-    one change needed is swapping this listing to the Hadoop
-    FileSystem API — the layout itself is filesystem-agnostic."""
-    versions = []
-    for d in glob.glob(os.path.join(state_path, "map", "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        # only versions whose write finished (parquet _SUCCESS marker):
-        # a batch that died mid-map-write leaves no marker and is
-        # recomputed from the last complete version on replay
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            versions.append(v)
-    return sorted(versions)
-
-
 def read_alias_map(spark: SparkSession, state_path: str,
                    before: Optional[int] = None) -> Optional[DataFrame]:
     """The newest complete alias-map version (< ``before`` if given),
     or None when no sameAs edge has been seen yet."""
-    versions = _map_versions(state_path, before)
-    if not versions:
-        return None
-    return spark.read.schema(_MAP_DDL).parquet(
-        os.path.join(state_path, "map", f"v={versions[-1]}"))
+    return state.read_latest(spark, state_path, "map", _MAP_DDL, before)
 
 
 def fold_alias_map(prev_map: Optional[DataFrame],
@@ -123,34 +100,30 @@ def fuse_batch(spark: SparkSession, state_path: str,
     """Fold one micro-batch into the incremental-fusion state.
     Deterministic in (state up to batch_id-1, batch contents) — safe
     under micro-batch replay."""
-    data = batch_df.where(F.col("pred") != same_as_pred)
-    data.write.mode("overwrite").parquet(
+    is_edge = F.col("pred") == same_as_pred
+    observed_df, observed = state.observe(
+        batch_df, n_data=F.count_if(~is_edge),
+        n_edges=F.count_if(is_edge & (F.col("subj") != F.col("obj"))))
+    observed_df.where(~is_edge).write.mode("overwrite").parquet(
         os.path.join(state_path, "raw", f"batch={batch_id}"))
 
-    batch_edges = (batch_df.where(F.col("pred") == same_as_pred)
+    batch_edges = (batch_df.where(is_edge)
                    .select(F.col("subj").alias("src"),
                            F.col("obj").alias("dst"))
                    .where(F.col("src") != F.col("dst")))
     prev = read_alias_map(spark, state_path, before=batch_id)
-    new_map = fold_alias_map(prev, batch_edges)
-    new_map.write.mode("overwrite").parquet(
-        os.path.join(state_path, "map", f"v={batch_id}"))
+    n_map = state.commit(fold_alias_map(prev, batch_edges), state_path,
+                         "map", batch_id)
 
-    # per-batch lineage metrics; n_changed = alias rows added or
-    # re-pointed by this batch (anti-join vs the previous map) — a
-    # cross-batch component merge shows up here as exactly the
-    # re-canonicalized member set
-    written = spark.read.schema(_MAP_DDL).parquet(
-        os.path.join(state_path, "map", f"v={batch_id}"))
-    changed = written if prev is None else \
-        written.join(prev, ["node", "canonical"], "left_anti")
-    metrics = spark.createDataFrame(
-        [(batch_id, data.count(), batch_edges.count(), written.count(),
-          changed.count())],
-        "batch_id long, n_data long, n_edges long, n_map long, "
-        "n_changed long")
-    metrics.write.mode("overwrite").parquet(
-        os.path.join(state_path, "metrics", f"batch={batch_id}"))
+    # n_changed = alias rows added or re-pointed by this batch (the map
+    # just written, anti-joined with the previous one) — a cross-batch
+    # component merge shows up here as exactly the re-canonicalized
+    # member set
+    n_changed = n_map if prev is None else (
+        read_alias_map(spark, state_path, before=batch_id + 1)
+        .join(prev, ["node", "canonical"], "left_anti").count())
+    state.write_metrics(state_path, batch_id, **observed(), n_map=n_map,
+                        n_changed=n_changed)
 
 
 def stream_fused_triples(spark: SparkSession, input_path: str,
@@ -191,7 +164,7 @@ def read_fused(spark: SparkSession, state_path: str) -> DataFrame:
 
 
 def read_fusion_metrics(spark: SparkSession, state_path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(state_path, "metrics"))
+    return state.read_metrics(spark, state_path)
 
 
 def compact_fused(spark: SparkSession, state_path: str,

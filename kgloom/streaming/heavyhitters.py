@@ -24,22 +24,21 @@ verify pass over the summary's candidate set turns the answer exact —
 the same prune-then-verify shape as :func:`kgloom.ops.sketch.
 heavy_hitters`, with the fold replacing the per-partition pass.
 
-State layout mirrors the distinct/quantiles/fusion/validation
-siblings: versioned parquet (``summ/v={batch_id}`` and group totals
-``tot/v={batch_id}``) gated by ``_SUCCESS`` — deterministic in (state
-before batch_id, batch contents), so retry-idempotent under
-Structured Streaming's replay contract.
+State is versioned parquet (``summ/v={batch_id}`` and group totals
+``tot/v={batch_id}``) kept by :mod:`kgloom.streaming.state` —
+deterministic in (state before batch_id, batch contents), so
+retry-idempotent under Structured Streaming's replay contract.
 """
 
 from __future__ import annotations
 
-import glob
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from . import state
 
 
 def _summ_ddl(keys: list[str], value: str) -> str:
@@ -49,20 +48,6 @@ def _summ_ddl(keys: list[str], value: str) -> str:
 
 def _tot_ddl(keys: list[str]) -> str:
     return ", ".join(f"{k} string" for k in keys) + ", n_total bigint"
-
-
-def _versions(state_path: str, sub: str,
-              before: Optional[int] = None) -> list:
-    out = []
-    for d in glob.glob(os.path.join(state_path, sub, "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            out.append(v)
-    return sorted(out)
 
 
 def mg_compress(counters: DataFrame, keys: list[str], value: str,
@@ -101,20 +86,14 @@ def fold_summary(prev: Optional[DataFrame], batch_df: DataFrame,
 def read_summary(spark: SparkSession, state_path: str, keys: list[str],
                  value: str,
                  before: Optional[int] = None) -> Optional[DataFrame]:
-    versions = _versions(state_path, "summ", before)
-    if not versions:
-        return None
-    return spark.read.schema(_summ_ddl(keys, value)).parquet(
-        os.path.join(state_path, "summ", f"v={versions[-1]}"))
+    return state.read_latest(spark, state_path, "summ",
+                             _summ_ddl(keys, value), before)
 
 
 def _read_totals(spark: SparkSession, state_path: str, keys: list[str],
                  before: Optional[int] = None) -> Optional[DataFrame]:
-    versions = _versions(state_path, "tot", before)
-    if not versions:
-        return None
-    return spark.read.schema(_tot_ddl(keys)).parquet(
-        os.path.join(state_path, "tot", f"v={versions[-1]}"))
+    return state.read_latest(spark, state_path, "tot", _tot_ddl(keys),
+                             before)
 
 
 def heavy_batch(spark: SparkSession, state_path: str,
@@ -122,9 +101,8 @@ def heavy_batch(spark: SparkSession, state_path: str,
                 value: str, m: int = 64) -> None:
     """Fold one micro-batch into the summary + totals state."""
     prev = read_summary(spark, state_path, keys, value, before=batch_id)
-    new = fold_summary(prev, batch_df, keys, value, m=m)
-    new.write.mode("overwrite").parquet(
-        os.path.join(state_path, "summ", f"v={batch_id}"))
+    state.commit(fold_summary(prev, batch_df, keys, value, m=m),
+                 state_path, "summ", batch_id)
     # null values never enter the summary, so they are excluded from
     # the totals too — keeps the err bound tight and the guarantee
     # threshold (> n_total/(m+1)) consistent with what was inserted
@@ -134,8 +112,7 @@ def heavy_batch(spark: SparkSession, state_path: str,
     if ptot is not None:
         tot = (tot.unionByName(ptot).groupBy(*keys)
                .agg(F.sum("n_total").alias("n_total")))
-    tot.write.mode("overwrite").parquet(
-        os.path.join(state_path, "tot", f"v={batch_id}"))
+    state.commit(tot, state_path, "tot", batch_id)
 
 
 def stream_mg_heavy(spark: SparkSession, stream_df: DataFrame,

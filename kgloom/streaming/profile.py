@@ -23,22 +23,19 @@ top value the MG winner with its lower bound + error — the honest
 streaming substitute for the batch profile's exact verify pass, which
 would need a history rescan.
 
-State layout mirrors the sibling monitors: versioned parquet
-(``cnt/ minima/ summ/ tot/`` under ``v={batch_id}``), ``_SUCCESS``-
-gated, deterministic in (prior state, batch) → retry-idempotent under
+State is four versioned parquet tables (``cnt/ minima/ summ/ tot/``
+under ``v={batch_id}``) kept by :mod:`kgloom.streaming.state`,
+deterministic in (prior state, batch) → retry-idempotent under
 Structured Streaming's replay contract.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import state
 from .distinct import fold_minima
 from .heavyhitters import fold_summary
 
@@ -56,29 +53,6 @@ def _melt(batch_df: DataFrame, cols: list[str]) -> DataFrame:
     return batch_df.select(pairs).select("p.c", "p.v")
 
 
-def _versions(state_path: str, sub: str,
-              before: Optional[int] = None) -> list:
-    out = []
-    for d in glob.glob(os.path.join(state_path, sub, "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            out.append(v)
-    return sorted(out)
-
-
-def _read(spark: SparkSession, state_path: str, sub: str, ddl: str,
-          before: Optional[int] = None) -> Optional[DataFrame]:
-    versions = _versions(state_path, sub, before)
-    if not versions:
-        return None
-    return spark.read.schema(ddl).parquet(
-        os.path.join(state_path, sub, f"v={versions[-1]}"))
-
-
 def profile_batch(spark: SparkSession, state_path: str,
                   batch_df: DataFrame, batch_id: int, cols: list[str],
                   k: int = 64, m: int = 64) -> None:
@@ -90,29 +64,31 @@ def profile_batch(spark: SparkSession, state_path: str,
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(F.col("v").isNull(), 1).otherwise(0))
          .alias("n_nulls"))
-    pcnt = _read(spark, state_path, "cnt", _CNT_DDL, before=batch_id)
+    pcnt = state.read_latest(spark, state_path, "cnt", _CNT_DDL,
+                             before=batch_id)
     if pcnt is not None:
         cnt = (cnt.unionByName(pcnt).groupBy("c")
                .agg(F.sum("n_rows").alias("n_rows"),
                     F.sum("n_nulls").alias("n_nulls")))
-    cnt.write.mode("overwrite").parquet(
-        os.path.join(state_path, "cnt", f"v={batch_id}"))
+    state.commit(cnt, state_path, "cnt", batch_id)
 
-    pmin = _read(spark, state_path, "minima", _MIN_DDL, before=batch_id)
-    fold_minima(pmin, nn, ["c"], "v", k=k).write.mode("overwrite") \
-        .parquet(os.path.join(state_path, "minima", f"v={batch_id}"))
+    pmin = state.read_latest(spark, state_path, "minima", _MIN_DDL,
+                             before=batch_id)
+    state.commit(fold_minima(pmin, nn, ["c"], "v", k=k), state_path,
+                 "minima", batch_id)
 
-    psum = _read(spark, state_path, "summ", _SUMM_DDL, before=batch_id)
-    fold_summary(psum, nn, ["c"], "v", m=m).write.mode("overwrite") \
-        .parquet(os.path.join(state_path, "summ", f"v={batch_id}"))
+    psum = state.read_latest(spark, state_path, "summ", _SUMM_DDL,
+                             before=batch_id)
+    state.commit(fold_summary(psum, nn, ["c"], "v", m=m), state_path,
+                 "summ", batch_id)
 
     tot = nn.groupBy("c").agg(F.count(F.lit(1)).alias("n_total"))
-    ptot = _read(spark, state_path, "tot", _TOT_DDL, before=batch_id)
+    ptot = state.read_latest(spark, state_path, "tot", _TOT_DDL,
+                             before=batch_id)
     if ptot is not None:
         tot = (tot.unionByName(ptot).groupBy("c")
                .agg(F.sum("n_total").alias("n_total")))
-    tot.write.mode("overwrite").parquet(
-        os.path.join(state_path, "tot", f"v={batch_id}"))
+    state.commit(tot, state_path, "tot", batch_id)
 
 
 def stream_profile(spark: SparkSession, stream_df: DataFrame,
@@ -137,12 +113,12 @@ def read_profile(spark: SparkSession, state_path: str, k: int = 64,
                  m: int = 64) -> DataFrame:
     """Current per-column statistics off the latest state —
     O(k·columns + m·columns), never touches history."""
-    cnt = _read(spark, state_path, "cnt", _CNT_DDL)
+    cnt = state.read_latest(spark, state_path, "cnt", _CNT_DDL)
     if cnt is None:
         raise ValueError(f"no complete profile state under {state_path}")
-    minima = _read(spark, state_path, "minima", _MIN_DDL)
-    summ = _read(spark, state_path, "summ", _SUMM_DDL)
-    tot = _read(spark, state_path, "tot", _TOT_DDL)
+    minima = state.read_latest(spark, state_path, "minima", _MIN_DDL)
+    summ = state.read_latest(spark, state_path, "summ", _SUMM_DDL)
+    tot = state.read_latest(spark, state_path, "tot", _TOT_DDL)
 
     agg = minima.groupBy("c").agg(
         F.count(F.lit(1)).alias("n_minima"), F.max("__f").alias("f_k"))

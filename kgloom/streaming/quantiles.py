@@ -13,10 +13,8 @@ what makes a quantile monitor viable on an unbounded 10^12-turn
 stream: a per-group p99 of (say) turn length is always one
 ``read_quantiles`` away, no history rescan.
 
-State layout mirrors fusion.py: versioned parquet directories
-(``cent/v={batch_id}``) whose ``_SUCCESS`` marker gates visibility, so
-a batch that dies mid-write is recomputed from the last complete
-version on replay — ``sketch_batch`` is deterministic in
+State is versioned parquet (``cent/v={batch_id}``) kept by
+:mod:`kgloom.streaming.state`: ``sketch_batch`` is deterministic in
 (state up to batch_id-1, batch contents) and therefore retry-
 idempotent under Structured Streaming's replay contract.
 
@@ -28,14 +26,13 @@ bound is pinned in ``tests/test_streaming.py``.
 
 from __future__ import annotations
 
-import glob
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
+from pyspark.sql import functions as F
 
 from ..ops.sketch import kll_extract, kll_merge, kll_sketch
+from . import state
 
 _CENT_DDL_SUFFIX = "bucket int, cnt bigint, vsum bigint, " \
     "lo bigint, hi bigint, avg double"
@@ -45,28 +42,12 @@ def _cent_ddl(keys: list[str]) -> str:
     return ", ".join(f"{k} string" for k in keys) + ", " + _CENT_DDL_SUFFIX
 
 
-def _versions(state_path: str, before: Optional[int] = None) -> list:
-    versions = []
-    for d in glob.glob(os.path.join(state_path, "cent", "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            versions.append(v)
-    return sorted(versions)
-
-
 def read_centroids(spark: SparkSession, state_path: str, keys: list[str],
                    before: Optional[int] = None) -> Optional[DataFrame]:
     """The newest complete centroid version (< ``before`` if given),
     or None before the first batch."""
-    versions = _versions(state_path, before)
-    if not versions:
-        return None
-    return spark.read.schema(_cent_ddl(keys)).parquet(
-        os.path.join(state_path, "cent", f"v={versions[-1]}"))
+    return state.read_latest(spark, state_path, "cent", _cent_ddl(keys),
+                             before)
 
 
 def sketch_batch(spark: SparkSession, state_path: str,
@@ -74,24 +55,18 @@ def sketch_batch(spark: SparkSession, state_path: str,
                  value: str, k: int = 64, n_salts: int = 8) -> None:
     """Fold one micro-batch into the centroid state:
     ``cent_k = Merge(cent_{k-1} ∪ Sketch(batch_k))``."""
+    batch_df, observed = state.observe(batch_df, n=F.count(F.lit(1)))
     batch_cent = kll_merge(
         kll_sketch(batch_df, keys, value, k=k, n_salts=n_salts), keys, k=k)
     prev = read_centroids(spark, state_path, keys, before=batch_id)
     bag = batch_cent.select(*keys, "cnt", "vsum", "lo", "hi")
     if prev is not None:
         bag = bag.unionByName(prev.select(*keys, "cnt", "vsum", "lo", "hi"))
-    new_cent = kll_merge(bag, keys, k=k)
-    new_cent.write.mode("overwrite").parquet(
-        os.path.join(state_path, "cent", f"v={batch_id}"))
-    # per-batch lineage metrics, fusion.py-style
-    written = spark.read.schema(_cent_ddl(keys)).parquet(
-        os.path.join(state_path, "cent", f"v={batch_id}"))
-    n_total = written.agg(F.sum("cnt")).collect()[0][0] or 0
-    metrics = spark.createDataFrame(
-        [(batch_id, batch_df.count(), written.count(), int(n_total))],
-        "batch_id long, n_rows long, n_centroids long, n_total long")
-    metrics.write.mode("overwrite").parquet(
-        os.path.join(state_path, "metrics", f"batch={batch_id}"))
+    new_cent, total = state.observe(kll_merge(bag, keys, k=k),
+                                    n=F.sum("cnt"))
+    n_cent = state.commit(new_cent, state_path, "cent", batch_id)
+    state.write_metrics(state_path, batch_id, n_rows=observed()["n"],
+                        n_centroids=n_cent, n_total=total()["n"] or 0)
 
 
 def stream_kll(spark: SparkSession, stream_df: DataFrame, state_path: str,

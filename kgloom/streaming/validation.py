@@ -19,31 +19,29 @@ nothing else (every access filters on those constants), so::
 equals batch validation over everything streamed so far — by
 construction, because distinct-union of slices IS the slice of the
 distinct union (pinned stream==batch in tests, including retraction
-across batches).  Per-trigger cost is O(|state| + |batch|) — one
-distinct on the triple key; state is bounded by the shape-relevant
-portion of the graph, the information-theoretic floor for exact
-cardinality constraints (minCount needs exact per-focus counts).
-The report itself is computed at READ time, not per trigger — the
-fusion module's read-time-rewrite discipline.
+across batches).  A trigger launches only the jobs of the distinct
+on the triple key that writes the new state, O(|state| + |batch|);
+its metrics row counts the batch inside that write and the state
+from the written parquet footers.  State is bounded by the shape-relevant portion of
+the graph, the information-theoretic floor for exact cardinality
+constraints (minCount needs exact per-focus counts).  The report
+itself is computed at READ time, not per trigger — the fusion
+module's read-time-rewrite discipline.
 
-State layout mirrors fusion/quantiles: versioned parquet
-(``slice/v={batch_id}``) gated by ``_SUCCESS``, so a batch that dies
-mid-write replays from the last complete version — ``validate_batch``
-is deterministic in (state before batch_id, batch contents) and
-therefore retry-idempotent under Structured Streaming's replay
-contract.
+State is versioned parquet (``slice/v={batch_id}``) kept by
+:mod:`kgloom.streaming.state`, so ``validate_batch`` is
+retry-idempotent under Structured Streaming's replay contract.
 """
 
 from __future__ import annotations
 
-import glob
-import os
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops.reasoning import RDF_TYPE, NodeShape, shacl_validate
+from . import state
 
 TRIPLE_DDL = "subj string, pred string, obj string"
 
@@ -70,28 +68,12 @@ def relevant_slice(triples: DataFrame,
     return triples.where(cond).select("subj", "pred", "obj")
 
 
-def _versions(state_path: str, before: Optional[int] = None) -> list:
-    out = []
-    for d in glob.glob(os.path.join(state_path, "slice", "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            out.append(v)
-    return sorted(out)
-
-
 def read_state(spark: SparkSession, state_path: str,
                before: Optional[int] = None) -> Optional[DataFrame]:
     """The newest complete slice version (< ``before`` if given), or
     None before the first batch."""
-    versions = _versions(state_path, before)
-    if not versions:
-        return None
-    return spark.read.schema(TRIPLE_DDL).parquet(
-        os.path.join(state_path, "slice", f"v={versions[-1]}"))
+    return state.read_latest(spark, state_path, "slice", TRIPLE_DDL,
+                             before)
 
 
 def validate_batch(spark: SparkSession, state_path: str,
@@ -99,20 +81,14 @@ def validate_batch(spark: SparkSession, state_path: str,
                    shapes: Sequence[NodeShape]) -> None:
     """Fold one micro-batch into the validation state:
     ``state_k = distinct(state_{k-1} ∪ slice(batch_k))``."""
+    batch_df, observed = state.observe(batch_df, n=F.count(F.lit(1)))
     sl = relevant_slice(batch_df, shapes)
     prev = read_state(spark, state_path, before=batch_id)
     if prev is not None:
         sl = sl.unionByName(prev)
-    new_state = sl.distinct()
-    new_state.write.mode("overwrite").parquet(
-        os.path.join(state_path, "slice", f"v={batch_id}"))
-    written = spark.read.schema(TRIPLE_DDL).parquet(
-        os.path.join(state_path, "slice", f"v={batch_id}"))
-    metrics = spark.createDataFrame(
-        [(batch_id, batch_df.count(), written.count())],
-        "batch_id long, n_batch_rows long, n_state_rows long")
-    metrics.write.mode("overwrite").parquet(
-        os.path.join(state_path, "metrics", f"batch={batch_id}"))
+    n_state = state.commit(sl.distinct(), state_path, "slice", batch_id)
+    state.write_metrics(state_path, batch_id,
+                        n_batch_rows=observed()["n"], n_state_rows=n_state)
 
 
 def stream_shacl(spark: SparkSession, stream_df: DataFrame,
@@ -139,12 +115,8 @@ def read_report(spark: SparkSession, state_path: str,
     """The CURRENT validation report — identical to batch
     ``shacl_validate`` over everything streamed so far, including
     violations retracted by later batches."""
-    state = read_state(spark, state_path)
-    if state is None:
+    current = read_state(spark, state_path)
+    if current is None:
         raise ValueError(f"no complete validation state under {state_path}")
-    return shacl_validate(state, tuple(shapes))
+    return shacl_validate(current, tuple(shapes))
 
-
-def read_validation_metrics(spark: SparkSession,
-                            state_path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(state_path, "metrics"))

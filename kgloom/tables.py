@@ -33,6 +33,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def footer_counts(data_path: str) -> dict[str, int]:
+    """Row count of every parquet part file under ``data_path``, read
+    from the file footers — no Spark job."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    out: dict[str, int] = {}
+    for f in sorted(glob.glob(os.path.join(data_path, "**", "part-*"),
+                              recursive=True)):
+        if f.endswith(".crc"):
+            continue
+        try:
+            out[os.path.relpath(f, data_path)] = \
+                pq.ParquetFile(f).metadata.num_rows
+        except (OSError, pa.ArrowException):  # not a parquet file
+            continue
+    return out
+
+
 @dataclass
 class Snapshot:
     table: str
@@ -173,7 +193,7 @@ class SnapshotStore:
         snap_id = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
         snap_path = os.path.join(self._table_dir(table), snap_id)
         os.makedirs(snap_path, exist_ok=True)
-        per_partition = self._footer_counts(path)
+        per_partition = footer_counts(path)
         manifest = {
             "table": table,
             "snapshot_id": snap_id,
@@ -210,7 +230,7 @@ class SnapshotStore:
 
         # per-file row counts straight from parquet footers (no extra
         # Spark job) — the same granularity Iceberg manifests record
-        per_partition = self._footer_counts(data_path)
+        per_partition = footer_counts(data_path)
         manifest = {
             "table": table,
             "snapshot_id": snap_id,
@@ -223,22 +243,6 @@ class SnapshotStore:
             "metrics": extra_metrics or {},
         }
         return self._commit(table, snap_id, manifest)
-
-    @staticmethod
-    def _footer_counts(data_path: str) -> dict[str, int]:
-        import glob
-        import pyarrow.parquet as pq
-        out: dict[str, int] = {}
-        for f in sorted(glob.glob(os.path.join(data_path, "**", "part-*"),
-                                  recursive=True)):
-            if f.endswith(".crc"):
-                continue
-            try:
-                out[os.path.relpath(f, data_path)] = \
-                    pq.ParquetFile(f).metadata.num_rows
-            except Exception:
-                continue
-        return out
 
     def snapshots(self, table: str) -> list[str]:
         d = self._table_dir(table)

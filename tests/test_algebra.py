@@ -18,6 +18,8 @@ from kgloom.algebra import (
 )
 from kgloom.plan import Plan, PlanError, join
 
+from conftest import REFERENCE, requires_reference
+
 
 def test_template_attribute_extraction():
     # mirrors rml_model/term_map.rs:24-30 semantics
@@ -126,6 +128,7 @@ def test_plan_json_roundtrip_shape():
     assert doc["edges"][0]["from"] == "Source_0"
 
 
+@requires_reference
 def test_plan_json_round_trip_executes(spark):
     """Plans are data in BOTH directions (reference serde derives
     Deserialize too): compile a golden-corpus mapping, serialize the
@@ -134,7 +137,7 @@ def test_plan_json_round_trip_executes(spark):
     from kgloom.exec.binder import SparkBinder, write_sinks
     from kgloom.plan import PlanGraph
 
-    case = "/root/reference/resources/csv-testcases/RMLTC0009b-CSV"
+    case = f"{REFERENCE}/resources/csv-testcases/RMLTC0009b-CSV"
     compiled = compile_rml(open(f"{case}/mapping.ttl").read())
     text = compiled.graph.to_json_string()
 

@@ -9,7 +9,9 @@ import shutil
 import subprocess
 import sys
 
-CASE = "/root/reference/resources/csv-testcases/RMLTC0000-CSV"
+from conftest import REFERENCE, requires_reference
+
+CASE = f"{REFERENCE}/resources/csv-testcases/RMLTC0000-CSV"
 
 
 def _copy_case(tmp_path, case=CASE):
@@ -18,6 +20,7 @@ def _copy_case(tmp_path, case=CASE):
     return dst
 
 
+@requires_reference
 def test_cli_file_emits_plan_artifacts(tmp_path):
     """Subprocess end-to-end: plan emission needs no Spark session."""
     dst = _copy_case(tmp_path)
@@ -33,10 +36,10 @@ def test_cli_file_emits_plan_artifacts(tmp_path):
             "TargetOp"} <= types
 
 
+@requires_reference
 def test_cli_folder_mode(tmp_path):
     _copy_case(tmp_path)
-    _copy_case(tmp_path,
-               "/root/reference/resources/csv-testcases/RMLTC0001a-CSV")
+    _copy_case(tmp_path, f"{REFERENCE}/resources/csv-testcases/RMLTC0001a-CSV")
     r = subprocess.run(
         [sys.executable, "-m", "kgloom", "folder", str(tmp_path)],
         capture_output=True, text=True, cwd="/root/repo")
@@ -45,12 +48,13 @@ def test_cli_folder_mode(tmp_path):
     assert len(made) == 2
 
 
+@requires_reference
 def test_cli_execute_writes_nquads(spark, tmp_path):
     """--execute path driven in-process against the session fixture
     (the subprocess variant would spin a second JVM)."""
     from kgloom.cli import process_file
     dst = _copy_case(
-        tmp_path, "/root/reference/resources/csv-testcases/RMLTC0001a-CSV")
+        tmp_path, f"{REFERENCE}/resources/csv-testcases/RMLTC0001a-CSV")
     ok = process_file(str(dst / "mapping.ttl"), execute=True, spark=spark)
     assert ok
     out = (dst / "mapping.out.nq").read_text().strip().splitlines()

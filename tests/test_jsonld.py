@@ -102,3 +102,23 @@ def test_document_lines_and_determinism(spark):
                jsonld_document_lines(df.repartition(7)).collect())
     assert a == b
     assert len(a) == 2  # one line per subject
+
+
+def test_ntriples_only_escapes_emit_valid_json(spark):
+    """\\' and \\UXXXXXXXX are N-Triples escapes JSON lacks: every
+    emitted line still parses, to the literal's own characters,
+    whatever the literal's kind; an escaped backslash before ' or U
+    stays an escaped backslash."""
+    s, p = "<http://ex.org/s>", "<http://ex.org/p>"
+    objs = {
+        '"it\\\'s \\U0001F600"': "it's \U0001F600",
+        '"caf\\U000000E9 \\\'x\\\'"@fr': "café 'x'",
+        '"\\U0010FFFF\\\'"^^<http://ex.org/dt>': "\U0010FFFF'",
+        '"a\\\\\' \\\\U0001F600"': "a\\' \\U0001F600",
+    }
+    df = spark.createDataFrame([(s, p, o) for o in objs],
+                               ["subj", "pred", "obj"])
+    lines = [r.value for r in jsonld_document_lines(df).collect()]
+    assert len(lines) == 1
+    values = json.loads(lines[0])["http://ex.org/p"]
+    assert sorted(v["@value"] for v in values) == sorted(objs.values())

@@ -9,6 +9,8 @@ no Python evaluation nodes in the default triple hot path.
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REFERENCE, requires_reference
+
 
 def explain_str(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -53,6 +55,7 @@ def test_similarity_broadcasts_query_side(spark):
     assert "Broadcast" in plan
 
 
+@requires_reference
 def test_scan_sharing_across_branches(spark):
     """Two TriplesMaps over one logical source bind to ONE DataFrame
     (scan sharing — reference does this at plan level,
@@ -78,7 +81,7 @@ def test_scan_sharing_across_branches(spark):
 """
     compiled = compile_rml(ttl)
     binder = SparkBinder(
-        spark, base_dir="/root/reference/resources/csv-testcases/RMLTC0008b-CSV")
+        spark, base_dir=f"{REFERENCE}/resources/csv-testcases/RMLTC0008b-CSV")
     seen = {}
     orig = binder._bind_source
 

@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from kgloom.engine import nquads, run_rml
 
+from conftest import REFERENCE, requires_reference
+
 RML_PREAMBLE = """
 @prefix rr: <http://www.w3.org/ns/r2rml#> .
 @prefix rml: <http://semweb.mmlab.be/ns/rml#> .
@@ -81,10 +83,11 @@ def test_fno_function_map(spark, tmp_path):
     assert '<http://ex.com/1> <http://xmlns.com/foaf/0.1/name> "VENUS" .' in lines
 
 
+@requires_reference
 def test_sql_logical_source(spark):
     """RML SQLQuery logical source (rr:SQL2008 + rml:query) against the
     reference's films.sqlite fixture — reference IR formats.rs:5-12."""
-    data = "/root/reference/translator/resources/test/shexml/data"
+    data = f"{REFERENCE}/translator/resources/test/shexml/data"
     ttl = RML_PREAMBLE + """
 <TM> a rr:TriplesMap;
   rml:logicalSource [ rml:source "jdbc:sqlite:%s/films.sqlite";

@@ -9,7 +9,10 @@ import pytest
 from kgloom.engine import nquads, run_shexml
 from kgloom.shexml.parser import parse_shexml
 
-BASE = "/root/reference/translator/resources/test/shexml"
+from conftest import REFERENCE, requires_reference
+
+pytestmark = requires_reference
+BASE = f"{REFERENCE}/translator/resources/test/shexml"
 DATA = f"{BASE}/data"
 
 

@@ -10,6 +10,8 @@ import pytest
 from kgloom.algebra import DataFormat, IOType, TargetOp
 from kgloom.exec.binder import SinkResult, write_sinks
 
+from conftest import REFERENCE, requires_reference
+
 ROWS = [
     ("<http://ex.org/a>", "<http://ex.org/p>", '"x"', None),
     ("<http://ex.org/b>", "<http://ex.org/p>", '"y"',
@@ -59,6 +61,7 @@ def test_jsonld_file_sink_writes_ndjson(spark, quads, tmp_path):
                                         "http://ex.org/b"}
 
 
+@requires_reference
 def test_serializer_gate_accepts_csv_json(spark):
     """SerializerOp binds with CSV/JSON formats (sink-encoding
     formats); a genuinely unknown format still raises."""
@@ -67,7 +70,7 @@ def test_serializer_gate_accepts_csv_json(spark):
     from kgloom.engine import compile_rml
     from kgloom.exec.binder import BindError, SparkBinder
 
-    case = "/root/reference/resources/csv-testcases/RMLTC0000-CSV"
+    case = f"{REFERENCE}/resources/csv-testcases/RMLTC0000-CSV"
     with open(f"{case}/mapping.ttl") as f:
         plan = compile_rml(f.read())
     for fmt, ok in [(DataFormat.CSV, True), (DataFormat.JSON, True),

@@ -1889,6 +1889,21 @@ def test_construct_where_shorthand(quads):
     assert a == b and len(a) > 0
 
 
+def test_construct_where_shorthand_keywords_inside_terms(spark):
+    """Keywords and braces inside a literal or an IRI are content: the
+    shorthand's plain-BGP check must not see them."""
+    from kgloom.sparql import sparql_construct
+    row = ("<http://ex.org/s>", "<http://ex.org/p#FILTER>",
+           '"a FILTER { b"', None)
+    df = spark.createDataFrame(
+        [row, ("<http://ex.org/s>", "<http://ex.org/p#FILTER>", '"c"', None)],
+        "subj string, pred string, obj string, graph string")
+    got = sparql_construct(df, """
+        CONSTRUCT WHERE { ?s <http://ex.org/p#FILTER> "a FILTER { b" }
+    """).collect()
+    assert [tuple(r)[:3] for r in got] == [row[:3]]
+
+
 def test_construct_where_shorthand_rejects_non_bgp(quads):
     from kgloom.sparql import SparqlError, sparql_construct
     with pytest.raises(SparqlError, match="basic graph pattern"):

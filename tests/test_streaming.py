@@ -472,3 +472,125 @@ def test_stream_profile_stats(spark, tmp_path):
     a = sorted(map(tuple, read_profile(spark, state, k=K, m=8).collect()))
     b = sorted(map(tuple, read_profile(spark, state2, k=K, m=8).collect()))
     assert a == b
+
+
+def test_fold_metrics_rows_equal_independent_counts(spark, tmp_path):
+    """Each fold's metrics row — counted inside its state write and from
+    the written parquet footers, with no job of its own — equals what
+    Spark counts directly: batch rows, state rows and, for the KLL fold,
+    the total weight.  The empty last batch is the case where Spark
+    optimizes the observed batch away.  A replayed batch id replaces its
+    row instead of adding a second one."""
+    import random
+
+    from kgloom.ops.reasoning import (OWL_SAMEAS, RDF_TYPE, NodeShape,
+                                      PropertyShape)
+    from kgloom.streaming.distinct import distinct_batch
+    from kgloom.streaming.fusion import fuse_batch
+    from kgloom.streaming.quantiles import sketch_batch
+    from kgloom.streaming.state import read_metrics
+    from kgloom.streaming.validation import validate_batch
+    rng = random.Random(20261017)
+    preds = ["<p:email>", "<p:knows>", RDF_TYPE, OWL_SAMEAS]
+
+    def triples(n):
+        return [(f"<e:{rng.randrange(40)}>", rng.choice(preds),
+                 f"<e:{rng.randrange(40)}>") for _ in range(n)]
+    tri = [spark.createDataFrame(rows, "subj string, pred string, obj string")
+           for rows in (triples(300), triples(300), [])]
+    num = [spark.createDataFrame(rows, "g string, v long") for rows in (
+        [(rng.choice("ab"), rng.randrange(1000)) for _ in range(500)],
+        [(rng.choice("ab"), rng.randrange(1000)) for _ in range(500)], [])]
+    shapes = (NodeShape(name="S", target_class="<e:1>", properties=(
+        PropertyShape(path="<p:email>", min_count=1),
+        PropertyShape(path="<p:knows>", class_iri="<e:2>"))),)
+
+    def fold_all(fold, state, batches):
+        for i, b in enumerate(batches):
+            fold(spark, state, b, i)
+        rows = read_metrics(spark, state).collect()
+        assert sorted(r.batch_id for r in rows) == [0, 1, 2]
+        return {r.batch_id: r for r in rows}
+
+    def version(state, table, i):
+        return spark.read.parquet(f"{state}/{table}/v={i}")
+
+    st = str(tmp_path / "shacl")
+    got = fold_all(lambda *a: validate_batch(*a, shapes), st, tri)
+    for i, b in enumerate(tri):
+        assert (got[i].n_batch_rows, got[i].n_state_rows) == (
+            b.count(), version(st, "slice", i).count()), i
+
+    st = str(tmp_path / "kmv")
+    got = fold_all(lambda *a: distinct_batch(*a, ["pred"], "subj", k=8),
+                   st, tri)
+    for i, b in enumerate(tri):
+        assert (got[i].n_batch_rows, got[i].n_state_rows) == (
+            b.count(), version(st, "minima", i).count()), i
+    # every fold writes its row through the same writer: a replayed
+    # batch id replaces that row
+    distinct_batch(spark, st, tri[1], 1, ["pred"], "subj", k=8)
+    assert sorted(tuple(r) for r in read_metrics(spark, st).collect()) \
+        == sorted(tuple(r) for r in got.values())
+
+    st = str(tmp_path / "kll")
+    got = fold_all(lambda *a: sketch_batch(*a, ["g"], "v", k=8), st, num)
+    for i, b in enumerate(num):
+        cent = version(st, "cent", i)
+        assert (got[i].n_rows, got[i].n_centroids, got[i].n_total) == (
+            b.count(), cent.count(), cent.agg(F.sum("cnt")).first()[0]), i
+
+    st = str(tmp_path / "fuse")
+    got = fold_all(fuse_batch, st, tri)
+    for i, b in enumerate(tri):
+        cur = version(st, "map", i)
+        changed = cur if i == 0 else cur.join(
+            version(st, "map", i - 1), ["node", "canonical"], "left_anti")
+        same = F.col("pred") == OWL_SAMEAS
+        assert (got[i].n_data, got[i].n_edges, got[i].n_map,
+                got[i].n_changed) == (
+            b.where(~same).count(),
+            b.where(same & (F.col("subj") != F.col("obj"))).count(),
+            cur.count(), changed.count()), i
+
+
+def test_distinct_batch_launches_only_its_state_write(spark, tmp_path):
+    """A KMV trigger runs exactly the Spark jobs of writing its folded
+    state: its metrics row adds none."""
+    from kgloom.streaming.distinct import (distinct_batch, fold_minima,
+                                           read_minima)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    batches = [spark.createDataFrame(
+        [(f"g{i % 3}", f"v{i * (b + 1)}") for i in range(200)],
+        "g string, v string") for b in range(2)]
+    state = str(tmp_path / "kmv")
+    distinct_batch(spark, state, batches[0], 0, ["g"], "v", k=8)
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+            # listener events arrive in order: once a later marker job
+            # shows as finished, every job of ``group`` is visible
+            sc.setJobGroup(group + ":end", "")
+            sc.parallelize([0], 1).count()
+            deadline = time.time() + 60
+            while not any(
+                    tracker.getJobInfo(j).status == "SUCCEEDED"
+                    for j in tracker.getJobIdsForGroup(group + ":end")
+                    if tracker.getJobInfo(j) is not None):
+                assert time.time() < deadline, "job events never arrived"
+                time.sleep(0.05)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    write_only = jobs("kmv-write", lambda: fold_minima(
+        read_minima(spark, state, ["g"], before=1), batches[1], ["g"], "v",
+        k=8).write.mode("overwrite").parquet(str(tmp_path / "alone")))
+    trigger = jobs("kmv-trigger", lambda: distinct_batch(
+        spark, state, batches[1], 1, ["g"], "v", k=8))
+    assert write_only > 0
+    assert trigger == write_only

@@ -8,6 +8,8 @@ import pytest
 from kgloom.rml.extract import RmlValidationError, extract_document
 from kgloom.rml.turtle import parse_turtle, parse_turtle_file
 
+from conftest import REFERENCE, requires_reference
+
 SAMPLE = """
 @prefix rr: <http://www.w3.org/ns/r2rml#> .
 @prefix rml: <http://semweb.mmlab.be/ns/rml#> .
@@ -45,9 +47,10 @@ def test_parse_collections_and_nested_bnodes():
     assert len(g.triples) >= 5  # s-p-bnode, bnode-q-list, 2×first, 2×rest
 
 
+@requires_reference
 def test_all_corpus_mappings_parse():
     files = sorted(glob.glob(
-        "/root/reference/resources/csv-testcases/*/mapping.ttl"))
+        f"{REFERENCE}/resources/csv-testcases/*/mapping.ttl"))
     assert len(files) == 39
     for f in files:
         parse_turtle_file(f)
