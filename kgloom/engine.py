@@ -14,10 +14,19 @@ from typing import Callable, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .exec.binder import SparkBinder, write_sinks
+from .exec.binder import SinkResult, SparkBinder, write_file_sinks
 from .rml.extract import extract_document
 from .rml.translate import CompiledMapping, translate_to_plan
 from .rml.turtle import parse_turtle
+
+
+def _rdf_set(results: list[SinkResult], empty: str) -> DataFrame:
+    """Write the FILE/TABLE sinks, then the ONE distinct of the run over
+    the union of its DataFrame sinks (serializers do not dedup)."""
+    dfs = [r.dataframe for r in write_file_sinks(results)]
+    if not dfs:
+        raise ValueError(empty)
+    return reduce(lambda a, b: a.unionByName(b), dfs).distinct()
 
 
 def compile_rml(mapping_text: str,
@@ -37,12 +46,8 @@ def run_rml(spark: SparkSession, mapping_text: str,
     compiled = compile_rml(mapping_text)
     binder = SparkBinder(spark=spark, dataframes=dataframes or {},
                          base_dir=base_dir)
-    results = binder.execute(compiled.graph)
-    sinks = write_sinks(results)
-    dfs = list(sinks.values())
-    if not dfs:
-        raise ValueError("mapping produced no DataFrame sinks")
-    return reduce(lambda a, b: a.unionByName(b), dfs).distinct()
+    return _rdf_set(binder.execute(compiled.graph),
+                   "mapping produced no DataFrame sinks")
 
 
 def run_shexml(spark: SparkSession, shexml_text: str,
@@ -79,15 +84,12 @@ def run_shexml(spark: SparkSession, shexml_text: str,
         graph = shexml_to_plan(doc, source_overrides=source_overrides)
         binder = SparkBinder(spark=spark, dataframes=dataframes or {},
                              base_dir=base_dir)
-        sinks = write_sinks(binder.execute(graph))
+        return _rdf_set(binder.execute(graph),
+                       "ShExML document produced no output branches")
     finally:
         for iri in added:
             FNO_REGISTRY.pop(iri, None)
         FNO_REGISTRY.update(saved)
-    dfs = list(sinks.values())
-    if not dfs:
-        raise ValueError("ShExML document produced no output branches")
-    return reduce(lambda a, b: a.unionByName(b), dfs).distinct()
 
 
 def run_shexml_file(spark: SparkSession, path: str,
@@ -120,11 +122,7 @@ def run_plan(spark: SparkSession, plan_json: Union[str, dict],
         if isinstance(plan_json, str) else PlanGraph.from_json(plan_json)
     binder = SparkBinder(spark=spark, dataframes=dataframes or {},
                          base_dir=base_dir)
-    sinks = write_sinks(binder.execute(graph))
-    dfs = list(sinks.values())
-    if not dfs:
-        raise ValueError("plan produced no DataFrame sinks")
-    return reduce(lambda a, b: a.unionByName(b), dfs).distinct()
+    return _rdf_set(binder.execute(graph), "plan produced no DataFrame sinks")
 
 
 def run_plan_file(spark: SparkSession, path: str,

@@ -12,16 +12,25 @@ Spark-first choices (scale notes):
   so Catalyst can reuse the scan across fragments (scan sharing —
   the reference does this at plan level,
   translator/src/shexml/operators/source.rs:72-98).
+- Binding launches no Spark job: CSV headers are read on the driver
+  (``_csv_header_schema``) and every other source is lazy.
 - ProjectOp emits an explicit ``select`` → column pruning reaches the
-  scan (ReadSchema) even through later UDF stages.
-- JoinOp: the parent (right) side is projected + ``dropDuplicates()``
-  before the join — semantics-preserving under RDF set semantics (the
-  sink is distinct) and shrinks the shuffle; AQE then picks
-  broadcast/skew strategies at runtime.
+  scan (ReadSchema).
+- ExtendOp and SerializerOp are each ONE ``selectExpr`` of Spark SQL
+  text (``functions.compile_sql``): about one py4j round trip per
+  output column instead of several per expression node.
+- JoinOp: the parent (right) side is alias-prefixed, not deduplicated —
+  a ``dropDuplicates()`` there would be one more shuffle for a set the
+  run's final distinct establishes anyway; AQE picks broadcast/skew
+  strategies at runtime.
 - FragmentOp is lazy-DAG metadata (a DataFrame can feed many consumers);
   no materialization.
-- SerializerOp keeps structured (subj, pred, obj, graph) rows; N-Quads
-  strings are produced only at file sinks.
+- SerializerOp keeps structured (subj, pred, obj, graph) rows and does
+  not dedup: RDF set semantics cost ONE distinct per run, applied where
+  sinks are consumed (``write_sinks`` per FILE/TABLE sink and returned
+  frame; ``engine.run_*`` over the union of all sinks), and none for a
+  serializer with ``options={"distinct": "false"}``.  N-Quads strings
+  are produced only at file sinks.
 """
 
 from __future__ import annotations
@@ -31,6 +40,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..algebra import (
     DataFormat,
@@ -47,7 +57,8 @@ from ..algebra import (
     TargetOp,
 )
 from ..plan import PlanGraph
-from .functions import AUTOINC_IDX, compile_function
+from .functions import (AUTOINC_IDX, bind_helpers, compile_sql,
+                        sql_ident)
 
 OUTPUT_COLUMNS = ("subj", "pred", "obj", "graph")
 
@@ -74,12 +85,98 @@ class BindError(Exception):
     RMLTC0002e must yield no triples)."""
 
 
+def bind_extend(df: DataFrame, op: ExtendOp,
+                node_id: str = "extend") -> DataFrame:
+    """One ``selectExpr`` adding (or replacing, in place) every extend
+    column, compiled to SQL text; works on batch and streaming frames
+    alike."""
+    columns = df.columns
+    for name, fn in op.extend_pairs:
+        missing = sorted(fn.references() - set(columns))
+        if missing:
+            raise BindError(f"{node_id}: extend {name!r} references "
+                            f"missing columns {missing}")
+    if AUTOINC_IDX not in columns and any(
+            fn.contains_kind("AutoIncrement") for _, fn in op.extend_pairs):
+        df = _with_autoinc_index(df)
+        columns = columns + [AUTOINC_IDX]
+    helpers: list = []
+    exprs = {name: f"{compile_sql(fn, helpers)} AS {sql_ident(name)}"
+             for name, fn in op.extend_pairs}
+    keep = [exprs.pop(c) if c in exprs else sql_ident(c) for c in columns]
+    return bind_helpers(df, helpers).selectExpr(*keep, *exprs.values())
+
+
+def _serializer_sql(template: str) -> str:
+    """Template of variable-BGP lines → one generator expression: per
+    row the array of template-line quads, null where a term (or the
+    graph of a 4-variable line) is null, exploded with the nulls
+    filtered out."""
+    quads = []
+    for raw_line in template.splitlines():
+        line = raw_line.strip()
+        if not line:
+            continue
+        if line.endswith("."):
+            line = line[:-1].strip()
+        terms = [sql_ident(v[1:]) for v in line.split()]
+        if len(terms) not in (3, 4):
+            raise BindError(f"bad serializer template line {raw_line!r}")
+        graph = terms[3] if len(terms) == 4 else "CAST(NULL AS STRING)"
+        keep = " AND ".join(f"{t} IS NOT NULL" for t in terms)
+        quads.append(f"CASE WHEN {keep} THEN named_struct('subj', "
+                     f"{terms[0]}, 'pred', {terms[1]}, 'obj', {terms[2]}, "
+                     f"'graph', {graph}) END")
+    if not quads:
+        raise BindError("serializer with empty template")
+    return (f"inline(filter(array({', '.join(quads)}), "
+            "q -> q IS NOT NULL))")
+
+
+def _csv_header_schema(path: str,
+                       case_sensitive: bool) -> Optional[StructType]:
+    """The all-string schema Spark's CSV header inference would give
+    ``path``, read from its first line without a Spark job; None where
+    that cannot be guaranteed (not a plain local file, or a header
+    line that is blank or has a quote, escape, carriage return or
+    non-ASCII byte — a BOM among them), leaving
+    inference to Spark.  Spark's header rules: an empty name becomes
+    ``_c{i}``, a name repeated (case-insensitively unless
+    ``spark.sql.caseSensitive``) becomes ``{name}{i}``."""
+    import os
+    if not os.path.isfile(path) or any(c in path for c in "*?[{"):
+        return None
+    with open(path, "rb") as f:
+        raw = f.readline()
+    line = raw.rstrip(b"\n")
+    if line.endswith(b"\r"):
+        line = line[:-1]
+    # non-ASCII: Java's and Python's case folding may differ
+    if not line.strip() or not line.isascii() or any(
+            c in line for c in (b'"', b"\\", b"\r")):
+        return None
+    names = line.decode("ascii").split(",")
+    keys = [n if case_sensitive else n.lower() for n in names]
+    repeated = {k for k in keys if keys.count(k) > 1}
+    return StructType([
+        StructField(f"_c{i}" if not n else f"{n}{i}" if k in repeated
+                    else n, StringType())
+        for i, (n, k) in enumerate(zip(names, keys))])
+
+
 @dataclass
 class SinkResult:
     node_id: str
     target: TargetOp
     dataframe: DataFrame  # structured (subj, pred, obj, graph)
     format: Optional[DataFormat] = None  # upstream serializer's format
+    #: the upstream serializer's RDF set semantics (False for a
+    #: serializer with ``options={"distinct": "false"}``)
+    distinct: bool = True
+
+    def rdf_set(self) -> DataFrame:
+        return self.dataframe.distinct() if self.distinct \
+            else self.dataframe
 
 
 @dataclass
@@ -94,6 +191,7 @@ class SparkBinder:
         bound: dict[str, DataFrame] = {}
         results: list[SinkResult] = []
         ser_format: dict[str, DataFormat] = {}
+        ser_distinct: dict[str, bool] = {}
         source_cache: dict = {}
         # document sources carry the per-RECORD index when the plan uses
         # AUTOINCREMENT, so numbering counts iterator entities rather
@@ -122,28 +220,13 @@ class SparkBinder:
                 keep = sorted(op.projection_attributes)
                 if AUTOINC_IDX in df.columns:
                     keep.append(AUTOINC_IDX)  # synthetic, rides along
-                bound[node_id] = df.select(
-                    *[F.col("`" + c.replace("`", "``") + "`")
-                      for c in keep])
+                bound[node_id] = df.selectExpr(*map(sql_ident, keep))
             elif isinstance(op, RenameOp):
                 df = bound[preds[0].src]
                 bound[node_id] = df.withColumnsRenamed(dict(op.rename_pairs))
             elif isinstance(op, ExtendOp):
-                df = bound[preds[0].src]
-                available = set(df.columns)
-                for name, fn in op.extend_pairs:
-                    refs = fn.references()
-                    missing = sorted(refs - available)
-                    if missing:
-                        raise BindError(
-                            f"{node_id}: extend {name!r} references missing "
-                            f"columns {missing}")
-                if AUTOINC_IDX not in df.columns and any(
-                        fn.contains_kind("AutoIncrement")
-                        for _, fn in op.extend_pairs):
-                    df = _with_autoinc_index(df)
-                cols = {name: compile_function(fn) for name, fn in op.extend_pairs}
-                bound[node_id] = df.withColumns(cols)
+                bound[node_id] = bind_extend(bound[preds[0].src], op,
+                                             node_id)
             elif isinstance(op, JoinOp):
                 left = bound[preds[0].src]
                 right = bound[preds[1].src]
@@ -152,16 +235,19 @@ class SparkBinder:
                 bound[node_id] = bound[preds[0].src]
                 if preds[0].src in ser_format:
                     ser_format[node_id] = ser_format[preds[0].src]
+                    ser_distinct[node_id] = ser_distinct[preds[0].src]
             elif isinstance(op, SerializerOp):
                 df = bound[preds[0].src]
                 bound[node_id] = self._bind_serializer(op, df)
                 ser_format[node_id] = op.format
+                ser_distinct[node_id] = \
+                    dict(op.options).get("distinct", "true") != "false"
             elif isinstance(op, TargetOp):
                 df = bound[preds[0].src]
-                results.append(SinkResult(node_id=node_id, target=op,
-                                          dataframe=df,
-                                          format=ser_format.get(
-                                              preds[0].src)))
+                results.append(SinkResult(
+                    node_id=node_id, target=op, dataframe=df,
+                    format=ser_format.get(preds[0].src),
+                    distinct=ser_distinct.get(preds[0].src, True)))
             else:
                 raise BindError(f"unknown operator {type(op).__name__}")
         return results
@@ -191,22 +277,21 @@ class SparkBinder:
             # all-strings ingest: the reference stringifies values back on
             # emission (operator/src/value.rs:68-80), so golden lexical
             # forms like "30.0E0" survive verbatim (RMLTC0005a)
-            df = (self.spark.read
-                  .option("header", "true")
-                  .option("inferSchema", "false")
-                  .csv(path))
+            reader = self.spark.read.option("header", "true")
+            schema = _csv_header_schema(path, self.spark.conf.get(
+                "spark.sql.caseSensitive") == "true")
+            df = (reader.schema(schema) if schema is not None
+                  else reader.option("inferSchema", "false")).csv(path)
             if op.root_iterator.fields:
                 # ShExML csvperrow FIELDs: alias ← column (leading '@'
                 # in the query is stripped — straight_csv FIELD id <@id>)
-                sel = []
-                for f in op.root_iterator.fields:
-                    src_col = f.reference.lstrip("@")
-                    if src_col in df.columns:
-                        sel.append(F.col("`" + src_col + "`").alias(f.alias))
+                sel = [f"{sql_ident(src)} AS {sql_ident(f.alias)}"
+                       for f in op.root_iterator.fields
+                       if (src := f.reference.lstrip("@")) in df.columns]
                 if not sel:
                     raise BindError(
                         f"no ShExML csv fields match columns {df.columns}")
-                df = df.select(*sel)
+                df = df.selectExpr(*sel)
             return df
         if rf in ("JSONPath", "XMLPath", "XMLQuery") and op.root_iterator.fields:
             from .docsource import load_document_source
@@ -307,23 +392,22 @@ class SparkBinder:
     def _bind_join(self, op: JoinOp, left: DataFrame, right: DataFrame) -> DataFrame:
         alias = op.join_alias or "join"
         # Parent side: alias-prefix every column (mirrors
-        # TermMapInfo::prefix_attributes, term_map.rs:67-90), dedup to
-        # shrink the shuffle (safe: sink is distinct).  The synthetic
-        # autoincrement index never joins: it would defeat the dedup and
-        # pollute natural-join common columns.
-        if AUTOINC_IDX in right.columns:
-            right = right.drop(AUTOINC_IDX)
-        renamed = right.select(
-            *[F.col("`" + c + "`").alias(f"{alias}_{c}") for c in right.columns])
+        # TermMapInfo::prefix_attributes, term_map.rs:67-90).  The
+        # synthetic autoincrement index never joins: it would pollute
+        # natural-join common columns.
+        parent = [c for c in right.columns if c != AUTOINC_IDX]
+        renamed = right.selectExpr(
+            *[f"{sql_ident(c)} AS {sql_ident(f'{alias}_{c}')}"
+              for c in parent])
         if op.join_type == JoinType.CROSS:
-            return left.crossJoin(renamed.dropDuplicates())
+            return left.crossJoin(renamed)
         if op.join_type == JoinType.NATURAL:
-            common = [c for c in left.columns if c in right.columns]
+            common = [c for c in left.columns if c in parent]
             if not common:
-                return left.crossJoin(renamed.dropDuplicates())
-            cond = [left["`" + c + "`"] == renamed[f"`{alias}_{c}`"]
+                return left.crossJoin(renamed)
+            cond = [left[sql_ident(c)] == renamed[sql_ident(f"{alias}_{c}")]
                     for c in common]
-            return left.join(renamed.dropDuplicates(), on=cond, how="inner")
+            return left.join(renamed, on=cond, how="inner")
         # equi / theta joins
         ops = {
             PredicateType.EQ: lambda a, b: a == b,
@@ -337,20 +421,20 @@ class SparkBinder:
         for child_attr, parent_attr in op.left_right_attr_pairs:
             if child_attr not in left.columns:
                 raise BindError(f"join child attribute {child_attr!r} missing")
-            if f"{alias}_{parent_attr}" not in renamed.columns:
+            if parent_attr not in parent:
                 raise BindError(f"join parent attribute {parent_attr!r} missing")
-            c = cmp(left["`" + child_attr + "`"],
-                    renamed[f"`{alias}_{parent_attr}`"])
+            c = cmp(left[sql_ident(child_attr)],
+                    renamed[sql_ident(f"{alias}_{parent_attr}")])
             conds = c if conds is None else (conds & c)
         how = {JoinType.INNER: "inner", JoinType.LEFT: "left",
                JoinType.RIGHT: "right"}.get(op.join_type, "inner")
-        return left.join(renamed.dropDuplicates(), on=conds, how=how)
+        return left.join(renamed, on=conds, how=how)
 
     def _bind_serializer(self, op: SerializerOp, df: DataFrame) -> DataFrame:
-        """Template of variable-BGP lines → union of per-line projections
-        to structured (subj, pred, obj, graph); null terms suppress the
-        triple (RMLTC0009a empty join key), null graph suppresses the
-        quad; RDF set semantics via distinct."""
+        """Template of variable-BGP lines → structured (subj, pred, obj,
+        graph) rows in ONE scan (``_serializer_sql``); null terms
+        suppress the triple (RMLTC0009a empty join key), a null graph
+        suppresses the quad.  No dedup here: see ``SinkResult.rdf_set``."""
         if op.format not in (DataFormat.NQUADS, DataFormat.NTRIPLES,
                              DataFormat.TTL, DataFormat.JSONLD,
                              DataFormat.CSV, DataFormat.JSON):
@@ -363,41 +447,7 @@ class SparkBinder:
                 "kgloom/exec/jsonld.py, CSV/JSON as Spark-native "
                 "encodings of the structured quad table at the FILE "
                 "sink)")
-        quads: list = []
-        for raw_line in op.template.splitlines():
-            line = raw_line.strip()
-            if not line:
-                continue
-            if line.endswith("."):
-                line = line[:-1].strip()
-            vars_ = [v[1:] for v in line.split()]
-            if len(vars_) not in (3, 4):
-                raise BindError(f"bad serializer template line {raw_line!r}")
-            s, p, o = vars_[:3]
-            g = (F.col(vars_[3]) if len(vars_) == 4
-                 else F.lit(None).cast("string"))
-            keep = (F.col(s).isNotNull() & F.col(p).isNotNull()
-                    & F.col(o).isNotNull())
-            if len(vars_) == 4:
-                keep = keep & g.isNotNull()
-            quads.append(F.when(keep, F.struct(
-                F.col(s).alias("subj"), F.col(p).alias("pred"),
-                F.col(o).alias("obj"), g.alias("graph"))))
-        if not quads:
-            raise BindError("serializer with empty template")
-        # ONE scan: per row build the array of template-line quads and
-        # explode (a union of per-line projections would re-scan the
-        # input once per line); suppressed terms yield null array slots
-        # dropped by the explode filter
-        out = (df.select(F.explode(F.array(*quads)).alias("q"))
-               .where(F.col("q").isNotNull())
-               .select("q.subj", "q.pred", "q.obj", "q.graph"))
-        # RDF set semantics by default; a compiler that can prove row
-        # uniqueness (e.g. keyed transcript turns) may disable the dedup
-        # shuffle via options={"distinct": "false"}
-        if dict(op.options).get("distinct", "true") != "false":
-            out = out.distinct()
-        return out
+        return df.selectExpr(_serializer_sql(op.template))
 
 
 def to_nquads_lines(df: DataFrame) -> DataFrame:
@@ -409,38 +459,43 @@ def to_nquads_lines(df: DataFrame) -> DataFrame:
     return df.select(line.alias("value"))
 
 
-def write_sinks(results: list[SinkResult]) -> dict[str, DataFrame]:
-    """Execute sink actions; returns node_id → structured DataFrame for
-    DATAFRAME targets (tests / driver)."""
-    out: dict[str, DataFrame] = {}
+def write_file_sinks(results: list[SinkResult]) -> list[SinkResult]:
+    """Write every FILE/TABLE sink, each as an RDF set; hand back the
+    DATAFRAME (and STDOUT) sinks undeduplicated, for a caller that
+    applies one distinct over their union (``engine.run_*``)."""
+    rest: list[SinkResult] = []
     for r in results:
+        if r.target.target_type not in (IOType.FILE, IOType.TABLE):
+            rest.append(r)  # DATAFRAME / STDOUT → hand back
+            continue
         cfg = r.target.config_dict
+        df = r.rdf_set()
         if r.target.target_type == IOType.FILE:
             path = cfg.get("path")
             if not path:
                 raise BindError("file target without path")
             if r.format == DataFormat.TTL:
                 from .ttl import turtle_document_lines
-                turtle_document_lines(r.dataframe, cfg.get("prefixes")) \
+                turtle_document_lines(df, cfg.get("prefixes")) \
                     .write.mode("overwrite").text(path)
             elif r.format == DataFormat.JSONLD:
                 from .jsonld import jsonld_document_lines
-                jsonld_document_lines(r.dataframe) \
-                    .write.mode("overwrite").text(path)
+                jsonld_document_lines(df).write.mode("overwrite").text(path)
             elif r.format == DataFormat.CSV:
                 # the reference's default DataFormat: the structured
                 # quad table itself, Spark-native distributed CSV
-                r.dataframe.write.mode("overwrite") \
-                    .option("header", "true").csv(path)
+                df.write.mode("overwrite").option("header", "true").csv(path)
             elif r.format == DataFormat.JSON:
                 # one JSON object per quad row (Spark-native JSON lines)
-                r.dataframe.write.mode("overwrite").json(path)
+                df.write.mode("overwrite").json(path)
             else:
-                to_nquads_lines(r.dataframe) \
-                    .write.mode("overwrite").text(path)
-        elif r.target.target_type == IOType.TABLE:
-            r.dataframe.write.mode(cfg.get("mode", "overwrite")) \
-                .parquet(cfg["path"])
-        else:  # DATAFRAME / STDOUT → hand back
-            out[r.node_id] = r.dataframe
-    return out
+                to_nquads_lines(df).write.mode("overwrite").text(path)
+        else:
+            df.write.mode(cfg.get("mode", "overwrite")).parquet(cfg["path"])
+    return rest
+
+
+def write_sinks(results: list[SinkResult]) -> dict[str, DataFrame]:
+    """Execute sink actions; returns node_id → structured DataFrame, an
+    RDF set, for DATAFRAME targets (tests / driver)."""
+    return {r.node_id: r.rdf_set() for r in write_file_sinks(results)}

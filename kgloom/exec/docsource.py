@@ -7,7 +7,7 @@ documents are small; these loaders parse the file with the stdlib
 (json / xml.etree), flatten nested iterators into dotted columns with
 one row per nested element (explode semantics; multi-valued fields
 cartesian within their record — correct under RDF set semantics), and
-hand Spark a string-typed DataFrame.
+hand Spark a string-typed Arrow table.
 
 Scale note: at 100 TB the inputs are columnar tables, not documents —
 the TABLE formulation (parquet/iceberg scans) is the scale path; this
@@ -21,6 +21,7 @@ import xml.etree.ElementTree as ET
 from itertools import product
 from typing import Any, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..algebra import IterField, SourceIterator
@@ -220,9 +221,10 @@ def load_document_source(spark: SparkSession, path: str,
             else:
                 cols.append(f"{prefix}{f.alias}")
     walk(iterator.fields)
-    schema = ", ".join(f"`{c}` string" for c in cols)
+    # an Arrow table plans as a LocalTableScan: no Python worker scans it
+    table = {c: pa.array([r.get(c) for r in rows], pa.string())
+             for c in cols}
     if with_index:
-        cols.append(AUTOINC_IDX)
-        schema += f", `{AUTOINC_IDX}` long"
-    data = [tuple(r.get(c) for c in cols) for r in rows]
-    return spark.createDataFrame(data, schema)
+        table[AUTOINC_IDX] = pa.array([r[AUTOINC_IDX] for r in rows],
+                                      pa.int64())
+    return spark.createDataFrame(pa.table(table))

@@ -1,12 +1,16 @@
-"""Function-tree → pyspark Column compiler.
+"""Function-tree → Spark SQL compiler.
 
 Executes the reference's scalar ``Function`` surface
-(`/root/reference/operator/src/lib.rs:280-331`) as Catalyst expressions.
-Everything stays JVM-side (whole-stage codegen) except RFC-3986
-percent-encoding, which is an Arrow-vectorized pandas UDF wrapping
-``urllib.parse.quote(s, safe='')`` — exactly the Rust ``urlencoding``
-crate the reference depends on (`/root/reference/Cargo.toml:44`:
-encode everything outside ``[A-Za-z0-9_.~-]``).
+(`/root/reference/operator/src/lib.rs:280-331`) as Catalyst expressions,
+emitted as Spark SQL *text*: the binder hands one ``selectExpr`` per
+Extend to the JVM, so binding a mapping costs a few py4j round trips
+instead of one per Column node.  Everything stays JVM-side
+(whole-stage codegen), RFC-3986 percent-encoding included (see
+``uri_encode_sql``).  FnO calls are the one seam that still builds
+Columns: FnO implementations (and ShExML ``functions=`` helpers) are
+Column callables by contract, so their parameters arrive as
+``F.expr(param_sql)`` and their result is bound as a hidden helper
+column the SQL refers to by name.
 
 Golden-corpus semantics implemented here:
 
@@ -24,12 +28,12 @@ Golden-corpus semantics implemented here:
 
 from __future__ import annotations
 
+import re
 from typing import Callable, Optional
+from urllib.parse import quote
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..algebra import Function, template_split
 
@@ -42,63 +46,64 @@ _INVALID_IRI_CHARS = "[\\x00-\\x20<>\"{}|^`\\\\]"
 AUTOINC_IDX = "__autoinc_idx__"
 
 
+# --- SQL text building blocks ---------------------------------------------
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted identifier: any column name, dots included, is
+    one top-level column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: Optional[str]) -> str:
+    """A string literal that parses to exactly ``s`` whatever
+    ``spark.sql.parser.escapedStringLiterals`` is: text without quotes
+    or backslashes is spelled as is, anything else as UTF-8 bytes."""
+    if s is None:
+        return "CAST(NULL AS STRING)"
+    if "'" in s or "\\" in s:
+        return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+    return f"'{s}'"
+
+
+def _concat(parts: list[str]) -> str:
+    if not parts:
+        return "''"
+    return parts[0] if len(parts) == 1 else f"concat({', '.join(parts)})"
+
+
 # --- RFC-3986 percent-encoding ------------------------------------------
 #
-# Two implementations, bit-identical on all inputs:
-#
-# 1. Catalyst (default, JVM whole-stage path): Spark's ``url_encode``
-#    (Java URLEncoder, application/x-www-form-urlencoded) differs from
-#    RFC-3986 ``quote(s, safe='')`` in exactly three tokens — space→'+'
-#    (must be %20), '*' kept (must be %2A), '~'→%7E (must stay '~') —
-#    fixed up with three replaces.  No Python worker in the hot path.
-# 2. Arrow pandas UDF wrapping ``urllib.parse.quote`` — kept for parity
-#    testing and as the documented fallback (matches the Rust
-#    ``urlencoding`` crate the reference depends on, Cargo.toml:44).
+# Spark's ``url_encode`` (Java URLEncoder, application/x-www-form-
+# urlencoded) differs from RFC-3986 ``urllib.parse.quote(s, safe='')``
+# (the Rust ``urlencoding`` crate the reference uses, Cargo.toml:44) in
+# exactly three tokens — space→'+' (must be %20), '*' kept (must be
+# %2A), '~'→%7E (must stay '~') — fixed up with three replaces.
 
-_URI_ENCODE_UDF = None
-USE_ARROW_URI_ENCODE = False
-
-
-def _make_uri_encode_udf():
-    from pyspark.sql.types import StringType
-
-    def _encode(s: pd.Series) -> pd.Series:
-        from urllib.parse import quote
-        return s.map(lambda v: quote(v, safe="") if v is not None else None)
-
-    return pandas_udf(_encode, StringType())
-
-
-def uri_encode_arrow(col: Column) -> Column:
-    global _URI_ENCODE_UDF
-    if _URI_ENCODE_UDF is None:
-        _URI_ENCODE_UDF = _make_uri_encode_udf()
-    return _URI_ENCODE_UDF(col.cast("string"))
-
-
-def uri_encode_catalyst(col: Column) -> Column:
-    c = F.url_encode(col.cast("string"))
-    c = F.replace(c, F.lit("+"), F.lit("%20"))
-    c = F.replace(c, F.lit("*"), F.lit("%2A"))
-    c = F.replace(c, F.lit("%7E"), F.lit("~"))
-    return c
+def uri_encode_sql(sql: str) -> str:
+    return ("replace(replace(replace(url_encode(CAST(" + sql +
+            " AS STRING)), '+', '%20'), '*', '%2A'), '%7E', '~')")
 
 
 def uri_encode(col: Column) -> Column:
-    if USE_ARROW_URI_ENCODE:
-        return uri_encode_arrow(col)
-    return uri_encode_catalyst(col)
+    """Column form of ``uri_encode_sql`` for Column-built callers
+    (SPARQL ``ENCODE_FOR_URI``, mention triples)."""
+    c = F.url_encode(col.cast("string"))
+    c = F.replace(c, F.lit("+"), F.lit("%20"))
+    c = F.replace(c, F.lit("*"), F.lit("%2A"))
+    return F.replace(c, F.lit("%7E"), F.lit("~"))
 
 
-# --- N-Triples literal escaping (pure Catalyst, codegen'd) ---------------
+# --- N-Triples literal escaping --------------------------------------------
 
-def escape_literal(col: Column) -> Column:
-    c = F.replace(col.cast("string"), F.lit("\\"), F.lit("\\\\"))
-    c = F.replace(c, F.lit('"'), F.lit('\\"'))
-    c = F.replace(c, F.lit("\n"), F.lit("\\n"))
-    c = F.replace(c, F.lit("\r"), F.lit("\\r"))
-    c = F.replace(c, F.lit("\t"), F.lit("\\t"))
-    return c
+_LITERAL_ESCAPES = (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
+                    ("\r", "\\r"), ("\t", "\\t"))
+
+
+def escape_literal(sql: str) -> str:
+    out = f"CAST({sql} AS STRING)"
+    for raw, esc in _LITERAL_ESCAPES:
+        out = f"replace({out}, {sql_string(raw)}, {sql_string(esc)})"
+    return out
 
 
 class FunctionCompileError(Exception):
@@ -194,128 +199,162 @@ for _iri, _impl in {
     register_fno(_iri, _impl)
 
 
-def compile_function(fn: Function, encode_values: bool = False) -> Column:
-    """Compile one Function node to a Column producing the *rendered*
+#: one hidden helper column per FnO call: (name, Column, level); a
+#: helper reads only helpers of lower levels
+Helpers = list[tuple[str, Column, int]]
+
+
+def compile_sql(fn: Function, helpers: Helpers,
+                encode_values: bool = False) -> str:
+    """Compile one Function node to Spark SQL producing the *rendered*
     RDF term lexical form (``<iri>`` / ``"literal"@lang`` / ``_:label``)
     for term-kind nodes, or the raw string for inner value nodes.
 
-    ``encode_values`` is set when compiling under a UriEncode wrapper —
-    for templates it encodes substituted values only.
+    FnO calls append their helper column to ``helpers`` (see
+    ``bind_helpers``).  ``encode_values`` is set when compiling under a
+    UriEncode wrapper — for templates it encodes substituted values
+    only.
     """
     k = fn.kind
 
+    def sub(f: Function, enc: bool = False) -> str:
+        return compile_sql(f, helpers, enc)
+
+    def enc(sql: str) -> str:
+        return uri_encode_sql(sql) if encode_values else sql
+
     if k == "Reference":
-        col = F.col("`" + fn.value.replace("`", "``") + "`")
-        return uri_encode(col) if encode_values else col
+        return enc(sql_ident(fn.value))
 
     if k == "Constant":
-        return uri_encode(F.lit(fn.value)) if encode_values else F.lit(fn.value)
+        if encode_values and fn.value is not None:
+            return sql_string(quote(fn.value, safe=""))
+        return sql_string(fn.value)
 
     if k == "TemplateString":
-        parts = template_split(fn.value)
-        cols: list[Column] = []
-        for kind, text in parts:
-            if kind == "lit":
-                cols.append(F.lit(text))
-            else:
-                c = F.col("`" + text.replace("`", "``") + "`")
-                cols.append(uri_encode(c) if encode_values else c)
-        if not cols:
-            return F.lit("")
         # concat propagates null: any null substitution ⇒ null term
-        return F.concat(*cols) if len(cols) > 1 else cols[0]
+        return _concat([sql_string(text) if kind == "lit"
+                        else enc(sql_ident(text))
+                        for kind, text in template_split(fn.value)])
 
     if k == "Concatenate":
-        return F.concat(compile_function(fn.left, encode_values),
-                        F.lit(fn.separator or ""),
-                        compile_function(fn.right, encode_values))
+        return _concat([sub(fn.left, encode_values),
+                        sql_string(fn.separator or ""),
+                        sub(fn.right, encode_values)])
 
     if k == "Replace":
-        inner = compile_function(fn.inner)
-        out: Optional[Column] = None
+        inner = sub(fn.inner)
+        if not fn.replace_map:
+            return inner
+        whens = []
         for key, values in fn.replace_map:
-            cond = inner.isin(*values) if values else F.lit(False)
-            out = F.when(cond, F.lit(key)) if out is None \
-                else out.when(cond, F.lit(key))
-        return inner if out is None else out.otherwise(inner)
+            cond = (f"{inner} IN ({', '.join(map(sql_string, values))})"
+                    if values else "false")
+            whens.append(f"WHEN {cond} THEN {sql_string(key)}")
+        return f"CASE {' '.join(whens)} ELSE {inner} END"
 
     if k == "TemplateFunctionValue":
         pair_map = dict(fn.pairs)
-        parts = template_split(fn.value or "")
-        cols = []
-        for kind, text in parts:
+        parts = []
+        for kind, text in template_split(fn.value or ""):
             if kind == "lit":
-                cols.append(F.lit(text))
+                parts.append(sql_string(text))
             elif text in pair_map:
-                sub = compile_function(pair_map[text])
-                cols.append(uri_encode(sub) if encode_values else sub)
+                parts.append(enc(sub(pair_map[text])))
             else:
                 raise FunctionCompileError(
                     f"template variable {text!r} has no bound function")
-        return F.concat(*cols) if len(cols) > 1 else (cols[0] if cols else F.lit(""))
+        return _concat(parts)
 
     if k == "UriEncode":
-        return compile_function(fn.inner, encode_values=True)
+        return sub(fn.inner, True)
 
     if k == "Iri":
-        value = compile_function(fn.inner, encode_values).cast("string")
-        if fn.base:
-            value = F.when(value.rlike(_ABS_IRI_PATTERN), value) \
-                     .otherwise(F.concat(F.lit(fn.base), value))
+        value = f"CAST({sub(fn.inner, encode_values)} AS STRING)"
         # IRI validity: values containing chars outlawed in IRIs (space,
         # control chars, <>"{}|^`\) yield NO term — golden RMLTC0019b /
         # 0020b drop the "Juan Daniel" / "Emily Smith" rows entirely.
-        value = F.when(value.rlike(_INVALID_IRI_CHARS), F.lit(None)) \
-                 .otherwise(value)
-        return F.concat(F.lit("<"), value, F.lit(">"))
+        # The class has no anchors, so a resolved IRI is invalid iff the
+        # value or the (constant) base is.
+        invalid = f"{value} RLIKE {sql_string(_INVALID_IRI_CHARS)}"
+        absolute = f"concat('<', {value}, '>')"
+        if not fn.base:
+            return f"CASE WHEN {invalid} THEN NULL ELSE {absolute} END"
+        relative = ("NULL" if re.search(_INVALID_IRI_CHARS, fn.base) else
+                    f"concat({sql_string('<' + fn.base)}, {value}, '>')")
+        return (f"CASE WHEN {invalid} THEN NULL "
+                f"WHEN {value} RLIKE {sql_string(_ABS_IRI_PATTERN)} "
+                f"THEN {absolute} ELSE {relative} END")
 
     if k == "Literal":
-        body = F.concat(F.lit('"'),
-                        escape_literal(compile_function(fn.inner)),
-                        F.lit('"'))
+        body = ["'\"'", escape_literal(sub(fn.inner)), "'\"'"]
         # lang wins; never both (serializer/util.rs:31-37)
         if fn.langtype is not None:
-            return F.concat(body, F.lit("@"), compile_function(fn.langtype))
-        if fn.dtype is not None:
-            return F.concat(body, F.lit("^^<"),
-                            compile_function(fn.dtype), F.lit(">"))
-        return body
+            body += ["'@'", sub(fn.langtype)]
+        elif fn.dtype is not None:
+            body += ["'^^<'", sub(fn.dtype), "'>'"]
+        return _concat(body)
 
     if k == "BlankNode":
-        return F.concat(F.lit("_:"), compile_function(fn.inner))
+        return _concat(["'_:'", sub(fn.inner)])
 
-    if k == "Upper":
-        return F.upper(compile_function(fn.inner, encode_values))
-
-    if k == "Lower":
-        return F.lower(compile_function(fn.inner, encode_values))
+    if k in ("Upper", "Lower"):
+        return f"{k.lower()}({sub(fn.inner, encode_values)})"
 
     if k == "Conditional":
         # inner when the condition holds, else null (triple suppressed)
-        cond = compile_function(dict(fn.pairs)["if"]).cast("boolean")
-        return F.when(cond, compile_function(fn.inner, encode_values))
+        cond = sub(dict(fn.pairs)["if"])
+        return (f"CASE WHEN CAST({cond} AS BOOLEAN) "
+                f"THEN {sub(fn.inner, encode_values)} END")
 
     if k == "AutoIncrement":
         # prefix + (start + step·row_idx) + suffix; past `end` ⇒ null
-        # (suppressing the term).  Pure Catalyst arithmetic over the
-        # binder-provided AUTOINC_IDX column.
+        # (suppressing the term), over the binder-provided AUTOINC_IDX
         params = {name: (c.value or "") for name, c in fn.pairs}
         start = int(params.get("start", "0") or 0)
         step = int(params.get("step", "1") or 1)
-        val = F.lit(start) + F.lit(step) * F.col(AUTOINC_IDX).cast("long")
+        val = f"({start} + {step} * CAST({sql_ident(AUTOINC_IDX)} AS BIGINT))"
         if "end" in params:
-            val = F.when(val <= int(params["end"]), val)
-        out = F.concat(F.lit(params.get("prefix", "")),
-                       val.cast("string"),
-                       F.lit(params.get("suffix", "")))
-        return uri_encode(out) if encode_values else out
+            val = f"CASE WHEN {val} <= {int(params['end'])} THEN {val} END"
+        return enc(_concat([sql_string(params.get("prefix", "")),
+                            f"CAST({val} AS STRING)",
+                            sql_string(params.get("suffix", ""))]))
 
     if k == "FnO":
         impl = FNO_REGISTRY.get(fn.value)
         if impl is None:
             raise FunctionCompileError(
                 f"no FnO implementation registered for {fn.value!r}")
-        params = {name: compile_function(f) for name, f in fn.pairs}
-        return impl(params)
+        first = len(helpers)
+        params = {name: F.expr(sub(f)) for name, f in fn.pairs}
+        level = 1 + max((lvl for _, _, lvl in helpers[first:]), default=-1)
+        name = f"__fno{len(helpers)}__"
+        helpers.append((name, impl(params), level))
+        return sql_ident(name)
 
     raise FunctionCompileError(f"unknown Function kind {k!r}")
+
+
+def bind_helpers(df, helpers: Helpers):
+    """Add the FnO helper columns ``compile_sql`` collected, one
+    ``withColumns`` per nesting level."""
+    for level in sorted({lvl for _, _, lvl in helpers}):
+        df = df.withColumns({name: col for name, col, lvl in helpers
+                             if lvl == level})
+    return df
+
+
+def compile_function(fn: Function) -> Column:
+    """Column form of ``compile_sql`` for callers without a DataFrame.
+    An FnO call nested inside another node needs its helper column
+    bound on the DataFrame: bind such trees with
+    ``binder.bind_extend``."""
+    helpers: Helpers = []
+    sql = compile_sql(fn, helpers)
+    if not helpers:
+        return F.expr(sql)
+    if fn.kind == "FnO" and len(helpers) == 1:
+        return helpers[0][1]
+    raise FunctionCompileError(
+        "an FnO call nested in a term needs a DataFrame: bind it with "
+        "binder.bind_extend")

@@ -2013,8 +2013,8 @@ def _expr_compile(e: Expr) -> tuple[F.Column, str]:
                                   F.lit(2147483647)))
                 .otherwise(F.lit(""))), "str"
     if func == "encode_for_uri":
-        from .exec.functions import uri_encode_catalyst
-        return uri_encode_catalyst(lex(args[0])), "str"
+        from .exec.functions import uri_encode
+        return uri_encode(lex(args[0])), "str"
     if func == "abs":
         return F.abs(num(args[0])), "num"
     if func == "ceil":

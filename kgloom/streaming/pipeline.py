@@ -52,25 +52,18 @@ def read_transcript_stream(spark: SparkSession, input_path: str,
 
 
 def _turn_triple_columns(turns: DataFrame) -> DataFrame:
-    """Apply the batch plan's Extend+Serializer expressions to a
-    (possibly streaming) DataFrame — the operator compiler is engine
-    code, so batch and streaming share term construction exactly."""
-    from ..exec.functions import compile_function
-    from ..rml.translate import Quad  # noqa: F401 (documentation aid)
-    from ..transcripts.pipeline import turn_triples_plan
+    """Bind the batch plan's Extend+Serializer operators on a (possibly
+    streaming) DataFrame with the binder's own code, so batch and
+    streaming share term construction exactly."""
     from ..algebra import ExtendOp, SerializerOp
-    from ..exec.binder import SparkBinder
+    from ..exec.binder import SparkBinder, bind_extend
+    from ..transcripts.pipeline import turn_triples_plan
 
-    plan = turn_triples_plan()
-    extend_op = next(n.operator for n in plan.graph.nodes.values()
-                     if isinstance(n.operator, ExtendOp))
-    serializer = next(n.operator for n in plan.graph.nodes.values()
-                      if isinstance(n.operator, SerializerOp))
-    extended = turns.withColumns(
-        {name: compile_function(fn) for name, fn in extend_op.extend_pairs})
-    binder = SparkBinder(turns.sparkSession)
-    return binder._bind_serializer(serializer, extended.withColumn(
-        "ts", F.col("ts")))
+    ops = [n.operator for n in turn_triples_plan().graph.nodes.values()]
+    extend_op = next(op for op in ops if isinstance(op, ExtendOp))
+    serializer = next(op for op in ops if isinstance(op, SerializerOp))
+    return SparkBinder(turns.sparkSession)._bind_serializer(
+        serializer, bind_extend(turns, extend_op))
 
 
 def stream_turn_triples(spark: SparkSession, input_path: str,

@@ -1,4 +1,5 @@
 import os
+import time
 
 import pytest
 from pyspark.sql import SparkSession
@@ -27,3 +28,27 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+def spark_jobs(spark, group: str, action) -> int:
+    """Run ``action`` and return how many Spark jobs it launched."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        action()
+        # listener events arrive in order: once a later marker job
+        # shows as finished, every job of ``group`` is visible
+        sc.setJobGroup(group + ":end", "")
+        sc.parallelize([0], 1).count()
+        deadline = time.time() + 60
+        while not any(
+                tracker.getJobInfo(j).status == "SUCCEEDED"
+                for j in tracker.getJobIdsForGroup(group + ":end")
+                if tracker.getJobInfo(j) is not None):
+            assert time.time() < deadline, "job events never arrived"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(tracker.getJobIdsForGroup(group))

@@ -79,6 +79,36 @@ def test_literal_dtype_and_escaping(spark):
     assert _vals(_apply(df, fn)) == ['"say \\"hi\\"\\n"^^<http://d>']
 
 
+def test_fno_helpers_inside_terms_and_autoincrement(people):
+    """FnO calls nested in a term and in another FnO bind as helper
+    columns the term's SQL reads; AUTOINCREMENT numbers the binder's
+    row index and suppresses values past ``end``."""
+    from kgloom.exec.binder import bind_extend
+    grel = "http://users.ugent.be/~bjdmeest/function/grel.ttl#"
+
+    def call(name, value):
+        return Function.fno(grel + name, {grel + "valueParameter": value})
+
+    def autoinc(**params):
+        return Function(kind="AutoIncrement", pairs=tuple(
+            (k, Function.constant(v)) for k, v in params.items()))
+
+    df = bind_extend(people, ExtendOp.make({
+        "iri": Function.iri(Function.uri_encode(Function.template_function(
+            "x/{v}", {"v": call("toUpperCase", call(
+                "trim", Function.reference("name")))})), base="http://b/"),
+        "n": autoinc(start="10", step="5", end="14", prefix="p",
+                     suffix="s"),
+        "n_iri": Function.iri(Function.uri_encode(autoinc(prefix="a b/"))),
+    }))
+    rows = df.orderBy("id").select("iri", "n", "n_iri").collect()
+    assert [tuple(r) for r in rows] == [
+        ("<http://b/x/ANN%20KIM>", "p10s", "<a%20b%2F0>"),
+        ("<http://b/x/BO%20LI>", None, "<a%20b%2F1>")]
+    assert df.columns == ["id", "name", "tags", "__autoinc_idx__", "iri",
+                          "n", "n_iri"]
+
+
 def _join_plan(join_type, predicate=PredicateType.EQ):
     g = Plan()
     left = g.source(SourceOp.make({"source": "L"}, IOType.DATAFRAME))
@@ -163,31 +193,59 @@ def test_natural_join_common_columns(spark):
     assert got == {("1", "r")}
 
 
-def test_uri_encode_catalyst_arrow_parity_fuzz(spark):
-    """The JVM url_encode+fixups path and the Arrow urllib.parse.quote
-    path must agree byte-for-byte on arbitrary input (they are
-    documented as bit-identical, kgloom/exec/functions.py) — fuzzed
-    over printable ASCII, controls, unicode letters, emoji, and the
-    three known URLEncoder divergence tokens (space, '*', '~')."""
+def test_uri_encode_compiler_parity_fuzz(spark):
+    """Terms compiled to Spark SQL text percent-encode exactly like
+    ``urllib.parse.quote(s, safe='')`` (the Rust ``urlencoding`` crate
+    the reference depends on) — fuzzed over printable ASCII, controls,
+    unicode letters, emoji and the three URLEncoder divergence tokens
+    (space, '*', '~') — and carry template text, column names and
+    language tags holding quotes, backslashes, backticks, escaped
+    braces, newlines, tabs and non-ASCII through verbatim, under both
+    settings of ``spark.sql.parser.escapedStringLiterals``."""
     import random
     import string
     from urllib.parse import quote
 
-    from pyspark.sql import functions as F
-
-    from kgloom.exec.functions import uri_encode_arrow, uri_encode_catalyst
+    from kgloom.exec.binder import bind_extend
 
     rnd = random.Random(42)
     alphabet = string.printable + "éüßñçøœ漢字もじ🙂🚀 ~*+%"
     samples = [""] + [" * ~ + %20", "a b,c/d:e(f)"] + [
         "".join(rnd.choice(alphabet) for _ in range(rnd.randint(1, 40)))
         for _ in range(500)]
-    df = spark.createDataFrame([(s,) for s in samples], "s string")
-    rows = df.select(
-        "s",
-        uri_encode_catalyst(F.col("s")).alias("c"),
-        uri_encode_arrow(F.col("s")).alias("a")).collect()
-    for r in rows:
-        expected = quote(r.s, safe="")
-        assert r.c == expected, (r.s, r.c, expected)
-        assert r.a == expected, (r.s, r.a, expected)
+    odd = "c'o`l\\n\tñ\\q"  # a column name no identifier rule allows
+    df = spark.createDataFrame([(s, s[::-1]) for s in samples],
+                               ["s", odd])
+    text = "x:'q`\\\\{b\\}\n\t\\ü/"  # template text; \{ \} are escapes
+    lang = "en-'`\\\n\té"
+    terms = {
+        "tpl": Function.uri_encode(Function.template(
+            text + "{s}/{" + odd + "}")),
+        "lit": Function.literal(Function.reference(odd),
+                                langtype=Function.constant(lang)),
+        "const": Function.uri_encode(Function.constant(text)),
+    }
+    out = bind_extend(df, ExtendOp.make(terms))
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        out = bind_extend(out, ExtendOp.make(
+            {f"{k}_raw": fn for k, fn in terms.items()}))
+    finally:
+        spark.conf.unset(key)
+
+    def nt(v):
+        for raw, esc in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
+                         ("\r", "\\r"), ("\t", "\\t")):
+            v = v.replace(raw, esc)
+        return v
+
+    lit_text = text.replace("\\{", "{").replace("\\}", "}")
+    for r in out.collect():
+        want = {"tpl": f"{lit_text}{quote(r.s, safe='')}/"
+                       f"{quote(r[odd], safe='')}",
+                "lit": f'"{nt(r[odd])}"@{lang}',
+                "const": quote(text, safe="")}
+        for k, v in want.items():
+            assert r[k] == v, (k, r.s, r[k], v)
+            assert r[f"{k}_raw"] == v, (k, r.s, r[f"{k}_raw"], v)

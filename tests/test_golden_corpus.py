@@ -6,9 +6,11 @@ mapping on Spark and diffs triples (the reference only checks that plan
 generation succeeds; SURVEY.md §5).  BASELINE target: P/R ≥ 0.95.
 
 Without the reference checkout the corpus cases skip, and the P/R gate
-runs over the hand-written cases under ``fixtures/rml`` (a join, a
-named graph, classes, a language tag, a datatype, a JSON null, an
-invalid mapping), which always run.
+runs over the hand-written cases under ``fixtures/rml`` (joins, a
+named graph, classes, language tags, datatypes, JSON nulls, empty and
+missing CSV cells, literal escapes, invalid IRI values, relative IRIs
+against ``@base``, triples emitted twice, an invalid mapping), which
+always run, as do the ShExML cases under ``fixtures/shexml``.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ import os
 
 import pytest
 
-from kgloom.engine import nquads, run_rml_file
+from kgloom.engine import nquads, run_rml_file, run_shexml
 from kgloom.exec.binder import BindError
 from kgloom.rml.extract import RmlValidationError
 
@@ -29,6 +31,13 @@ CORPUS = f"{REFERENCE}/resources/csv-testcases"
 CASES = sorted(glob.glob(f"{CORPUS}/RMLTC*"))
 FIXTURES = sorted(glob.glob(
     os.path.join(os.path.dirname(__file__), "fixtures", "rml", "*")))
+SHEXML_FIXTURES = sorted(glob.glob(
+    os.path.join(os.path.dirname(__file__), "fixtures", "shexml", "*")))
+#: implementations of the FUNCTIONS helpers the ShExML fixtures call
+SHEXML_FUNCTIONS = {
+    "helper.isBefore2010": lambda year: year.cast("int") < 2010,
+    "helper.outsideUSA": lambda country: country != "USA",
+}
 
 
 def run_case(spark, case: str):
@@ -71,6 +80,15 @@ def test_golden_case(spark, case):
                          ids=[os.path.basename(c) for c in FIXTURES])
 def test_fixture_case(spark, case):
     _check_case(spark, case)
+
+
+@pytest.mark.parametrize("case", SHEXML_FIXTURES,
+                         ids=[os.path.basename(c) for c in SHEXML_FIXTURES])
+def test_shexml_fixture_case(spark, case):
+    with open(f"{case}/mapping.shexml", encoding="utf-8") as f:
+        df = run_shexml(spark, f.read(), base_dir=case,
+                        functions=SHEXML_FUNCTIONS)
+    assert set(parse_nquads("\n".join(nquads(df)))) == load_expected(case)
 
 
 def test_corpus_precision_recall(spark):

@@ -31,21 +31,12 @@ def test_projection_reaches_parquet_scan(spark):
 
 
 def test_no_python_eval_in_default_triple_path(spark):
-    """Percent-encoding defaults to Catalyst: the triple path must show
-    no ArrowEvalPython/BatchEvalPython nodes."""
+    """Percent-encoding is Catalyst: the triple path must show no
+    ArrowEvalPython/BatchEvalPython nodes."""
     import __spark_entry__ as em
     df = em.queries()["kg_extend_template"](spark, SF)
     plan = explain_str(df)
     assert "EvalPython" not in plan
-    # the Arrow fallback variant, by contrast, does show a Python node
-    import kgloom.exec.functions as kf
-    kf.USE_ARROW_URI_ENCODE = True
-    try:
-        import __spark_entry__ as em
-        arrow_plan = explain_str(em.queries()["kg_extend_template"](spark, SF))
-        assert "EvalPython" in arrow_plan or "ArrowEvalPython" in arrow_plan
-    finally:
-        kf.USE_ARROW_URI_ENCODE = False
 
 
 def test_similarity_broadcasts_query_side(spark):

@@ -94,7 +94,7 @@ def test_roundtrip_preserves_turn_text_escapes(spark):
     quads = raw.select(
         F.lit("<http://ex.com/s>").alias("subj"),
         F.lit("<http://ex.com/text>").alias("pred"),
-        F.concat(F.lit('"'), escape_literal(F.col("text")), F.lit('"'))
+        F.concat(F.lit('"'), F.expr(escape_literal("text")), F.lit('"'))
         .alias("obj"),
         F.lit(None).cast("string").alias("graph"))
     lines = to_nquads_lines(quads)
@@ -144,7 +144,7 @@ def test_roundtrip_fuzz_random_quads(spark):
             "subj", "pred",
             F.when(F.col("obj_term").isNotNull(), F.col("obj_term"))
             .otherwise(F.concat(F.lit('"'),
-                                escape_literal(F.col("payload")),
+                                F.expr(escape_literal("payload")),
                                 F.lit('"'), F.coalesce("suffix", F.lit(""))))
             .alias("obj"),
             "graph")

@@ -2,7 +2,6 @@
 watermarked dedup, windowed mention aggregation, stateful sessions."""
 
 import glob
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +13,8 @@ from kgloom.streaming import (
     stream_turn_triples,
 )
 from kgloom.transcripts.generate import generate_transcripts
+
+from conftest import spark_jobs
 
 
 @pytest.fixture()
@@ -559,38 +560,16 @@ def test_distinct_batch_launches_only_its_state_write(spark, tmp_path):
     state: its metrics row adds none."""
     from kgloom.streaming.distinct import (distinct_batch, fold_minima,
                                            read_minima)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     batches = [spark.createDataFrame(
         [(f"g{i % 3}", f"v{i * (b + 1)}") for i in range(200)],
         "g string, v string") for b in range(2)]
     state = str(tmp_path / "kmv")
     distinct_batch(spark, state, batches[0], 0, ["g"], "v", k=8)
 
-    def jobs(group, action):
-        sc.setJobGroup(group, group)
-        try:
-            action()
-            # listener events arrive in order: once a later marker job
-            # shows as finished, every job of ``group`` is visible
-            sc.setJobGroup(group + ":end", "")
-            sc.parallelize([0], 1).count()
-            deadline = time.time() + 60
-            while not any(
-                    tracker.getJobInfo(j).status == "SUCCEEDED"
-                    for j in tracker.getJobIdsForGroup(group + ":end")
-                    if tracker.getJobInfo(j) is not None):
-                assert time.time() < deadline, "job events never arrived"
-                time.sleep(0.05)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(tracker.getJobIdsForGroup(group))
-
-    write_only = jobs("kmv-write", lambda: fold_minima(
+    write_only = spark_jobs(spark, "kmv-write", lambda: fold_minima(
         read_minima(spark, state, ["g"], before=1), batches[1], ["g"], "v",
         k=8).write.mode("overwrite").parquet(str(tmp_path / "alone")))
-    trigger = jobs("kmv-trigger", lambda: distinct_batch(
+    trigger = spark_jobs(spark, "kmv-trigger", lambda: distinct_batch(
         spark, state, batches[1], 1, ["g"], "v", k=8))
     assert write_only > 0
     assert trigger == write_only
