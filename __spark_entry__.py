@@ -481,7 +481,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over a deterministically SPARSIFIED
-    co-mention graph (round-4, kgloom/transcripts/er.py:
+    co-mention graph (round-4, kgloom/ops/graph.py:
     connected_components with the driver gate forced OFF, so the
     DISTRIBUTED pointer-jump path — neighbor-min propagation + label
     pointer jumping, O(log diameter) rounds — is what the oracle
@@ -492,7 +492,8 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     components.  The DuckDB twin computes min-reachable-node per node
     via a recursive reachability CTE; component labels (the minimal
     member) are canonical, so both engines must agree exactly."""
-    from kgloom.transcripts.er import canonical_map, connected_components
+    from kgloom.ops.graph import connected_components
+    from kgloom.transcripts.er import canonical_map
     turns = transcripts_from_events(spark, sf_dir)
     m = detect_mentions(turns)
     cmap = canonical_map(m)

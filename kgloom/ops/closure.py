@@ -16,7 +16,7 @@ Three strategies, one size-gated dispatcher:
   emitted exactly once (doubling re-derives each pair once per split
   point of its shortest path — the local path avoids that entirely).
 * :func:`transitive_closure` — the dispatcher: label weakly-connected
-  components (size-gated CC from ``kgloom.transcripts.er``), close
+  components (size-gated CC from ``kgloom.ops.graph``), close
   components ≤ :data:`CLOSURE_LOCAL_MAX_EDGES` edges in-task
   (embarrassingly parallel, one shuffle), fall back to distributed
   doubling for giant components.
@@ -29,19 +29,22 @@ proportional to the anchor's component, not the whole graph's closure.
 All functions take a two-column DataFrame and use its own column
 names; the first column is the edge source, the second the target.
 
-Every iterative loop here truncates lineage with eager
-``localCheckpoint()`` — a plain ``persist()`` leaves the logical plan
-growing ~3× per round (self-join + union) and sends optimizer time
-superlinear long before data size matters.
+Path doubling runs on :func:`kgloom.ops.iterate.fixpoint`, which
+truncates lineage with an eager ``localCheckpoint()`` every round — a
+plain ``persist()`` leaves the logical plan growing ~3× per round
+(self-join + union) and sends optimizer time superlinear long before
+data size matters.
 """
 
 from __future__ import annotations
 
-import warnings
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .graph import connected_components
+from .iterate import fixpoint
 
 #: per-component edge budget for the in-partition closure path: a
 #: component at the cap emits at most ~edge_cap² ≈ 1M pairs from one
@@ -70,17 +73,14 @@ def doubling_closure(edges: DataFrame, *, drop_self: bool = False,
     schema-sized relations (see module docstring); the default lets
     AQE choose the join strategy from observed sizes.
 
-    If ``max_rounds`` is exhausted before the fixpoint, the PARTIAL
-    closure is returned with a ``RuntimeWarning`` — callers that need
-    a hard guarantee should check for the warning or raise their own.
+    Raises RuntimeError if ``max_rounds`` is exhausted before the
+    fixpoint (a depth-L relation needs ⌈log2 L⌉ growing rounds plus
+    one confirming round).
     """
     s, d = edges.columns
     keep = (F.col(s) != F.col(d)) if drop_self else F.lit(True)
-    rel = edges.where(keep).distinct().localCheckpoint()
-    n = rel.count()
-    if n == 0:
-        return rel
-    for _ in range(max_rounds):
+
+    def double(rel):
         right = rel.alias("r")
         if broadcast_hint:
             right = F.broadcast(right)
@@ -88,16 +88,10 @@ def doubling_closure(edges: DataFrame, *, drop_self: bool = False,
                .join(right, F.col(f"l.{d}") == F.col(f"r.{s}"))
                .select(F.col(f"l.{s}").alias(s), F.col(f"r.{d}").alias(d))
                .where(keep))
-        grown = rel.unionByName(hop).distinct().localCheckpoint()
-        m = grown.count()
-        if m == n:  # fixpoint
-            return grown
-        rel, n = grown, m
-    warnings.warn(
-        f"transitive closure did not converge in {max_rounds} doubling "
-        f"rounds ({n} pairs so far) — returning the partial closure",
-        RuntimeWarning, stacklevel=2)
-    return rel
+        return rel.unionByName(hop).distinct()
+
+    return fixpoint(edges.where(keep).distinct(), double,
+                    max_rounds=max_rounds, name="doubling_closure")
 
 
 def _make_local_closure_fn(src: str, dst: str):
@@ -138,8 +132,6 @@ def _make_local_closure_fn(src: str, dst: str):
 def _components(edges: DataFrame, s: str, d: str) -> DataFrame:
     """(node, component) labels for the weakly-connected components of
     the edge relation (size-gated driver/distributed CC)."""
-    from kgloom.transcripts.er import connected_components
-
     return connected_components(
         edges.select(F.col(s).alias("src"), F.col(d).alias("dst")))
 

@@ -14,7 +14,7 @@ Dedup-pair resolution is the standard greedy "keep the smaller doc_id
 of every near-dup pair": not a transitive-closure clustering (a→b,
 b→c keeps a and may keep c), but deterministic, one-pass, and the
 common production choice; the connected-components machinery in
-``kgloom.transcripts.er`` is available when closure semantics matter.
+``kgloom.ops.graph`` is available when closure semantics matter.
 """
 
 from __future__ import annotations

@@ -254,7 +254,7 @@ def near_duplicate_clusters(docs: DataFrame, num_hashes: int = 8,
     """(doc_id, cluster_id): group documents into near-duplicate
     clusters — exact dedup FIRST, then MinHash-LSH candidate pairs over
     the representatives, closed under connectivity (the
-    ``kgloom.transcripts.er`` connected-components operator: the same
+    :func:`kgloom.ops.graph.connected_components` operator: the same
     size-gated driver/distributed machinery the north-rule ER uses).
 
     Collapsing exact-duplicate texts to one representative BEFORE
@@ -272,7 +272,7 @@ def near_duplicate_clusters(docs: DataFrame, num_hashes: int = 8,
     their representative's cluster, and documents in no pair are
     singleton clusters of their representative.
     """
-    from ..transcripts.er import connected_components
+    from .graph import connected_components
     reps = exact_dedup(docs)  # (text_md5, n_dups, rep_doc_id)
     rep_docs = docs.join(
         reps.select(F.col("rep_doc_id").alias("doc_id")), "doc_id")

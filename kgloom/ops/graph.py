@@ -1,6 +1,8 @@
 """Graph analytics over edge lists extracted from a constructed KG —
 the post-construction measures (node importance, hub detection) a KG
-pipeline reports on its output.
+pipeline reports on its output — and the connected-components pass
+that entity resolution, near-dup clustering, closure and sameAs fusion
+share.
 
 PageRank is the classic iterative power-method: rank flows along
 out-edges each round, damped, with dangling-node mass redistributed
@@ -12,18 +14,63 @@ hash-aggregate on the destination) — the same shape GraphFrames/Pregel
 produce; corpus scalars (node count, per-round dangling mass) are
 1-row DataFrames broadcast-cross-joined into the update expression, so
 NOTHING is collected to the driver; `localCheckpoint` truncates the
-lineage each round (the iterative-plan blowup guard the ER connected-
-components pass already uses, `kgloom/transcripts/er.py`); the edge
-list with out-degrees is computed once and persisted (tracked —
-release via :func:`kgloom.ops.cache.unpersist_tracked`).
+lineage each round (the iterative-plan blowup guard); the edge list
+with out-degrees is computed once and persisted (tracked — release via
+:func:`kgloom.ops.cache.unpersist_tracked`).
+
+Connected components: iterative min-label propagation plus pointer
+jumping over the bidirected graph — pure DataFrame joins (hash-join
+per iteration), converging in O(log diameter) rounds, with
+``localCheckpoint`` each round to cut lineage (the alternating-join
+scheme GraphFrames' CC uses).  All shuffles are on the node-id key;
+AQE right-sizes them at runtime.  Below a size gate the components
+come from a driver-side union-find instead.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from .cache import tracked_persist
+from .cache import ensure_arrow, tracked_persist
+from .iterate import fixpoint
+
+
+def _edge_set(edges: DataFrame, src: str, dst: str, a: str, b: str,
+              undirected: bool = True) -> DataFrame:
+    """Distinct ``(a, b)`` edges of ``edges`` without self-loops, plus
+    every reverse edge when ``undirected`` (a self-loop inflates its
+    node's degree by 2 in either convention; null endpoints drop with
+    it)."""
+    e = edges.select(F.col(src).alias(a), F.col(dst).alias(b))
+    if undirected:
+        e = e.unionByName(e.select(F.col(b).alias(a), F.col(a).alias(b)))
+    return e.where(F.col(a) != F.col(b)).distinct()
+
+
+def _nodes(e: DataFrame, a: str, b: str) -> DataFrame:
+    """(node): the distinct endpoints of an edge table."""
+    return (e.select(F.col(a).alias("node"))
+            .unionByName(e.select(F.col(b).alias("node")))
+            .distinct())
+
+
+def _out_edges(edges: DataFrame, src: str, dst: str):
+    """(nodes, outdeg, ew) of the distinct directed non-null edge set —
+    the node table, (src, out_deg), and the edges with their source's
+    out-degree (src, dst, out_deg), all persisted: outdeg feeds the
+    per-round dangling anti-join, and without persistence every round
+    recomputes the full upstream edge pipeline."""
+    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+         .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+         .distinct())
+    nodes = tracked_persist(_nodes(e, "src", "dst"))
+    outdeg = tracked_persist(
+        e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")))
+    return nodes, outdeg, tracked_persist(e.join(outdeg, "src"))
 
 
 def pagerank(edges: DataFrame, damping: float = 0.85,
@@ -37,19 +84,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     where ``dangling`` is the rank mass sitting on nodes with no
     out-edges that round.
     """
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-         .distinct())
-    nodes = tracked_persist(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct())
-    # outdeg feeds the per-round dangling anti-join — persisted, or
-    # every round recomputes the full upstream edge pipeline
-    outdeg = tracked_persist(
-        e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")))
-    ew = tracked_persist(e.join(outdeg, "src"))   # (src, dst, out_deg)
-
+    nodes, outdeg, ew = _out_edges(edges, src, dst)
     n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n_nodes"))
     ranks = (nodes.crossJoin(F.broadcast(n_df))
              .select("node", (F.lit(1.0) / F.col("n_nodes")).alias("rank")))
@@ -99,19 +134,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     tool IRIs, one entity's sameAs cluster) is itself query output.
     Ranks sum to 1 over the graph.  Same per-round shuffle shape and
     lineage truncation as :func:`pagerank`."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-         .distinct())
-    nodes = tracked_persist(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct())
-    # outdeg feeds the per-round dangling anti-join — persisted, or
-    # every round recomputes the full upstream edge pipeline
-    outdeg = tracked_persist(
-        e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")))
-    ew = tracked_persist(e.join(outdeg, "src"))   # (src, dst, out_deg)
-
+    nodes, outdeg, ew = _out_edges(edges, src, dst)
     seed_nodes = (seeds.select(F.col(seeds.columns[0]).alias("node"))
                   .distinct().join(nodes, "node"))
     k_df = seed_nodes.agg(
@@ -219,12 +242,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
     by node; ``localCheckpoint`` truncates the iterative lineage."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    from pyspark.sql.window import Window
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    bi = tracked_persist(
-        fwd.unionByName(fwd.select(F.col("b").alias("a"),
-                                   F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b")).distinct())
+    bi = tracked_persist(_edge_set(edges, src, dst, "a", "b"))
     nodes = tracked_persist(
         bi.select(F.col("a").alias("node")).distinct())
     labels = nodes.withColumn("community", F.col("node"))
@@ -334,10 +352,7 @@ def hits(edges: DataFrame, iterations: int = 2,
     e = tracked_persist(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .distinct())
-    nodes = tracked_persist(
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("d").alias("node")))
-        .distinct())
+    nodes = tracked_persist(_nodes(e, "s", "d"))
     hub = nodes.select("node", F.lit(1).cast("long").alias("hub"))
     auth = None
     for _ in range(iterations):
@@ -387,34 +402,50 @@ def k_core(edges: DataFrame, k: int, src: str = "src",
     dropped).  Rounds needed = the graph's peeling depth for this
     ``k`` (typically small); each round is one hash-aggregate plus
     one semi-join — no Python, nothing collected except the one-row
-    convergence count; ``localCheckpoint`` truncates the iterative
-    lineage like the PageRank loop above.  Raises RuntimeError if
-    ``max_rounds`` is exhausted before the fixpoint — a silent
-    partial peel would be an incorrect core, not an approximation."""
+    convergence count (:func:`kgloom.ops.iterate.fixpoint`: peeling
+    only ever drops edges).  Raises RuntimeError if ``max_rounds`` is
+    exhausted before the fixpoint — a silent partial peel would be an
+    incorrect core, not an approximation."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    # undirected: symmetrize once, dedup; self-loops dropped (a
-    # self-loop inflates its node's degree by 2 in either convention)
-    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = (fwd.unionByName(fwd.select(F.col("v").alias("u"),
-                                    F.col("u").alias("v")))
-         .where(F.col("u") != F.col("v"))
-         .distinct()
-         .localCheckpoint())
-    n_edges = e.count()
-    for _ in range(max_rounds):
-        deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.where(F.col("degree") >= k)
-        pruned = (e.join(keep.select("u"), "u", "semi")
-                  .join(keep.select(F.col("u").alias("v")), "v", "semi")
-                  .localCheckpoint())
-        n_pruned = pruned.count()
-        if n_pruned == n_edges:
-            return (pruned.groupBy(F.col("u").alias("node"))
-                    .agg(F.count(F.lit(1)).alias("degree")))
-        e, n_edges = pruned, n_pruned
-    raise RuntimeError(
-        f"k_core did not converge within {max_rounds} rounds")
+
+    def peel(e):
+        keep = (e.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
+                .where(F.col("degree") >= k))
+        return (e.join(keep.select("u"), "u", "semi")
+                .join(keep.select(F.col("u").alias("v")), "v", "semi"))
+
+    core = fixpoint(_edge_set(edges, src, dst, "u", "v"), peel,
+                    max_rounds=max_rounds, name="k_core")
+    return (core.groupBy(F.col("u").alias("node"))
+            .agg(F.count(F.lit(1)).alias("degree")))
+
+
+def _open_wedges(edges: DataFrame, src: str, dst: str,
+                 max_center_degree: int | None):
+    """(deg, wedges) of the undirected simple graph: the degree table
+    (w, deg_w) and every open wedge u – w – v (u < v, u and v NOT
+    adjacent) as (w, deg_w, u, v), one row per common neighbor ``w``.
+
+    A degree-1 center cannot be a COMMON neighbor (it has exactly one
+    neighbor) — dropping it prunes wedge work and keeps 1/ln(deg_w)
+    well-defined under ANSI mode; ``max_center_degree`` drops hub
+    centers BEFORE the self-join (the O(deg²) fan-out guard)."""
+    e = _edge_set(edges, src, dst, "u", "v")
+    deg = e.groupBy(F.col("u").alias("w")).agg(
+        F.count(F.lit(1)).alias("deg_w"))
+    centers = deg.where(F.col("deg_w") >= 2)
+    if max_center_degree is not None:
+        centers = centers.where(F.col("deg_w") <= max_center_degree)
+    adj = (e.select(F.col("u").alias("w"), F.col("v").alias("x"))
+           .join(centers, "w"))
+    wedges = (adj.select("w", "deg_w", F.col("x").alias("u"))
+              .join(adj.select("w", F.col("x").alias("v")), "w")
+              .where(F.col("u") < F.col("v")))
+    return deg, wedges.join(
+        e.select(F.col("u").alias("__eu"), F.col("v").alias("__ev")),
+        (F.col("u") == F.col("__eu")) & (F.col("v") == F.col("__ev")),
+        "left_anti")
 
 
 def adamic_adar(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -439,36 +470,12 @@ def adamic_adar(edges: DataFrame, src: str = "src", dst: str = "dst",
     skewed graphs, principled here because a hub's AA contribution is
     the minimum possible (1/ln(deg) vanishes as deg grows).  None
     means exact."""
-    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = (fwd.unionByName(fwd.select(F.col("v").alias("u"),
-                                    F.col("u").alias("v")))
-         .where(F.col("u") != F.col("v"))
-         .distinct())
-    deg = e.groupBy(F.col("u").alias("w")).agg(
-        F.count(F.lit(1)).alias("deg_w"))
-    # a degree-1 center cannot be a COMMON neighbor (it has exactly
-    # one neighbor) — dropping it prunes wedge work and keeps
-    # 1/ln(deg_w) well-defined even if a caller materializes adj
-    # eagerly under ANSI mode
-    centers = deg.where(F.col("deg_w") >= 2)
-    if max_center_degree is not None:
-        centers = centers.where(F.col("deg_w") <= max_center_degree)
-    # (w, x) adjacency restricted to surviving centers, weight attached
-    adj = (e.select(F.col("u").alias("w"), F.col("v").alias("x"))
-           .join(centers, "w")
-           .withColumn("wt", F.lit(1.0) / F.log(F.col("deg_w")
-                                                .cast("double"))))
-    a = adj.select("w", F.col("x").alias("u"), "wt")
-    b = adj.select("w", F.col("x").alias("v"))
-    wedges = (a.join(b, "w")
-              .where(F.col("u") < F.col("v")))
-    non_edges = wedges.join(
-        e.select(F.col("u").alias("__eu"), F.col("v").alias("__ev")),
-        (F.col("u") == F.col("__eu")) & (F.col("v") == F.col("__ev")),
-        "left_anti")
+    _, wedges = _open_wedges(edges, src, dst, max_center_degree)
+    wedges = wedges.withColumn(
+        "wt", F.lit(1.0) / F.log(F.col("deg_w").cast("double")))
     arr = F.sort_array(F.collect_list(F.struct("w", "wt")))
     folded = F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x["wt"])
-    return (non_edges.groupBy("u", "v")
+    return (wedges.groupBy("u", "v")
             .agg(F.count(F.lit(1)).alias("n_common"),
                  folded.alias("aa_score"))
             .where(F.col("n_common") >= min_common))
@@ -492,11 +499,8 @@ def bfs_levels(edges: DataFrame, sources: DataFrame,
     level 0 (they are trivially at distance 0 from themselves)."""
     if max_depth < 0:
         raise ValueError("max_depth must be >= 0")
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = fwd if directed else fwd.unionByName(
-        fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
     adj = tracked_persist(
-        e.where(F.col("a") != F.col("b")).distinct())
+        _edge_set(edges, src, dst, "a", "b", undirected=not directed))
     frontier = (sources.select(F.col(sources.columns[0]).alias("node"))
                 .distinct().localCheckpoint())
     visited = frontier.withColumn("level", F.lit(0).cast("int"))
@@ -531,26 +535,8 @@ def jaccard_pairs(edges: DataFrame, src: str = "src", dst: str = "dst",
     engine-exact replay.  ``max_center_degree`` drops hub CENTERS
     from wedge generation only (the O(deg²) guard, mirrored by the
     oracle); endpoint degrees stay exact."""
-    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = (fwd.unionByName(fwd.select(F.col("v").alias("u"),
-                                    F.col("u").alias("v")))
-         .where(F.col("u") != F.col("v"))
-         .distinct())
-    deg = e.groupBy(F.col("u").alias("w")).agg(
-        F.count(F.lit(1)).alias("deg_w"))
-    centers = deg.where(F.col("deg_w") >= 2)
-    if max_center_degree is not None:
-        centers = centers.where(F.col("deg_w") <= max_center_degree)
-    adj = (e.select(F.col("u").alias("w"), F.col("v").alias("x"))
-           .join(centers.select("w"), "w"))
-    a = adj.select("w", F.col("x").alias("u"))
-    b = adj.select("w", F.col("x").alias("v"))
-    wedges = a.join(b, "w").where(F.col("u") < F.col("v"))
-    non_edges = wedges.join(
-        e.select(F.col("u").alias("__eu"), F.col("v").alias("__ev")),
-        (F.col("u") == F.col("__eu")) & (F.col("v") == F.col("__ev")),
-        "left_anti")
-    pairs = (non_edges.groupBy("u", "v")
+    deg, wedges = _open_wedges(edges, src, dst, max_center_degree)
+    pairs = (wedges.groupBy("u", "v")
              .agg(F.count(F.lit(1)).alias("n_common"))
              .where(F.col("n_common") >= min_common))
     du = deg.select(F.col("w").alias("u"), F.col("deg_w").alias("deg_u"))
@@ -626,10 +612,71 @@ def pmi_pairs(incidence: DataFrame, bag: str = "bag",
                     pmi.alias("pmi")))
 
 
+def _hex_draw(df: DataFrame, salt_cols) -> DataFrame:
+    """``df`` plus ``__draw``: the first 32 bits of md5 over the
+    ``|``-joined ``salt_cols`` as a long, staged through a named hex
+    column (the Spark 4.1.2 fused-conv hazard, see
+    kgloom/ops/negatives.py)."""
+    return (df.withColumn("__hex8", F.substring(F.md5(
+                F.concat_ws("|", *salt_cols)), 1, 8))
+            .withColumn("__draw", F.conv("__hex8", 16, 10).cast("long")))
+
+
+def _walk_start(edges: DataFrame, src: str, dst: str, n_walks: int,
+                walk_len: int, directed: bool):
+    """(keep, e, nbr, deg, cur) for the walkers: the distinct edge set
+    ``e`` (s, d), each source's neighbors with their 0-based id-order
+    rank (ns, nd, rank), the degree table (dn, deg), and step 0 of
+    every walk (start, walk_id, step, node).
+
+    Fresh column names per derived table: nbr and deg share e's
+    lineage, and a later join of both trips Spark's ambiguous-self-join
+    analysis if they expose the same attribute.  Both are joined at
+    EVERY step of the eager (localCheckpoint) walk loop; without
+    persistence each step's job recomputes the upstream edge pipeline.
+    Measured A/B at sf0.1 (local[32], quiet host, min-of-2): recompute
+    WINS for short walks (7.3s vs 10.2s at walk_len=3 — cache
+    materialization breaks scan/join pipelining and costs more than two
+    cheap rescans), while at walk_len≥8 the 2·walk_len rescans dominate
+    — so ``keep`` persists (tracked — release via
+    kgloom.ops.cache.unpersist_tracked) only walks of 8+ steps."""
+    if n_walks < 1 or walk_len < 1:
+        raise ValueError("n_walks and walk_len must be >= 1")
+    keep = tracked_persist if walk_len >= 8 else (lambda df: df)
+    e = _edge_set(edges, src, dst, "s", "d", undirected=not directed)
+    nbr = keep(
+        e.withColumn("rank", F.row_number().over(
+            Window.partitionBy("s").orderBy("d")) - 1)
+        .select(F.col("s").alias("ns"), F.col("d").alias("nd"), "rank"))
+    deg = keep(
+        e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
+        .select(F.col("s").alias("dn"), "deg"))
+    cur = (_nodes(e, "s", "d").select(
+        F.col("node").alias("start"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1)))
+        .alias("walk_id"),
+        F.lit(0).alias("step"),
+        F.col("node").alias("node")).localCheckpoint())
+    return keep, e, nbr, deg, cur
+
+
+def _uniform_step(cur: DataFrame, nbr: DataFrame, deg: DataFrame,
+                  i: int) -> DataFrame:
+    """Step ``i`` of a first-order walk: each walker row of ``cur``
+    joined to the neighbor (``nd``) whose rank is
+    ``md5(start|walk_id|i|node) mod deg(node)``.  Walkers on a node
+    with no out-edge have no row."""
+    drawn = _hex_draw(cur.join(deg, cur["node"] == deg["dn"]),
+                      ["start", F.col("walk_id").cast("string"),
+                       F.lit(str(i)), "node"])
+    drawn = drawn.withColumn("__slot", F.col("__draw") % F.col("deg"))
+    return drawn.join(nbr, (drawn["node"] == nbr["ns"])
+                      & (drawn["__slot"] == nbr["rank"]))
+
+
 def random_walks(edges: DataFrame, n_walks: int = 2, walk_len: int = 3,
                  src: str = "src", dst: str = "dst",
-                 directed: bool = False,
-                 persist_adjacency: bool | None = None) -> DataFrame:
+                 directed: bool = False) -> DataFrame:
     """(start, walk_id, step, node): ``n_walks`` random walks of up to
     ``walk_len`` steps from every node — the DeepWalk/node2vec
     training-sequence generator, made fully DETERMINISTIC: step ``i``
@@ -641,68 +688,20 @@ def random_walks(edges: DataFrame, n_walks: int = 2, walk_len: int = 3,
 
     Per step: one broadcast-friendly join against the degree table to
     draw the slot, then one EQUI-join on (source, rank) — the walker
-    never fans out over a hub's full adjacency.  The md5→int draw is
-    staged through named columns (the Spark 4.1.2 fused-conv hazard,
-    see kgloom/ops/negatives.py).  Walks stop early at sinks
-    (directed mode) — no row is emitted rather than a self-stall."""
-    if n_walks < 1 or walk_len < 1:
-        raise ValueError("n_walks and walk_len must be >= 1")
-    from pyspark.sql.window import Window
-
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    e = fwd if directed else fwd.unionByName(
-        fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    e = e.where(F.col("s") != F.col("d")).distinct()
-    # fresh column names per derived table: nbr and deg share e's
-    # lineage, and a later join of both trips Spark's ambiguous-
-    # self-join analysis if they expose the same attribute.
-    # Both are joined at EVERY step of the eager (localCheckpoint)
-    # walk loop; without persistence each step's job recomputes the
-    # upstream edge pipeline.  Measured A/B at sf0.1 (local[32],
-    # quiet host, min-of-2): recompute WINS for short walks (7.3s vs
-    # 10.2s at walk_len=3 — cache materialization breaks scan/join
-    # pipelining and costs more than two cheap rescans), while at
-    # walk_len≥8 the 2·walk_len rescans dominate — so the default
-    # gates persistence on walk length (tracked — release via
-    # kgloom.ops.cache.unpersist_tracked).
-    if persist_adjacency is None:
-        persist_adjacency = walk_len >= 8
-    _keep = tracked_persist if persist_adjacency else (lambda df: df)
-    nbr = _keep(
-        e.withColumn("rank", F.row_number().over(
-            Window.partitionBy("s").orderBy("d")) - 1)
-        .select(F.col("s").alias("ns"), F.col("d").alias("nd"), "rank"))
-    deg = _keep(
-        e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-        .select(F.col("s").alias("dn"), "deg"))
-    nodes = (e.select(F.col("s").alias("node"))
-             .unionByName(e.select(F.col("d").alias("node")))
-             .distinct())
-    cur = (nodes.select(
-        F.col("node").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1)))
-        .alias("walk_id"),
-        F.lit(0).alias("step"),
-        F.col("node").alias("node")).localCheckpoint())
+    never fans out over a hub's full adjacency.  Walks stop early at
+    sinks (directed mode) — no row is emitted rather than a
+    self-stall.  The adjacency tables are persisted for walks of 8+
+    steps (see :func:`_walk_start`)."""
+    _, _, nbr, deg, cur = _walk_start(edges, src, dst, n_walks,
+                                      walk_len, directed)
     out = cur
     for i in range(walk_len):
-        hex8 = F.substring(F.md5(F.concat_ws(
-            "|", "start", F.col("walk_id").cast("string"),
-            F.lit(str(i)), "node")), 1, 8)
-        drawn = (cur.join(deg, cur["node"] == deg["dn"])
-                 .withColumn("__hex8", hex8)
-                 .withColumn("__draw",
-                             F.conv("__hex8", 16, 10).cast("long"))
-                 .withColumn("__slot", F.col("__draw") % F.col("deg")))
-        stepped = (drawn.join(
-            nbr, (drawn["node"] == nbr["ns"])
-            & (drawn["__slot"] == nbr["rank"]))
-            .select("start", "walk_id",
-                    (F.col("step") + 1).alias("step"),
-                    F.col("nd").alias("node"))
-            .localCheckpoint())
-        out = out.unionByName(stepped)
-        cur = stepped
+        cur = (_uniform_step(cur, nbr, deg, i)
+               .select("start", "walk_id",
+                       (F.col("step") + 1).alias("step"),
+                       F.col("nd").alias("node"))
+               .localCheckpoint())
+        out = out.unionByName(cur)
     return out
 
 
@@ -735,8 +734,7 @@ def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
 
 def biased_walks(edges: DataFrame, p: float = 4.0, q: float = 0.25,
                  n_walks: int = 1, walk_len: int = 3,
-                 src: str = "src", dst: str = "dst",
-                 persist_adjacency: bool | None = None) -> DataFrame:
+                 src: str = "src", dst: str = "dst") -> DataFrame:
     """(start, walk_id, step, node): node2vec second-order biased
     walks over the undirected graph, fully deterministic.  From
     ``prev → cur``, neighbor ``x`` of ``cur`` is weighted ``1/p`` if
@@ -757,61 +755,21 @@ def biased_walks(edges: DataFrame, p: float = 4.0, q: float = 0.25,
     = deg(cur) — inherent to second-order biasing, every neighbor
     needs a weight), one left join against the edge set marks
     BFS neighbors, one cumulative window per walker picks the
-    successor; ``localCheckpoint`` truncates the iterative lineage."""
+    successor; ``localCheckpoint`` truncates the iterative lineage.
+    The adjacency tables are persisted for walks of 8+ steps (see
+    :func:`_walk_start`)."""
     import math
     for name, val in (("p", p), ("q", q)):
         if val <= 0 or 2.0 ** round(math.log2(val)) != val:
             raise ValueError(f"{name} must be a power of two, got {val}")
-    if n_walks < 1 or walk_len < 1:
-        raise ValueError("n_walks and walk_len must be >= 1")
-    from pyspark.sql.window import Window
-
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    e = (fwd.unionByName(fwd.select(F.col("d").alias("s"),
-                                    F.col("s").alias("d")))
-         .where(F.col("s") != F.col("d")).distinct())
-    # all three are re-joined every step of the eager walk loop;
-    # persistence is length-gated exactly as in random_walks (see the
-    # measured A/B note there) — short walks recompute, long walks
-    # persist (tracked — release via
-    # kgloom.ops.cache.unpersist_tracked)
-    if persist_adjacency is None:
-        persist_adjacency = walk_len >= 8
-    _keep = tracked_persist if persist_adjacency else (lambda df: df)
-    nbr = _keep(
-        e.withColumn("rank", F.row_number().over(
-            Window.partitionBy("s").orderBy("d")))
-        .select(F.col("s").alias("ns"), F.col("d").alias("nd"), "rank"))
-    deg = _keep(
-        e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-        .select(F.col("s").alias("dn"), "deg"))
-    eset = _keep(
-        e.select(F.col("s").alias("es"), F.col("d").alias("ed")))
-    nodes = (e.select(F.col("s").alias("node"))
-             .unionByName(e.select(F.col("d").alias("node")))
-             .distinct())
-    cur = (nodes.select(
-        F.col("node").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1)))
-        .alias("walk_id"),
-        F.lit(0).alias("step"),
-        F.lit(None).cast("string").alias("prev"),
-        F.col("node").alias("node")).localCheckpoint())
-    out = cur.select("start", "walk_id", "step", "node")
-
-    def _hex_draw(df, salt_cols):
-        return (df.withColumn("__hex8", F.substring(F.md5(
-                    F.concat_ws("|", *salt_cols)), 1, 8))
-                .withColumn("__draw",
-                            F.conv("__hex8", 16, 10).cast("long")))
-
+    # the edge set is re-joined every step too, so it is kept with the
+    # adjacency tables
+    keep, e, nbr, deg, cur = _walk_start(edges, src, dst, n_walks,
+                                         walk_len, directed=False)
+    eset = keep(e.select(F.col("s").alias("es"), F.col("d").alias("ed")))
+    out = cur
     # step 1: uniform first-order move (no prev to bias against)
-    drawn = _hex_draw(cur.join(deg, cur["node"] == deg["dn"]),
-                      ["start", F.col("walk_id").cast("string"),
-                       F.lit("0"), "node"])
-    drawn = drawn.withColumn("__slot", F.col("__draw") % F.col("deg"))
-    cur = (drawn.join(nbr, (drawn["node"] == nbr["ns"])
-                      & (drawn["__slot"] == nbr["rank"] - 1))
+    cur = (_uniform_step(cur, nbr, deg, 0)
            .select("start", "walk_id", F.lit(1).alias("step"),
                    F.col("node").alias("prev"),
                    F.col("nd").alias("node"))
@@ -819,6 +777,8 @@ def biased_walks(edges: DataFrame, p: float = 4.0, q: float = 0.25,
     out = out.unionByName(cur.select("start", "walk_id", "step", "node"))
 
     inv_p, inv_q = 1.0 / p, 1.0 / q
+    wspec = Window.partitionBy("start", "walk_id")
+    worder = wspec.orderBy("rank")
     for i in range(1, walk_len):
         cand = (cur.join(nbr, cur["node"] == nbr["ns"])
                 .withColumnRenamed("nd", "x"))
@@ -830,9 +790,6 @@ def biased_walks(edges: DataFrame, p: float = 4.0, q: float = 0.25,
                 .when(F.col("es").isNotNull(), F.lit(1.0))
                 .otherwise(F.lit(inv_q)))
             .drop("es", "ed"))
-        wk = ["start", "walk_id"]
-        wspec = Window.partitionBy(*wk)
-        worder = wspec.orderBy("rank")
         cand = (cand
                 .withColumn("__cum", F.sum("__alpha").over(
                     worder.rowsBetween(Window.unboundedPreceding, 0)))
@@ -845,8 +802,7 @@ def biased_walks(edges: DataFrame, p: float = 4.0, q: float = 0.25,
             "__t", F.col("__draw").cast("double")
             / F.lit(4294967296.0) * F.col("__total"))
         picked = (cand.where(F.col("__cum") > F.col("__t"))
-                  .withColumn("__pick", F.row_number().over(
-                      wspec.orderBy("rank")))
+                  .withColumn("__pick", F.row_number().over(worder))
                   .where(F.col("__pick") == 1))
         cur = (picked.select("start", "walk_id",
                              F.lit(i + 1).alias("step"),
@@ -887,7 +843,6 @@ def link_prediction_ranks(edges: DataFrame, test_fraction: float = 0.2,
     test = tagged.where(F.col("__test")).select("u", "v")
     aa = adamic_adar(train, src="u", dst="v",
                      max_center_degree=max_center_degree)
-    from pyspark.sql.window import Window
     ranked = aa.withColumn("rank", F.row_number().over(
         Window.partitionBy("u").orderBy(F.desc("aa_score"), "v")))
     return (test.join(ranked.select("u", "v", "rank"), ["u", "v"],
@@ -961,6 +916,49 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
     return dist.localCheckpoint()
 
 
+def _kmv_balls(edges: DataFrame, src: str, dst: str, directed: bool,
+               radius: int, k: int):
+    """Yield, for r = 0..radius, the ``localCheckpoint``ed KMV synopsis
+    (node, __f) of every node's ≤r-hop reachable set: each round a
+    node's synopsis absorbs its successors' synopses,
+
+        reach_r(v) = TopK(distinct(reach_{r-1}(v) ∪
+                                   ⋃_{v→u} reach_{r-1}(u))),
+
+    one edge ⋈ synopsis join plus one bounded per-node top-k — O(E·k)
+    rows shuffled, ≤ k state rows per node, lineage truncated per
+    round."""
+    from .sketch import _hash_fraction
+    adj = tracked_persist(
+        _edge_set(edges, src, dst, "a", "b", undirected=not directed))
+    reach = (_nodes(adj, "a", "b")
+             .withColumn("__f", _hash_fraction(F.col("node")))
+             .localCheckpoint())
+    yield reach
+    w = Window.partitionBy("node").orderBy("__f")
+    for _ in range(radius):
+        prop = (adj.join(reach.withColumnRenamed("node", "b"), "b")
+                .select(F.col("a").alias("node"), "__f"))
+        reach = (reach.unionByName(prop).distinct()
+                 .withColumn("__rn", F.row_number().over(w))
+                 .where(F.col("__rn") <= k).drop("__rn")
+                 .localCheckpoint())
+        yield reach
+
+
+def _ball_sizes(state: DataFrame, k: int) -> DataFrame:
+    """(node, n_minima, f_k, est) of a KMV synopsis state: ``est`` is
+    the exact ball size below ``k`` minima and the (k-1)/f_k estimate
+    at ``k``."""
+    agg = state.groupBy("node").agg(
+        F.count(F.lit(1)).alias("n_minima"),
+        F.max("__f").alias("f_k"))
+    est = (F.when(F.col("n_minima") < k,
+                  F.col("n_minima").cast("double"))
+           .otherwise(F.lit(float(k - 1)) / F.col("f_k")))
+    return agg.select("node", "n_minima", "f_k", est.alias("est"))
+
+
 def reach_synopsis(edges: DataFrame, radius: int, k: int = 16,
                    src: str = "src", dst: str = "dst",
                    directed: bool = True) -> DataFrame:
@@ -970,12 +968,9 @@ def reach_synopsis(edges: DataFrame, radius: int, k: int = 16,
     engine's deterministic KMV synopsis in place of HyperLogLog so the
     result is oracle-checkable).
 
-    Per round each node's synopsis absorbs its successors' synopses:
-
-        reach_r(v) = TopK(distinct(reach_{r-1}(v) ∪
-                                   ⋃_{v→u} reach_{r-1}(u)))
-
-    KMV mergeability makes this EXACT-by-construction: after ``r``
+    Per round each node's synopsis absorbs its successors' synopses
+    (the recurrence in :func:`_kmv_balls`).  KMV mergeability makes
+    this EXACT-by-construction: after ``r``
     rounds a node's k minima are precisely the KMV synopsis of its
     true ≤r-hop ball, so ``est`` is exact for balls below ``k`` and
     the standard (k-1)/f_k estimate above — bit-replayable by any
@@ -986,35 +981,10 @@ def reach_synopsis(edges: DataFrame, radius: int, k: int = 16,
     edge ⋈ synopsis join + one bounded per-node top-k — O(E·k) rows
     shuffled, no collects, lineage truncated per round.
     """
-    from pyspark.sql.window import Window
-
-    from .sketch import _hash_fraction
     if radius < 0:
         raise ValueError("radius must be >= 0")
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = fwd if directed else fwd.unionByName(
-        fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    adj = tracked_persist(e.where(F.col("a") != F.col("b")).distinct())
-    nodes = (adj.select(F.col("a").alias("node"))
-             .unionByName(adj.select(F.col("b").alias("node")))
-             .distinct())
-    reach = (nodes.withColumn("__f", _hash_fraction(F.col("node")))
-             .localCheckpoint())
-    w = Window.partitionBy("node").orderBy("__f")
-    for _ in range(radius):
-        prop = (adj.join(reach.withColumnRenamed("node", "b"), "b")
-                .select(F.col("a").alias("node"), "__f"))
-        reach = (reach.unionByName(prop).distinct()
-                 .withColumn("__rn", F.row_number().over(w))
-                 .where(F.col("__rn") <= k).drop("__rn")
-                 .localCheckpoint())
-    agg = reach.groupBy("node").agg(
-        F.count(F.lit(1)).alias("n_minima"),
-        F.max("__f").alias("f_k"))
-    est = (F.when(F.col("n_minima") < k,
-                  F.col("n_minima").cast("double"))
-           .otherwise(F.lit(float(k - 1)) / F.col("f_k")))
-    return agg.select("node", "n_minima", "f_k", est.alias("est"))
+    *_, reach = _kmv_balls(edges, src, dst, directed, radius, k)
+    return _ball_sizes(reach, k)
 
 
 def harmonic_centrality(edges: DataFrame, radius: int, k: int = 16,
@@ -1032,51 +1002,18 @@ def harmonic_centrality(edges: DataFrame, radius: int, k: int = 16,
 
     Scale: identical per-round cost to :func:`reach_synopsis`
     (edge ⋈ synopsis + bounded per-node top-k) plus one k-row-per-node
-    aggregate per round; the accumulator is one row per node,
-    localCheckpoint'ed so lineage stays flat.
+    aggregate per radius, all differenced in one window at the end.
     """
-    from pyspark.sql.window import Window
-
-    from .sketch import _hash_fraction
     if radius < 1:
         raise ValueError("radius must be >= 1")
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = fwd if directed else fwd.unionByName(
-        fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    adj = tracked_persist(e.where(F.col("a") != F.col("b")).distinct())
-    nodes = (adj.select(F.col("a").alias("node"))
-             .unionByName(adj.select(F.col("b").alias("node")))
-             .distinct())
-    reach = (nodes.withColumn("__f", _hash_fraction(F.col("node")))
-             .localCheckpoint())
-    w = Window.partitionBy("node").orderBy("__f")
-
-    def est_of(state):
-        agg = state.groupBy("node").agg(
-            F.count(F.lit(1)).alias("__n"), F.max("__f").alias("__fk"))
-        return agg.select(
-            "node",
-            F.when(F.col("__n") < k, F.col("__n").cast("double"))
-             .otherwise(F.lit(float(k - 1)) / F.col("__fk"))
-             .alias("est"))
-
-    # collect one (node, r, est) slice per radius off the CHECKPOINTED
-    # reach states and difference them in a single window at the end —
-    # no per-round accumulator joins/materializations (the first cut
+    # one (node, r, est) slice per radius off the CHECKPOINTED reach
+    # states, differenced in a single window at the end — no
+    # per-round accumulator joins/materializations (the first cut
     # checkpointed an acc join chain every round: 23s vs 8s at sf0.1)
-    ests = [est_of(reach).select("node", F.lit(0).alias("r"), "est")]
-    for r in range(1, radius + 1):
-        prop = (adj.join(reach.withColumnRenamed("node", "b"), "b")
-                .select(F.col("a").alias("node"), "__f"))
-        reach = (reach.unionByName(prop).distinct()
-                 .withColumn("__rn", F.row_number().over(w))
-                 .where(F.col("__rn") <= k).drop("__rn")
-                 .localCheckpoint())
-        ests.append(est_of(reach).select("node", F.lit(r).alias("r"),
-                                         "est"))
-    allr = ests[0]
-    for e2 in ests[1:]:
-        allr = allr.unionByName(e2)
+    allr = reduce(DataFrame.unionByName, (
+        _ball_sizes(reach, k).select("node", F.lit(r).alias("r"), "est")
+        for r, reach in enumerate(
+            _kmv_balls(edges, src, dst, directed, radius, k))))
     wr = Window.partitionBy("node").orderBy("r")
     return (allr.withColumn("__pe", F.lag("est").over(wr))
             .where(F.col("r") >= 1)
@@ -1103,43 +1040,12 @@ def effective_diameter(edges: DataFrame, max_radius: int, k: int = 16,
     distribution is ``max_radius + 1`` scalars (a per-radius sum with
     map-side partial aggregation) — nothing node-sized leaves the
     cluster."""
-    from pyspark.sql.window import Window
-
-    from .sketch import _hash_fraction
     if max_radius < 1:
         raise ValueError("max_radius must be >= 1")
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = fwd if directed else fwd.unionByName(
-        fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    adj = tracked_persist(e.where(F.col("a") != F.col("b")).distinct())
-    nodes = (adj.select(F.col("a").alias("node"))
-             .unionByName(adj.select(F.col("b").alias("node")))
-             .distinct())
-    reach = (nodes.withColumn("__f", _hash_fraction(F.col("node")))
-             .localCheckpoint())
-    w = Window.partitionBy("node").orderBy("__f")
-
-    def n_of(state, r):
-        agg = state.groupBy("node").agg(
-            F.count(F.lit(1)).alias("__n"), F.max("__f").alias("__fk"))
-        return agg.select(
-            F.lit(r).alias("r"),
-            F.when(F.col("__n") < k, F.col("__n").cast("double"))
-             .otherwise(F.lit(float(k - 1)) / F.col("__fk"))
-             .alias("est"))
-
-    slices = [n_of(reach, 0)]
-    for r in range(1, max_radius + 1):
-        prop = (adj.join(reach.withColumnRenamed("node", "b"), "b")
-                .select(F.col("a").alias("node"), "__f"))
-        reach = (reach.unionByName(prop).distinct()
-                 .withColumn("__rn", F.row_number().over(w))
-                 .where(F.col("__rn") <= k).drop("__rn")
-                 .localCheckpoint())
-        slices.append(n_of(reach, r))
-    allr = slices[0]
-    for s2 in slices[1:]:
-        allr = allr.unionByName(s2)
+    allr = reduce(DataFrame.unionByName, (
+        _ball_sizes(reach, k).select(F.lit(r).alias("r"), "est")
+        for r, reach in enumerate(
+            _kmv_balls(edges, src, dst, directed, max_radius, k))))
     nf = allr.groupBy("r").agg(F.sum("est").alias("nr"))
     total = nf.agg(F.max("nr").alias("__max"))
     wr = Window.orderBy("r")
@@ -1155,3 +1061,138 @@ def effective_diameter(edges: DataFrame, max_radius: int, k: int = 16,
                       / (F.col("nr") - F.col("__prev"))))
     return hit.select(F.round(eff, 6).alias("eff_diameter"),
                       F.round(F.col("__max"), 6).alias("total_pairs"))
+
+
+#: below this edge count the component computation runs driver-side
+#: (union-find) instead of iterative joins — two-level strategy: the
+#: distinct-surface graph after blocking is usually tiny relative to the
+#: mention stream, and a driver union-find on ≤ a few million edges is
+#: milliseconds vs seconds of per-round job latency.  Above it, the
+#: GraphFrames-style iterative hash-join propagation takes over.
+DRIVER_CC_MAX_EDGES = 2_000_000
+
+
+def union_find(edge_rows) -> dict[str, str]:
+    """node → component over an iterable of (src, dst) pairs, with
+    component = the minimal node of each component (union by label
+    order, path compression)."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    for src, dst in edge_rows:
+        parent.setdefault(src, src)
+        parent.setdefault(dst, dst)
+        rs, rd = find(src), find(dst)
+        if rs != rd:
+            lo, hi = (rs, rd) if rs < rd else (rd, rs)
+            parent[hi] = lo
+    return {n: find(n) for n in parent}
+
+
+def connected_components(edges: DataFrame, max_iter: int = 20,
+                         driver_max_edges: int = DRIVER_CC_MAX_EDGES
+                         ) -> DataFrame:
+    """(src, dst) string edges → (node, component) with component = the
+    lexicographically minimal node of each component.
+
+    Size-gated two-level strategy (see DRIVER_CC_MAX_EDGES); the
+    distributed path repartitions its iteration state size-aware
+    (~500k edges per partition, min 1): small graphs run single-task
+    rounds, huge graphs scale out with hash joins on the node key.
+
+    Each distributed round does BOTH a 1-hop neighbor-min propagation
+    AND a pointer jump (``label ← min(label, label(label))``, the
+    Shiloach–Vishkin / hash-to-min device), so convergence is
+    O(log diameter) rounds — plain min-label propagation alone is
+    O(diameter), which silently mislabels any component deeper than
+    ``max_iter`` (a 101-node chain previously split into 81
+    components on this path).  The pointer-jump join keys on the
+    label, which skews toward component minima as big components
+    coalesce — AQE skew-join handling (on in every session builder
+    here) splits those hot partitions.  The label table's row count
+    never changes (one row per node), so each round probes for a
+    changed label instead; if ``max_iter`` rounds still change one,
+    RuntimeError is raised rather than returning labels that would
+    merge further.
+    """
+    spark = edges.sparkSession
+    # materialize BEFORE the size probe: the probe count() and the
+    # first consumer would otherwise each recompute the full upstream
+    # edge pipeline (mention detection + canonicalization when fed
+    # from the transcript path)
+    bidirected = (edges.select("src", "dst")
+                  .unionByName(edges.select(F.col("dst").alias("src"),
+                                            F.col("src").alias("dst")))
+                  .distinct()
+                  .localCheckpoint())
+    n_edges = bidirected.count()
+    if n_edges <= driver_max_edges:
+        # Arrow both ways: toPandas() fetches columnar batches (a
+        # pickled Row list measured ~3-5s slower at the 100k-edge
+        # scale of one sf0.1 closure query), and handing
+        # createDataFrame a pandas frame keeps the return trip on the
+        # Arrow path too; bounded by the gate either way.
+        # ensure_arrow: the conf defaults to FALSE, which silently
+        # reverts both transfers to row pickling (measured 7x slower)
+        import pandas as pd
+
+        ensure_arrow(spark)
+        pdf = bidirected.toPandas()
+        mapping = union_find(zip(pdf["src"], pdf["dst"]))
+        if not mapping:
+            return spark.createDataFrame([], "node string, component string")
+        out = pd.DataFrame(list(mapping.items()),
+                           columns=["node", "component"])
+        return spark.createDataFrame(out)
+
+    parts = max(1, min(int(spark.conf.get(
+        "spark.sql.shuffle.partitions")), n_edges // 500_000 + 1))
+    bidirected = bidirected.repartition(parts, "src").localCheckpoint()
+    # (reads the checkpoint above, not the raw upstream)
+    nodes = (bidirected.select(F.col("src").alias("node")).distinct())
+    labels = nodes.withColumn("label", F.col("node")) \
+        .repartition(parts, "node")
+
+    for _ in range(max_iter):
+        neighbor_min = (bidirected
+                        .join(labels.withColumnRenamed("node", "dst"), "dst")
+                        .groupBy("src")
+                        .agg(F.min("label").alias("nlabel"))
+                        .withColumnRenamed("src", "node"))
+        stepped = (labels.join(neighbor_min, "node", "left")
+                   .select("node",
+                           F.least(F.col("label"),
+                                   F.coalesce(F.col("nlabel"),
+                                              F.col("label")))
+                           .alias("label")))
+        # pointer jump: label ← label(label) — halves every pointer
+        # chain, turning O(diameter) propagation into O(log diameter)
+        ptr = stepped.select(F.col("node").alias("__pnode"),
+                             F.col("label").alias("__plabel"))
+        new_labels = (stepped
+                      .join(ptr, stepped["label"] == ptr["__pnode"], "left")
+                      .select(stepped["node"],
+                              F.least(stepped["label"],
+                                      F.coalesce(F.col("__plabel"),
+                                                 stepped["label"]))
+                              .alias("label"))
+                      .repartition(parts, "node")
+                      .localCheckpoint())
+        changed = (new_labels.alias("n")
+                   .join(labels.alias("o"), "node")
+                   .where(F.col("n.label") != F.col("o.label"))
+                   .limit(1).count())
+        labels = new_labels
+        if changed == 0:
+            return labels.withColumnRenamed("label", "component")
+    raise RuntimeError(
+        f"connected_components did not converge within {max_iter} "
+        f"rounds; raise max_iter (pointer-jumped rounds cover diameter "
+        f"~2^{max_iter})")

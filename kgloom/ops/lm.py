@@ -33,14 +33,6 @@ from pyspark.sql import functions as F
 from .dedup import tokens
 
 
-def bigram_counts(docs: DataFrame) -> DataFrame:
-    """(w1, w2, c2): corpus bigram counts over the standard tokenizer
-    (documents shorter than 2 tokens contribute nothing)."""
-    return (_doc_bigrams(docs)
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("c2")))
-
-
 def _doc_bigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, w1, w2): every adjacent token pair with its
     0-based position.  The sequence is guarded for short docs —

@@ -165,19 +165,6 @@ def resize_images(assets: DataFrame, width: int = 32, height: int = 32,
     return assets.mapInPandas(run, ASSET_SCHEMA)
 
 
-def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (asset, frame_ts) —
-    the explode is real Spark; the frame decode is the stubbed kernel."""
-    n_frames = F.greatest(
-        (F.coalesce(F.col("duration_ms"), F.lit(0)) / every_ms)
-        .cast("int"), F.lit(0))
-    return (assets.where(F.col("modality") == "video")
-            .select("asset_id",
-                    F.explode(F.sequence(F.lit(0), n_frames))
-                     .alias("frame_idx"))
-            .withColumn("frame_ts_ms", F.col("frame_idx") * every_ms))
-
-
 def synth_assets(spark, n: int = 64) -> DataFrame:
     """Deterministic fake asset table for tests (payload = seeded bytes)."""
     df = spark.range(n).select(

@@ -37,7 +37,7 @@ table (no instance-instance joins, no instance fixpoint).  The only
 full-width shuffle is the final set-semantics ``distinct``.
 
 owl:sameAs fusion: connected components over the sameAs edge set (the
-size-gated driver/distributed CC from ``kgloom.transcripts.er``), each
+size-gated driver/distributed CC from ``kgloom.ops.graph``), each
 component canonicalized to its lexicographically minimal node, then
 one projection rewrites subj/obj through the (small, usually
 broadcast) mapping and re-distincts.
@@ -81,7 +81,7 @@ def _transitive_pairs(pairs: DataFrame, max_rounds: int = 16,
     size-gated :func:`kgloom.ops.closure.transitive_closure` instead
     (see :func:`owl_property_closure`).
 
-    A ``RuntimeWarning`` is raised if ``max_rounds`` (2^16-length
+    A ``RuntimeError`` is raised if ``max_rounds`` (2^16-length
     hierarchies) is exhausted before the fixpoint."""
     from .closure import doubling_closure
 
@@ -540,8 +540,8 @@ def same_as_components(triples: DataFrame,
     """(node, canonical) for every node in a non-singleton owl:sameAs
     component; canonical = the component's lexicographically minimal
     node.  Components come from the size-gated driver/distributed CC
-    pass (`kgloom.transcripts.er.connected_components`)."""
-    from ..transcripts.er import connected_components
+    pass (:func:`kgloom.ops.graph.connected_components`)."""
+    from .graph import connected_components
     pairs = (triples.where(F.col("pred") == same_as_pred)
              .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
              .where(F.col("src") != F.col("dst")))

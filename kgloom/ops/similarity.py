@@ -8,17 +8,12 @@
   query's coarse cell (here the precomputed ``label`` partition of the
   corpus; at 100 TB the cells come from a k-means pass and the probe
   visits n_probe cells).  Same scoring, ~C× less work for C cells.
-- ``cosine_topk_arrow`` — the same brute force with an Arrow pandas UDF
-  doing the batch dot products in NumPy — the slot for wide embeddings
-  where matrix math beats per-element codegen.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
 
@@ -190,41 +185,6 @@ def ivf_topk_kmeans(emb: DataFrame, k: int = 3, n_cells: int = 8,
               .withColumn("sim", cosine_from(
                   pair_dot(F.col("q"), F.col("e")),
                   F.col("sq"), F.col("se"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("sim", round_to).alias("sim")))
-
-
-_np_cos = None
-
-
-def cosine_topk_arrow(emb: DataFrame, k: int = 5,
-                      query_ids: list[int] | None = None,
-                      round_to: int = 3) -> DataFrame:
-    """Brute-force top-k with the dot products in an Arrow-vectorized
-    pandas UDF (NumPy batch math)."""
-    global _np_cos
-    if _np_cos is None:
-        def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-            import numpy as np
-            av = np.stack(a.to_numpy())
-            bv = np.stack(b.to_numpy())
-            num = (av * bv).sum(axis=1)
-            den = np.sqrt((av * av).sum(axis=1) * (bv * bv).sum(axis=1))
-            return pd.Series(num / den)
-        _np_cos = F.pandas_udf(_cos, DoubleType())
-    queries = emb.select(F.col("vec_id").alias("query_id"),
-                         F.col("embedding").alias("q"))
-    if query_ids is not None:
-        queries = queries.where(F.col("query_id").isin(query_ids))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("e"))
-    scored = (F.broadcast(queries).crossJoin(corpus)
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("sim", _np_cos(_as_double(F.col("q")),
-                                         _as_double(F.col("e")))))
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)

@@ -1596,11 +1596,6 @@ def _join_shared(left: DataFrame, right: DataFrame) -> DataFrame:
 
 # --- property-path evaluation ----------------------------------------------
 
-#: 2^64-length paths — effectively "until fixpoint" for any real graph;
-#: the cap only guards against a logic bug looping forever.
-_CLOSURE_MAX_ROUNDS = 64
-
-
 def _graph_nodes(quads: DataFrame) -> DataFrame:
     """All RDF terms appearing as a node (subject or object) — the
     domain of zero-length path solutions (SPARQL 1.1 §18.4 ZeroLengthPath)."""
@@ -1614,17 +1609,6 @@ def _graph_nodes(quads: DataFrame) -> DataFrame:
 #:  task (a few tens of MB of Arrow batch), safely inside executor
 #: memory.  Components above it take the distributed doubling path.
 CLOSURE_LOCAL_MAX_EDGES = 1_000
-
-
-def _closure_doubling(edges: DataFrame) -> DataFrame:
-    """Giant-component fallback: distributed log-round path doubling of
-    an ``(__ps, __po)`` relation (shared machinery,
-    :func:`kgloom.ops.closure.doubling_closure` — never
-    broadcast-hinted, eager ``localCheckpoint`` per round)."""
-    from kgloom.ops.closure import doubling_closure
-
-    return doubling_closure(edges.select("__ps", "__po"),
-                            max_rounds=_CLOSURE_MAX_ROUNDS)
 
 
 def _transitive_closure(edges: DataFrame) -> DataFrame:

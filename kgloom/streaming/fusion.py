@@ -83,7 +83,7 @@ def fold_alias_map(prev_map: Optional[DataFrame],
     (non-identity rows only).  Exact because the previous map spans
     the same node partition with the same lexicographically-minimal
     canonicals as all edges folded so far."""
-    from ..transcripts.er import connected_components
+    from ..ops.graph import connected_components
 
     if prev_map is not None:
         edges = edges.unionByName(

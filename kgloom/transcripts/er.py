@@ -11,12 +11,10 @@ link-score filter inside each block — catches near-variants stage 1
 splits (demonstrated with score threshold; at 100 TB this is where a
 learned matcher goes).
 
-Connected components: iterative min-label propagation over the surface
-graph — pure DataFrame joins (hash-join per iteration), converging in
-O(diameter) rounds, with ``localCheckpoint`` each round to cut lineage
-(the same alternating-join scheme GraphFrames' CC uses; our blocking
-graphs are near-stars so 2-3 rounds suffice).  All shuffles are on the
-node-id key; AQE right-sizes them at runtime.
+Connected components over the surface graph come from the size-gated
+:func:`kgloom.ops.graph.connected_components` (driver union-find, or
+iterative hash-join label propagation; the blocking graphs are
+near-stars, so few rounds suffice).
 """
 
 from __future__ import annotations
@@ -24,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .mentions import link_score, normalize_surface
+from ..ops.graph import connected_components, union_find
+from .mentions import link_score
 
 
 def distinct_surfaces(mentions: DataFrame) -> DataFrame:
@@ -80,144 +79,6 @@ def build_edges(mentions: DataFrame, score_threshold: float = 0.5,
     return stage1.unionByName(stage2).distinct()
 
 
-#: below this edge count the component computation runs driver-side
-#: (union-find) instead of iterative joins — two-level strategy: the
-#: distinct-surface graph after blocking is usually tiny relative to the
-#: mention stream, and a driver union-find on ≤ a few million edges is
-#: milliseconds vs seconds of per-round job latency.  Above it, the
-#: GraphFrames-style iterative hash-join propagation takes over.
-DRIVER_CC_MAX_EDGES = 2_000_000
-
-
-def _driver_union_find(edge_rows) -> dict[str, str]:
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for src, dst in edge_rows:
-        parent.setdefault(src, src)
-        parent.setdefault(dst, dst)
-        rs, rd = find(src), find(dst)
-        if rs != rd:
-            # union by label order so the component id is the min node
-            lo, hi = (rs, rd) if rs < rd else (rd, rs)
-            parent[hi] = lo
-    return {n: find(n) for n in parent}
-
-
-def connected_components(edges: DataFrame, max_iter: int = 20,
-                         driver_max_edges: int = DRIVER_CC_MAX_EDGES
-                         ) -> DataFrame:
-    """(src, dst) string edges → (node, component) with component = the
-    lexicographically minimal node of each component.
-
-    Size-gated two-level strategy (see DRIVER_CC_MAX_EDGES); the
-    distributed path repartitions its iteration state size-aware
-    (~500k edges per partition, min 1): small graphs run single-task
-    rounds, huge graphs scale out with hash joins on the node key.
-
-    Each distributed round does BOTH a 1-hop neighbor-min propagation
-    AND a pointer jump (``label ← min(label, label(label))``, the
-    Shiloach–Vishkin / hash-to-min device), so convergence is
-    O(log diameter) rounds — plain min-label propagation alone is
-    O(diameter), which silently mislabels any component deeper than
-    ``max_iter`` (a 101-node chain previously split into 81
-    components on this path).  The pointer-jump join keys on the
-    label, which skews toward component minima as big components
-    coalesce — AQE skew-join handling (on in every session builder
-    here) splits those hot partitions.  If ``max_iter`` rounds still
-    don't converge, a ``RuntimeWarning`` is raised rather than
-    returning wrong labels silently.
-    """
-    spark = edges.sparkSession
-    # materialize BEFORE the size probe: the probe count() and the
-    # first consumer would otherwise each recompute the full upstream
-    # edge pipeline (mention detection + canonicalization when fed
-    # from the transcript path)
-    bidirected = (edges.select("src", "dst")
-                  .unionByName(edges.select(F.col("dst").alias("src"),
-                                            F.col("src").alias("dst")))
-                  .distinct()
-                  .localCheckpoint())
-    n_edges = bidirected.count()
-    if n_edges <= driver_max_edges:
-        # Arrow both ways: toPandas() fetches columnar batches (a
-        # pickled Row list measured ~3-5s slower at the 100k-edge
-        # scale of one sf0.1 closure query), and handing
-        # createDataFrame a pandas frame keeps the return trip on the
-        # Arrow path too; bounded by the gate either way.
-        # ensure_arrow: the conf defaults to FALSE, which silently
-        # reverts both transfers to row pickling (measured 7x slower)
-        import pandas as pd
-
-        from ..ops.cache import ensure_arrow
-        ensure_arrow(spark)
-        pdf = bidirected.toPandas()
-        mapping = _driver_union_find(zip(pdf["src"], pdf["dst"]))
-        if not mapping:
-            return spark.createDataFrame([], "node string, component string")
-        out = pd.DataFrame(list(mapping.items()),
-                           columns=["node", "component"])
-        return spark.createDataFrame(out)
-
-    parts = max(1, min(int(spark.conf.get(
-        "spark.sql.shuffle.partitions")), n_edges // 500_000 + 1))
-    bidirected = bidirected.repartition(parts, "src").localCheckpoint()
-    # (reads the checkpoint above, not the raw upstream)
-    nodes = (bidirected.select(F.col("src").alias("node")).distinct())
-    labels = nodes.withColumn("label", F.col("node")) \
-        .repartition(parts, "node")
-
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (bidirected
-                        .join(labels.withColumnRenamed("node", "dst"), "dst")
-                        .groupBy("src")
-                        .agg(F.min("label").alias("nlabel"))
-                        .withColumnRenamed("src", "node"))
-        stepped = (labels.join(neighbor_min, "node", "left")
-                   .select("node",
-                           F.least(F.col("label"),
-                                   F.coalesce(F.col("nlabel"),
-                                              F.col("label")))
-                           .alias("label")))
-        # pointer jump: label ← label(label) — halves every pointer
-        # chain, turning O(diameter) propagation into O(log diameter)
-        ptr = stepped.select(F.col("node").alias("__pnode"),
-                             F.col("label").alias("__plabel"))
-        new_labels = (stepped
-                      .join(ptr, stepped["label"] == ptr["__pnode"], "left")
-                      .select(stepped["node"],
-                              F.least(stepped["label"],
-                                      F.coalesce(F.col("__plabel"),
-                                                 stepped["label"]))
-                              .alias("label"))
-                      .repartition(parts, "node")
-                      .localCheckpoint())
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .where(F.col("n.label") != F.col("o.label"))
-                   .limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        import warnings
-        warnings.warn(
-            f"connected_components did not converge in {max_iter} "
-            f"rounds — labels may merge further; raise max_iter "
-            f"(pointer-jumped rounds cover diameter ~2^{max_iter})",
-            RuntimeWarning, stacklevel=2)
-    return labels.withColumnRenamed("label", "component")
-
-
 #: below this many distinct surfaces the whole ER graph phase (scoring,
 #: two-stage blocking, union-find) runs driver-side on the collected
 #: node set — ONE distributed job (the distinct aggregation, which is
@@ -271,7 +132,7 @@ def _driver_canonical(rows: list[tuple[str, str]],
         hub, hub_key = min(items)
         edges.extend((s, hub) for s, k in items
                      if s != hub and k == hub_key)
-    mapping = _driver_union_find(edges)
+    mapping = union_find(edges)
     return [(s, mapping.get(s, s)) for s, _ in rows]
 
 

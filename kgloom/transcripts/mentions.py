@@ -10,7 +10,7 @@ Two interchangeable implementations of detection:
   mention model (which can't be a regex) would plug in, per the
   north-star requirement of *batched* Arrow UDFs, never per-row Python.
 
-Entity-link scoring is a vectorized pandas UDF producing a
+Entity-link scoring is a Catalyst expression producing a
 deterministic confidence in [0,1] per (surface, candidate) pair.
 """
 
@@ -18,10 +18,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StringType
+from pyspark.sql.types import ArrayType, StringType
 
 #: one alternation covering every surface-form variant the generator
 #: emits (kgloom/transcripts/generate.py VARIANT_FMTS)
@@ -58,8 +57,7 @@ def link_score(surface: F.Column, candidate_key: F.Column) -> F.Column:
 
     Deterministic heuristic: digit-sequence agreement (hard requirement)
     weighted by a variant prior (canonical ``Entity_k`` form scores
-    highest).  Stand-in for a learned scorer; when the scorer is a real
-    model, swap in ``link_score_arrow`` (same contract, Arrow-batched).
+    highest).  Stand-in for a learned scorer.
     """
     digits = normalize_surface(surface)
     return (F.when(surface.isNull() | candidate_key.isNull(), 0.0)
@@ -68,30 +66,3 @@ def link_score(surface: F.Column, candidate_key: F.Column) -> F.Column:
             .when(surface.startswith("entity "), 0.95)
             .when(surface.startswith("E-"), 0.9)
             .otherwise(0.85))
-
-
-_link_score_udf = None
-
-
-def link_score_arrow(surface: F.Column, candidate_key: F.Column) -> F.Column:
-    """The same scorer as an Arrow-vectorized pandas UDF — the slot a
-    learned (model-based) scorer plugs into; batched, never per-row."""
-    global _link_score_udf
-    if _link_score_udf is None:
-        def _score(surfaces: pd.Series, keys: pd.Series) -> pd.Series:
-            def one(s, k):
-                if s is None or k is None:
-                    return 0.0
-                digits = re.sub(r"[^0-9]", "", s)
-                if digits != k:
-                    return 0.0
-                if s.startswith("Entity_"):
-                    return 1.0
-                if s.startswith("entity "):
-                    return 0.95
-                if s.startswith("E-"):
-                    return 0.9
-                return 0.85
-            return pd.Series([one(s, k) for s, k in zip(surfaces, keys)])
-        _link_score_udf = F.pandas_udf(_score, DoubleType())
-    return _link_score_udf(surface, candidate_key)

@@ -5,9 +5,8 @@ closures must never take a broadcast-hinted path, and the OWL property
 closure must match the rdfp3/rdfp4/rdfp8 fixpoint on the axiom shapes
 a single ordered rule pass misses."""
 
-import warnings
-
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from kgloom.ops import closure as cl
@@ -48,15 +47,28 @@ def test_doubling_closure_empty(spark):
     assert _got(cl.doubling_closure(_pairs(spark, []))) == set()
 
 
-def test_doubling_closure_warns_on_round_exhaustion(spark):
+def test_doubling_closure_raises_on_round_exhaustion(spark):
     deep = [(str(i), str(i + 1)) for i in range(9)]  # depth 9 > 2^2
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        partial = cl.doubling_closure(_pairs(spark, deep), max_rounds=2)
-        partial.count()
-    assert any(issubclass(w.category, RuntimeWarning) for w in caught)
-    # partial but sound: a subset of the true closure
-    assert _got(partial) <= _naive_closure(set(deep))
+    with pytest.raises(RuntimeError, match="doubling_closure"):
+        cl.doubling_closure(_pairs(spark, deep), max_rounds=2)
+    # 4 doubling rounds reach depth 16 >= 9, a 5th confirms the fixpoint
+    with pytest.raises(RuntimeError):
+        cl.doubling_closure(_pairs(spark, deep), max_rounds=4)
+    assert _got(cl.doubling_closure(_pairs(spark, deep), max_rounds=5)) \
+        == _naive_closure(set(deep))
+
+
+def test_fixpoint_operators_launch_pinned_jobs(spark):
+    """k_core and doubling_closure run on the fixpoint driver: one
+    checkpoint and one row count per round.  Their job counts on a
+    fixed 5-edge graph are pinned, so an extra probe per round fails
+    here instead of slowing every iterative operator unnoticed."""
+    from kgloom.ops.graph import k_core
+    edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e")]
+    assert spark_jobs(spark, "fixpoint-k-core", lambda: k_core(
+        _pairs(spark, edges, ("src", "dst")), k=2).collect()) == 27
+    assert spark_jobs(spark, "fixpoint-doubling", lambda: (
+        cl.doubling_closure(_pairs(spark, edges)).collect())) == 26
 
 
 def test_transitive_closure_matches_naive_both_paths(spark):

@@ -3,12 +3,14 @@
 on DuckDB over the same parquet tables; compare row multisets."""
 
 import math
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this test file belongs to, wherever it lives
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -669,23 +669,21 @@ def test_random_walks_deterministic_md5_paths(spark):
 
 
 def test_walk_adjacency_persistence_is_transparent(spark):
-    # persist_adjacency only changes the execution strategy (long
-    # walks cache the per-step adjacency tables, short walks
-    # recompute them) — never the walked paths
+    # walks of 8+ steps persist the per-step adjacency tables, shorter
+    # walks recompute them — an execution strategy only, never the
+    # walked paths: the first 7 steps of a (persisted) 8-step walk are
+    # the (recomputed) 7-step walk
     from kgloom.ops.graph import biased_walks, random_walks
     edges = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"), ("d", "e")],
         "src string, dst string")
     for fn, kw in ((random_walks, {}), (biased_walks, {"p": 2.0, "q": 0.5})):
-        plain = sorted(map(tuple, fn(
-            edges, n_walks=2, walk_len=8,
-            persist_adjacency=False, **kw).collect()))
         cached = sorted(map(tuple, fn(
-            edges, n_walks=2, walk_len=8,
-            persist_adjacency=True, **kw).collect()))
-        auto = sorted(map(tuple, fn(          # walk_len=8 → auto-persist
-            edges, n_walks=2, walk_len=8, **kw).collect()))
-        assert plain == cached == auto
+            edges, n_walks=2, walk_len=8, **kw)
+            .where("step <= 7").collect()))
+        plain = sorted(map(tuple, fn(
+            edges, n_walks=2, walk_len=7, **kw).collect()))
+        assert cached == plain
     from kgloom.ops.cache import unpersist_tracked
     assert unpersist_tracked() >= 5   # 8-step runs registered caches
 

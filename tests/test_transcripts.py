@@ -90,6 +90,17 @@ def test_connected_components_deep_chain_distributed(spark):
     assert len(out) == 101
 
 
+def test_connected_components_raises_at_round_cap(spark):
+    """A distributed CC run that still changes labels at ``max_iter``
+    raises instead of returning labels that would merge further: the
+    101-node chain needs ~7 pointer-jump rounds, not 1."""
+    edges = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(100)],
+        ["src", "dst"])
+    with pytest.raises(RuntimeError, match="max_iter"):
+        connected_components(edges, max_iter=1, driver_max_edges=0)
+
+
 def test_canonical_map_driver_and_distributed_agree(spark, turns):
     """The size-gated driver ER path and the distributed blocking +
     iterative-CC path must produce identical surface→canonical maps."""
