@@ -32,23 +32,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ops.star import QUOTED_TRIPLE, UNQUOTE_RE
+
 #: literal with escape-aware quoting and optional @lang / ^^<datatype>
 _LIT = (r'"(?:[^"\\]|\\.)*"'
         r'(?:\^\^<[^>]*>|@[A-Za-z][A-Za-z0-9\-]*)?')
-#: RDF-star quoted triple ``<< s p o >>`` (N-Triples-star; ONE level —
-#: nested quoting is rejected as malformed).  Structured term-by-term,
-#: so ``>>`` inside an inner literal parses correctly.
-_QT = (r'<<\s*(?:<[^>]*>|_:\S+)\s+<[^>]*>\s+'
-       r'(?:<[^>]*>|_:\S+|' + _LIT + r')\s*>>')
-# line → (subject, predicate, object-and-maybe-graph); the lazy middle
-# group backtracks past "." characters inside literals because the
-# terminating "." must be followed only by whitespace
-_LINE_RE = (r'^\s*(' + _QT + r'|<[^>]*>|_:\S+)\s+(<[^>]*>)'
+# line → (subject, [3 quoted-triple parts], predicate, object-and-maybe-
+# graph); the lazy last group backtracks past "." characters inside
+# literals because the terminating "." must be followed only by
+# whitespace.  Quoted triples (N-Triples-star, ONE level — nested
+# quoting is rejected as malformed) use the shared grammar.
+_LINE_RE = (r'^\s*(' + QUOTED_TRIPLE + r'|<[^>]*>|_:\S+)\s+(<[^>]*>)'
             r'\s+(.*?)\s*\.\s*$')
-# object-and-maybe-graph → (object, graph); object = IRI | bnode |
-# quoted triple | literal
-_OBJ_RE = (r'^(' + _QT + r'|<[^>]*>|_:\S+|' + _LIT + r')'
+# object-and-maybe-graph → (object, [3 quoted-triple parts], graph);
+# object = IRI | bnode | quoted triple | literal
+_OBJ_RE = (r'^(' + QUOTED_TRIPLE + r'|<[^>]*>|_:\S+|' + _LIT + r')'
            r'(?:\s+(<[^>]*>|_:\S+))?$')
+
+
+def _canonical(term: F.Column) -> F.Column:
+    """A quoted triple re-rendered with the engine's spacing
+    ``<< s p o >>`` (the form SPARQL constants and
+    :func:`~kgloom.ops.star.quote_triple` produce); other terms as is."""
+    return F.regexp_replace(term, UNQUOTE_RE, "<< $1 $2 $3 >>")
 
 
 def parse_nquads_lines(lines: DataFrame, mode: str = "failfast",
@@ -65,13 +71,14 @@ def parse_nquads_lines(lines: DataFrame, mode: str = "failfast",
     v = F.trim(F.col(column))
     data = (lines.where((v != "") & ~v.startswith("#"))
             .select(v.alias("__line"),
-                    F.regexp_extract(v, _LINE_RE, 1).alias("subj"),
-                    F.regexp_extract(v, _LINE_RE, 2).alias("pred"),
-                    F.regexp_extract(v, _LINE_RE, 3).alias("__rest")))
+                    _canonical(F.regexp_extract(v, _LINE_RE, 1))
+                    .alias("subj"),
+                    F.regexp_extract(v, _LINE_RE, 5).alias("pred"),
+                    F.regexp_extract(v, _LINE_RE, 6).alias("__rest")))
     data = data.select(
         "__line", "subj", "pred",
-        F.regexp_extract("__rest", _OBJ_RE, 1).alias("obj"),
-        F.nullif(F.regexp_extract("__rest", _OBJ_RE, 2), F.lit(""))
+        _canonical(F.regexp_extract("__rest", _OBJ_RE, 1)).alias("obj"),
+        F.nullif(F.regexp_extract("__rest", _OBJ_RE, 5), F.lit(""))
         .alias("graph"))
     ok = (F.col("subj") != "") & (F.col("obj") != "")
     if mode == "permissive":

@@ -24,12 +24,16 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: decomposition regex — inner subject is IRI/bnode (no spaces), inner
-#: predicate an IRI, inner object everything up to the closing ``>>``
-#: (escape-aware literal group, so ``>>`` inside a literal is safe)
-_UNQUOTE_RE = (r'^<<\s*(<[^>]*>|_:\S+)\s+(<[^>]*>)\s+'
-               r'(<[^>]*>|_:\S+|"(?:[^"\\]|\\.)*"'
-               r'(?:\^\^<[^>]*>|@[A-Za-z][A-Za-z0-9\-]*)?)\s*>>$')
+#: the one quoted-triple grammar (the N-Quads reader and SPARQL import
+#: it): ``<< s p o >>``, one level — inner subject IRI/bnode (no
+#: spaces), inner predicate an IRI, inner object everything up to the
+#: closing ``>>`` (escape-aware literal group, so ``>>`` inside a
+#: literal is safe).  Groups 1-3 capture the inner terms.
+QUOTED_TRIPLE = (r'<<\s*(<[^>]*>|_:\S+)\s+(<[^>]*>)\s+'
+                 r'(<[^>]*>|_:\S+|"(?:[^"\\]|\\.)*"'
+                 r'(?:\^\^<[^>]*>|@[A-Za-z][A-Za-z0-9\-]*)?)\s*>>')
+#: decomposition regex: the whole value is one quoted triple
+UNQUOTE_RE = f"^{QUOTED_TRIPLE}$"
 
 
 def quote_triple(subj: Column, pred: Column, obj: Column) -> Column:
@@ -42,18 +46,18 @@ def quote_triple(subj: Column, pred: Column, obj: Column) -> Column:
 
 
 def is_quoted(col: Column) -> Column:
-    return col.rlike(_UNQUOTE_RE)
+    return col.rlike(UNQUOTE_RE)
 
 
 def unquote_triple(col: Column) -> Column:
     """Quoted-triple term → struct (subj, pred, obj) of the inner
     rendered terms; null struct fields for non-quoted terms."""
     return F.struct(
-        F.nullif(F.regexp_extract(col, _UNQUOTE_RE, 1), F.lit(""))
+        F.nullif(F.regexp_extract(col, UNQUOTE_RE, 1), F.lit(""))
         .alias("subj"),
-        F.nullif(F.regexp_extract(col, _UNQUOTE_RE, 2), F.lit(""))
+        F.nullif(F.regexp_extract(col, UNQUOTE_RE, 2), F.lit(""))
         .alias("pred"),
-        F.nullif(F.regexp_extract(col, _UNQUOTE_RE, 3), F.lit(""))
+        F.nullif(F.regexp_extract(col, UNQUOTE_RE, 3), F.lit(""))
         .alias("obj"))
 
 

@@ -16,6 +16,8 @@ Validation (the corpus' invalid-mapping cases must yield no triples):
 - exactly one subject map               (RMLTC0012c, RMLTC0012d)
 - graph maps must be IRI-kind           (RMLTC0007h)
 - language tags must look like BCP-47   (RMLTC0015b: "english" invalid)
+- rml:source is a path or an IRI; a blank-node description (a
+  csvw:Table) is rejected here rather than failing at bind time
 """
 
 from __future__ import annotations
@@ -138,6 +140,13 @@ def _extract_logical_source(graph: Graph, subj: Term) -> LogicalSource:
         graph.object(ls_node, RR + "tableName")
     if src_term is None:
         raise RmlValidationError(f"{subj}: logical source without rml:source")
+    if src_term[0] == "bnode":
+        # a described source (csvw:Table, d2rq:Database, ...) has no
+        # path: reject it here, not as a missing file at bind time
+        raise RmlValidationError(
+            f"triples map {subj[1]}: rml:source is a blank node (a "
+            f"described source such as a csvw:Table); only a path or an "
+            f"IRI is supported")
     source = src_term[1]
     rf_term = graph.object(ls_node, RML + "referenceFormulation")
     rf = "CSVRows"

@@ -66,7 +66,44 @@ property paths in the predicate position: sequence ``p1/p2``, inverse
 ``!(p1|^p2|...)``, plus ``DESCRIBE`` via :func:`sparql_describe`
 (symmetric description: every quad whose subject or object is a
 described resource).  Unsupported syntax raises ``SparqlError``
-(SERVICE).
+(``BASE``, ``SERVICE``, single-quoted and triple-quoted literals,
+blank-node syntax).
+
+Grammar.  One lexer (:data:`_TOKEN`) turns the text into tokens:
+variables, ``<<``/``>>``, ``{|``/``|}``, IRIREFs (the §19.8 character
+class — no whitespace, so ``?a < 3`` is a comparison), ``"…"`` literals
+with ``@lang``/``^^dtype``, unsigned numbers, prefixed names, bare names
+(keywords, function names, ``a``), punctuation ``; , . { } ( )`` and
+operators ``&& || != <= >= = < > + - * / | ^ ? !``; ``#`` comments are
+dropped.  Text inside a literal or an IRI is therefore never syntax.
+One recursive-descent parser (:class:`_Parser`) reads the tokens for
+every entry point, after a shared ``PREFIX`` prologue::
+
+  Select    := SELECT [DISTINCT] (* | (?v | (Agg AS ?v) | (Expr AS ?v))+)
+               (FROM [NAMED] iri)* WHERE Group [GROUP BY (?v | (Expr AS ?v))+]
+               [HAVING ((?v | Agg) cmp Value)+] [ORDER BY Key+]
+               [LIMIT n] [OFFSET n]
+  Group     := { (Triples | { Select } | Group (UNION Group)* | OPTIONAL Group
+               | GRAPH VarOrIri Group | MINUS Group | FILTER [NOT] EXISTS Group
+               | FILTER ( Filter ) | BIND ( Expr AS ?v ) | VALUES Data | .)* }
+  Triples   := Node Path Node (, Node)* [{| annotation |}] (; Path Node ...)*
+  Path      := alternatives of sequences of ^, (…), !…, iri with + * ?
+  Filter    := || / && / ! over (…), ?v cmp Value, ?v [NOT] IN (…),
+               REGEX/CONTAINS/STRSTARTS/STRENDS(?v | Expr, "s"), BOUND,
+               isIRI/isLITERAL/isBLANK/isTRIPLE(?v), LANG(?v) = "tag"
+  Expr      := + - over * / over calls of the builtin library, (Expr),
+               terms; IF's condition is a Filter
+  Ask       := ASK [WHERE] Group
+  Construct := CONSTRUCT ({ Triples } WHERE Group | WHERE { Triples })
+               [LIMIT n]
+  Describe  := DESCRIBE (iri | ?v)+ [WHERE Group]
+  Update    := op (; Prologue op)* — LOAD, CLEAR/DROP, ADD/COPY/MOVE,
+               CREATE, INSERT/DELETE DATA, DELETE WHERE, [WITH iri]
+               [DELETE Quads] [INSERT Quads] WHERE Group
+
+The parser resolves every term as it reads it (prefixed names, ``a``,
+literal escapes, signed numbers), so the trees the executor compiles
+hold rendered terms and floats only.
 
 Path execution is Spark-first: an atom is a constant-pred scan of the
 quad DataFrame, ``/`` is a join on the intermediate node, ``|`` a
@@ -111,11 +148,13 @@ mappings see endpoint-style bindings.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ops.star import UNQUOTE_RE
 
 
 class SparqlError(Exception):
@@ -144,12 +183,6 @@ class QuotedPattern:
 
 
 Term = Union[Var, "QuotedPattern", str]  # non-var terms are rendered strings
-
-#: decomposition regex for a rendered quoted-triple term (one level;
-#: mirrors kgloom/exec/rdfsource._QT and kgloom/ops/star._UNQUOTE_RE)
-_QT_RE = (r'^<<\s*(<[^>]*>|_:\S+)\s+(<[^>]*>)\s+'
-          r'(<[^>]*>|_:\S+|"(?:[^"\\]|\\.)*"'
-          r'(?:\^\^<[^>]*>|@[A-Za-z][A-Za-z0-9\-]*)?)\s*>>$')
 
 
 # --- property paths (predicate position only) ------------------------------
@@ -200,7 +233,7 @@ class GroupPattern:
     list of 2+ branch groups), ``BIND(expr AS ?v)`` assignments and
     ``VALUES`` inline-data blocks."""
     patterns: list[tuple[Term, Term, Term]] = field(default_factory=list)
-    filters: list = field(default_factory=list)  # _parse_filter_expr trees
+    filters: list = field(default_factory=list)  # FILTER trees
     optionals: list["GroupPattern"] = field(default_factory=list)
     unions: list[list["GroupPattern"]] = field(default_factory=list)
     binds: list[tuple["Expr", str]] = field(default_factory=list)
@@ -247,13 +280,14 @@ class SelectQuery:
     order_by: list[tuple[object, bool]]
     limit: Optional[int] = None
     offset: Optional[int] = None
-    prefixes: dict[str, str] = field(default_factory=dict)
     aggregates: list[AggExpr] = field(default_factory=list)
     group_by: list[str] = field(default_factory=list)
     #: ``GROUP BY (expr AS ?v)`` items (§18.2.4.1): the expression is
     #: computed as a pre-aggregation extend and ``?v`` joins group_by
     group_exprs: list[tuple[Expr, str]] = field(default_factory=list)
-    having: list[tuple[str, str, str]] = field(default_factory=list)
+    #: (variable or hidden aggregate alias, op, value) — value is a
+    #: float (numeric comparison), a :class:`Var` or a rendered term
+    having: list[tuple[str, str, object]] = field(default_factory=list)
     #: hidden aggregates backing ``HAVING (AGG(...) op value)`` — the
     #: alias appears in `having` and the column drops after filtering
     having_aggs: list[AggExpr] = field(default_factory=list)
@@ -293,99 +327,60 @@ def _render_literal(lex: str, lang: Optional[str], dtype: Optional[str]) -> str:
     return out
 
 
+RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+
+#: the one lexer: every SPARQL text is read through it, so a keyword,
+#: brace, ``#`` or ``;`` inside a literal or an IRI is token content.
+#: IRIREF is the SPARQL 1.1 §19.8 class (no whitespace, so ``< 3`` is
+#: less-than); numbers are unsigned (the parser joins a sign).
 _TOKEN = re.compile(r"""
-    \s*(?:
-      (?P<var>\?[A-Za-z_][A-Za-z0-9_]*)
+      (?P<skip>\s+|\#[^\n]*)
+    | (?P<var>\?[A-Za-z_][A-Za-z0-9_]*)
     | (?P<qt><<|>>)
     | (?P<ann>\{\||\|\})
-    | (?P<iri><[^>]*>)
-    | (?P<lit>"(?:[^"\\]|\\.)*"(?:@[A-Za-z0-9-]+|\^\^<[^>]*>|\^\^[A-Za-z_][\w-]*:[\w-]+)?)
-    | (?P<num>[+-]?[0-9]+(?:\.[0-9]+)?)
-    | (?P<pname>[A-Za-z_][\w-]*:[\w.-]*)
-    | (?P<a>\ba\b)
+    | (?P<iri><[^<>"{}|^`\\\x00-\x20]*>)
+    | (?P<lit>"(?:[^"\\]|\\.)*"
+              (?:@[A-Za-z0-9-]+|\^\^<[^>]*>|\^\^[A-Za-z_][\w-]*:[\w-]+)?)
+    | (?P<num>[0-9]+(?:\.[0-9]+)?)
+    | (?P<pname>(?:[A-Za-z_][\w-]*)?:(?:[\w.-]*[\w-])?)
+    | (?P<name>[A-Za-z_][A-Za-z0-9_]*)
     | (?P<punct>[;,.{}()])
-    | (?P<pathop>[/|^+*?!])
-    )""", re.VERBOSE)
+    | (?P<op>&&|\|\||!=|<=|>=|[=<>+\-*/|^?!])
+    """, re.VERBOSE)
 
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+_LIT = re.compile(r'"((?:[^"\\]|\\.)*)"(?:@([A-Za-z0-9-]+)|\^\^<([^>]*)>'
+                  r'|\^\^(\S+))?$', re.DOTALL)
 
 
 def _tokenize(text: str) -> list[tuple[str, str]]:
     out, pos = [], 0
     while pos < len(text):
-        if text[pos:].strip() == "":
-            break
         m = _TOKEN.match(text, pos)
         if m is None:
             raise SparqlError(f"cannot tokenize at: {text[pos:pos + 30]!r}")
         pos = m.end()
-        for kind, val in m.groupdict().items():
-            if val is not None:
-                out.append((kind, val))
-                break
+        if m.lastgroup != "skip":
+            out.append((m.lastgroup, m.group()))
     return out
 
 
-def _resolve_term(kind: str, val: str, prefixes: dict[str, str]) -> Term:
-    if kind == "var":
-        return Var(val[1:])
-    if kind == "iri":
-        return val  # already <...>
-    if kind == "a":
-        return f"<{RDF_TYPE}>"
-    if kind == "pname":
-        p, _, local = val.partition(":")
-        if p not in prefixes:
-            raise SparqlError(f"undefined prefix {p!r}")
-        return f"<{prefixes[p]}{local}>"
-    if kind == "num":
-        return _render_literal(val, None, None)
-    if kind == "lit":
-        m = re.match(r'^"((?:[^"\\]|\\.)*)"(?:@([A-Za-z0-9-]+)'
-                     r'|\^\^<([^>]*)>|\^\^([A-Za-z_][\w-]*:[\w-]+))?$', val)
-        lex = m.group(1).replace('\\"', '"').replace("\\\\", "\\") \
-               .replace("\\n", "\n").replace("\\r", "\r").replace("\\t", "\t")
-        dtype = m.group(3)
-        if m.group(4):
-            p, _, local = m.group(4).partition(":")
-            if p not in prefixes:
-                raise SparqlError(f"undefined prefix {p!r}")
-            dtype = prefixes[p] + local
-        return _render_literal(lex, m.group(2), dtype)
-    raise SparqlError(f"unexpected term {val!r}")
+def _quoted(s: Term, p: Term, o: Term) -> Term:
+    """``<< s p o >>``: a :class:`QuotedPattern`, or its rendered
+    string term when ground."""
+    q = QuotedPattern(s, p, o)
+    return q if q.vars() else f"<< {s} {p} {o} >>"
 
 
-def _values_terms(src: str, prefixes: dict[str, str]) -> list:
-    """Constant terms of one VALUES row (or a whole single-var data
-    block): rendered terms, with ``UNDEF`` → ``None`` (an unbound
-    binding — joins as compatible-with-anything)."""
-    out, pos, n = [], 0, len(src)
-    while pos < n:
-        if src[pos].isspace():
-            pos += 1
-            continue
-        um = re.match(r"UNDEF\b", src[pos:], re.IGNORECASE)
-        if um:
-            out.append(None)
-            pos += um.end()
-            continue
-        tm = _TOKEN.match(src, pos)
-        if tm is None:
-            raise SparqlError(
-                f"cannot tokenize VALUES data at: {src[pos:pos + 30]!r}")
-        pos = tm.end()
-        for kind, val in tm.groupdict().items():
-            if val is not None:
-                t = _resolve_term(kind, val, prefixes)
-                if isinstance(t, Var):
-                    raise SparqlError("VALUES data must be constants")
-                out.append(t)
-                break
-    return out
+_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f"}
 
 
-_UNSUPPORTED = re.compile(
-    r"\b(SERVICE)\b", re.IGNORECASE)
+def _unescape(lex: str) -> str:
+    """Decode the escapes of a literal's lexical form: ``\\uXXXX``,
+    ``\\UXXXXXXXX`` and the string escapes (``\\"`` → ``"`` ...)."""
+    return re.sub(r"\\(u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8}|.)",
+                  lambda m: chr(int(m.group(1)[1:], 16))
+                  if len(m.group(1)) > 1 else
+                  _ECHAR.get(m.group(1), m.group(1)), lex, flags=re.DOTALL)
 
 
 class _DefaultGraphOnly:
@@ -396,441 +391,870 @@ class _DefaultGraphOnly:
 
 _DEFAULT_ONLY = _DefaultGraphOnly()
 
+_STR_FNS = {"contains", "strstarts", "strends"}
+_ISA = {"isiri": "iri", "isuri": "iri", "isliteral": "literal",
+        "isblank": "blank", "istriple": "triple"}
+_AGGS = ("COUNT", "SUM", "AVG", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT")
+_CMP_OPS = ("=", "!=", "<", "<=", ">", ">=")
+_PATH_OPS = ("/", "|", "^", "+", "*", "?", "!")
 
-def _tok_at(toks: list, i: int):
-    """Token at index ``i`` or a SparqlError (never an IndexError from
-    a truncated pattern)."""
-    if i >= len(toks):
-        raise SparqlError("unexpected end of basic graph pattern")
-    return toks[i]
+# FILTER trees: ('or'|'and', [subs]) | ('not', sub)
+#      | ('cmp', var, op, value)  value: float | Var | rendered term
+#      | ('regex', var, pat, flags) | ('regex_expr', Expr, pat, flags)
+#      | ('strfn', fn, var, lit) | ('strfn_expr', fn, Expr, lit)
+#      | ('in', var, [floats] | [terms], numeric) | ('bound', var)
+#      | ('isa', kind, var) | ('lang', var, tag)
+#
+# Exprs are tuples: ('var', name) | ('const', rendered_term)
+#                 | ('call', func, [args]) | ('arith', op, left, right)
+#                 | ('cond', filter_tree)              (IF conditions only)
+
+Expr = tuple
+
+#: func -> exact arity, or (min, max), or None (variadic)
+_EXPR_FUNCS: dict[str, object] = {
+    "concat": None, "coalesce": (1, 64),
+    "str": 1, "ucase": 1, "lcase": 1, "strlen": 1, "iri": 1, "uri": 1,
+    "replace": 3, "substr": (2, 3), "strbefore": 2, "strafter": 2,
+    "encode_for_uri": 1, "abs": 1, "ceil": 1, "floor": 1, "round": 1,
+    "md5": 1, "sha1": 1, "sha256": 1, "if": 3,
+    "lang": 1, "datatype": 1, "strlang": 2, "strdt": 2,
+    # SPARQL-star accessors/constructor (RDF-star CG report sec. 7)
+    "triple": 3, "subject": 1, "predicate": 1, "object": 1,
+    "istriple": 1,
+}
 
 
-def _parse_path_unary(toks: list, i: int, prefixes: dict[str, str]):
-    """``^path``, ``(path)`` or an IRI atom, with ``+``/``*``/``?``
-    postfix closure modifiers."""
-    kind, val = _tok_at(toks, i)
-    if (kind, val) == ("pathop", "^"):
-        node, i = _parse_path_unary(toks, i + 1, prefixes)
-        node = PathInv(node)
-    elif (kind, val) == ("punct", "("):
-        node, i = _parse_path_expr(toks, i + 1, prefixes)
-        if _tok_at(toks, i) != ("punct", ")"):
-            raise SparqlError("unbalanced parentheses in property path")
-        i += 1
-    elif (kind, val) == ("pathop", "!"):
-        def nps_member(j: int):
-            k2, v2 = _tok_at(toks, j)
-            invd = False
-            if (k2, v2) == ("pathop", "^"):
-                invd = True
-                j += 1
-                k2, v2 = _tok_at(toks, j)
-            term = _resolve_term(k2, v2, prefixes)
-            if isinstance(term, Var) or not term.startswith("<"):
-                raise SparqlError(
-                    "negated property set members must be IRIs")
-            return term, invd, j + 1
+class _Parser:
+    """Recursive descent over the token list of one request.  The
+    prologue's prefixes resolve every prefixed name as it is read, so
+    the trees it returns hold rendered terms only."""
 
-        fwd: list = []
-        inv: list = []
-        if _tok_at(toks, i + 1) == ("punct", "("):
-            j = i + 2
-            while True:
-                term, invd, j = nps_member(j)
-                (inv if invd else fwd).append(term)
-                nxt = _tok_at(toks, j)
-                if nxt == ("pathop", "|"):
-                    j += 1
-                    continue
-                if nxt == ("punct", ")"):
-                    j += 1
-                    break
-                raise SparqlError(
-                    "expected '|' or ')' in negated property set")
-            i = j
+    def __init__(self, text: str):
+        self.toks = _tokenize(text)
+        self.i = 0
+        self.prefixes: dict[str, str] = {}
+
+    def parse(self, form):
+        """Prologue, then ``form`` (a query-form method), then the end."""
+        self.prologue()
+        out = form(self)
+        if self.i < len(self.toks):
+            raise SparqlError(f"unexpected {self.toks[self.i][1]!r} after "
+                              f"the end of the request")
+        return out
+
+    # --- token cursor ------------------------------------------------------
+
+    def peek(self, k: int = 0) -> tuple:
+        j = self.i + k
+        return self.toks[j] if j < len(self.toks) else (None, None)
+
+    def next(self) -> tuple:
+        if self.i >= len(self.toks):
+            raise SparqlError("unexpected end of query")
+        self.i += 1
+        return self.toks[self.i - 1]
+
+    def at(self, *vals: str, k: int = 0) -> bool:
+        """Token ``k`` ahead is one of ``vals``; keywords match
+        case-insensitively."""
+        kind, val = self.peek(k)
+        return val in vals or kind == "name" and val.upper() in vals
+
+    def accept(self, *vals: str) -> Optional[str]:
+        return self.next()[1].upper() if self.at(*vals) else None
+
+    def expect(self, val: str, msg: Optional[str] = None) -> None:
+        if not self.accept(val):
+            raise SparqlError(msg or f"expected {val!r}, got "
+                              f"{self.peek()[1] or 'the end of the query'!r}")
+
+    def var(self) -> str:
+        kind, val = self.next()
+        if kind != "var":
+            raise SparqlError(f"expected a variable, got {val!r}")
+        return val[1:]
+
+    def at_kind(self, *kinds: str) -> bool:
+        return self.peek()[0] in kinds
+
+    # --- terms ---------------------------------------------------------------
+
+    def prologue(self) -> None:
+        while self.accept("PREFIX"):
+            (kind, name), (ikind, iri) = self.next(), self.next()
+            if kind != "pname" or not name.endswith(":") or ikind != "iri":
+                raise SparqlError(f"bad PREFIX declaration at {name!r}")
+            self.prefixes[name[:-1]] = iri[1:-1]
+        if self.at("BASE"):
+            raise SparqlError("unsupported SPARQL feature: BASE")
+
+    def expand(self, pname: str) -> str:
+        p, _, local = pname.partition(":")
+        if p not in self.prefixes:
+            raise SparqlError(f"undefined prefix {p!r}")
+        return self.prefixes[p] + local
+
+    def term(self) -> Term:
+        """One variable or constant (rendered); a sign joins a number."""
+        kind, val = self.next()
+        if val in ("+", "-") and self.at_kind("num"):
+            kind, val = "num", val + self.next()[1]
+        if kind == "var":
+            return Var(val[1:])
+        if kind == "iri":
+            return val
+        if (kind, val) == ("name", "a"):
+            return f"<{RDF_TYPE}>"
+        if kind == "pname":
+            return f"<{self.expand(val)}>"
+        if kind == "num":
+            return _render_literal(val, None, None)
+        if kind == "lit":
+            m = _LIT.match(val)
+            dtype = self.expand(m.group(4)) if m.group(4) else m.group(3)
+            return _render_literal(_unescape(m.group(1)), m.group(2), dtype)
+        raise SparqlError(f"unexpected term {val!r}")
+
+    def number(self) -> Optional[float]:
+        """A (signed) number token as a float; None (nothing read) if
+        the next term is not a number."""
+        k = 1 if self.at("+", "-") else 0
+        if self.peek(k)[0] != "num":
+            return None
+        sign = self.next()[1] if k else ""
+        return float(sign + self.next()[1])
+
+    def integer(self, what: str) -> int:
+        kind, n = self.next()
+        if kind != "num" or not n.isdigit():
+            raise SparqlError(f"{what} needs an integer, got {n!r}")
+        return int(n)
+
+    def iri(self, what: str) -> str:
+        t = self.term()
+        if isinstance(t, Var) or not t.startswith("<"):
+            raise SparqlError(f"{what} graph name must be an IRI")
+        return t
+
+    def graph_name(self) -> Term:
+        if not self.at_kind("var", "iri", "pname"):
+            raise SparqlError("GRAPH needs ?var or an IRI")
+        return self.term()
+
+    def string(self) -> str:
+        """A literal argument that must be a plain string (patterns,
+        separators): its lexical form."""
+        t = self.term()
+        if isinstance(t, Var):
+            raise SparqlError(f"expected a string literal, got ?{t.name}")
+        return _unrender(t)
+
+    def node(self) -> Term:
+        """A subject/object term.  A SPARQL-star ``<< s p o >>`` (one
+        level) with variables is a :class:`QuotedPattern`; a ground one
+        collapses to its rendered string term, so constants flow
+        through every other code path (INSERT DATA, equality filters)."""
+        if not self.accept("<<"):
+            return self.term()
+        s = self.inner_node()
+        p = self.term()
+        o = self.inner_node()
+        self.expect(">>", "quoted triple pattern missing '>>'")
+        return _quoted(s, p, o)
+
+    def inner_node(self) -> Term:
+        t = self.node()
+        if isinstance(t, QuotedPattern) or (isinstance(t, str)
+                                            and t.startswith("<<")):
+            raise SparqlError("nested quoted triples are unsupported")
+        return t
+
+    # --- property paths (predicate position) -------------------------------
+
+    def path(self):
+        """``|`` binds loosest, then ``/``, then unary ``^`` / postfix
+        ``+ * ?``.  One plain IRI stays the rendered-string Term."""
+        branches = [self.path_seq()]
+        while self.accept("|"):
+            branches.append(self.path_seq())
+        return self.path_node(PathAlt, branches)
+
+    def path_seq(self):
+        steps = [self.path_unary()]
+        while self.accept("/"):
+            steps.append(self.path_unary())
+        return self.path_node(PathSeq, steps)
+
+    @staticmethod
+    def path_node(cls, parts: list):
+        if len(parts) == 1:
+            return parts[0]
+        if any(isinstance(p, Var) for p in parts):
+            raise SparqlError("variables cannot appear inside a property path")
+        return cls(tuple(parts))
+
+    def path_unary(self):
+        if self.accept("^"):
+            node = PathInv(self.path_unary())
+        elif self.accept("("):
+            node = self.path()
+            self.expect(")", "unbalanced parentheses in property path")
+        elif self.accept("!"):
+            fwd: list = []
+            inv: list = []
+            bracketed = self.accept("(")
+            self.nps_member(fwd, inv)
+            while bracketed and not self.accept(")"):
+                if not self.accept("|"):
+                    raise SparqlError(
+                        "expected '|' or ')' in negated property set")
+                self.nps_member(fwd, inv)
+            node = PathNeg(tuple(fwd), tuple(inv))
         else:
-            term, invd, i = nps_member(i + 1)
-            (inv if invd else fwd).append(term)
-        node = PathNeg(tuple(fwd), tuple(inv))
-    else:
-        term = _resolve_term(kind, val, prefixes)
-        i += 1
-        if isinstance(term, Var):
-            # a predicate variable is a plain pattern, never a path step
-            if i < len(toks) and toks[i][0] == "pathop":
+            node = self.term()
+            if isinstance(node, Var):
+                # a predicate variable is a plain pattern, never a step
+                if self.at(*_PATH_OPS):
+                    raise SparqlError(
+                        "variables cannot appear inside a property path")
+                return node
+            if not node.startswith("<"):
                 raise SparqlError(
-                    "variables cannot appear inside a property path")
-            return term, i
-        if not term.startswith("<"):
-            raise SparqlError(
-                f"property path atoms must be IRIs, got {term!r}")
-        node = term
-    while i < len(toks) and toks[i][0] == "pathop" and \
-            toks[i][1] in "+*?":
-        node = PathClosure(node, toks[i][1])
-        i += 1
-    return node, i
+                    f"property path atoms must be IRIs, got {node!r}")
+        while self.at("+", "*", "?"):
+            node = PathClosure(node, self.next()[1])
+        return node
 
+    def nps_member(self, fwd: list, inv: list) -> None:
+        inverse = self.accept("^")
+        t = self.term()
+        if isinstance(t, Var) or not t.startswith("<"):
+            raise SparqlError("negated property set members must be IRIs")
+        (inv if inverse else fwd).append(t)
 
-def _parse_path_seq(toks: list, i: int, prefixes: dict[str, str]):
-    node, i = _parse_path_unary(toks, i, prefixes)
-    steps = [node]
-    while i < len(toks) and toks[i] == ("pathop", "/"):
-        node, i = _parse_path_unary(toks, i + 1, prefixes)
-        steps.append(node)
-    if len(steps) == 1:
-        return steps[0], i
-    if any(isinstance(s, Var) for s in steps):
-        raise SparqlError("variables cannot appear inside a property path")
-    return PathSeq(tuple(steps)), i
+    # --- triples and groups ------------------------------------------------
 
-
-def _parse_path_expr(toks: list, i: int, prefixes: dict[str, str]):
-    """Full path grammar at the predicate position: ``|`` binds loosest,
-    then ``/``, then unary ``^`` / postfix ``+ * ?``.  A path of one
-    plain IRI atom collapses back to the rendered-string Term so
-    non-path queries compile exactly as before."""
-    node, i = _parse_path_seq(toks, i, prefixes)
-    branches = [node]
-    while i < len(toks) and toks[i] == ("pathop", "|"):
-        node, i = _parse_path_seq(toks, i + 1, prefixes)
-        branches.append(node)
-    if len(branches) == 1:
-        return branches[0], i
-    if any(isinstance(b, Var) for b in branches):
-        raise SparqlError("variables cannot appear inside a property path")
-    return PathAlt(tuple(branches)), i
-
-
-def _parse_node_term(toks, i: int, prefixes: dict[str, str]
-                     ) -> tuple[Term, int]:
-    """One subject/object term at ``toks[i]`` → (term, next index).
-    Handles SPARQL-star quoted-triple patterns ``<< s p o >>`` (one
-    level): a GROUND quoted triple collapses to its rendered string
-    term immediately, so constants flow through every existing code
-    path (INSERT DATA, equality filters); one with variables becomes a
-    :class:`QuotedPattern`."""
-    kind, val = _tok_at(toks, i)
-    if kind == "qt" and val == "<<":
-        s, i = _parse_node_term(toks, i + 1, prefixes)
-        if isinstance(s, QuotedPattern) or (isinstance(s, str)
-                                            and s.startswith("<<")):
-            raise SparqlError("nested quoted triples are unsupported")
-        pk, pv = _tok_at(toks, i + 1)
-        pred = _resolve_term(pk, pv, prefixes)
-        o, i = _parse_node_term(toks, i + 2, prefixes)
-        if isinstance(o, QuotedPattern) or (isinstance(o, str)
-                                            and o.startswith("<<")):
-            raise SparqlError("nested quoted triples are unsupported")
-        ck, cv = _tok_at(toks, i + 1)
-        if (ck, cv) != ("qt", ">>"):
-            raise SparqlError("quoted triple pattern missing '>>'")
-        if not any(isinstance(t, Var) for t in (s, pred, o)):
-            return f"<< {s} {pred} {o} >>", i + 1
-        return QuotedPattern(s, pred, o), i + 1
-    return _resolve_term(kind, val, prefixes), i
-
-
-def _parse_triples(body: str, prefixes: dict[str, str]
-                   ) -> list[tuple[Term, Term, Term]]:
-    """Triple patterns with ``;`` predicate lists and ``,`` object
-    lists out of a brace-free chunk of group text."""
-    patterns: list[tuple[Term, Term, Term]] = []
-    toks = _tokenize(body)
-    i = 0
-    while i < len(toks):
-        kind, val = toks[i]
-        if kind == "punct" and val == ".":
-            i += 1
-            continue
-        subj, i = _parse_node_term(toks, i, prefixes)
-        i += 1
-        while True:  # predicate lists (';')
-            pred, i = _parse_path_expr(toks, i, prefixes)
-            while True:  # object lists (',')
-                obj, i = _parse_node_term(toks, i, prefixes)
-                patterns.append((subj, pred, obj))
-                i += 1
-                if i < len(toks) and toks[i] == ("ann", "{|"):
-                    # SPARQL-star annotation syntax: the block's
-                    # predicate-object list hangs off the QUOTED form
-                    # of the triple just parsed (asserted + annotated)
+    def triples(self, out: list, subj: Optional[Term] = None) -> None:
+        """One subject's ``;`` predicate list of ``,`` object lists;
+        a SPARQL-star ``{| ... |}`` annotation hangs its own list off
+        the quoted form of the triple it follows (``subj`` given: the
+        list of an annotation block, which cannot nest)."""
+        annotation = subj is not None
+        if subj is None:
+            subj = self.node()
+        while True:
+            pred = self.path()
+            if annotation and isinstance(pred, Path):
+                raise SparqlError(
+                    "annotation predicate must be an IRI or variable")
+            while True:
+                obj = self.node()
+                out.append((subj, pred, obj))
+                if not annotation and self.accept("{|"):
                     if isinstance(pred, Path):
                         raise SparqlError(
                             "annotation on a property-path pattern")
-                    if not any(isinstance(t, Var)
-                               for t in (subj, pred, obj)):
-                        qs: Term = f"<< {subj} {pred} {obj} >>"
-                    else:
-                        qs = QuotedPattern(subj, pred, obj)
-                    i += 1
-                    while True:
-                        mpred, i = _parse_path_expr(toks, i, prefixes)
-                        if isinstance(mpred, Path):
-                            raise SparqlError(
-                                "annotation predicate must be an IRI "
-                                "or variable")
-                        while True:
-                            mobj, i = _parse_node_term(toks, i,
-                                                       prefixes)
-                            patterns.append((qs, mpred, mobj))
-                            i += 1
-                            if i < len(toks) and                                     toks[i] == ("punct", ","):
-                                i += 1
-                                continue
-                            break
-                        if i < len(toks) and toks[i] == ("punct", ";"):
-                            i += 1
-                            continue
-                        break
-                    if not (i < len(toks)
-                            and toks[i] == ("ann", "|}")):
-                        raise SparqlError(
-                            "annotation block missing '|}'")
-                    i += 1
-                if i < len(toks) and toks[i] == ("punct", ","):
-                    i += 1
-                    continue
-                break
-            if i < len(toks) and toks[i] == ("punct", ";"):
-                i += 1
-                if i < len(toks) and toks[i] == ("punct", "."):
-                    break  # trailing "; ."
+                    self.triples(out, _quoted(subj, pred, obj))
+                    self.expect("|}", "annotation block missing '|}'")
+                if not self.accept(","):
+                    break
+            if not self.accept(";") or self.at(".", "}"):
+                return
+
+    def triples_block(self, out: list) -> None:
+        """Triples up to and including the closing ``}``."""
+        while not self.accept("}"):
+            if not self.accept("."):
+                self.triples(out)
+
+    def group(self, what: str = "group") -> GroupPattern:
+        """One ``{ ... }`` group pattern."""
+        self.expect("{", f"{what} must be followed by a group")
+        g = GroupPattern()
+        while not self.accept("}"):
+            if self.accept("."):
                 continue
-            break
-    return patterns
+            if self.at("{"):
+                self.sub_groups(g)
+            elif self.accept("OPTIONAL"):
+                g.optionals.append(self.group("OPTIONAL"))
+            elif self.accept("GRAPH"):
+                g.graphs.append((self.graph_name(), self.group("GRAPH")))
+            elif self.accept("MINUS"):
+                g.minuses.append(self.group("MINUS"))
+            elif self.accept("FILTER"):
+                negated = bool(self.accept("NOT"))
+                if negated or self.accept("EXISTS"):
+                    if negated:
+                        self.expect("EXISTS")
+                    g.exists.append((negated, self.group("FILTER EXISTS")))
+                else:
+                    self.expect("(", "unsupported FILTER syntax: FILTER "
+                                     "needs ( ... ) or [NOT] EXISTS")
+                    g.filters.append(self.bexpr())
+                    self.expect(")")
+            elif self.accept("BIND"):
+                self.expect("(", "BIND must be followed by (expr AS ?var)")
+                expr = self.expr()
+                self.expect("AS", "BIND needs 'AS ?var'")
+                g.binds.append((expr, self.var()))
+                self.expect(")")
+            elif self.accept("VALUES"):
+                g.values.append(self.values())
+            elif self.at("SERVICE"):
+                raise SparqlError("unsupported SPARQL feature: SERVICE")
+            else:
+                self.triples(g.patterns)
+        return g
 
+    def sub_groups(self, g: GroupPattern) -> None:
+        """``{ SELECT ... }`` (a subquery, evaluated bottom-up, §18.2.2.14)
+        or ``{ ... } [UNION { ... }]*`` (a lone group is a 1-branch
+        union, i.e. an inline group join)."""
+        if self.at("SELECT", k=1):
+            self.next()
+            g.subqueries.append(self.select(sub=True))
+            self.expect("}")
+            if self.at("UNION"):
+                raise SparqlError("a subquery cannot be a UNION branch")
+            return
+        branches = [self.group()]
+        while self.accept("UNION"):
+            if self.at("SELECT", k=1):
+                raise SparqlError("a subquery cannot be a UNION branch")
+            branches.append(self.group("UNION"))
+        g.unions.append(branches)
 
-def _take_braced(text: str, i: int) -> tuple[str, int]:
-    """Return (inner, next_index) for the balanced ``{...}`` starting
-    at ``text[i]`` — quote-aware (braces inside string literals don't
-    count)."""
-    depth, j, in_str = 0, i, False
-    while j < len(text):
-        ch = text[j]
-        if in_str:
-            if ch == "\\":
-                j += 2
+    def values(self) -> tuple[list[str], list[list]]:
+        """``VALUES ?v { t ... }`` or ``VALUES (?a ?b) { (t t) ... }``;
+        ``UNDEF`` → None (joins as compatible-with-anything)."""
+        multi = self.accept("(")
+        vars_ = [self.var()]
+        while multi and not self.accept(")"):
+            vars_.append(self.var())
+        self.expect("{", "VALUES needs a { data } block")
+        rows = []
+        while not self.accept("}"):
+            if not multi:
+                rows.append([self.value()])
                 continue
-            if ch == '"':
-                in_str = False
-        elif ch == '"':
-            in_str = True
-        elif ch == "{":
-            depth += 1
-        elif ch == "}":
-            depth -= 1
-            if depth == 0:
-                return text[i + 1:j], j + 1
-        j += 1
-    raise SparqlError("unbalanced braces in group pattern")
+            self.expect("(", "VALUES rows must be parenthesized")
+            row = []
+            while not self.accept(")"):
+                row.append(self.value())
+            if len(row) != len(vars_):
+                raise SparqlError(f"VALUES row arity mismatch: {row}")
+            rows.append(row)
+        if not rows:
+            raise SparqlError("empty VALUES block")
+        return vars_, rows
 
+    def value(self) -> Optional[str]:
+        if self.accept("UNDEF"):
+            return None
+        t = self.term()
+        if isinstance(t, Var):
+            raise SparqlError("VALUES data must be constants")
+        return t
 
-def _split_top_cmp(s: str):
-    """Split ``lhs op rhs`` at the first comparison operator OUTSIDE
-    parentheses (so ``COUNT(?x) > 5`` splits at ``>``); None if no
-    top-level comparison exists."""
-    depth = 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "=<>!":
-            m = re.match(r"(!=|<=|>=|=|<|>)", s[i:])
-            if m:
-                return (s[:i].strip(), m.group(1),
-                        s[i + len(m.group(1)):].strip())
-    return None
+    def where(self) -> GroupPattern:
+        g = self.group("WHERE")
+        if g.is_empty():
+            raise SparqlError("empty basic graph pattern")
+        return g
 
+    # --- FILTER boolean expressions ----------------------------------------
 
-def _parse_agg_atom(lhs: str, alias: str,
-                    prefixes: dict[str, str]):
-    """``FUNC([DISTINCT] * | ?v | expr)`` → an :class:`AggExpr` with
-    the given alias; None if ``lhs`` is not a pure aggregate call."""
-    am = re.match(r"^(COUNT|SUM|AVG|MIN|MAX|SAMPLE|GROUP_CONCAT)"
-                  r"\s*\(", lhs, re.IGNORECASE)
-    if am is None:
-        return None
-    arg, k = _take_parens(lhs, am.end() - 1)
-    if lhs[k:].strip():
-        return None
-    func = am.group(1).lower()
-    dm = re.match(r"^\s*DISTINCT\s+(.*)$", arg, re.IGNORECASE | re.DOTALL)
-    body = (dm.group(1) if dm else arg).strip()
-    if body == "*":
-        if dm or func != "count":
-            raise SparqlError(f"{func.upper()}(*) only valid as COUNT(*)")
-        return AggExpr("count", None, False, alias)
-    vm = re.match(r"^\?([A-Za-z_][A-Za-z0-9_]*)$", body)
-    if vm:
-        return AggExpr(func, vm.group(1), bool(dm), alias)
-    return AggExpr(func, None, bool(dm), alias,
-                   expr=_parse_expr(body, prefixes))
+    def bexpr(self):
+        """``||`` of ``&&`` of factors (n-ary nodes, one per level)."""
+        ors = [self.band()]
+        while self.accept("||"):
+            ors.append(self.band())
+        return ors[0] if len(ors) == 1 else ("or", ors)
 
+    def band(self):
+        ands = [self.bfactor()]
+        while self.accept("&&"):
+            ands.append(self.bfactor())
+        return ands[0] if len(ands) == 1 else ("and", ands)
 
-def _parse_filter(inner: str) -> tuple[str, str, str]:
-    cm = re.match(r"^\?([A-Za-z_][A-Za-z0-9_]*)\s*"
-                  r"(=|!=|<=|>=|<|>)\s*(.+)$", inner.strip())
-    if cm is None:
-        raise SparqlError(f"unsupported FILTER {inner.strip()!r}")
-    return (cm.group(1), cm.group(2), cm.group(3).strip())
+    def bfactor(self):
+        if self.accept("!"):
+            return ("not", self.bfactor())
+        if self.accept("("):
+            node = self.bexpr()
+            self.expect(")", "unbalanced parentheses in FILTER")
+            return node
+        if self.at_kind("name") and self.at("(", k=1):
+            return self.bcall()
+        if not self.at_kind("var"):
+            raise SparqlError(f"unsupported FILTER at {self.peek()[1]!r}")
+        var = self.var()
+        negated = bool(self.accept("NOT"))
+        if negated or self.accept("IN"):
+            if negated:
+                self.expect("IN")
+            self.expect("(")
+            nums, terms = [], []
+            while True:
+                start = self.i
+                nums.append(self.number())
+                self.i = start
+                terms.append(self.term())
+                if isinstance(terms[-1], Var):
+                    raise SparqlError("IN list members must be constants")
+                if not self.accept(","):
+                    break
+            self.expect(")")
+            # an all-numeric list compares by value, like 'cmp'
+            numeric = None not in nums
+            node = ("in", var, nums if numeric else terms, numeric)
+            return ("not", node) if negated else node
+        op = self.accept(*_CMP_OPS)
+        if op is None:
+            raise SparqlError(f"unsupported FILTER on ?{var}")
+        return ("cmp", var, op, self.cmp_value())
 
+    def cmp_value(self):
+        n = self.number()
+        return self.term() if n is None else n
 
-# --- FILTER boolean expressions --------------------------------------------
-#
-# bexpr  := bterm ('||' bterm)*
-# bterm  := bfactor ('&&' bfactor)*
-# bfactor:= '!' bfactor | '(' bexpr ')' | atom
-# atom   := ?v op value                  (the original comparison form)
-#         | REGEX(?v, "pat" [, "flags"]) | CONTAINS/STRSTARTS/STRENDS(?v, "s")
-#         | BOUND(?v) | isIRI(?v) | isLITERAL(?v) | isBLANK(?v)
-#         | LANG(?v) = "tag"             (empty tag = plain literal)
-#
-# Trees: ('or'|'and', [subs]) | ('not', sub) | ('cmp', var, op, raw)
-#      | ('regex', var, pat, flags) | ('strfn', fn, var, lit)
-#      | ('bound', var) | ('isa', kind, var) | ('lang', var, tag)
-
-_STR_FNS = {"contains", "strstarts", "strends"}
-
-
-def _split_top(text: str, sep: str) -> list[str]:
-    """Split at top-level occurrences of a 2-char operator (paren- and
-    quote-aware)."""
-    parts, depth, in_str, start, i = [], 0, False, 0, 0
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == '"':
-                in_str = False
-        elif ch == '"':
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and text[i:i + 2] == sep:
-            parts.append(text[start:i])
-            start = i + 2
-            i += 2
-            continue
-        i += 1
-    parts.append(text[start:])
-    return parts
-
-
-def _parse_filter_expr(text: str, prefixes: dict[str, str]):
-    text = text.strip()
-    ors = _split_top(text, "||")
-    if len(ors) > 1:
-        return ("or", [_parse_filter_expr(p, prefixes) for p in ors])
-    ands = _split_top(text, "&&")
-    if len(ands) > 1:
-        return ("and", [_parse_filter_expr(p, prefixes) for p in ands])
-    if text.startswith("!") and not text.startswith("!="):
-        return ("not", _parse_filter_expr(text[1:], prefixes))
-    if text.startswith("("):
-        inner, j = _take_parens(text, 0)
-        if text[j:].strip():
-            raise SparqlError(f"trailing text in FILTER: {text[j:]!r}")
-        return _parse_filter_expr(inner, prefixes)
-    fm = re.match(r"^([A-Za-z]+)\s*\(", text)
-    if fm:
-        fn = fm.group(1).lower()
-        inner, j = _take_parens(text, fm.end() - 1)
-        rest = text[j:].strip()
+    def bcall(self):
+        fn = self.next()[1].lower()
+        self.expect("(")
         if fn == "lang":
-            m = re.match(r'^(!?=)\s*"([A-Za-z0-9-]*)"$', rest)
-            vm = re.match(r"^\?([A-Za-z_]\w*)$", inner.strip())
-            if m is None or vm is None:
-                raise SparqlError(
-                    f'LANG filter must be LANG(?v) = "tag": {text!r}')
-            node = ("lang", vm.group(1), m.group(2))
-            return node if m.group(1) == "=" else ("not", node)
-        if rest:
-            raise SparqlError(f"trailing text in FILTER: {rest!r}")
-        args = [a.strip() for a in _split_args(inner)]
+            var = self.var()
+            self.expect(")")
+            op = self.accept("=", "!=")
+            kind, tag = self.next() if op else (None, None)
+            if kind != "lit" or not re.fullmatch(r'"[A-Za-z0-9-]*"', tag):
+                raise SparqlError('LANG filter must be LANG(?v) = "tag"')
+            node = ("lang", var, tag[1:-1])
+            return node if op == "=" else ("not", node)
+        if fn == "bound" or fn in _ISA:
+            var = self.var()
+            self.expect(")")
+            return ("bound", var) if fn == "bound" else ("isa", _ISA[fn], var)
+        if fn != "regex" and fn not in _STR_FNS:
+            raise SparqlError(f"unsupported FILTER function {fn!r}")
+        arg = self.var() if self.at_kind("var") and self.at(",", k=1) \
+            else self.expr()
+        self.expect(",")
+        lit = self.string()
+        general = "" if isinstance(arg, str) else "_expr"
         if fn == "regex":
-            if len(args) not in (2, 3):
-                raise SparqlError(f"REGEX takes (expr, \"pat\"[, flags])")
-            flags = _unrender(_resolve_term(
-                *_tokenize(args[2])[0], prefixes)) if len(args) == 3 else ""
-            pat = _unrender(_resolve_term(*_tokenize(args[1])[0], prefixes))
-            if re.match(r"^\?[A-Za-z_]\w*$", args[0]):
-                return ("regex", args[0][1:], pat, flags)
-            # general first argument: any BIND expression
-            return ("regex_expr", _parse_expr(args[0], prefixes), pat, flags)
-        if fn in _STR_FNS:
-            if len(args) != 2:
-                raise SparqlError(f"{fn.upper()} takes (expr, \"literal\")")
-            lit = _unrender(_resolve_term(*_tokenize(args[1])[0], prefixes))
-            if re.match(r"^\?[A-Za-z_]\w*$", args[0]):
-                return ("strfn", fn, args[0][1:], lit)
-            return ("strfn_expr", fn, _parse_expr(args[0], prefixes), lit)
-        if fn == "bound":
-            vm = re.match(r"^\?([A-Za-z_]\w*)$", inner.strip())
-            if vm is None:
-                raise SparqlError("BOUND takes a single variable")
-            return ("bound", vm.group(1))
-        if fn in ("isiri", "isuri", "isliteral", "isblank",
-                  "istriple"):
-            vm = re.match(r"^\?([A-Za-z_]\w*)$", inner.strip())
-            if vm is None:
-                raise SparqlError(f"{fn} takes a single variable")
-            kind = {"isiri": "iri", "isuri": "iri",
-                    "isliteral": "literal", "isblank": "blank",
-                    "istriple": "triple"}[fn]
-            return ("isa", kind, vm.group(1))
-        raise SparqlError(f"unsupported FILTER function {fn!r}")
-    im = re.match(r"^\?([A-Za-z_]\w*)\s+(NOT\s+)?IN\s*\(", text,
-                  re.IGNORECASE | re.DOTALL)
-    if im:
-        inner, j = _take_parens(text, im.end() - 1)
-        if text[j:].strip():
-            raise SparqlError(f"trailing text in FILTER: {text[j:]!r}")
-        parts = [p.strip() for p in _split_args(inner)]
-        if all(re.fullmatch(r"[+-]?[0-9]+(\.[0-9]+)?", p) for p in parts):
-            # all-numeric list → value comparison, like _cmp_col
-            node = ("in", im.group(1), [float(p) for p in parts], True)
-            return ("not", node) if im.group(2) else node
-        terms = []
-        for part in parts:
-            toks = _tokenize(part)
-            if len(toks) != 1:
-                raise SparqlError(f"bad IN list member {part!r}")
-            t = _resolve_term(*toks[0], prefixes)
+            flags = self.string() if self.accept(",") else ""
+            self.expect(")", 'REGEX takes (expr, "pat"[, flags])')
+            return ("regex" + general, arg, lit, flags)
+        self.expect(")", f'{fn.upper()} takes (expr, "literal")')
+        return ("strfn" + general, fn, arg, lit)
+
+    # --- scalar expressions (BIND / projection / ORDER BY / GROUP BY) ------
+
+    def expr(self) -> Expr:
+        node = self.mul()
+        while self.at("+", "-"):
+            node = ("arith", self.next()[1], node, self.mul())
+        return node
+
+    def mul(self) -> Expr:
+        node = self.primary()
+        while self.at("*", "/"):
+            node = ("arith", self.next()[1], node, self.primary())
+        return node
+
+    def at_call(self) -> bool:
+        return (self.at_kind("name") and self.at("(", k=1)
+                and self.peek()[1].lower() in _EXPR_FUNCS)
+
+    def primary(self) -> Expr:
+        if self.accept("("):
+            node = self.expr()
+            self.expect(")", "unbalanced parentheses in expression")
+            return node
+        if not self.at_call():
+            t = self.term()
+            return ("var", t.name) if isinstance(t, Var) else ("const", t)
+        func = self.next()[1].lower()
+        self.expect("(")
+        # IF's condition is a boolean expression in the FILTER grammar
+        args = [("cond", self.bexpr()) if func == "if" else self.expr()]
+        while self.accept(","):
+            args.append(self.expr())
+        self.expect(")", f"unbalanced parentheses in {func.upper()}(...)")
+        arity = _EXPR_FUNCS[func]
+        if isinstance(arity, int) and len(args) != arity:
+            raise SparqlError(f"{func.upper()} takes {arity} argument(s)")
+        if isinstance(arity, tuple) and not (
+                arity[0] <= len(args) <= arity[1]):
+            raise SparqlError(
+                f"{func.upper()} takes {arity[0]}..{arity[1]} arguments")
+        return ("call", "iri" if func == "uri" else func, args)
+
+    def at_aggregate(self) -> bool:
+        return self.at(*_AGGS) and self.at("(", k=1)
+
+    def aggregate(self, alias: str = "") -> AggExpr:
+        """``FUNC([DISTINCT] * | ?v | expr [; SEPARATOR = "s"])``."""
+        func = self.next()[1].lower()
+        self.expect("(")
+        distinct = bool(self.accept("DISTINCT"))
+        var = expr = sep = None
+        if self.accept("*"):
+            if distinct or func != "count":
+                raise SparqlError(f"{func.upper()}(*) only valid as COUNT(*)")
+        elif self.at_kind("var") and self.at(")", ";", k=1):
+            var = self.var()
+        else:
+            expr = self.expr()
+        if self.accept(";"):
+            self.expect("SEPARATOR")
+            self.expect("=")
+            sep = self.string()
+            if func != "group_concat":
+                raise SparqlError("SEPARATOR is only valid in GROUP_CONCAT")
+        self.expect(")")
+        return AggExpr(func, var, distinct, alias, sep, expr)
+
+    # --- query forms -------------------------------------------------------
+
+    def select(self, sub: bool = False) -> SelectQuery:
+        self.expect("SELECT",
+                    "only SELECT ... WHERE { ... } queries supported")
+        distinct = bool(self.accept("DISTINCT"))
+        variables: list[str] = []
+        aggregates: list[AggExpr] = []
+        select_exprs: list[tuple[str, Expr]] = []
+        if not self.accept("*"):
+            while self.at("(") or self.at_kind("var"):
+                if not self.accept("("):
+                    variables.append(self.var())
+                    continue
+                agg = self.aggregate() if self.at_aggregate() else None
+                expr = self.expr() if agg is None else None
+                self.expect("AS", "projection expressions need (expr AS ?v)")
+                alias = self.var()
+                self.expect(")")
+                if agg is None:
+                    select_exprs.append((alias, expr))
+                else:
+                    aggregates.append(replace(agg, alias=alias))
+                variables.append(alias)
+            if not variables:
+                raise SparqlError(f"bad projection at {self.peek()[1]!r}")
+        from_graphs: list[str] = []
+        from_named: list[str] = []
+        while not sub and self.accept("FROM"):
+            (from_named if self.accept("NAMED") else from_graphs).append(
+                self.iri("FROM"))
+        self.expect("WHERE", "only SELECT ... WHERE { ... } queries supported")
+        group = self.where()
+
+        group_by: list[str] = []
+        group_exprs: list[tuple[Expr, str]] = []
+        if self.accept("GROUP"):
+            self.expect("BY")
+            while self.at("(") or self.at_kind("var"):
+                if self.accept("("):
+                    expr = self.expr()
+                    self.expect("AS", "GROUP BY expression needs (expr AS ?v)")
+                    name = self.var()
+                    self.expect(")")
+                    group_exprs.append((expr, name))
+                else:
+                    name = self.var()
+                group_by.append(name)
+            if not group_by:
+                raise SparqlError(f"bad GROUP BY item: {self.peek()[1]!r}")
+        # aggregates with no GROUP BY = one implicit group (valid SPARQL)
+        if aggregates or group_by:
+            aliases = {a.alias for a in aggregates} | \
+                {alias for alias, _ in select_exprs}
+            bad = [v for v in variables
+                   if v not in aliases and v not in group_by]
+            if bad:
+                raise SparqlError(
+                    f"projected variables {bad} are neither aggregated nor "
+                    f"GROUP BY keys")
+            if not variables:
+                raise SparqlError("SELECT * cannot be combined with GROUP BY")
+
+        having: list[tuple[str, str, object]] = []
+        having_aggs: list[AggExpr] = []
+        if self.accept("HAVING"):
+            while self.accept("("):
+                # HAVING (AGG(...) op value): the aggregate is a hidden
+                # grouping output (the ORDER BY DESC(COUNT(?x))
+                # machinery) and the filter reads its alias
+                if self.at_aggregate():
+                    having_aggs.append(
+                        self.aggregate(f"__hv{len(having_aggs)}"))
+                    lhs = having_aggs[-1].alias
+                else:
+                    lhs = self.var()
+                op = self.accept(*_CMP_OPS)
+                if op is None:
+                    raise SparqlError("unsupported HAVING: needs a comparison")
+                having.append((lhs, op, self.cmp_value()))
+                self.expect(")")
+            if not having:
+                raise SparqlError("HAVING needs ( condition )")
+        if having and not (aggregates or group_by or having_aggs):
+            raise SparqlError("HAVING requires GROUP BY or an aggregate")
+
+        order_by: list[tuple[object, bool]] = []
+        if self.accept("ORDER"):
+            self.expect("BY")
+            while (key := self.order_key()) is not None:
+                order_by.append(key)
+            if not order_by:
+                raise SparqlError(f"bad ORDER BY key {self.peek()[1]!r}")
+        limit = offset = None
+        while slice_kw := self.accept("LIMIT", "OFFSET"):
+            if slice_kw == "LIMIT":
+                limit = self.integer(slice_kw)
+            else:
+                offset = self.integer(slice_kw)
+        return SelectQuery(variables=variables, distinct=distinct,
+                           group=group, order_by=order_by, limit=limit,
+                           offset=offset, aggregates=aggregates,
+                           group_by=group_by, group_exprs=group_exprs,
+                           having=having, having_aggs=having_aggs,
+                           select_exprs=select_exprs,
+                           from_graphs=from_graphs, from_named=from_named)
+
+    def order_key(self) -> Optional[tuple[object, bool]]:
+        """One ORDER BY condition as (key, descending), None past the
+        last: ``?var``, ``ASC(key)`` / ``DESC(key)``, an aggregate
+        call (a hidden grouping output) or a scalar expression."""
+        if self.at("ASC", "DESC") and self.at("(", k=1):
+            desc = self.next()[1].upper() == "DESC"
+            self.next()
+            if self.at_kind("var") and self.at(")", k=1):
+                key = self.var()
+            elif self.at_aggregate():
+                key = self.aggregate("__ord")
+            else:
+                key = self.expr()
+            self.expect(")")
+            return key, desc
+        if self.at_kind("var"):
+            return self.var(), False
+        if self.at_aggregate():
+            return self.aggregate("__ord"), False
+        if self.at("(") or self.at_call():
+            return self.expr(), False
+        return None
+
+    def ask(self) -> GroupPattern:
+        self.expect("ASK", "not an ASK query")
+        self.accept("WHERE")
+        return self.where()
+
+    def construct(self):
+        """→ (template triples, WHERE group, LIMIT or None)."""
+        self.expect("CONSTRUCT", "not a CONSTRUCT query")
+        if self.accept("WHERE"):
+            # §10.2.3 CONSTRUCT WHERE shorthand: the WHERE pattern IS
+            # the template — legal only for a plain BGP
+            group = self.group("WHERE")
+            if group != GroupPattern(patterns=group.patterns):
+                raise SparqlError(
+                    "CONSTRUCT WHERE shorthand allows only a basic graph "
+                    "pattern (SPARQL 1.1 §10.2.3)")
+            template = list(group.patterns)
+        else:
+            self.expect("{", "CONSTRUCT must be followed by a { template }")
+            template = []
+            self.triples_block(template)
+            self.expect("WHERE",
+                        "CONSTRUCT template must be followed by WHERE")
+            group = self.where()
+        if not template:
+            raise SparqlError("empty CONSTRUCT template")
+        for (s, p, _o) in template:
+            if isinstance(s, str) and s.startswith('"'):
+                raise SparqlError(
+                    "CONSTRUCT template subject cannot be a literal")
+            if isinstance(p, Path):
+                raise SparqlError(
+                    "property paths are not allowed in a CONSTRUCT template")
+            if isinstance(p, QuotedPattern) or not (
+                    isinstance(p, Var) or p.startswith("<")):
+                raise SparqlError(
+                    "CONSTRUCT template predicate must be an IRI")
+        return (template, group,
+                self.integer("LIMIT") if self.accept("LIMIT") else None)
+
+    def describe(self):
+        """→ (described IRIs, described variables, WHERE group or None)."""
+        self.expect("DESCRIBE", "not a DESCRIBE query")
+        consts: list[str] = []
+        described: list[str] = []
+        while self.peek()[0] is not None and not self.at("WHERE"):
+            t = self.term()
             if isinstance(t, Var):
-                raise SparqlError("IN list members must be constants")
-            terms.append(t)
-        node = ("in", im.group(1), terms, False)
-        return ("not", node) if im.group(2) else node
-    return ("cmp",) + _parse_filter(text)
+                described.append(t.name)
+            elif t.startswith("<"):
+                consts.append(t)
+            else:
+                raise SparqlError(
+                    f"DESCRIBE takes IRIs or variables, got {t!r}")
+        if not (consts or described):
+            raise SparqlError("not a DESCRIBE query")
+        group = self.where() if self.accept("WHERE") else None
+        if described and group is None:
+            raise SparqlError("DESCRIBE with variables requires WHERE")
+        return consts, described, group
+
+    # --- SPARQL 1.1 Update ---------------------------------------------------
+    #
+    # operations: ('load', path, graph IRI | None)
+    #           | ('clear', CLEAR|DROP, graph IRI | DEFAULT|NAMED|ALL)
+    #           | ('copy', ADD|COPY|MOVE, source, target)  (None = DEFAULT)
+    #           | ('create',)
+    #           | ('data', INSERT|DELETE, ground quads)
+    #           | ('modify', delete quads | None, insert quads | None, WHERE)
+
+    def update(self) -> list[tuple]:
+        ops = []
+        while self.peek()[0] is not None:
+            ops.append(self.update_op())
+            if not self.accept(";"):
+                break
+            self.prologue()
+        if not ops:
+            raise SparqlError("empty update script")
+        return ops
+
+    def update_op(self) -> tuple:
+        if self.accept("LOAD"):
+            self.accept("SILENT")
+            kind, src = self.next()
+            if kind != "iri":
+                raise SparqlError(f"LOAD needs <path>, got {src!r}")
+            into = self.accept("INTO")
+            if into:
+                self.expect("GRAPH")
+            return ("load", src[1:-1], self.iri("LOAD") if into else None)
+        verb = self.accept("CLEAR", "DROP")
+        if verb:
+            self.accept("SILENT")
+            if self.accept("GRAPH"):
+                return ("clear", verb, self.iri(verb))
+            target = self.accept("DEFAULT", "NAMED", "ALL")
+            if target is None:
+                raise SparqlError(f"{verb} needs GRAPH <g>, DEFAULT, NAMED "
+                                  f"or ALL")
+            return ("clear", verb, target)
+        verb = self.accept("ADD", "COPY", "MOVE")
+        if verb:
+            self.accept("SILENT")
+            src = self.graph_or_default(verb)
+            self.expect("TO")
+            return ("copy", verb, src, self.graph_or_default(verb))
+        if self.accept("CREATE"):
+            # graphs have no independent existence in a quad table: an
+            # empty graph IS absence — CREATE is a conformance no-op
+            self.accept("SILENT")
+            self.expect("GRAPH")
+            self.iri("CREATE")
+            return ("create",)
+        with_g = self.iri("WITH") if self.accept("WITH") else None
+        if self.at("INSERT", "DELETE") and self.at("DATA", k=1):
+            if with_g is not None:
+                raise SparqlError("WITH does not apply to DATA operations")
+            verb = self.next()[1].upper()
+            self.next()
+            return ("data", verb,
+                    self.quad_pattern(f"{verb} DATA", ground=True)[0])
+        if self.at("DELETE") and self.at("WHERE", k=1):
+            self.i += 2
+            dels, group = self.quad_pattern("DELETE WHERE", with_g)
+            ins = None
+        else:
+            dels = ins = None
+            if self.at("DELETE") and self.at("{", k=1):
+                self.next()
+                dels = self.quad_pattern("DELETE template", with_g)[0]
+            if self.at("INSERT") and self.at("{", k=1):
+                self.next()
+                ins = self.quad_pattern("INSERT template", with_g)[0]
+            if dels is None and ins is None:
+                raise SparqlError(f"unsupported update operation at "
+                                  f"{self.peek()[1]!r}")
+            if not self.accept("WHERE"):
+                raise SparqlError("DELETE/INSERT templates require WHERE")
+            group = self.where()
+        if with_g is not None:
+            # WITH sets the active graph for matching (§3.1.3): wrap
+            # the whole WHERE in a GRAPH scope
+            group = GroupPattern(graphs=[(with_g, group)])
+        return ("modify", dels, ins, group)
+
+    def graph_or_default(self, verb: str) -> Optional[str]:
+        if self.accept("DEFAULT"):
+            return None
+        self.accept("GRAPH")
+        return self.iri(verb)
+
+    def quad_pattern(self, what: str, default_graph: Optional[str] = None,
+                     ground: bool = False):
+        """A DATA block or DELETE/INSERT template: triples plus
+        ``GRAPH <iri>|?var { ... }`` blocks → ((s, p, o, g) quads, the
+        same triples as a group pattern).  g is ``default_graph`` (the
+        ``WITH`` graph, else None) outside GRAPH blocks.  Literal
+        subjects, non-IRI predicates and paths are rejected (like
+        CONSTRUCT templates), variables when ``ground``."""
+        self.expect("{", f"{what} must be followed by {{ ... }}")
+        g = GroupPattern()
+        while not self.accept("}"):
+            if self.accept("GRAPH"):
+                gterm, sub = self.graph_name(), GroupPattern()
+                self.expect("{", f"GRAPH must be followed by a group in "
+                                 f"{what}")
+                self.triples_block(sub.patterns)
+                g.graphs.append((gterm, sub))
+            elif not self.accept("."):
+                self.triples(g.patterns)
+        quads = [(*t, default_graph) for t in g.patterns] + \
+            [(*t, gt) for gt, sub in g.graphs for t in sub.patterns]
+        if not quads:
+            raise SparqlError(f"empty {what} template")
+        for (s, p, o, gt) in quads:
+            if isinstance(p, Path):
+                raise SparqlError(f"property paths are not allowed in {what}")
+            if ground and any(isinstance(x, (Var, QuotedPattern))
+                              for x in (s, p, o, gt)):
+                raise SparqlError(f"{what} requires ground triples "
+                                  f"(no variables)")
+            if isinstance(s, str) and s.startswith('"'):
+                raise SparqlError(f"{what} subject cannot be a literal")
+            if not isinstance(p, Var) and not p.startswith("<"):
+                raise SparqlError(f"{what} predicate must be an IRI")
+            if isinstance(gt, str) and not gt.startswith("<"):
+                raise SparqlError(f"{what} graph name must be an IRI")
+        return quads, g
 
 
-def _filter_col(node, result_cols: list[str],
-                prefixes: dict[str, str]) -> F.Column:
+def _filter_col(node, result_cols: Optional[list[str]]) -> F.Column:
     """Compile a FILTER tree to a boolean Column over the solution
     DataFrame (pure Catalyst — rlike/startswith/contains/regexp are all
     codegen'd)."""
     kind = node[0]
-    if kind == "or":
-        out = _filter_col(node[1][0], result_cols, prefixes)
-        for sub in node[1][1:]:
-            out = out | _filter_col(sub, result_cols, prefixes)
-        return out
-    if kind == "and":
-        out = _filter_col(node[1][0], result_cols, prefixes)
-        for sub in node[1][1:]:
-            out = out & _filter_col(sub, result_cols, prefixes)
+    if kind in ("or", "and"):
+        cols = [_filter_col(sub, result_cols) for sub in node[1]]
+        out = cols[0]
+        for c in cols[1:]:
+            out = (out | c) if kind == "or" else (out & c)
         return out
     if kind == "not":
         # SPARQL !E is true only where E evaluates false (an unbound
         # operand is an error, not true) — Column ~ has exactly the
         # three-valued behavior we want (~null = null = filtered out)
-        return ~_filter_col(node[1], result_cols, prefixes)
+        return ~_filter_col(node[1], result_cols)
     if kind in ("strfn_expr", "regex_expr"):
         expr = node[2] if kind == "strfn_expr" else node[1]
         if result_cols is not None:
@@ -857,8 +1281,7 @@ def _filter_col(node, result_cols: list[str],
         raise SparqlError(f"FILTER references unbound variable ?{var}")
     c = F.col(var)
     if kind == "cmp":
-        _, v, op, raw = node
-        return _cmp_col(v, op, raw, prefixes)
+        return _cmp_col(*node[1:])
     if kind == "regex":
         pat = node[2] if not node[3] else f"(?{node[3]}){node[2]}"
         return _lexical(c).rlike(pat)
@@ -880,689 +1303,17 @@ def _filter_col(node, result_cols: list[str],
     if kind == "isa":
         if node[1] == "iri":
             # a quoted triple also starts with "<" — exclude it
-            return c.startswith("<") & ~c.rlike(_QT_RE)
+            return c.startswith("<") & ~c.rlike(UNQUOTE_RE)
         if node[1] == "literal":
             return c.startswith('"')
         if node[1] == "triple":  # SPARQL-star isTRIPLE
-            return c.rlike(_QT_RE)
+            return c.rlike(UNQUOTE_RE)
         return c.startswith("_:")
     if kind == "lang":
         tag = node[2]
         m = F.regexp_extract(c, r'@([A-Za-z0-9-]+)$', 1)
         return (c.startswith('"')) & (F.lower(m) == tag.lower())
     raise SparqlError(f"bad filter node {node!r}")  # pragma: no cover
-
-
-def _take_parens(text: str, i: int) -> tuple[str, int]:
-    """Return (inner, next_index) for the balanced ``(...)`` starting at
-    ``text[i]`` — quote-aware, like :func:`_take_braced`."""
-    depth, j, in_str = 0, i, False
-    while j < len(text):
-        ch = text[j]
-        if in_str:
-            if ch == "\\":
-                j += 2
-                continue
-            if ch == '"':
-                in_str = False
-        elif ch == '"':
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return text[i + 1:j], j + 1
-        j += 1
-    raise SparqlError("unbalanced parentheses in expression")
-
-
-# --- BIND expression subset ------------------------------------------------
-#
-# expr := atom (('+'|'-'|'*'|'/') atom)*        (left-associative)
-# atom := FUNC '(' expr (',' expr)* ')' | '(' expr ')' | ?var | literal | num
-# FUNC := CONCAT | STR | UCASE | LCASE | STRLEN | IRI | URI | REPLACE
-#       | SUBSTR | STRBEFORE | STRAFTER | ENCODE_FOR_URI
-#       | ABS | CEIL | FLOOR | ROUND
-#       | MD5 | SHA1 | SHA256 | COALESCE | IF
-#       | LANG | DATATYPE | STRLANG | STRDT
-#
-# IF's first argument is a *boolean* expression and is parsed with the
-# FILTER-expression grammar (comparisons, REGEX/CONTAINS/..., BOUND,
-# &&/||/!), carried as a ('cond', filter_tree) node.
-#
-# Exprs are tuples: ('var', name) | ('const', rendered_term)
-#                 | ('call', func, [args]) | ('arith', op, left, right)
-#                 | ('cond', filter_tree)              (IF conditions only)
-
-Expr = tuple
-
-#: func -> exact arity, or (min, max), or None (variadic)
-_EXPR_FUNCS: dict[str, object] = {
-    "concat": None, "coalesce": (1, 64),
-    "str": 1, "ucase": 1, "lcase": 1, "strlen": 1, "iri": 1, "uri": 1,
-    "replace": 3, "substr": (2, 3), "strbefore": 2, "strafter": 2,
-    "encode_for_uri": 1, "abs": 1, "ceil": 1, "floor": 1, "round": 1,
-    "md5": 1, "sha1": 1, "sha256": 1, "if": 3,
-    "lang": 1, "datatype": 1, "strlang": 2, "strdt": 2,
-    # SPARQL-star accessors/constructor (RDF-star CG report sec. 7)
-    "triple": 3, "subject": 1, "predicate": 1, "object": 1,
-    "istriple": 1,
-}
-
-
-def _split_args(inner: str) -> list[str]:
-    """Top-level comma split of a function-argument list (paren- and
-    quote-aware)."""
-    args, depth, in_str, in_iri, start = [], 0, False, False, 0
-    i = 0
-    while i < len(inner):
-        ch = inner[i]
-        if in_str:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == '"':
-                in_str = False
-        elif in_iri:
-            if ch == ">":
-                in_iri = False
-        elif ch == '"':
-            in_str = True
-        elif ch == "<":
-            in_iri = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            args.append(inner[start:i])
-            start = i + 1
-        i += 1
-    args.append(inner[start:])
-    return args
-
-
-def _parse_expr(text: str, prefixes: dict[str, str]) -> Expr:
-    text = text.strip()
-    # binary arithmetic at top level (paren/quote aware): split at the
-    # rightmost lowest-precedence operator (+/- before */), which gives
-    # left-associativity within a precedence level
-    depth, in_str, in_iri, i = 0, False, False, 0
-    addsub = muldiv = None
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == '"':
-                in_str = False
-        elif in_iri:
-            if ch == ">":
-                in_iri = False
-        elif ch == '"':
-            in_str = True
-        elif ch == "<":
-            in_iri = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch in "+-*/" and depth == 0:
-            # not a unary sign: needs a left operand (previous
-            # non-space char exists and is not itself an operator)
-            prev = text[:i].rstrip()
-            if prev and prev[-1] not in "+-*/":
-                if ch in "+-":
-                    addsub = i
-                else:
-                    muldiv = i
-        i += 1
-    split = addsub if addsub is not None else muldiv
-    if split is not None:
-        return ("arith", text[split],
-                _parse_expr(text[:split], prefixes),
-                _parse_expr(text[split + 1:], prefixes))
-    fm = re.match(r"^([A-Za-z_][A-Za-z0-9_]*)\s*\(", text)
-    if fm and fm.group(1).lower() in _EXPR_FUNCS:
-        inner, j = _take_parens(text, fm.end() - 1)
-        if text[j:].strip():
-            raise SparqlError(f"trailing text after call: {text[j:]!r}")
-        func = fm.group(1).lower()
-        raw_args = _split_args(inner)
-        if func == "if":
-            # IF(cond, then, else): the condition is a boolean
-            # expression in the FILTER grammar
-            if len(raw_args) != 3:
-                raise SparqlError("IF takes 3 arguments")
-            # the cond node carries the prologue's prefixes: 'cmp'
-            # leaves resolve their RHS term at compile time
-            args = [("cond", _parse_filter_expr(raw_args[0], prefixes),
-                     prefixes),
-                    _parse_expr(raw_args[1], prefixes),
-                    _parse_expr(raw_args[2], prefixes)]
-            return ("call", "if", args)
-        args = [_parse_expr(a, prefixes) for a in raw_args]
-        arity = _EXPR_FUNCS[func]
-        if isinstance(arity, int) and len(args) != arity:
-            raise SparqlError(f"{func.upper()} takes {arity} argument(s)")
-        if isinstance(arity, tuple) and not (
-                arity[0] <= len(args) <= arity[1]):
-            raise SparqlError(
-                f"{func.upper()} takes {arity[0]}..{arity[1]} arguments")
-        return ("call", "iri" if func == "uri" else func, args)
-    if text.startswith("("):
-        inner, j = _take_parens(text, 0)
-        if text[j:].strip():
-            raise SparqlError(f"trailing text after group: {text[j:]!r}")
-        return _parse_expr(inner, prefixes)
-    toks = _tokenize(text)
-    if len(toks) != 1:
-        raise SparqlError(f"unsupported expression {text!r}")
-    term = _resolve_term(*toks[0], prefixes)
-    return ("var", term.name) if isinstance(term, Var) else ("const", term)
-
-
-def _at_keyword(text: str, i: int, kw: str) -> bool:
-    """Case-insensitive keyword at position ``i``, on a token boundary
-    (so a prefixed name like ``ex:OPTIONALthing`` never matches)."""
-    if text[i:i + len(kw)].upper() != kw:
-        return False
-    if i > 0 and text[i - 1] not in " \t\r\n.;,{}()":
-        return False
-    end = i + len(kw)
-    return end >= len(text) or not (text[end].isalnum() or text[end] in "_:")
-
-
-def _parse_group(text: str, prefixes: dict[str, str]) -> GroupPattern:
-    """Recursive group parser: plain triple text, FILTER(...) clauses,
-    OPTIONAL { ... } sub-groups and { ... } UNION { ... } alternations
-    (a lone braced sub-group is a 1-branch "union", i.e. an inline
-    group join)."""
-    g = GroupPattern()
-    chunks: list[str] = []
-    i, n, chunk_start, in_str = 0, len(text), 0, False
-    while i < n:
-        ch = text[i]
-        if in_str:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == '"':
-                in_str = False
-            i += 1
-            continue
-        if ch == '"':
-            in_str = True
-            i += 1
-            continue
-        if ch == "{" and not (i + 1 < n and text[i + 1] == "|"):
-            chunks.append(text[chunk_start:i])
-            inner, j = _take_braced(text, i)
-            if re.match(r"\s*SELECT\b", inner, re.IGNORECASE):
-                # nested { SELECT ... } subquery (§18.2.2.14): parsed
-                # as a full query with the enclosing prologue's
-                # prefixes in scope, evaluated bottom-up at exec time
-                if re.match(r"\s*UNION\b", text[j:], re.IGNORECASE):
-                    raise SparqlError(
-                        "a subquery cannot be a UNION branch")
-                g.subqueries.append(parse_sparql(inner, prefixes))
-                chunk_start = i = j
-                continue
-            branches = [_parse_group(inner, prefixes)]
-            while True:
-                m = re.match(r"\s*UNION\s*", text[j:], re.IGNORECASE)
-                if m is None:
-                    break
-                k = j + m.end()
-                if k >= n or text[k] != "{":
-                    raise SparqlError("UNION must be followed by a group")
-                inner2, j = _take_braced(text, k)
-                if re.match(r"\s*SELECT\b", inner2, re.IGNORECASE):
-                    raise SparqlError(
-                        "a subquery cannot be a UNION branch")
-                branches.append(_parse_group(inner2, prefixes))
-            g.unions.append(branches)
-            chunk_start = i = j
-            continue
-        if _at_keyword(text, i, "OPTIONAL"):
-            chunks.append(text[chunk_start:i])
-            m = re.match(r"OPTIONAL\s*", text[i:], re.IGNORECASE)
-            k = i + m.end()
-            if k >= n or text[k] != "{":
-                raise SparqlError("OPTIONAL must be followed by a group")
-            inner, j = _take_braced(text, k)
-            g.optionals.append(_parse_group(inner, prefixes))
-            chunk_start = i = j
-            continue
-        if _at_keyword(text, i, "GRAPH"):
-            chunks.append(text[chunk_start:i])
-            m = re.match(r"GRAPH\s+(\?[A-Za-z_][A-Za-z0-9_]*|<[^>]*>"
-                         r"|[A-Za-z_][\w-]*:[\w.-]*)\s*", text[i:],
-                         re.IGNORECASE)
-            if m is None:
-                raise SparqlError("GRAPH needs ?var or an IRI")
-            gterm_src = m.group(1)
-            if gterm_src.startswith("?"):
-                gterm: Term = Var(gterm_src[1:])
-            elif gterm_src.startswith("<"):
-                gterm = gterm_src
-            else:
-                gterm = _resolve_term("pname", gterm_src, prefixes)
-            k = i + m.end()
-            if k >= n or text[k] != "{":
-                raise SparqlError("GRAPH must be followed by a group")
-            inner, j = _take_braced(text, k)
-            g.graphs.append((gterm, _parse_group(inner, prefixes)))
-            chunk_start = i = j
-            continue
-        if _at_keyword(text, i, "MINUS"):
-            chunks.append(text[chunk_start:i])
-            m = re.match(r"MINUS\s*", text[i:], re.IGNORECASE)
-            k = i + m.end()
-            if k >= n or text[k] != "{":
-                raise SparqlError("MINUS must be followed by a group")
-            inner, j = _take_braced(text, k)
-            g.minuses.append(_parse_group(inner, prefixes))
-            chunk_start = i = j
-            continue
-        if _at_keyword(text, i, "FILTER"):
-            chunks.append(text[chunk_start:i])
-            em = re.match(r"FILTER\s+(NOT\s+)?EXISTS\s*", text[i:],
-                          re.IGNORECASE)
-            if em is not None:
-                k = i + em.end()
-                if k >= n or text[k] != "{":
-                    raise SparqlError(
-                        "FILTER [NOT] EXISTS must be followed by a group")
-                inner, j = _take_braced(text, k)
-                g.exists.append((bool(em.group(1)),
-                                 _parse_group(inner, prefixes)))
-                chunk_start = i = j
-                continue
-            m = re.match(r"FILTER\s*", text[i:], re.IGNORECASE)
-            k = i + m.end()
-            if k >= n or text[k] != "(":
-                raise SparqlError(
-                    f"unsupported FILTER syntax at: {text[i:i + 40]!r}")
-            inner, j = _take_parens(text, k)
-            g.filters.append(_parse_filter_expr(inner, prefixes))
-            chunk_start = i = j
-            continue
-        if _at_keyword(text, i, "BIND"):
-            chunks.append(text[chunk_start:i])
-            m = re.match(r"BIND\s*", text[i:], re.IGNORECASE)
-            k = i + m.end()
-            if k >= n or text[k] != "(":
-                raise SparqlError("BIND must be followed by (expr AS ?var)")
-            inner, j = _take_parens(text, k)
-            am = re.search(r"\s+AS\s+\?([A-Za-z_][A-Za-z0-9_]*)\s*$",
-                           inner, re.IGNORECASE)
-            if am is None:
-                raise SparqlError(f"BIND needs 'AS ?var': {inner.strip()!r}")
-            g.binds.append((_parse_expr(inner[:am.start()], prefixes),
-                            am.group(1)))
-            chunk_start = i = j
-            continue
-        if _at_keyword(text, i, "VALUES"):
-            chunks.append(text[chunk_start:i])
-            m = re.match(r"VALUES\s*", text[i:], re.IGNORECASE)
-            k = i + m.end()
-            vm = re.match(r"(\?[A-Za-z_][A-Za-z0-9_]*|\((?:\s*\?[A-Za-z_]"
-                          r"[A-Za-z0-9_]*)+\s*\))\s*", text[k:])
-            if vm is None:
-                raise SparqlError("VALUES needs ?var or (?v1 ?v2 ...)")
-            vars_ = [v[1:] for v in re.findall(r"\?\w+", vm.group(1))]
-            k += vm.end()
-            if k >= n or text[k] != "{":
-                raise SparqlError("VALUES needs a { data } block")
-            inner, j = _take_braced(text, k)
-            rows: list[list[str]] = []
-            if len(vars_) == 1:
-                rows = [[t] for t in _values_terms(inner, prefixes)]
-            else:
-                pos = 0
-                while pos < len(inner):
-                    if inner[pos].isspace():
-                        pos += 1
-                        continue
-                    if inner[pos] != "(":
-                        raise SparqlError(
-                            f"VALUES rows must be parenthesized: "
-                            f"{inner[pos:pos + 20]!r}")
-                    row_src, pos = _take_parens(inner, pos)
-                    row = _values_terms(row_src, prefixes)
-                    if len(row) != len(vars_):
-                        raise SparqlError(
-                            f"VALUES row arity mismatch: "
-                            f"{row_src.strip()!r}")
-                    rows.append(row)
-            if not rows:
-                raise SparqlError("empty VALUES block")
-            g.values.append((vars_, rows))
-            chunk_start = i = j
-            continue
-        i += 1
-    chunks.append(text[chunk_start:])
-    for chunk in chunks:
-        if chunk.strip():
-            g.patterns.extend(_parse_triples(chunk, prefixes))
-    return g
-
-
-_AGG_PROJ = re.compile(
-    r"\(\s*(COUNT|SUM|AVG|MIN|MAX|SAMPLE|GROUP_CONCAT)\s*\(\s*(DISTINCT\s+)?"
-    r"(\*|\?[A-Za-z_][A-Za-z0-9_]*)\s*"
-    r'(?:;\s*SEPARATOR\s*=\s*"([^"]*)"\s*)?\)\s+AS\s+'
-    r"\?([A-Za-z_][A-Za-z0-9_]*)\s*\)", re.IGNORECASE)
-
-
-def _parse_projection(proj_raw: str, prefixes: dict[str, str]
-                      ) -> tuple[list[str], list[AggExpr],
-                                 list[tuple[str, Expr]]]:
-    """Ordered output names (plain vars + agg/expression aliases), the
-    aggregate expressions, and the scalar select expressions
-    (``(expr AS ?alias)``, SPARQL §18.2.4.4 Extend) out of the SELECT
-    clause text."""
-    names: list[str] = []
-    aggs: list[AggExpr] = []
-    sel_exprs: list[tuple[str, Expr]] = []
-    i, s = 0, proj_raw
-    while i < len(s):
-        if s[i].isspace():
-            i += 1
-            continue
-        if s[i] == "?":
-            m = re.match(r"\?([A-Za-z_][A-Za-z0-9_]*)", s[i:])
-            names.append(m.group(1))
-            i += m.end()
-            continue
-        if s[i] == "(":
-            m = _AGG_PROJ.match(s, i)
-            if m is None:
-                inner, j = _take_parens(s, i)
-                em = re.match(r"^(.*\S)\s+AS\s+\?([A-Za-z_]\w*)$", inner,
-                              re.IGNORECASE | re.DOTALL)
-                if em is None:
-                    raise SparqlError(
-                        f"unsupported projection expression at "
-                        f"{s[i:i + 40]!r}")
-                alias, lhs = em.group(2), em.group(1).strip()
-                # aggregate over a computed expression:
-                # (FUNC([DISTINCT] expr) AS ?alias), e.g. SUM(?a * ?b)
-                am = re.match(
-                    r"^(COUNT|SUM|AVG|MIN|MAX|SAMPLE|GROUP_CONCAT)"
-                    r"\s*\(", lhs, re.IGNORECASE)
-                if am:
-                    arg, k = _take_parens(lhs, am.end() - 1)
-                    if lhs[k:].strip():
-                        raise SparqlError(
-                            f"trailing text after aggregate: {lhs[k:]!r}")
-                    dm = re.match(r"^\s*DISTINCT\s+(.*)$", arg,
-                                  re.IGNORECASE | re.DOTALL)
-                    aggs.append(AggExpr(
-                        am.group(1).lower(), None, bool(dm), alias,
-                        expr=_parse_expr(dm.group(1) if dm else arg,
-                                         prefixes)))
-                else:
-                    # scalar select expression: (expr AS ?alias)
-                    sel_exprs.append((alias, _parse_expr(lhs, prefixes)))
-                names.append(alias)
-                i = j
-                continue
-            func = m.group(1).lower()
-            distinct = bool(m.group(2))
-            var = None if m.group(3) == "*" else m.group(3)[1:]
-            if var is None and (distinct or func != "count"):
-                raise SparqlError(f"{func.upper()}(*) only valid as COUNT(*)")
-            sep = m.group(4)
-            if sep is not None and func != "group_concat":
-                raise SparqlError(
-                    "SEPARATOR is only valid in GROUP_CONCAT")
-            alias = m.group(5)
-            aggs.append(AggExpr(func, var, distinct, alias, sep))
-            names.append(alias)
-            i = m.end()
-            continue
-        raise SparqlError(f"bad projection at {s[i:i + 20]!r}")
-    return names, aggs, sel_exprs
-
-
-def _strip_comments(text: str) -> str:
-    """Drop ``# ...`` end-of-line comments — but a ``#`` inside a
-    ``<...>`` IRI (fragment identifiers: ``ontology#label``) or a
-    string literal is content, not a comment."""
-    out, i, n = [], 0, len(text)
-    in_str = in_iri = False
-    while i < n:
-        ch = text[i]
-        if in_str:
-            if ch == "\\" and i + 1 < n:
-                out.append(text[i:i + 2])
-                i += 2
-                continue
-            if ch == '"':
-                in_str = False
-        elif in_iri:
-            if ch == ">":
-                in_iri = False
-        elif ch == '"':
-            in_str = True
-        elif ch == "<":
-            in_iri = True
-        elif ch == "#":
-            while i < n and text[i] != "\n":
-                i += 1
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-_ORD_AGG = re.compile(
-    r"(COUNT|SUM|AVG|MIN|MAX|SAMPLE|GROUP_CONCAT)\s*\(", re.IGNORECASE)
-
-
-def _parse_order_keys(src: str, prefixes: dict[str, str]
-                      ) -> list[tuple[object, bool]]:
-    """ORDER BY condition list: ``?var``, ``ASC(key)`` / ``DESC(key)``,
-    aggregate calls (``DESC(COUNT(?x))``) and scalar expressions —
-    parenthesized or function-call shaped — via the BIND expression
-    parser."""
-    keys: list[tuple[object, bool]] = []
-    i, n = 0, len(src)
-    while i < n:
-        if src[i].isspace():
-            i += 1
-            continue
-        m = re.match(r"(ASC|DESC)\s*\(", src[i:], re.IGNORECASE)
-        if m:
-            inner, j = _take_parens(src, i + m.end() - 1)
-            sub = _parse_order_keys(inner, prefixes)
-            if len(sub) != 1 or sub[0][1]:
-                raise SparqlError(f"bad ORDER BY key {inner!r}")
-            keys.append((sub[0][0], m.group(1).upper() == "DESC"))
-            i = j
-            continue
-        if src[i] == "?":
-            vm = re.match(r"\?([A-Za-z_][A-Za-z0-9_]*)", src[i:])
-            if vm is None:
-                raise SparqlError(f"bad ORDER BY variable at {src[i:i+20]!r}")
-            keys.append((vm.group(1), False))
-            i += vm.end()
-            continue
-        am = _ORD_AGG.match(src, i)
-        if am:
-            inner, j = _take_parens(src, am.end() - 1)
-            inner = inner.strip()
-            func = am.group(1).lower()
-            distinct = False
-            dm = re.match(r"DISTINCT\s+", inner, re.IGNORECASE)
-            if dm:
-                distinct, inner = True, inner[dm.end():].strip()
-            if inner == "*":
-                if func != "count" or distinct:
-                    raise SparqlError(
-                        f"{func.upper()}(*) only valid as COUNT(*)")
-                var = None
-            else:
-                vm = re.fullmatch(r"\?([A-Za-z_][A-Za-z0-9_]*)", inner)
-                if vm is None:
-                    raise SparqlError(
-                        f"unsupported aggregate ORDER BY arg {inner!r}")
-                var = vm.group(1)
-            keys.append((AggExpr(func, var, distinct, alias="__ord"),
-                         False))
-            i = j
-            continue
-        if src[i] == "(":
-            inner, j = _take_parens(src, i)
-            keys.append((_parse_expr(inner, prefixes), False))
-            i = j
-            continue
-        fm = re.match(r"[A-Za-z_][A-Za-z0-9_]*\s*\(", src[i:])
-        if fm:
-            _, j = _take_parens(src, i + fm.end() - 1)
-            keys.append((_parse_expr(src[i:j], prefixes), False))
-            i = j
-            continue
-        raise SparqlError(f"unsupported ORDER BY key at {src[i:i+30]!r}")
-    return keys
-
-
-def parse_sparql(text: str,
-                 outer_prefixes: Optional[dict[str, str]] = None
-                 ) -> SelectQuery:
-    text = _strip_comments(text)
-    if _UNSUPPORTED.search(text):
-        raise SparqlError(
-            f"unsupported SPARQL feature: {_UNSUPPORTED.search(text).group(0)}")
-
-    prefixes: dict[str, str] = dict(outer_prefixes or {})
-    for m in re.finditer(r"PREFIX\s+([A-Za-z_][\w-]*)?:\s*<([^>]*)>", text,
-                         re.IGNORECASE):
-        prefixes[m.group(1) or ""] = m.group(2)
-    text = re.sub(r"PREFIX\s+[\w-]*:\s*<[^>]*>", "", text, flags=re.IGNORECASE)
-
-    # dataset clause (top-level only, §13.2) — pulled out before the
-    # SELECT regex so FROM lines never reach the projection parser
-    from_named = [f"<{g}>" for g in re.findall(
-        r"\bFROM\s+NAMED\s+<([^>]*)>", text, re.IGNORECASE)]
-    text = re.sub(r"\bFROM\s+NAMED\s+<[^>]*>", " ", text,
-                  flags=re.IGNORECASE)
-    from_graphs = [f"<{g}>" for g in re.findall(
-        r"\bFROM\s+<([^>]*)>", text, re.IGNORECASE)]
-    text = re.sub(r"\bFROM\s+<[^>]*>", " ", text, flags=re.IGNORECASE)
-
-    m = re.search(r"SELECT\s+(DISTINCT\s+)?(.*?)\s*WHERE\s*\{(.*)\}(.*)$",
-                  text, re.IGNORECASE | re.DOTALL)
-    if m is None:
-        raise SparqlError("only SELECT ... WHERE { ... } queries supported")
-    distinct = bool(m.group(1))
-    proj_raw, body, tail = m.group(2), m.group(3), m.group(4)
-
-    if proj_raw.strip() == "*":
-        variables, aggregates, select_exprs = [], [], []
-    else:
-        variables, aggregates, select_exprs = _parse_projection(
-            proj_raw, prefixes)
-        if not variables:
-            raise SparqlError(f"bad projection {proj_raw!r}")
-
-    group = _parse_group(body, prefixes)
-
-    group_by: list[str] = []
-    group_exprs: list[tuple[Expr, str]] = []
-    gm = re.search(r"GROUP\s+BY\s+", tail, re.IGNORECASE)
-    if gm:
-        rest = tail[gm.end():]
-        endm = re.search(r"\b(HAVING|ORDER|LIMIT|OFFSET)\b", rest,
-                         re.IGNORECASE)
-        clause = rest[:endm.start()] if endm else rest
-        pos = 0
-        while pos < len(clause):
-            if clause[pos].isspace():
-                pos += 1
-                continue
-            if clause[pos] == "(":
-                inner, pos = _take_parens(clause, pos)
-                am = re.search(r"\s+AS\s+\?([A-Za-z_][A-Za-z0-9_]*)\s*$",
-                               inner, re.IGNORECASE)
-                if am is None:
-                    raise SparqlError(
-                        "GROUP BY expression needs (expr AS ?var): "
-                        f"{inner.strip()!r}")
-                group_exprs.append(
-                    (_parse_expr(inner[:am.start()], prefixes),
-                     am.group(1)))
-                group_by.append(am.group(1))
-            else:
-                vm = re.match(r"\?([A-Za-z_][A-Za-z0-9_]*)",
-                              clause[pos:])
-                if vm is None:
-                    raise SparqlError(
-                        f"bad GROUP BY item: {clause[pos:pos + 20]!r}")
-                group_by.append(vm.group(1))
-                pos += vm.end()
-    # aggregates with no GROUP BY = one implicit group (valid SPARQL)
-    if (aggregates or group_by):
-        aliases = {a.alias for a in aggregates} | \
-            {alias for alias, _ in select_exprs}
-        bad = [v for v in variables if v not in aliases and v not in group_by]
-        if bad:
-            raise SparqlError(
-                f"projected variables {bad} are neither aggregated nor "
-                f"GROUP BY keys")
-        if not variables:
-            raise SparqlError("SELECT * cannot be combined with GROUP BY")
-
-    having: list[tuple[str, str, str]] = []
-    having_aggs: list[AggExpr] = []
-    for hm in re.finditer(r"HAVING\s*\(", tail, re.IGNORECASE):
-        inner, _ = _take_parens(tail, hm.end() - 1)
-        s2 = inner.strip()
-        cm = re.match(r"^\?([A-Za-z_][A-Za-z0-9_]*)\s*"
-                      r"(=|!=|<=|>=|<|>)\s*(.+)$", s2)
-        if cm:
-            having.append((cm.group(1), cm.group(2), cm.group(3).strip()))
-            continue
-        # HAVING (AGG(...) op value): compile the aggregate as a
-        # hidden grouping output (the ORDER BY DESC(COUNT(?x))
-        # machinery) and filter on its alias
-        split = _split_top_cmp(s2)
-        if split is None:
-            raise SparqlError(f"unsupported HAVING {s2!r}")
-        lhs, op, rhs = split
-        alias = f"__hv{len(having_aggs)}"
-        agg = _parse_agg_atom(lhs, alias, prefixes)
-        if agg is None:
-            raise SparqlError(f"unsupported HAVING {s2!r}")
-        having_aggs.append(agg)
-        having.append((alias, op, rhs))
-    if having and not (aggregates or group_by or having_aggs):
-        raise SparqlError("HAVING requires GROUP BY or an aggregate")
-
-    order_by = []
-    om = re.search(r"ORDER\s+BY\s+(.*?)(?:\b(?:LIMIT|OFFSET)\b|$)", tail,
-                   re.IGNORECASE | re.DOTALL)
-    if om:
-        order_by = _parse_order_keys(om.group(1), prefixes)
-    lm = re.search(r"LIMIT\s+(\d+)", tail, re.IGNORECASE)
-    limit = int(lm.group(1)) if lm else None
-    ofm = re.search(r"OFFSET\s+(\d+)", tail, re.IGNORECASE)
-    offset = int(ofm.group(1)) if ofm else None
-
-    if group.is_empty():
-        raise SparqlError("empty basic graph pattern")
-    return SelectQuery(variables=variables, distinct=distinct,
-                       group=group, order_by=order_by, limit=limit,
-                       offset=offset, prefixes=prefixes,
-                       aggregates=aggregates,
-                       group_by=group_by, group_exprs=group_exprs,
-                       having=having, having_aggs=having_aggs,
-                       select_exprs=select_exprs,
-                       from_graphs=from_graphs, from_named=from_named)
 
 
 #: lexical form of a rendered term: IRIs lose <>, literals lose quotes
@@ -1837,9 +1588,9 @@ def _exec_bgp(quads: DataFrame,
                 # SPARQL-star: the position holds a rendered quoted
                 # triple; decompose in-plan (regexp_extract, codegen)
                 # and unify the inner terms like any others
-                df = df.where(F.col(pos).rlike(_QT_RE))
+                df = df.where(F.col(pos).rlike(UNQUOTE_RE))
                 for idx, sub in enumerate((term.s, term.p, term.o), 1):
-                    _bind(sub, F.regexp_extract(F.col(pos), _QT_RE, idx))
+                    _bind(sub, F.regexp_extract(F.col(pos), UNQUOTE_RE, idx))
             else:
                 _bind(term, F.col(pos))
         if cols:
@@ -1852,27 +1603,23 @@ def _exec_bgp(quads: DataFrame,
     return result
 
 
-def _cmp_col(var: str, op: str, raw: str,
-             prefixes: dict[str, str]) -> F.Column:
+def _cmp_col(var: str, op: str, value) -> F.Column:
+    """``?var op value``: a number compares with the numeric cast, a
+    variable column to column, any other term by rendered identity."""
     c = F.col(var)
-    if re.fullmatch(r"[+-]?[0-9]+(\.[0-9]+)?", raw):
-        lhs, rhs = _numeric(c), F.lit(float(raw))
+    if isinstance(value, float):
+        lhs, rhs = _numeric(c), F.lit(value)
     else:
-        toks = _tokenize(raw)
-        if len(toks) != 1:
-            raise SparqlError(f"unsupported FILTER value {raw!r}")
-        term = _resolve_term(*toks[0], prefixes)
         lhs = c
-        rhs = F.col(term.name) if isinstance(term, Var) else F.lit(term)
+        rhs = F.col(value.name) if isinstance(value, Var) else F.lit(value)
     return {"=": lhs == rhs, "!=": lhs != rhs, "<": lhs < rhs,
             "<=": lhs <= rhs, ">": lhs > rhs, ">=": lhs >= rhs}[op]
 
 
-def _apply_filter(result: DataFrame, var: str, op: str, raw: str,
-                  prefixes: dict[str, str]) -> DataFrame:
+def _apply_filter(result: DataFrame, var: str, op: str, value) -> DataFrame:
     if var not in result.columns:
         raise SparqlError(f"FILTER references unbound variable ?{var}")
-    return result.where(_cmp_col(var, op, raw, prefixes))
+    return result.where(_cmp_col(var, op, value))
 
 
 def _filter_tree_vars(node) -> set[str]:
@@ -1890,10 +1637,8 @@ def _filter_tree_vars(node) -> set[str]:
     if kind in ("strfn", "isa"):
         return {node[2]}
     out = {node[1]}
-    if kind == "cmp":
-        m = re.match(r"^\?([A-Za-z_]\w*)$", node[3].strip())
-        if m:
-            out.add(m.group(1))
+    if kind == "cmp" and isinstance(node[3], Var):
+        out.add(node[3].name)
     return out
 
 
@@ -1916,9 +1661,7 @@ def _unrender(term: str) -> str:
     m = re.match(r'^"((?:[^"\\]|\\.)*)"', term)
     if m is None:
         raise SparqlError(f"expected a string literal, got {term!r}")
-    return (m.group(1).replace('\\"', '"').replace("\\n", "\n")
-            .replace("\\r", "\r").replace("\\t", "\t")
-            .replace("\\\\", "\\"))
+    return _unescape(m.group(1))
 
 
 def _escape_lit(col: F.Column) -> F.Column:
@@ -2018,9 +1761,9 @@ def _expr_compile(e: Expr) -> tuple[F.Column, str]:
     if func == "coalesce":
         return F.coalesce(*[_expr_term(a) for a in args]), "term"
     if func == "if":
-        # args[0] is ('cond', filter_tree, prefixes) from the parser;
+        # args[0] is ('cond', filter_tree) from the parser;
         # result_cols=None → boundness was checked at the BIND site
-        cond = _filter_col(args[0][1], None, args[0][2])
+        cond = _filter_col(args[0][1], None)
         return (F.when(cond, _expr_term(args[1]))
                 .otherwise(_expr_term(args[2]))), "term"
     if func == "lang":
@@ -2058,12 +1801,12 @@ def _expr_compile(e: Expr) -> tuple[F.Column, str]:
         t = _expr_term(args[0])
         idx = {"subject": 1, "predicate": 2, "object": 3}[func]
         # type error (not a quoted triple) -> unbound (null)
-        return F.nullif(F.regexp_extract(t, _QT_RE, idx),
+        return F.nullif(F.regexp_extract(t, UNQUOTE_RE, idx),
                         F.lit("")), "term"
     if func == "istriple":
         t = _expr_term(args[0])
         return (F.when(t.isNull(), F.lit(None).cast("string"))
-                .when(t.rlike(_QT_RE), F.lit("true"))
+                .when(t.rlike(UNQUOTE_RE), F.lit("true"))
                 .otherwise(F.lit("false"))), "str"
     raise SparqlError(f"unsupported function {func!r}")  # pragma: no cover
 
@@ -2085,7 +1828,6 @@ def _expr_term(e: Expr) -> F.Column:
 
 
 def _exec_group(quads: DataFrame, g: GroupPattern,
-                prefixes: dict[str, str],
                 graph_term: Optional[Term] = None) -> DataFrame:
     """Execute one group: BGP join, then inline/UNION groups, then
     GRAPH groups, then OPTIONAL left joins, then MINUS anti joins, then
@@ -2095,7 +1837,7 @@ def _exec_group(quads: DataFrame, g: GroupPattern,
     propagates to every nested group, per SPARQL §13.3)."""
     result = _exec_bgp(quads, g.patterns, graph_term)
     for branches in g.unions:
-        dfs = [_exec_group(quads, b, prefixes, graph_term)
+        dfs = [_exec_group(quads, b, graph_term)
                for b in branches]
         u = dfs[0]
         for d in dfs[1:]:
@@ -2112,13 +1854,13 @@ def _exec_group(quads: DataFrame, g: GroupPattern,
                            graph_term=graph_term)
         result = sdf if result is None else _join_shared(result, sdf)
     for gterm, sub in g.graphs:
-        gdf = _exec_group(quads, sub, prefixes, gterm)
+        gdf = _exec_group(quads, sub, gterm)
         result = gdf if result is None else _join_shared(result, gdf)
     for opt in g.optionals:
         if result is None:
             raise SparqlError(
                 "OPTIONAL requires a preceding pattern in its group")
-        odf = _exec_group(quads, opt, prefixes, graph_term)
+        odf = _exec_group(quads, opt, graph_term)
         shared = [c for c in result.columns if c in odf.columns]
         if not shared:
             raise SparqlError(
@@ -2128,7 +1870,7 @@ def _exec_group(quads: DataFrame, g: GroupPattern,
         if result is None:
             raise SparqlError(
                 "MINUS requires a preceding pattern in its group")
-        sub = _exec_group(quads, mg, prefixes, graph_term)
+        sub = _exec_group(quads, mg, graph_term)
         shared = [c for c in result.columns if c in sub.columns]
         # no shared variables → no solution is compatible → MINUS
         # removes nothing (SPARQL §8.3); shared-var rows anti-join
@@ -2183,9 +1925,9 @@ def _exec_group(quads: DataFrame, g: GroupPattern,
             raise SparqlError(f"BIND references unbound variables {missing}")
         result = result.withColumn(name, _expr_term(expr))
     for node in g.filters:
-        result = result.where(_filter_col(node, result.columns, prefixes))
+        result = result.where(_filter_col(node, result.columns))
     for negated, eg in g.exists:
-        sub = _exec_group(quads, eg, prefixes, graph_term)
+        sub = _exec_group(quads, eg, graph_term)
         shared = [c for c in result.columns if c in sub.columns]
         if shared:
             result = result.join(sub.select(*shared).distinct(),
@@ -2206,23 +1948,8 @@ def sparql_ask(quads: DataFrame, query: str) -> bool:
     has at least one solution.  Compiles to the same group executor as
     SELECT with a ``limit(1)`` probe — one short-circuiting job, never
     a full materialization."""
-    text = _strip_comments(query)
-    if _UNSUPPORTED.search(text):
-        raise SparqlError(
-            f"unsupported SPARQL feature: {_UNSUPPORTED.search(text).group(0)}")
-    prefixes: dict[str, str] = {}
-    for m in re.finditer(r"PREFIX\s+([A-Za-z_][\w-]*)?:\s*<([^>]*)>", text,
-                         re.IGNORECASE):
-        prefixes[m.group(1) or ""] = m.group(2)
-    text = re.sub(r"PREFIX\s+[\w-]*:\s*<[^>]*>", "", text, flags=re.IGNORECASE)
-    m = re.search(r"ASK\s*(?:WHERE\s*)?\{(.*)\}\s*$", text,
-                  re.IGNORECASE | re.DOTALL)
-    if m is None:
-        raise SparqlError("not an ASK query")
-    group = _parse_group(m.group(1), prefixes)
-    if group.is_empty():
-        raise SparqlError("empty basic graph pattern")
-    return _exec_group(quads, group, prefixes).limit(1).count() > 0
+    group = _Parser(query).parse(_Parser.ask)
+    return _exec_group(quads, group).limit(1).count() > 0
 
 
 def _agg_expr(a: AggExpr) -> F.Column:
@@ -2276,8 +2003,6 @@ def _exec_select(quads: DataFrame, q: SelectQuery,
     evaluator — ``raw_terms=True`` keeps rendered terms so the result
     joins enclosing patterns; ``graph_term`` propagates an active
     GRAPH scope into the subquery's group, §13.3)."""
-    from dataclasses import replace as _dc_replace
-
     if q.from_graphs or q.from_named:
         if "graph" not in quads.columns:
             raise SparqlError(
@@ -2299,7 +2024,7 @@ def _exec_select(quads: DataFrame, q: SelectQuery,
         if graph_term is None:
             graph_term = _DEFAULT_ONLY
 
-    result = _exec_group(quads, q.group, q.prefixes, graph_term)
+    result = _exec_group(quads, q.group, graph_term)
 
     # normalize ORDER BY keys: variables sort in place; aggregate keys
     # become hidden aggregate outputs; scalar expressions become
@@ -2312,7 +2037,7 @@ def _exec_select(quads: DataFrame, q: SelectQuery,
         if isinstance(key, str):
             norm_order.append((key, desc, None))
         elif isinstance(key, AggExpr):
-            h = _dc_replace(key, alias=f"__ord{idx}")
+            h = replace(key, alias=f"__ord{idx}")
             agg_order.append(h)
             hidden.append(h.alias)
             norm_order.append((h.alias, desc, None))
@@ -2362,8 +2087,8 @@ def _exec_select(quads: DataFrame, q: SelectQuery,
             result = (result.groupBy(*q.group_by).agg(*exprs)
                       if q.group_by else result.agg(*exprs))
         agg_outputs = {a.alias for a in q.aggregates}
-        for var, op, raw in q.having:
-            result = _apply_filter(result, var, op, raw, q.prefixes)
+        for var, op, value in q.having:
+            result = _apply_filter(result, var, op, value)
 
     # scalar select expressions (§18.2.4.4 Extend): after grouping so
     # they can reference aggregate aliases, before ORDER BY so sort
@@ -2430,6 +2155,12 @@ def _exec_select(quads: DataFrame, q: SelectQuery,
     return result
 
 
+def parse_sparql(text: str) -> SelectQuery:
+    """Parse a SELECT query; :func:`sparql_select` calls it by this
+    module-level name."""
+    return _Parser(text).parse(_Parser.select)
+
+
 def sparql_select(quads: DataFrame, query: str,
                   raw_terms: bool = False) -> DataFrame:
     """Execute a SPARQL SELECT subset over a ``(subj, pred, obj[, graph])``
@@ -2442,74 +2173,6 @@ def sparql_select(quads: DataFrame, query: str,
 # ---------------------------------------------------------------------------
 # CONSTRUCT
 # ---------------------------------------------------------------------------
-
-# string literals, IRIs and comments: text a keyword scan must skip
-_OPAQUE = re.compile(r'"(?:[^"\\\n]|\\.)*"|\'(?:[^\'\\\n]|\\.)*\''
-                     r'|<[^<>"{}|^`\\\s]*>|#[^\n]*')
-
-
-def _parse_construct(text: str):
-    text = _strip_comments(text)
-    if _UNSUPPORTED.search(text):
-        raise SparqlError(
-            f"unsupported SPARQL feature: {_UNSUPPORTED.search(text).group(0)}")
-    prefixes: dict[str, str] = {}
-    for m in re.finditer(r"PREFIX\s+([A-Za-z_][\w-]*)?:\s*<([^>]*)>", text,
-                         re.IGNORECASE):
-        prefixes[m.group(1) or ""] = m.group(2)
-    text = re.sub(r"PREFIX\s+[\w-]*:\s*<[^>]*>", "", text, flags=re.IGNORECASE)
-
-    m = re.search(r"CONSTRUCT\s*", text, re.IGNORECASE)
-    if m is None:
-        raise SparqlError("not a CONSTRUCT query")
-    i = m.end()
-    sm = re.match(r"WHERE\s*", text[i:], re.IGNORECASE)
-    if sm is not None:
-        # §10.2.3 CONSTRUCT WHERE shorthand: the WHERE pattern IS the
-        # template — legal only for a plain BGP
-        k = i + sm.end()
-        if k >= len(text) or text[k] != "{":
-            raise SparqlError("WHERE must be followed by a { group }")
-        body, l = _take_braced(text, k)
-        if re.search(r"\b(FILTER|OPTIONAL|UNION|GRAPH|BIND|VALUES|"
-                     r"MINUS|SELECT|SERVICE)\b|\{", _OPAQUE.sub(" ", body),
-                     re.IGNORECASE):
-            raise SparqlError(
-                "CONSTRUCT WHERE shorthand allows only a basic graph "
-                "pattern (SPARQL 1.1 §10.2.3)")
-        template_src, tail = body, text[l:]
-    else:
-        if i >= len(text) or text[i] != "{":
-            raise SparqlError("CONSTRUCT must be followed by a { template }")
-        template_src, j = _take_braced(text, i)
-        wm = re.match(r"\s*WHERE\s*", text[j:], re.IGNORECASE)
-        if wm is None:
-            raise SparqlError("CONSTRUCT template must be followed by WHERE")
-        k = j + wm.end()
-        if k >= len(text) or text[k] != "{":
-            raise SparqlError("WHERE must be followed by a { group }")
-        body, l = _take_braced(text, k)
-        tail = text[l:]
-
-    template = _parse_triples(template_src, prefixes)
-    if not template:
-        raise SparqlError("empty CONSTRUCT template")
-    for (s, p, _o) in template:
-        if isinstance(s, str) and s.startswith('"'):
-            raise SparqlError("CONSTRUCT template subject cannot be a literal")
-        if isinstance(p, Path):
-            raise SparqlError(
-                "property paths are not allowed in a CONSTRUCT template")
-        if isinstance(p, QuotedPattern):
-            raise SparqlError("CONSTRUCT template predicate must be an IRI")
-        if not isinstance(p, Var) and not p.startswith("<"):
-            raise SparqlError("CONSTRUCT template predicate must be an IRI")
-    group = _parse_group(body, prefixes)
-    if group.is_empty():
-        raise SparqlError("empty basic graph pattern")
-    lm = re.search(r"LIMIT\s+(\d+)", tail, re.IGNORECASE)
-    return template, group, prefixes, (int(lm.group(1)) if lm else None)
-
 
 def sparql_construct(quads: DataFrame, query: str) -> DataFrame:
     """Execute a SPARQL CONSTRUCT subset over a ``(subj, pred, obj
@@ -2525,8 +2188,8 @@ def sparql_construct(quads: DataFrame, query: str) -> DataFrame:
     shape: one lazy plan — solutions × len(template) projections,
     unioned and made distinct; no collect, no Python row path.
     """
-    template, group, prefixes, limit = _parse_construct(query)
-    sol = _exec_group(quads, group, prefixes)
+    template, group, limit = _Parser(query).parse(_Parser.construct)
+    sol = _exec_group(quads, group)
     out = _instantiate_template(sol, template, "CONSTRUCT")
     if limit is not None:
         out = out.limit(limit)
@@ -2604,41 +2267,11 @@ def sparql_describe(quads: DataFrame, query: str) -> DataFrame:
     side and object side — typically broadcast, AQE decides), unioned
     and de-duplicated.  No collect; resources discovered by the WHERE
     group never reach the driver."""
-    text = _strip_comments(query)
-    if _UNSUPPORTED.search(text):
-        raise SparqlError(
-            f"unsupported SPARQL feature: {_UNSUPPORTED.search(text).group(0)}")
-    prefixes: dict[str, str] = {}
-    for m in re.finditer(r"PREFIX\s+([A-Za-z_][\w-]*)?:\s*<([^>]*)>", text,
-                         re.IGNORECASE):
-        prefixes[m.group(1) or ""] = m.group(2)
-    text = re.sub(r"PREFIX\s+[\w-]*:\s*<[^>]*>", "", text,
-                  flags=re.IGNORECASE)
-    m = re.search(r"DESCRIBE\s+(.*?)(?:\bWHERE\b\s*\{(.*)\})?\s*$", text,
-                  re.IGNORECASE | re.DOTALL)
-    if m is None or not m.group(1).strip():
-        raise SparqlError("not a DESCRIBE query")
-    spark = quads.sparkSession
-    consts: list[str] = []
-    described_vars: list[str] = []
-    for kind, val in _tokenize(m.group(1)):
-        term = _resolve_term(kind, val, prefixes)
-        if isinstance(term, Var):
-            described_vars.append(term.name)
-        elif term.startswith("<"):
-            consts.append(term)
-        else:
-            raise SparqlError(
-                f"DESCRIBE takes IRIs or variables, got {term!r}")
-    resources = spark.createDataFrame(
+    consts, described_vars, group = _Parser(query).parse(_Parser.describe)
+    resources = quads.sparkSession.createDataFrame(
         [(c,) for c in consts], "__r string")
     if described_vars:
-        if m.group(2) is None:
-            raise SparqlError("DESCRIBE with variables requires WHERE")
-        group = _parse_group(m.group(2), prefixes)
-        if group.is_empty():
-            raise SparqlError("empty basic graph pattern")
-        sol = _exec_group(quads, group, prefixes)
+        sol = _exec_group(quads, group)
         missing = [v for v in described_vars if v not in sol.columns]
         if missing:
             raise SparqlError(
@@ -2660,150 +2293,21 @@ def sparql_describe(quads: DataFrame, query: str) -> DataFrame:
 # UPDATE
 # ---------------------------------------------------------------------------
 
-def _split_top_semis(text: str) -> list[str]:
-    """Split an update script at top-level ``;`` (outside braces,
-    quotes, and IRIs) into individual operations."""
-    parts, depth, in_str, in_iri, start = [], 0, False, False, 0
-    for i, ch in enumerate(text):
-        if in_str:
-            if ch == '"':
-                in_str = False
-        elif in_iri:
-            if ch == ">":
-                in_iri = False
-        elif ch == '"':
-            in_str = True
-        elif ch == "<":
-            in_iri = True
-        elif ch == "{":
-            depth += 1
-        elif ch == "}":
-            depth -= 1
-        elif ch == ";" and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return parts
-
-
-_GRAPH_HEAD = re.compile(
-    r"GRAPH\s+(\?[A-Za-z_][A-Za-z0-9_]*|<[^>]*>|[A-Za-z_][\w-]*:[\w.-]*)\s*",
-    re.IGNORECASE)
-
-
-def _update_template(src: str, prefixes: dict[str, str], what: str,
-                     ground: bool = False, default_graph=None):
-    """Parse and validate a DELETE/INSERT quad template (or DATA block
-    when ``ground``): plain triples plus ``GRAPH <iri>|?var { ... }``
-    blocks, returned as (s, p, o, g) 4-tuples where g is ``None``
-    (triples outside any GRAPH block, scoped to ``default_graph`` —
-    the ``WITH`` graph — when one is set), an IRI, or a :class:`Var`.
-    Literal subjects and non-IRI predicates are rejected (like
-    CONSTRUCT templates), paths never, variables only when not
-    ``ground``."""
-    quads: list[tuple] = []
-    i, n, chunk_start, in_str = 0, len(src), 0, False
-    while i < n:
-        ch = src[i]
-        if in_str:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == '"':
-                in_str = False
-            i += 1
-            continue
-        if ch == '"':
-            in_str = True
-        elif _at_keyword(src, i, "GRAPH"):
-            chunk = src[chunk_start:i]
-            quads.extend((*t, default_graph)
-                         for t in _parse_triples(chunk, prefixes))
-            m = _GRAPH_HEAD.match(src, i)
-            if m is None:
-                raise SparqlError(f"GRAPH needs ?var or an IRI in {what}")
-            gsrc = m.group(1)
-            if gsrc.startswith("?"):
-                gterm: Term = Var(gsrc[1:])
-            elif gsrc.startswith("<"):
-                gterm = gsrc
-            else:
-                gterm = _resolve_term("pname", gsrc, prefixes)
-            if m.end() >= n or src[m.end()] != "{":
-                raise SparqlError(
-                    f"GRAPH must be followed by a group in {what}")
-            inner, j = _take_braced(src, m.end())
-            quads.extend((*t, gterm)
-                         for t in _parse_triples(inner, prefixes))
-            chunk_start = i = j
-            continue
-        i += 1
-    quads.extend((*t, default_graph)
-                 for t in _parse_triples(src[chunk_start:], prefixes))
-    if not quads:
-        raise SparqlError(f"empty {what} template")
-    for (s, p, o, g) in quads:
-        if isinstance(p, Path):
-            raise SparqlError(f"property paths are not allowed in {what}")
-        if ground and any(isinstance(x, Var) for x in (s, p, o, g)):
-            raise SparqlError(f"{what} requires ground triples "
-                              f"(no variables)")
-        if not isinstance(s, Var) and s.startswith('"'):
-            raise SparqlError(f"{what} subject cannot be a literal")
-        if not isinstance(p, Var) and not p.startswith("<"):
-            raise SparqlError(f"{what} predicate must be an IRI")
-        if g is not None and not isinstance(g, Var) \
-                and not g.startswith("<"):
-            raise SparqlError(f"{what} graph name must be an IRI")
-    return quads
-
-
-def _take_update_braced(op: str, i: int, what: str) -> tuple[str, int]:
-    if i >= len(op) or op[i] != "{":
-        raise SparqlError(f"{what} must be followed by {{ ... }}")
-    return _take_braced(op, i)
-
-
-_GM_CLEAR = re.compile(
-    r"^(CLEAR|DROP)\s+(?:SILENT\s+)?"
-    r"(?:GRAPH\s+(<[^>]*>|[A-Za-z_][\w-]*:[\w.-]*)|(DEFAULT|NAMED|ALL))"
-    r"\s*$", re.IGNORECASE)
-_GM_MOVE = re.compile(
-    r"^(ADD|COPY|MOVE)\s+(?:SILENT\s+)?"
-    r"(?:(?:GRAPH\s+)?(<[^>]*>|[A-Za-z_][\w-]*:[\w.-]*)|(DEFAULT))"
-    r"\s+TO\s+"
-    r"(?:(?:GRAPH\s+)?(<[^>]*>|[A-Za-z_][\w-]*:[\w.-]*)|(DEFAULT))"
-    r"\s*$", re.IGNORECASE)
-
-
-def _apply_update_op(out: DataFrame, op: str,
-                     prefixes: dict[str, str]) -> DataFrame:
+def _apply_update_op(out: DataFrame, op: tuple) -> DataFrame:
+    """Apply one parsed update operation (see ``_Parser.update``)."""
     spark = out.sparkSession
     key = ["subj", "pred", "obj"]
     has_graph = "graph" in out.columns
+    kind = op[0]
 
     def need_graph(what: str) -> None:
         if not has_graph:
             raise SparqlError(
                 f"{what} needs a quad store (no graph column)")
 
-    def resolve_graph_iri(src: str, what: str) -> str:
-        g = src if src.startswith("<") \
-            else _resolve_term("pname", src, prefixes)
-        if isinstance(g, Var) or not g.startswith("<"):
-            raise SparqlError(f"{what} graph name must be an IRI")
-        return g
-
     def graph_pred(g):  # g None = the default graph
         return F.col("graph").isNull() if g is None \
             else F.col("graph").eqNullSafe(F.lit(g))
-
-    def ground_df(src: str, what: str) -> DataFrame:
-        quads = _update_template(src, prefixes, what, ground=True)
-        if any(g is not None for (_, _, _, g) in quads):
-            need_graph(f"GRAPH in {what}")
-        return spark.createDataFrame(
-            quads, "subj string, pred string, obj string, graph string")
 
     def apply_delete(base: DataFrame, dels: DataFrame) -> DataFrame:
         """``dels`` is a quad set; rows with a null graph delete EVERY
@@ -2836,11 +2340,7 @@ def _apply_update_op(out: DataFrame, op: str,
                 base.select(*key).distinct(), key, "left_anti")
         return base.unionByName(new, allowMissingColumns=True)
 
-    m = re.match(
-        r"^LOAD\s+(?:SILENT\s+)?<([^>]*)>"
-        r"(?:\s+INTO\s+GRAPH\s+(<[^>]*>|[A-Za-z_][\w-]*:[\w.-]*))?\s*$",
-        op, re.IGNORECASE)
-    if m:
+    if kind == "load":
         # LOAD <path> [INTO GRAPH <g>]: the distributed N-Quads source
         # (kgloom/exec/rdfsource.py — spark.read.text + codegen regex,
         # scales to dump-sized files) unioned in with insert set
@@ -2848,41 +2348,35 @@ def _apply_update_op(out: DataFrame, op: str,
         # 1.1 Update §3.1.4); without it, N-Quads graph labels are
         # kept (dropped on a bare triple store).
         from .exec.rdfsource import read_nquads
-        path = m.group(1)
+        _, path, into = op
         if path.startswith("file://"):
             path = path[len("file://"):]
         elif re.match(r"^[a-z][a-z0-9+.-]*://", path):
             # remote fetches from executors are a different feature
             # (and an SSRF surface) — local dumps only
             raise SparqlError(
-                f"unsupported LOAD scheme in <{m.group(1)}> "
+                f"unsupported LOAD scheme in <{op[1]}> "
                 f"(local paths / file:// only)")
         df = read_nquads(spark, path)
-        if m.group(2):
+        if into is not None:
             need_graph("LOAD INTO GRAPH")
-            df = df.withColumn("graph", F.lit(
-                resolve_graph_iri(m.group(2), "LOAD")).cast("string"))
+            df = df.withColumn("graph", F.lit(into).cast("string"))
         return insert_new(out, df)
 
-    m = _GM_CLEAR.match(op)
-    if m:
-        need_graph(m.group(1).upper())
-        if m.group(2):
-            return out.where(
-                ~graph_pred(resolve_graph_iri(m.group(2), m.group(1))))
-        kw = m.group(3).upper()
-        if kw == "ALL":
-            return out.where(F.lit(False))
-        if kw == "NAMED":
-            return out.where(F.col("graph").isNull())
-        return out.where(F.col("graph").isNotNull())  # DEFAULT
-
-    m = _GM_MOVE.match(op)
-    if m:
-        verb = m.group(1).upper()
+    if kind == "clear":
+        _, verb, target = op
         need_graph(verb)
-        src = None if m.group(3) else resolve_graph_iri(m.group(2), verb)
-        dst = None if m.group(5) else resolve_graph_iri(m.group(4), verb)
+        if target == "ALL":
+            return out.where(F.lit(False))
+        if target == "NAMED":
+            return out.where(F.col("graph").isNull())
+        if target == "DEFAULT":
+            return out.where(F.col("graph").isNotNull())
+        return out.where(~graph_pred(target))
+
+    if kind == "copy":
+        _, verb, src, dst = op
+        need_graph(verb)
         if src == dst:
             return out
         moved = (out.where(graph_pred(src))
@@ -2894,85 +2388,27 @@ def _apply_update_op(out: DataFrame, op: str,
             base = base.where(~graph_pred(src))
         return base.unionByName(moved)
 
-    if re.match(r"^CREATE\s+(SILENT\s+)?GRAPH\s+", op, re.IGNORECASE):
-        # graphs have no independent existence in a quad table: an
-        # empty graph IS absence — CREATE is a conformance no-op
+    if kind == "create":
         return out
 
-    with_g = None
-    m = re.match(r"^WITH\s+(<[^>]*>|[A-Za-z_][\w-]*:[\w.-]*)\s*", op,
-                 re.IGNORECASE)
-    if m:
-        with_g = resolve_graph_iri(m.group(1), "WITH")
-        need_graph("WITH")
-        op = op[m.end():]
-
-    def exec_where(src: str) -> DataFrame:
-        group = _parse_group(src, prefixes)
-        if group.is_empty():
-            raise SparqlError("empty basic graph pattern")
-        if with_g is not None:
-            # WITH sets the active graph for matching (§3.1.3): wrap
-            # the whole WHERE in a GRAPH scope
-            outer = GroupPattern()
-            outer.graphs.append((with_g, group))
-            group = outer
-        return _exec_group(out, group, prefixes)
-
-    m = re.match(r"^(INSERT|DELETE)\s+DATA\s*", op, re.IGNORECASE)
-    if m:
-        if with_g is not None:
-            raise SparqlError("WITH does not apply to DATA operations")
-        src, j = _take_update_braced(op, m.end(), f"{m.group(1)} DATA")
-        if op[j:].strip():
-            raise SparqlError(f"trailing text after update: {op[j:]!r}")
-        df = ground_df(src, f"{m.group(1).upper()} DATA")
-        if m.group(1).upper() == "DELETE":
+    if kind == "data":
+        _, verb, quads = op
+        if any(g is not None for (_, _, _, g) in quads):
+            need_graph(f"GRAPH in {verb} DATA")
+        df = spark.createDataFrame(
+            quads, "subj string, pred string, obj string, graph string")
+        if verb == "DELETE":
             return apply_delete(out, F.broadcast(df))
         return insert_new(out, df)
 
-    m = re.match(r"^DELETE\s+WHERE\s*", op, re.IGNORECASE)
-    if m:
-        src, j = _take_update_braced(op, m.end(), "DELETE WHERE")
-        if op[j:].strip():
-            raise SparqlError(f"trailing text after update: {op[j:]!r}")
-        template = _update_template(src, prefixes, "DELETE WHERE",
-                                    default_graph=with_g)
-        if any(t[3] is not None for t in template):
-            need_graph("GRAPH in DELETE WHERE")
-        sol = exec_where(src)
-        return apply_delete(
-            out, _instantiate_template(sol, template, "DELETE WHERE"))
-
-    del_t = ins_t = None
-    i = 0
-    m = re.match(r"^DELETE\s*", op, re.IGNORECASE)
-    if m and op[m.end():m.end() + 1] == "{":
-        src, i = _take_update_braced(op, m.end(), "DELETE")
-        del_t = _update_template(src, prefixes, "DELETE template",
-                                 default_graph=with_g)
-    m = re.match(r"\s*INSERT\s*", op[i:], re.IGNORECASE)
-    if m and op[i + m.end():i + m.end() + 1] == "{":
-        src, j = _take_update_braced(op[i:], m.end(), "INSERT")
-        ins_t = _update_template(src, prefixes, "INSERT template",
-                                 default_graph=with_g)
-        i += j
-    if del_t is None and ins_t is None:
-        raise SparqlError(f"unsupported update operation: {op[:60]!r}")
-    for t in (del_t or []) + (ins_t or []):
-        if t[3] is not None:
-            need_graph("GRAPH in update template")
-            break
-    m = re.match(r"\s*WHERE\s*", op[i:], re.IGNORECASE)
-    if m is None:
-        raise SparqlError("DELETE/INSERT templates require WHERE")
-    src, j = _take_update_braced(op[i:], m.end(), "WHERE")
-    if op[i + j:].strip():
-        raise SparqlError(f"trailing text after update: {op[i + j:]!r}")
-    # both templates instantiate against the PRE-update state (SPARQL
-    # 1.1 Update §3.1.3: the WHERE is evaluated once, DELETE applies
-    # before INSERT)
-    sol = exec_where(src)
+    # DELETE/INSERT ... WHERE (DELETE WHERE: the pattern is the delete
+    # template): both templates instantiate against the PRE-update
+    # state (SPARQL 1.1 Update §3.1.3: the WHERE is evaluated once,
+    # DELETE applies before INSERT)
+    _, del_t, ins_t, where = op
+    if any(t[3] is not None for t in (del_t or []) + (ins_t or [])):
+        need_graph("GRAPH in update template")
+    sol = _exec_group(out, where)
     new_out = out
     if del_t is not None:
         dels = _instantiate_template(sol, del_t, "DELETE template")
@@ -2990,7 +2426,8 @@ def sparql_update(quads: DataFrame, update: str) -> DataFrame:
     mutated; persist or write the result to adopt it).
 
     Supported operations (``;``-separated sequences run in order, each
-    against the previous operation's result): ``INSERT DATA {…}``,
+    against the previous operation's result; the whole script is parsed
+    before the first one runs): ``INSERT DATA {…}``,
     ``DELETE DATA {…}``, ``DELETE WHERE {…}`` (the pattern is both the
     match and the delete template), ``[WITH <g>] DELETE {…} INSERT {…}
     WHERE {…}`` with either template optional, and — on quad stores —
@@ -3025,24 +2462,7 @@ def sparql_update(quads: DataFrame, update: str) -> DataFrame:
     completes the engine's read-query surface with the maintenance
     half a KG store needs.
     """
-    text = _strip_comments(update)
-    if _UNSUPPORTED.search(text):
-        raise SparqlError(
-            f"unsupported SPARQL feature: {_UNSUPPORTED.search(text).group(0)}")
-    prefixes: dict[str, str] = {}
-    for m in re.finditer(r"PREFIX\s+([A-Za-z_][\w-]*)?:\s*<([^>]*)>", text,
-                         re.IGNORECASE):
-        prefixes[m.group(1) or ""] = m.group(2)
-    text = re.sub(r"PREFIX\s+[\w-]*:\s*<[^>]*>", "", text,
-                  flags=re.IGNORECASE)
     out = quads
-    ran = False
-    for op in _split_top_semis(text):
-        op = op.strip()
-        if not op:
-            continue
-        out = _apply_update_op(out, op, prefixes)
-        ran = True
-    if not ran:
-        raise SparqlError("empty update script")
+    for op in _Parser(update).parse(_Parser.update):
+        out = _apply_update_op(out, op)
     return out

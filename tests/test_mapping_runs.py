@@ -103,3 +103,19 @@ def test_document_source_is_a_local_table_scan(spark, tmp_path):
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan
     assert sorted(map(tuple, df.collect())) == [
         ("1", "a", 0), ("1", "b", 0), ("2", None, 1)]
+
+
+def test_blank_node_source_rejected_at_extraction(spark):
+    """A described source (a csvw:Table blank node) has no path: the
+    mapping is rejected when it is extracted, naming the triples map,
+    before any Spark job runs — not as a missing file at bind time."""
+    from kgloom.rml import RmlValidationError
+    case = os.path.join(os.path.dirname(CASE), "csvw_bnode_source")
+    with open(f"{case}/mapping.ttl", encoding="utf-8") as f:
+        text = f.read()
+
+    def compile_mapping():
+        with pytest.raises(RmlValidationError, match="Student.*blank node"):
+            compile_rml(text)
+
+    assert spark_jobs(spark, "csvw-bnode", compile_mapping) == 0

@@ -67,6 +67,26 @@ def test_quoted_object_position_parses(spark):
     assert r.graph == "<http://ex/g>"
 
 
+def test_unspaced_quoted_triple_reads_canonical(spark):
+    """N-Triples-star without inner spacing reads back in the engine's
+    ``<< s p o >>`` form, so a ground quoted SPARQL pattern finds it
+    (in subject and in object position)."""
+    from kgloom.sparql import sparql_select
+    df = spark.createDataFrame([("<<<a> <p> <o>>> <q> <z> .",),
+                                ('<s> <q> <<  <a>\t<p> "o"@en>> .',)],
+                               "value string")
+    quads = parse_nquads_lines(df)
+    assert sorted(r.t for r in quads.select(F.concat_ws(
+        " ", "subj", "obj").alias("t")).collect()) == [
+        '<< <a> <p> <o> >> <z>', '<s> << <a> <p> "o"@en >>']
+    rows = sparql_select(
+        quads, "SELECT ?x WHERE { << <a> <p> <o> >> <q> ?x }").collect()
+    assert [r.x for r in rows] == ["z"]
+    rows = sparql_select(
+        quads, 'SELECT ?x WHERE { ?x <q> << <a> <p> "o"@en >> }').collect()
+    assert [r.x for r in rows] == ["s"]
+
+
 def test_nested_quoting_is_malformed(spark):
     line = ('<< << <http://ex/a> <http://ex/b> "c" >> '
             '<http://ex/p> "x" >> <http://ex/q> "y" .')
