@@ -29,10 +29,10 @@ rendered N-Triples-style strings:
     "lex"^^<dt>    → {"@type":"dt","@value":"lex"}
     rdf:type obj   → bare "iri" inside the @type array
 
-N-Triples string escapes (\\" \\\\ \\n \\r \\t \\uXXXX) are JSON string
-escapes too, so the quoted lexical form embeds verbatim once the two
-that JSON lacks are rewritten: \\' becomes ' and \\UXXXXXXXX a \\uXXXX
-escape (a surrogate pair beyond the Basic Multilingual Plane).
+A literal's quoted lexical form embeds verbatim: the engine's
+canonical spelling escapes only \\" \\\\ \\n \\r \\t, which are JSON string
+escapes too (the N-Quads reader decodes every other N-Triples escape,
+:mod:`kgloom.exec.rdfsource`).
 """
 
 from __future__ import annotations
@@ -44,34 +44,10 @@ _RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 
 _LANG_RE = r'^(".*")@([A-Za-z][A-Za-z0-9-]*)$'
 _DT_RE = r'^(".*")\^\^<(.*)>$'
-# one token per escape, so an escaped backslash never starts another
-_ESC_TOKEN = r"\\U[0-9A-Fa-f]{8}|\\.|[^\\]+|\\"
 
 
 def _strip_iri(col: Column) -> Column:
     return F.regexp_extract(col, r"^<(.*)>$", 1)
-
-
-def _u4(cp: Column) -> Column:
-    return F.concat(F.lit("\\u"), F.lpad(F.hex(cp), 4, "0"))
-
-
-def _json_lexical(lex: Column) -> Column:
-    """Quoted N-Triples lexical form → the same string as a JSON string
-    literal (see module docstring)."""
-    def token(t: Column) -> Column:
-        cp = F.conv(F.substring(t, 3, 8), 16, 10).cast("long")
-        astral = cp - 0x10000
-        return (F.when(t == "\\'", F.lit("'"))
-                .when(t.startswith("\\U") & (F.length(t) == 10),
-                      F.when(cp < 0x10000, _u4(cp)).otherwise(F.concat(
-                          _u4(F.shiftright(astral, 10) + 0xD800),
-                          _u4(astral.bitwiseAND(0x3FF) + 0xDC00))))
-                .otherwise(t))
-    tokens = F.regexp_extract_all(lex, F.lit(_ESC_TOKEN), 0)
-    return (F.when(lex.contains("\\'") | lex.contains("\\U"),
-                   F.array_join(F.transform(tokens, token), ""))
-            .otherwise(lex))
 
 
 def value_json(o: Column) -> Column:
@@ -88,13 +64,11 @@ def value_json(o: Column) -> Column:
               F.concat(F.lit('{"@id":"'), o, F.lit('"}')))
         .when(dt != "",
               F.concat(F.lit('{"@type":"'), dt, F.lit('","@value":'),
-                       _json_lexical(dtlex), F.lit("}")))
+                       dtlex, F.lit("}")))
         .when(lang != "",
               F.concat(F.lit('{"@language":"'), lang,
-                       F.lit('","@value":'), _json_lexical(langlex),
-                       F.lit("}")))
-        .otherwise(F.concat(F.lit('{"@value":'), _json_lexical(o),
-                            F.lit("}"))))
+                       F.lit('","@value":'), langlex, F.lit("}")))
+        .otherwise(F.concat(F.lit('{"@value":'), o, F.lit("}"))))
 
 
 def jsonld_nodes(df: DataFrame) -> DataFrame:

@@ -13,7 +13,11 @@ codegen, no Python anywhere (asserted by ``tests/test_rdfsource.py``).
 Terms stay in their rendered lexical form (``<iri>``, ``_:b0``,
 ``"lit"@en``) — the same convention every quad-consuming operator in
 this engine uses (SPARQL, reasoning, fusion), so a parsed dump plugs
-into them directly.
+into them directly.  Object literals are read into the engine's one
+canonical spelling: ``\\uXXXX``, ``\\UXXXXXXXX``, ``\\'``, ``\\b`` and
+``\\f`` decode to their characters and only ``\\ \" \\n \\r \\t`` stay
+escaped (what mappings and SPARQL constants render), so equal
+literals spelled differently in a dump compare equal.
 
 Grammar handled (W3C N-Quads): IRI / blank-node subjects, IRI
 predicates, IRI / blank-node / literal objects (with ``\\``-escapes,
@@ -33,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops.star import QUOTED_TRIPLE, UNQUOTE_RE
+from .functions import _LITERAL_ESCAPES
 
 #: literal with escape-aware quoting and optional @lang / ^^<datatype>
 _LIT = (r'"(?:[^"\\]|\\.)*"'
@@ -57,6 +62,30 @@ def _canonical(term: F.Column) -> F.Column:
     return F.regexp_replace(term, UNQUOTE_RE, "<< $1 $2 $3 >>")
 
 
+# one token per escape, so an escaped backslash never starts another
+_ESC_TOKEN = r"\\U[0-9A-Fa-f]{8}|\\u[0-9A-Fa-f]{4}|\\.|[^\\]+|\\"
+
+
+def _canonical_literal(term: F.Column) -> F.Column:
+    """A literal with every escape but ``\\ \" \\n \\r \\t`` decoded
+    (the module docstring's canonical form); other terms as is."""
+    def token(t: F.Column) -> F.Column:
+        code = F.unhex(F.substring(t, 3, 8))
+        char = F.when(F.length(t) == 10, F.decode(code, "UTF-32")) \
+            .otherwise(F.decode(code, "UTF-16BE"))
+        for raw, esc in _LITERAL_ESCAPES:
+            char = F.replace(char, F.lit(raw), F.lit(esc))
+        return (F.when(t.startswith("\\") & (F.length(t) > 2), char)
+                .when(t == "\\'", F.lit("'"))
+                .when(t == "\\b", F.lit("\b"))
+                .when(t == "\\f", F.lit("\f"))
+                .otherwise(t))
+    tokens = F.regexp_extract_all(term, F.lit(_ESC_TOKEN), 0)
+    return (F.when(term.startswith('"') & term.rlike(r"\\[uU'bf]"),
+                   F.array_join(F.transform(tokens, token), ""))
+            .otherwise(term))
+
+
 def parse_nquads_lines(lines: DataFrame, mode: str = "failfast",
                        column: str = "value") -> DataFrame:
     """Parse a DataFrame of N-Quads text lines into
@@ -77,7 +106,8 @@ def parse_nquads_lines(lines: DataFrame, mode: str = "failfast",
                     F.regexp_extract(v, _LINE_RE, 6).alias("__rest")))
     data = data.select(
         "__line", "subj", "pred",
-        _canonical(F.regexp_extract("__rest", _OBJ_RE, 1)).alias("obj"),
+        _canonical_literal(_canonical(
+            F.regexp_extract("__rest", _OBJ_RE, 1))).alias("obj"),
         F.nullif(F.regexp_extract("__rest", _OBJ_RE, 5), F.lit(""))
         .alias("graph"))
     ok = (F.col("subj") != "") & (F.col("obj") != "")

@@ -13,7 +13,9 @@ Supported subset (the mapping-source shape the fixtures use):
 ``PREFIX``, ``SELECT [DISTINCT] ?v ... | *``, aggregate projections
 ``(COUNT|SUM|AVG|MIN|MAX|SAMPLE|GROUP_CONCAT([DISTINCT] ?v | * | expr
 [; SEPARATOR="s"]) AS ?alias)`` — the aggregate input may be any
-builtin-library expression, e.g. ``SUM(?a * ?b)`` — with ``GROUP BY``
+builtin-library expression, e.g. ``SUM(?a * ?b)``, and a projection
+may compute over aggregates, e.g. ``(COUNT(?o) * 2 AS ?n)`` — with
+``GROUP BY``
 (plain ``?var`` keys or ``(expr AS ?v)`` computed keys, §18.2.4.1;
 with or without aggregates; bare GROUP BY = distinct keys) and
 ``HAVING``
@@ -37,20 +39,20 @@ in the projection (§18.2.4.4 Extend — applied after grouping, visible
 to ORDER BY), with the SPARQL 1.1 builtin library: CONCAT / STR /
 UCASE / LCASE / STRLEN / IRI / REPLACE / SUBSTR / STRBEFORE /
 STRAFTER / ENCODE_FOR_URI / ABS / CEIL / FLOOR / ROUND (XPath
-ties-toward-+inf) / MD5 / SHA1 / SHA256 / COALESCE / IF (condition in
-the FILTER grammar) / LANG / DATATYPE / STRLANG / STRDT + arithmetic,
+ties-toward-+inf) / MD5 / SHA1 / SHA256 / COALESCE / IF / LANG /
+DATATYPE / STRLANG / STRDT + arithmetic,
 ``VALUES`` inline data (incl. ``UNDEF`` — an UNDEF cell joins as
 compatible-with-anything per SPARQL §10.2), ``FILTER`` boolean
 expressions
-(comparisons on variables, ``&&``/``||``/``!``, ``REGEX``,
-``CONTAINS`` / ``STRSTARTS`` / ``STRENDS`` — each accepting an
-arbitrary expression as its first argument — ``BOUND``,
-``isIRI``/``isLITERAL``/``isBLANK``, ``?v [NOT] IN (t1, t2, …)``
-(numeric lists compare by value, others by term identity),
-``LANG(?v) = "tag"`` — all compiled to codegen'd Column predicates),
-``ORDER BY`` with ``ASC``/``DESC`` on variables, aggregate calls
-(``ORDER BY DESC(COUNT(?x))`` — computed as hidden grouping outputs)
-and scalar expressions (the BIND expression language), ``LIMIT`` /
+(comparisons between expressions, ``&&``/``||``/``!``, ``REGEX``,
+``CONTAINS`` / ``STRSTARTS`` / ``STRENDS`` with a literal pattern,
+``BOUND``, ``isIRI``/``isLITERAL``/``isBLANK``/``isTRIPLE``,
+``e [NOT] IN (e1, e2, …)`` (all-number lists compare by value, others
+by term identity), ``LANG(e) = "tag"`` (case-insensitive) — all
+compiled to codegen'd Column predicates), ``HAVING`` conditions in
+the same language, ``ORDER BY`` with ``ASC``/``DESC`` on variables,
+expressions and aggregates (``ORDER BY DESC(COUNT(?x))`` — computed
+as hidden grouping outputs), ``LIMIT`` /
 ``OFFSET`` (the §18.5 slice, applied after the sort), nested
 ``{ SELECT … }`` subqueries (§18.2.2.14 — evaluated bottom-up with
 their own grouping and slice, then natural-joined into the enclosing
@@ -79,20 +81,19 @@ dropped.  Text inside a literal or an IRI is therefore never syntax.
 One recursive-descent parser (:class:`_Parser`) reads the tokens for
 every entry point, after a shared ``PREFIX`` prologue::
 
-  Select    := SELECT [DISTINCT] (* | (?v | (Agg AS ?v) | (Expr AS ?v))+)
+  Select    := SELECT [DISTINCT] (* | (?v | (Expr AS ?v))+)
                (FROM [NAMED] iri)* WHERE Group [GROUP BY (?v | (Expr AS ?v))+]
-               [HAVING ((?v | Agg) cmp Value)+] [ORDER BY Key+]
+               [HAVING (Expr)+] [ORDER BY (?v | [ASC|DESC] (Expr) | call)+]
                [LIMIT n] [OFFSET n]
   Group     := { (Triples | { Select } | Group (UNION Group)* | OPTIONAL Group
                | GRAPH VarOrIri Group | MINUS Group | FILTER [NOT] EXISTS Group
-               | FILTER ( Filter ) | BIND ( Expr AS ?v ) | VALUES Data | .)* }
+               | FILTER ( Expr ) | BIND ( Expr AS ?v ) | VALUES Data | .)* }
   Triples   := Node Path Node (, Node)* [{| annotation |}] (; Path Node ...)*
   Path      := alternatives of sequences of ^, (…), !…, iri with + * ?
-  Filter    := || / && / ! over (…), ?v cmp Value, ?v [NOT] IN (…),
-               REGEX/CONTAINS/STRSTARTS/STRENDS(?v | Expr, "s"), BOUND,
-               isIRI/isLITERAL/isBLANK/isTRIPLE(?v), LANG(?v) = "tag"
-  Expr      := + - over * / over calls of the builtin library, (Expr),
-               terms; IF's condition is a Filter
+  Expr      := || over && over [!] (Sum [cmp Sum | [NOT] IN (Expr, …)]),
+               Sum := + - over * / over (Expr), calls of the builtin
+               library (REGEX, CONTAINS, BOUND, isIRI, IF, …), terms and
+               aggregates (in the projection, HAVING and ORDER BY only)
   Ask       := ASK [WHERE] Group
   Construct := CONSTRUCT ({ Triples } WHERE Group | WHERE { Triples })
                [LIMIT n]
@@ -102,8 +103,14 @@ every entry point, after a shared ``PREFIX`` prologue::
                [DELETE Quads] [INSERT Quads] WHERE Group
 
 The parser resolves every term as it reads it (prefixed names, ``a``,
-literal escapes, signed numbers), so the trees the executor compiles
-hold rendered terms and floats only.
+literal escapes, signed numbers — a bare number is an ``xsd:integer``
+or ``xsd:decimal`` literal), so the trees the executor compiles hold
+rendered terms only.  Every expression — FILTER, BIND, IF, a select
+expression, a GROUP BY key, HAVING, ORDER BY — is one ``Expr`` tree
+compiled by one function, :func:`_expr_compile`; a comparison against
+a number compares by value, two terms by their rendered strings.
+Aggregates are hoisted to grouping outputs in one pass before the
+grouped expressions compile.
 
 Path execution is Spark-first: an atom is a constant-pred scan of the
 quad DataFrame, ``/`` is a join on the intermediate node, ``|`` a
@@ -148,7 +155,7 @@ mappings see endpoint-style bindings.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 from typing import Optional, Union
 
 from pyspark.sql import DataFrame
@@ -256,44 +263,35 @@ class GroupPattern:
 
 @dataclass(frozen=True)
 class AggExpr:
-    """One aggregate projection ``(FUNC([DISTINCT] ?var | * | expr)
-    AS ?alias)``."""
+    """One aggregate call ``FUNC([DISTINCT] * | expr)``; its argument
+    (``('var', v)`` or any expression, e.g. ``SUM(?a * ?b)``) is
+    evaluated per solution before aggregation."""
     func: str       # count | sum | avg | min | max | sample | group_concat
-    var: Optional[str]              # None = COUNT(*) or expression input
+    arg: Optional[tuple]            # None = COUNT(*)
     distinct: bool
-    alias: str
     sep: Optional[str] = None       # GROUP_CONCAT separator (default " ")
-    #: aggregate over a computed expression, e.g. ``SUM(?a * ?b)`` —
-    #: a BIND-language Expr tree evaluated per solution before
-    #: aggregation (mutually exclusive with ``var``)
-    expr: Optional[tuple] = None
 
 
 @dataclass
 class SelectQuery:
-    variables: list[str]            # output order: vars + agg aliases; [] = *
+    variables: list[str]            # output order: vars + aliases; [] = *
     distinct: bool
     group: GroupPattern             # the WHERE group
-    #: (key, descending) — key is a variable name (str), an
-    #: :class:`AggExpr` (``ORDER BY DESC(COUNT(?x))``), or a scalar
-    #: expression tree (the BIND expression language)
-    order_by: list[tuple[object, bool]]
+    #: (key Expr, descending); a key may hold aggregates
+    #: (``ORDER BY DESC(COUNT(?x))``)
+    order_by: list[tuple[Expr, bool]]
     limit: Optional[int] = None
     offset: Optional[int] = None
-    aggregates: list[AggExpr] = field(default_factory=list)
     group_by: list[str] = field(default_factory=list)
     #: ``GROUP BY (expr AS ?v)`` items (§18.2.4.1): the expression is
     #: computed as a pre-aggregation extend and ``?v`` joins group_by
     group_exprs: list[tuple[Expr, str]] = field(default_factory=list)
-    #: (variable or hidden aggregate alias, op, value) — value is a
-    #: float (numeric comparison), a :class:`Var` or a rendered term
-    having: list[tuple[str, str, object]] = field(default_factory=list)
-    #: hidden aggregates backing ``HAVING (AGG(...) op value)`` — the
-    #: alias appears in `having` and the column drops after filtering
-    having_aggs: list[AggExpr] = field(default_factory=list)
-    #: scalar select expressions ``(expr AS ?alias)`` — §18.2.4.4
-    #: Extend, applied after grouping (so they may reference aggregate
-    #: aliases) and before ORDER BY (so sort keys may reference them)
+    #: ``HAVING (cond) ...`` conditions, which may hold aggregates
+    having: list[Expr] = field(default_factory=list)
+    #: select expressions ``(expr AS ?alias)`` — aggregates, or
+    #: §18.2.4.4 Extend applied after grouping (so they may reference
+    #: aggregate aliases) and before ORDER BY (so sort keys may
+    #: reference them)
     select_exprs: list[tuple[str, Expr]] = field(default_factory=list)
     #: dataset clause (§13.2): ``FROM <g>`` graphs merge into the
     #: active default graph; ``FROM NAMED <g>`` graphs are the only
@@ -328,6 +326,7 @@ def _render_literal(lex: str, lang: Optional[str], dtype: Optional[str]) -> str:
 
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+_XSD = "http://www.w3.org/2001/XMLSchema#"
 
 #: the one lexer: every SPARQL text is read through it, so a keyword,
 #: brace, ``#`` or ``;`` inside a literal or an IRI is token content.
@@ -391,23 +390,18 @@ class _DefaultGraphOnly:
 
 _DEFAULT_ONLY = _DefaultGraphOnly()
 
-_STR_FNS = {"contains", "strstarts", "strends"}
-_ISA = {"isiri": "iri", "isuri": "iri", "isliteral": "literal",
-        "isblank": "blank", "istriple": "triple"}
 _AGGS = ("COUNT", "SUM", "AVG", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT")
 _CMP_OPS = ("=", "!=", "<", "<=", ">", ">=")
 _PATH_OPS = ("/", "|", "^", "+", "*", "?", "!")
 
-# FILTER trees: ('or'|'and', [subs]) | ('not', sub)
-#      | ('cmp', var, op, value)  value: float | Var | rendered term
-#      | ('regex', var, pat, flags) | ('regex_expr', Expr, pat, flags)
-#      | ('strfn', fn, var, lit) | ('strfn_expr', fn, Expr, lit)
-#      | ('in', var, [floats] | [terms], numeric) | ('bound', var)
-#      | ('isa', kind, var) | ('lang', var, tag)
-#
-# Exprs are tuples: ('var', name) | ('const', rendered_term)
-#                 | ('call', func, [args]) | ('arith', op, left, right)
-#                 | ('cond', filter_tree)              (IF conditions only)
+# Exprs are tuples — one tree for FILTER, BIND, IF, projections,
+# GROUP BY, HAVING and ORDER BY:
+#     ('var', name) | ('const', rendered_term)
+#   | ('num', rendered_term, value)        a number token (typed literal)
+#   | ('call', func, [args]) | ('arith', op, left, right)
+#   | ('cmp', op, left, right) | ('in', expr, [members])
+#   | ('or'|'and', [subs]) | ('not', sub)
+#   | ('agg', AggExpr)          (projection, HAVING and ORDER BY only)
 
 Expr = tuple
 
@@ -421,6 +415,9 @@ _EXPR_FUNCS: dict[str, object] = {
     "lang": 1, "datatype": 1, "strlang": 2, "strdt": 2,
     # SPARQL-star accessors/constructor (RDF-star CG report sec. 7)
     "triple": 3, "subject": 1, "predicate": 1, "object": 1,
+    # boolean: pattern and literal arguments must be string literals
+    "regex": (2, 3), "contains": 2, "strstarts": 2, "strends": 2,
+    "bound": 1, "isiri": 1, "isuri": 1, "isliteral": 1, "isblank": 1,
     "istriple": 1,
 }
 
@@ -434,6 +431,7 @@ class _Parser:
         self.toks = _tokenize(text)
         self.i = 0
         self.prefixes: dict[str, str] = {}
+        self.aggs_ok = False   # inside a projection, HAVING or ORDER BY
 
     def parse(self, form):
         """Prologue, then ``form`` (a query-form method), then the end."""
@@ -510,21 +508,13 @@ class _Parser:
         if kind == "pname":
             return f"<{self.expand(val)}>"
         if kind == "num":
-            return _render_literal(val, None, None)
+            return _render_literal(val, None, _XSD + (
+                "decimal" if "." in val else "integer"))
         if kind == "lit":
             m = _LIT.match(val)
             dtype = self.expand(m.group(4)) if m.group(4) else m.group(3)
             return _render_literal(_unescape(m.group(1)), m.group(2), dtype)
         raise SparqlError(f"unexpected term {val!r}")
-
-    def number(self) -> Optional[float]:
-        """A (signed) number token as a float; None (nothing read) if
-        the next term is not a number."""
-        k = 1 if self.at("+", "-") else 0
-        if self.peek(k)[0] != "num":
-            return None
-        sign = self.next()[1] if k else ""
-        return float(sign + self.next()[1])
 
     def integer(self, what: str) -> int:
         kind, n = self.next()
@@ -544,8 +534,8 @@ class _Parser:
         return self.term()
 
     def string(self) -> str:
-        """A literal argument that must be a plain string (patterns,
-        separators): its lexical form."""
+        """A literal that must be a plain string (a GROUP_CONCAT
+        separator): its lexical form."""
         t = self.term()
         if isinstance(t, Var):
             raise SparqlError(f"expected a string literal, got ?{t.name}")
@@ -693,7 +683,7 @@ class _Parser:
                 else:
                     self.expect("(", "unsupported FILTER syntax: FILTER "
                                      "needs ( ... ) or [NOT] EXISTS")
-                    g.filters.append(self.bexpr())
+                    g.filters.append(self.expr())
                     self.expect(")")
             elif self.accept("BIND"):
                 self.expect("(", "BIND must be followed by (expr AS ?var)")
@@ -765,95 +755,46 @@ class _Parser:
             raise SparqlError("empty basic graph pattern")
         return g
 
-    # --- FILTER boolean expressions ----------------------------------------
-
-    def bexpr(self):
-        """``||`` of ``&&`` of factors (n-ary nodes, one per level)."""
-        ors = [self.band()]
-        while self.accept("||"):
-            ors.append(self.band())
-        return ors[0] if len(ors) == 1 else ("or", ors)
-
-    def band(self):
-        ands = [self.bfactor()]
-        while self.accept("&&"):
-            ands.append(self.bfactor())
-        return ands[0] if len(ands) == 1 else ("and", ands)
-
-    def bfactor(self):
-        if self.accept("!"):
-            return ("not", self.bfactor())
-        if self.accept("("):
-            node = self.bexpr()
-            self.expect(")", "unbalanced parentheses in FILTER")
-            return node
-        if self.at_kind("name") and self.at("(", k=1):
-            return self.bcall()
-        if not self.at_kind("var"):
-            raise SparqlError(f"unsupported FILTER at {self.peek()[1]!r}")
-        var = self.var()
-        negated = bool(self.accept("NOT"))
-        if negated or self.accept("IN"):
-            if negated:
-                self.expect("IN")
-            self.expect("(")
-            nums, terms = [], []
-            while True:
-                start = self.i
-                nums.append(self.number())
-                self.i = start
-                terms.append(self.term())
-                if isinstance(terms[-1], Var):
-                    raise SparqlError("IN list members must be constants")
-                if not self.accept(","):
-                    break
-            self.expect(")")
-            # an all-numeric list compares by value, like 'cmp'
-            numeric = None not in nums
-            node = ("in", var, nums if numeric else terms, numeric)
-            return ("not", node) if negated else node
-        op = self.accept(*_CMP_OPS)
-        if op is None:
-            raise SparqlError(f"unsupported FILTER on ?{var}")
-        return ("cmp", var, op, self.cmp_value())
-
-    def cmp_value(self):
-        n = self.number()
-        return self.term() if n is None else n
-
-    def bcall(self):
-        fn = self.next()[1].lower()
-        self.expect("(")
-        if fn == "lang":
-            var = self.var()
-            self.expect(")")
-            op = self.accept("=", "!=")
-            kind, tag = self.next() if op else (None, None)
-            if kind != "lit" or not re.fullmatch(r'"[A-Za-z0-9-]*"', tag):
-                raise SparqlError('LANG filter must be LANG(?v) = "tag"')
-            node = ("lang", var, tag[1:-1])
-            return node if op == "=" else ("not", node)
-        if fn == "bound" or fn in _ISA:
-            var = self.var()
-            self.expect(")")
-            return ("bound", var) if fn == "bound" else ("isa", _ISA[fn], var)
-        if fn != "regex" and fn not in _STR_FNS:
-            raise SparqlError(f"unsupported FILTER function {fn!r}")
-        arg = self.var() if self.at_kind("var") and self.at(",", k=1) \
-            else self.expr()
-        self.expect(",")
-        lit = self.string()
-        general = "" if isinstance(arg, str) else "_expr"
-        if fn == "regex":
-            flags = self.string() if self.accept(",") else ""
-            self.expect(")", 'REGEX takes (expr, "pat"[, flags])')
-            return ("regex" + general, arg, lit, flags)
-        self.expect(")", f'{fn.upper()} takes (expr, "literal")')
-        return ("strfn" + general, fn, arg, lit)
-
-    # --- scalar expressions (BIND / projection / ORDER BY / GROUP BY) ------
+    # --- expressions: FILTER, BIND, IF, projection, GROUP BY, HAVING and
+    #     ORDER BY all read this one grammar ------------------------------
 
     def expr(self) -> Expr:
+        """``||`` of ``&&`` of [``!``] relations (n-ary nodes)."""
+        ors = [self.conj()]
+        while self.accept("||"):
+            ors.append(self.conj())
+        return ors[0] if len(ors) == 1 else ("or", ors)
+
+    def conj(self) -> Expr:
+        ands = [self.negation()]
+        while self.accept("&&"):
+            ands.append(self.negation())
+        return ands[0] if len(ands) == 1 else ("and", ands)
+
+    def negation(self) -> Expr:
+        # ``!`` negates the whole relation: ``!?a = 1`` is ``!(?a = 1)``
+        return ("not", self.negation()) if self.accept("!") else \
+            self.relation()
+
+    def relation(self) -> Expr:
+        left = self.additive()
+        op = self.accept(*_CMP_OPS)
+        if op:
+            return ("cmp", op, left, self.additive())
+        negated = bool(self.accept("NOT"))
+        if not (negated or self.accept("IN")):
+            return left
+        if negated:
+            self.expect("IN")
+        self.expect("(")
+        members = [self.expr()]
+        while self.accept(","):
+            members.append(self.expr())
+        self.expect(")")
+        node = ("in", left, members)
+        return ("not", node) if negated else node
+
+    def additive(self) -> Expr:
         node = self.mul()
         while self.at("+", "-"):
             node = ("arith", self.next()[1], node, self.mul())
@@ -865,22 +806,30 @@ class _Parser:
             node = ("arith", self.next()[1], node, self.primary())
         return node
 
-    def at_call(self) -> bool:
-        return (self.at_kind("name") and self.at("(", k=1)
-                and self.peek()[1].lower() in _EXPR_FUNCS)
-
     def primary(self) -> Expr:
         if self.accept("("):
             node = self.expr()
             self.expect(")", "unbalanced parentheses in expression")
             return node
-        if not self.at_call():
-            t = self.term()
-            return ("var", t.name) if isinstance(t, Var) else ("const", t)
+        if self.at(*_AGGS) and self.at("(", k=1):
+            if not self.aggs_ok:
+                raise SparqlError("aggregates are allowed only in the "
+                                  "projection, HAVING and ORDER BY")
+            return ("agg", self.aggregate())
+        if self.at_kind("name") and self.at("(", k=1):
+            return self.call()
+        number = self.peek(1 if self.at("+", "-") else 0)[0] == "num"
+        t = self.term()
+        if number:
+            return ("num", t, float(_unrender(t)))
+        return ("var", t.name) if isinstance(t, Var) else ("const", t)
+
+    def call(self) -> Expr:
         func = self.next()[1].lower()
+        if func not in _EXPR_FUNCS:
+            raise SparqlError(f"unsupported function {func.upper()}")
         self.expect("(")
-        # IF's condition is a boolean expression in the FILTER grammar
-        args = [("cond", self.bexpr()) if func == "if" else self.expr()]
+        args = [self.expr()]
         while self.accept(","):
             args.append(self.expr())
         self.expect(")", f"unbalanced parentheses in {func.upper()}(...)")
@@ -891,24 +840,24 @@ class _Parser:
                 arity[0] <= len(args) <= arity[1]):
             raise SparqlError(
                 f"{func.upper()} takes {arity[0]}..{arity[1]} arguments")
+        if func == "bound" and args[0][0] != "var":
+            raise SparqlError("BOUND takes a variable")
         return ("call", "iri" if func == "uri" else func, args)
 
-    def at_aggregate(self) -> bool:
-        return self.at(*_AGGS) and self.at("(", k=1)
-
-    def aggregate(self, alias: str = "") -> AggExpr:
-        """``FUNC([DISTINCT] * | ?v | expr [; SEPARATOR = "s"])``."""
+    def aggregate(self) -> AggExpr:
+        """``FUNC([DISTINCT] * | expr [; SEPARATOR = "s"])``; the
+        argument cannot hold another aggregate."""
         func = self.next()[1].lower()
         self.expect("(")
         distinct = bool(self.accept("DISTINCT"))
-        var = expr = sep = None
+        arg = sep = None
         if self.accept("*"):
             if distinct or func != "count":
                 raise SparqlError(f"{func.upper()}(*) only valid as COUNT(*)")
-        elif self.at_kind("var") and self.at(")", ";", k=1):
-            var = self.var()
         else:
-            expr = self.expr()
+            self.aggs_ok = False
+            arg = self.expr()
+            self.aggs_ok = True
         if self.accept(";"):
             self.expect("SEPARATOR")
             self.expect("=")
@@ -916,7 +865,15 @@ class _Parser:
             if func != "group_concat":
                 raise SparqlError("SEPARATOR is only valid in GROUP_CONCAT")
         self.expect(")")
-        return AggExpr(func, var, distinct, alias, sep, expr)
+        return AggExpr(func, arg, distinct, sep)
+
+    def with_aggs(self, parse) -> Expr:
+        """``parse()`` where aggregates are allowed."""
+        self.aggs_ok = True
+        try:
+            return parse()
+        finally:
+            self.aggs_ok = False
 
     # --- query forms -------------------------------------------------------
 
@@ -925,22 +882,17 @@ class _Parser:
                     "only SELECT ... WHERE { ... } queries supported")
         distinct = bool(self.accept("DISTINCT"))
         variables: list[str] = []
-        aggregates: list[AggExpr] = []
         select_exprs: list[tuple[str, Expr]] = []
         if not self.accept("*"):
             while self.at("(") or self.at_kind("var"):
                 if not self.accept("("):
                     variables.append(self.var())
                     continue
-                agg = self.aggregate() if self.at_aggregate() else None
-                expr = self.expr() if agg is None else None
+                expr = self.with_aggs(self.expr)
                 self.expect("AS", "projection expressions need (expr AS ?v)")
                 alias = self.var()
                 self.expect(")")
-                if agg is None:
-                    select_exprs.append((alias, expr))
-                else:
-                    aggregates.append(replace(agg, alias=alias))
+                select_exprs.append((alias, expr))
                 variables.append(alias)
             if not variables:
                 raise SparqlError(f"bad projection at {self.peek()[1]!r}")
@@ -968,10 +920,18 @@ class _Parser:
                 group_by.append(name)
             if not group_by:
                 raise SparqlError(f"bad GROUP BY item: {self.peek()[1]!r}")
+        having: list[Expr] = []
+        if self.accept("HAVING"):
+            while self.accept("("):
+                having.append(self.with_aggs(self.expr))
+                self.expect(")")
+            if not having:
+                raise SparqlError("HAVING needs ( condition )")
         # aggregates with no GROUP BY = one implicit group (valid SPARQL)
-        if aggregates or group_by:
-            aliases = {a.alias for a in aggregates} | \
-                {alias for alias, _ in select_exprs}
+        grouped = bool(group_by) or any(
+            _has_agg(e) for e in [*(e for _, e in select_exprs), *having])
+        if grouped:
+            aliases = {alias for alias, _ in select_exprs}
             bad = [v for v in variables
                    if v not in aliases and v not in group_by]
             if bad:
@@ -980,37 +940,20 @@ class _Parser:
                     f"GROUP BY keys")
             if not variables:
                 raise SparqlError("SELECT * cannot be combined with GROUP BY")
-
-        having: list[tuple[str, str, object]] = []
-        having_aggs: list[AggExpr] = []
-        if self.accept("HAVING"):
-            while self.accept("("):
-                # HAVING (AGG(...) op value): the aggregate is a hidden
-                # grouping output (the ORDER BY DESC(COUNT(?x))
-                # machinery) and the filter reads its alias
-                if self.at_aggregate():
-                    having_aggs.append(
-                        self.aggregate(f"__hv{len(having_aggs)}"))
-                    lhs = having_aggs[-1].alias
-                else:
-                    lhs = self.var()
-                op = self.accept(*_CMP_OPS)
-                if op is None:
-                    raise SparqlError("unsupported HAVING: needs a comparison")
-                having.append((lhs, op, self.cmp_value()))
-                self.expect(")")
-            if not having:
-                raise SparqlError("HAVING needs ( condition )")
-        if having and not (aggregates or group_by or having_aggs):
+        elif having:
             raise SparqlError("HAVING requires GROUP BY or an aggregate")
 
-        order_by: list[tuple[object, bool]] = []
+        order_by: list[tuple[Expr, bool]] = []
         if self.accept("ORDER"):
             self.expect("BY")
             while (key := self.order_key()) is not None:
                 order_by.append(key)
             if not order_by:
                 raise SparqlError(f"bad ORDER BY key {self.peek()[1]!r}")
+            if not grouped and any(_has_agg(k) for k, _ in order_by):
+                raise SparqlError(
+                    "aggregate ORDER BY keys require GROUP BY or an "
+                    "aggregated projection")
         limit = offset = None
         while slice_kw := self.accept("LIMIT", "OFFSET"):
             if slice_kw == "LIMIT":
@@ -1019,34 +962,23 @@ class _Parser:
                 offset = self.integer(slice_kw)
         return SelectQuery(variables=variables, distinct=distinct,
                            group=group, order_by=order_by, limit=limit,
-                           offset=offset, aggregates=aggregates,
-                           group_by=group_by, group_exprs=group_exprs,
-                           having=having, having_aggs=having_aggs,
+                           offset=offset, group_by=group_by,
+                           group_exprs=group_exprs, having=having,
                            select_exprs=select_exprs,
                            from_graphs=from_graphs, from_named=from_named)
 
-    def order_key(self) -> Optional[tuple[object, bool]]:
+    def order_key(self) -> Optional[tuple[Expr, bool]]:
         """One ORDER BY condition as (key, descending), None past the
-        last: ``?var``, ``ASC(key)`` / ``DESC(key)``, an aggregate
-        call (a hidden grouping output) or a scalar expression."""
+        last: ``?var``, ``ASC(expr)`` / ``DESC(expr)``, ``(expr)`` or a
+        call (an aggregate call included)."""
+        desc = False
         if self.at("ASC", "DESC") and self.at("(", k=1):
             desc = self.next()[1].upper() == "DESC"
-            self.next()
-            if self.at_kind("var") and self.at(")", k=1):
-                key = self.var()
-            elif self.at_aggregate():
-                key = self.aggregate("__ord")
-            else:
-                key = self.expr()
-            self.expect(")")
-            return key, desc
-        if self.at_kind("var"):
-            return self.var(), False
-        if self.at_aggregate():
-            return self.aggregate("__ord"), False
-        if self.at("(") or self.at_call():
-            return self.expr(), False
-        return None
+        elif self.at_kind("var"):
+            return ("var", self.var()), False
+        elif not (self.at("(") or self.at_kind("name") and self.at("(", k=1)):
+            return None
+        return self.with_aggs(self.primary), desc
 
     def ask(self) -> GroupPattern:
         self.expect("ASK", "not an ASK query")
@@ -1237,83 +1169,6 @@ class _Parser:
             if isinstance(gt, str) and not gt.startswith("<"):
                 raise SparqlError(f"{what} graph name must be an IRI")
         return quads, g
-
-
-def _filter_col(node, result_cols: Optional[list[str]]) -> F.Column:
-    """Compile a FILTER tree to a boolean Column over the solution
-    DataFrame (pure Catalyst — rlike/startswith/contains/regexp are all
-    codegen'd)."""
-    kind = node[0]
-    if kind in ("or", "and"):
-        cols = [_filter_col(sub, result_cols) for sub in node[1]]
-        out = cols[0]
-        for c in cols[1:]:
-            out = (out | c) if kind == "or" else (out & c)
-        return out
-    if kind == "not":
-        # SPARQL !E is true only where E evaluates false (an unbound
-        # operand is an error, not true) — Column ~ has exactly the
-        # three-valued behavior we want (~null = null = filtered out)
-        return ~_filter_col(node[1], result_cols)
-    if kind in ("strfn_expr", "regex_expr"):
-        expr = node[2] if kind == "strfn_expr" else node[1]
-        if result_cols is not None:
-            missing = _expr_vars(expr) - set(result_cols)
-            if missing:
-                raise SparqlError(
-                    f"FILTER references unbound variable "
-                    f"?{sorted(missing)[0]}")
-        c, k = _expr_compile(expr)
-        lex = _lexical(c) if k == "term" else c.cast("string")
-        if kind == "regex_expr":
-            pat = node[2] if not node[3] else f"(?{node[3]}){node[2]}"
-            return lex.rlike(pat)
-        fn, lit = node[1], node[3]
-        if fn == "contains":
-            return lex.contains(lit)
-        if fn == "strstarts":
-            return lex.startswith(lit)
-        return lex.endswith(lit)
-    var = node[2] if kind in ("strfn", "isa") else node[1]
-    # result_cols=None → permissive (IF conditions inside BIND exprs,
-    # where the BIND site has already checked variable boundness)
-    if result_cols is not None and var not in result_cols:
-        raise SparqlError(f"FILTER references unbound variable ?{var}")
-    c = F.col(var)
-    if kind == "cmp":
-        return _cmp_col(*node[1:])
-    if kind == "regex":
-        pat = node[2] if not node[3] else f"(?{node[3]}){node[2]}"
-        return _lexical(c).rlike(pat)
-    if kind == "strfn":
-        fn, lit = node[1], node[3]
-        lex = _lexical(c)
-        if fn == "contains":
-            return lex.contains(lit)
-        if fn == "strstarts":
-            return lex.startswith(lit)
-        return lex.endswith(lit)
-    if kind == "in":
-        # the expansion ?v = t1 || ?v = t2 || …: numeric lists compare
-        # by value (like _cmp_col), others by rendered-term identity;
-        # unbound ?v → null → dropped
-        return (_numeric(c) if node[3] else c).isin(*node[2])
-    if kind == "bound":
-        return c.isNotNull()
-    if kind == "isa":
-        if node[1] == "iri":
-            # a quoted triple also starts with "<" — exclude it
-            return c.startswith("<") & ~c.rlike(UNQUOTE_RE)
-        if node[1] == "literal":
-            return c.startswith('"')
-        if node[1] == "triple":  # SPARQL-star isTRIPLE
-            return c.rlike(UNQUOTE_RE)
-        return c.startswith("_:")
-    if kind == "lang":
-        tag = node[2]
-        m = F.regexp_extract(c, r'@([A-Za-z0-9-]+)$', 1)
-        return (c.startswith('"')) & (F.lower(m) == tag.lower())
-    raise SparqlError(f"bad filter node {node!r}")  # pragma: no cover
 
 
 #: lexical form of a rendered term: IRIs lose <>, literals lose quotes
@@ -1603,55 +1458,27 @@ def _exec_bgp(quads: DataFrame,
     return result
 
 
-def _cmp_col(var: str, op: str, value) -> F.Column:
-    """``?var op value``: a number compares with the numeric cast, a
-    variable column to column, any other term by rendered identity."""
-    c = F.col(var)
-    if isinstance(value, float):
-        lhs, rhs = _numeric(c), F.lit(value)
-    else:
-        lhs = c
-        rhs = F.col(value.name) if isinstance(value, Var) else F.lit(value)
-    return {"=": lhs == rhs, "!=": lhs != rhs, "<": lhs < rhs,
-            "<=": lhs <= rhs, ">": lhs > rhs, ">=": lhs >= rhs}[op]
-
-
-def _apply_filter(result: DataFrame, var: str, op: str, value) -> DataFrame:
-    if var not in result.columns:
-        raise SparqlError(f"FILTER references unbound variable ?{var}")
-    return result.where(_cmp_col(var, op, value))
-
-
-def _filter_tree_vars(node) -> set[str]:
-    """Variables referenced by a FILTER-expression tree (used to check
-    IF conditions at BIND sites the same way plain exprs are checked)."""
-    kind = node[0]
-    if kind in ("or", "and"):
-        return set().union(*[_filter_tree_vars(s) for s in node[1]])
-    if kind == "not":
-        return _filter_tree_vars(node[1])
-    if kind == "strfn_expr":
-        return _expr_vars(node[2])
-    if kind == "regex_expr":
-        return _expr_vars(node[1])
-    if kind in ("strfn", "isa"):
-        return {node[2]}
-    out = {node[1]}
-    if kind == "cmp" and isinstance(node[3], Var):
-        out.add(node[3].name)
-    return out
+def _nodes(e: Expr):
+    """``e`` and every expression below it (not into aggregates)."""
+    yield e
+    for x in e[1:]:
+        for sub in (x if isinstance(x, list) else [x]):
+            if isinstance(sub, tuple):
+                yield from _nodes(sub)
 
 
 def _expr_vars(e: Expr) -> set[str]:
-    if e[0] == "var":
-        return {e[1]}
-    if e[0] == "cond":
-        return _filter_tree_vars(e[1])
-    if e[0] == "call":
-        return set().union(*[_expr_vars(a) for a in e[2]]) if e[2] else set()
-    if e[0] == "arith":
-        return _expr_vars(e[2]) | _expr_vars(e[3])
-    return set()
+    return {n[1] for n in _nodes(e) if n[0] == "var"}
+
+
+def _has_agg(e: Expr) -> bool:
+    return any(n[0] == "agg" for n in _nodes(e))
+
+
+def _check_bound(e: Expr, columns: list[str], what: str) -> None:
+    missing = sorted(_expr_vars(e) - set(columns))
+    if missing:
+        raise SparqlError(f"{what} references unbound variables {missing}")
 
 
 def _unrender(term: str) -> str:
@@ -1672,33 +1499,120 @@ def _escape_lit(col: F.Column) -> F.Column:
     return col
 
 
-def _expr_compile(e: Expr) -> tuple[F.Column, str]:
-    """Compile a BIND expression to ``(column, kind)`` with kind one of
-    ``term`` (rendered RDF term), ``str`` (plain string), ``num``
-    (double), ``iri`` (plain IRI string)."""
-    def lex(arg: Expr) -> F.Column:
-        c, k = _expr_compile(arg)
-        if k == "term":
-            return _lexical(c)
-        if k == "num":
-            return c.cast("string")
+def _lex(e: Expr) -> F.Column:
+    """An expression's lexical form (plain string)."""
+    c, k = _expr_compile(e)
+    if k == "term":
+        return _lexical(c)
+    return c.cast("string") if k in ("num", "bool") else c
+
+
+def _num(e: Expr, compiled: Optional[tuple] = None) -> F.Column:
+    """An expression as a double: a number token is its value, a term
+    is the try_cast of its lexical form (null when not a number)."""
+    if e[0] == "num":
+        return F.lit(e[2])
+    c, k = compiled or _expr_compile(e)
+    if k == "num":
         return c
+    return _numeric(c) if k == "term" else c.try_cast("double")
 
-    def num(arg: Expr) -> F.Column:
-        c, k = _expr_compile(arg)
-        if k == "num":
-            return c
-        return _numeric(c) if k == "term" else c.try_cast("double")
 
+def _string_arg(e: Expr, func: str) -> str:
+    if e[0] != "const":
+        raise SparqlError(f"{func.upper()} needs a string literal argument")
+    return _unrender(e[1])
+
+
+def _bool(e: Expr) -> F.Column:
+    """A FILTER, IF or HAVING condition as a boolean Column."""
+    c, k = _expr_compile(e)
+    if k != "bool":
+        raise SparqlError("a condition must be a comparison, IN, a boolean "
+                          "function or && || ! over them")
+    return c
+
+
+_LANG_TAG = r'@([A-Za-z0-9-]+)$'
+
+
+def _compare(op: str, left: Expr, right: Expr) -> F.Column:
+    """``left op right``: against a number both sides compare by
+    value, otherwise two terms compare by their rendered strings.
+    ``LANG(e) = "tag"`` matches literals only, case-insensitively."""
+    for a, b in ((left, right), (right, left)):
+        if (op in ("=", "!=") and a[:2] == ("call", "lang")
+                and b[0] == "const"
+                and re.fullmatch(r'"[A-Za-z0-9-]*"', b[1])):
+            t = _expr_term(a[2][0])
+            tag = F.lower(F.regexp_extract(t, _LANG_TAG, 1))
+            eq = t.startswith('"') & (tag == b[1][1:-1].lower())
+            return eq if op == "=" else ~eq
+    lc, rc = _expr_compile(left), _expr_compile(right)
+    if "num" in (left[0], right[0], lc[1], rc[1]):
+        lhs, rhs = _num(left, lc), _num(right, rc)
+    else:
+        lhs, rhs = _render(*lc), _render(*rc)
+    return {"=": lhs == rhs, "!=": lhs != rhs, "<": lhs < rhs,
+            "<=": lhs <= rhs, ">": lhs > rhs, ">=": lhs >= rhs}[op]
+
+
+def _expr_compile(e: Expr) -> tuple[F.Column, str]:
+    """Compile an expression to ``(column, kind)`` with kind one of
+    ``term`` (rendered RDF term), ``str`` (plain string), ``num``
+    (double), ``iri`` (plain IRI string) or ``bool``.  Aggregates are
+    hoisted to columns before this runs (:func:`_exec_select`)."""
+    lex, num = _lex, _num
     if e[0] == "var":
         return F.col(e[1]), "term"
-    if e[0] == "const":
+    if e[0] in ("const", "num"):
         return F.lit(e[1]), "term"
     if e[0] == "arith":
         op, l, r = e[1], num(e[2]), num(e[3])
         col = {"+": l + r, "-": l - r, "*": l * r, "/": l / r}[op]
         return col, "num"
+    if e[0] in ("or", "and"):
+        cols = [_bool(sub) for sub in e[1]]
+        out = cols[0]
+        for c in cols[1:]:
+            out = (out | c) if e[0] == "or" else (out & c)
+        return out, "bool"
+    if e[0] == "not":
+        # SPARQL !E is true only where E evaluates false (an unbound
+        # operand is an error, not true) — Column ~ has exactly the
+        # three-valued behavior we want (~null = null = filtered out)
+        return ~_bool(e[1]), "bool"
+    if e[0] == "cmp":
+        return _compare(*e[1:]), "bool"
+    if e[0] == "in":
+        # the expansion e = m1 || e = m2 || …: an all-numeric list
+        # compares by value (like _compare), others by rendered term
+        if all(m[0] == "num" for m in e[2]):
+            return num(e[1]).isin([m[2] for m in e[2]]), "bool"
+        return _expr_term(e[1]).isin([_expr_term(m) for m in e[2]]), "bool"
     func, args = e[1], e[2]
+    if func == "regex":
+        pat = _string_arg(args[1], func)
+        flags = _string_arg(args[2], func) if len(args) == 3 else ""
+        return lex(args[0]).rlike(f"(?{flags}){pat}" if flags else pat), \
+            "bool"
+    if func in ("contains", "strstarts", "strends"):
+        lit = _string_arg(args[1], func)
+        c = lex(args[0])
+        return {"contains": c.contains, "strstarts": c.startswith,
+                "strends": c.endswith}[func](lit), "bool"
+    if func == "bound":
+        return F.col(args[0][1]).isNotNull(), "bool"
+    if func in ("isiri", "isuri"):
+        t = _expr_term(args[0])
+        # a quoted triple also starts with "<" — exclude it
+        return t.startswith("<") & ~t.rlike(UNQUOTE_RE), "bool"
+    if func == "isliteral":
+        return _expr_term(args[0]).startswith('"'), "bool"
+    if func == "isblank":
+        return _expr_term(args[0]).startswith("_:"), "bool"
+    if func == "istriple":  # SPARQL-star isTRIPLE
+        return _expr_term(args[0]).rlike(UNQUOTE_RE), "bool"
     if func == "concat":
         return F.concat(*[lex(a) for a in args]), "str"
     if func == "str":
@@ -1761,17 +1675,13 @@ def _expr_compile(e: Expr) -> tuple[F.Column, str]:
     if func == "coalesce":
         return F.coalesce(*[_expr_term(a) for a in args]), "term"
     if func == "if":
-        # args[0] is ('cond', filter_tree) from the parser;
-        # result_cols=None → boundness was checked at the BIND site
-        cond = _filter_col(args[0][1], None)
-        return (F.when(cond, _expr_term(args[1]))
+        return (F.when(_bool(args[0]), _expr_term(args[1]))
                 .otherwise(_expr_term(args[2]))), "term"
     if func == "lang":
         t = _expr_term(args[0])
         # LANG of a non-literal is a type error → unbound (null); a
         # literal without a tag yields "" (SPARQL 1.1 §17.4.2.6)
-        return (F.when(t.startswith('"'),
-                       F.regexp_extract(t, r'@([A-Za-z0-9-]+)$', 1))
+        return (F.when(t.startswith('"'), F.regexp_extract(t, _LANG_TAG, 1))
                 .otherwise(F.lit(None).cast("string"))), "str"
     if func == "datatype":
         t = _expr_term(args[0])
@@ -1803,22 +1713,23 @@ def _expr_compile(e: Expr) -> tuple[F.Column, str]:
         # type error (not a quoted triple) -> unbound (null)
         return F.nullif(F.regexp_extract(t, UNQUOTE_RE, idx),
                         F.lit("")), "term"
-    if func == "istriple":
-        t = _expr_term(args[0])
-        return (F.when(t.isNull(), F.lit(None).cast("string"))
-                .when(t.rlike(UNQUOTE_RE), F.lit("true"))
-                .otherwise(F.lit("false"))), "str"
     raise SparqlError(f"unsupported function {func!r}")  # pragma: no cover
 
 
 def _expr_term(e: Expr) -> F.Column:
-    """A BIND expression as a *rendered term* column (what the solution
+    """An expression as a *rendered term* column (what the solution
     DataFrame carries)."""
-    col, kind = _expr_compile(e)
+    return _render(*_expr_compile(e))
+
+
+def _render(col: F.Column, kind: str) -> F.Column:
     if kind == "term":
         return col
     if kind == "iri":
         return F.concat(F.lit("<"), col, F.lit(">"))
+    if kind == "bool":
+        return F.concat(F.lit('"'), col.cast("string"),
+                        F.lit(f'"^^<{_XSD}boolean>'))
     if kind == "num":
         col = col.cast("string")
     else:
@@ -1919,13 +1830,11 @@ def _exec_group(quads: DataFrame, g: GroupPattern,
     for expr, name in g.binds:
         if name in result.columns:
             raise SparqlError(f"BIND target ?{name} is already bound")
-        missing = [v for v in sorted(_expr_vars(expr))
-                   if v not in result.columns]
-        if missing:
-            raise SparqlError(f"BIND references unbound variables {missing}")
+        _check_bound(expr, result.columns, "BIND")
         result = result.withColumn(name, _expr_term(expr))
-    for node in g.filters:
-        result = result.where(_filter_col(node, result.columns))
+    for expr in g.filters:
+        _check_bound(expr, result.columns, "FILTER")
+        result = result.where(_bool(expr))
     for negated, eg in g.exists:
         sub = _exec_group(quads, eg, graph_term)
         shared = [c for c in result.columns if c in sub.columns]
@@ -1952,12 +1861,10 @@ def sparql_ask(quads: DataFrame, query: str) -> bool:
     return _exec_group(quads, group).limit(1).count() > 0
 
 
-def _agg_expr(a: AggExpr) -> F.Column:
-    # the aggregation input: a bound variable's rendered term, or a
-    # computed expression rendered to a term (so every branch below
-    # sees the same rendered-term shape either way)
-    src = _expr_term(a.expr) if a.expr is not None else (
-        F.col(a.var) if a.var is not None else None)
+def _agg_expr(a: AggExpr, alias: str) -> F.Column:
+    # the aggregation input rendered to a term (a bound variable is
+    # its column), so every branch below sees the same shape
+    src = None if a.arg is None else _expr_term(a.arg)
     if a.func == "count":
         if src is None:
             e = F.count(F.lit(1))
@@ -1993,7 +1900,7 @@ def _agg_expr(a: AggExpr) -> F.Column:
             key = F.struct(num.isNotNull().cast("int").alias("nn"),
                            num.alias("num"), _lexical(c).alias("lex"))
             e = F.max(key).getField("lex")
-    return e.alias(a.alias)
+    return e.alias(alias)
 
 
 def _exec_select(quads: DataFrame, q: SelectQuery,
@@ -2026,58 +1933,50 @@ def _exec_select(quads: DataFrame, q: SelectQuery,
 
     result = _exec_group(quads, q.group, graph_term)
 
-    # normalize ORDER BY keys: variables sort in place; aggregate keys
-    # become hidden aggregate outputs; scalar expressions become
-    # hidden computed columns — hidden columns ride along until after
-    # the sort, then drop (a project below a sort preserves ordering)
-    norm_order: list[tuple[str, bool, object]] = []
-    agg_order: list[AggExpr] = []
+    # one aggregate-hoisting pass: every aggregate in the projection,
+    # HAVING and ORDER BY becomes a grouping output and its expression
+    # reads that column.  A bare aggregate projection keeps its alias,
+    # column type and un-lexicalised output; the others are hidden
+    # columns that ride along until after the sort, then drop (a
+    # project below a sort preserves ordering)
+    aggs: list[tuple[AggExpr, str]] = []
     hidden: list[str] = []
-    for idx, (key, desc) in enumerate(q.order_by):
-        if isinstance(key, str):
-            norm_order.append((key, desc, None))
-        elif isinstance(key, AggExpr):
-            h = replace(key, alias=f"__ord{idx}")
-            agg_order.append(h)
-            hidden.append(h.alias)
-            norm_order.append((h.alias, desc, None))
-        else:
-            name = f"__ord{idx}"
-            hidden.append(name)
-            norm_order.append((name, desc, key))
-    if agg_order and not (q.aggregates or q.group_by):
-        raise SparqlError(
-            "aggregate ORDER BY keys require GROUP BY or an "
-            "aggregated projection")
 
-    agg_outputs: set[str] = set()
-    if q.aggregates or q.group_by or q.having_aggs:
+    def hoist(e: Expr) -> Expr:
+        if e[0] == "agg":
+            hidden.append(f"__agg{len(aggs)}")
+            aggs.append((e[1], hidden[-1]))
+            return ("var", hidden[-1])
+        return tuple(hoist(x) if isinstance(x, tuple) else
+                     [hoist(y) for y in x] if isinstance(x, list) else x
+                     for x in e)
+
+    extends: list[tuple[str, Expr]] = []
+    for alias, expr in q.select_exprs:
+        if expr[0] == "agg":
+            aggs.append((expr[1], alias))
+        else:
+            extends.append((alias, hoist(expr)))
+    agg_outputs = {alias for alias, e in q.select_exprs if e[0] == "agg"}
+    having = [hoist(h) for h in q.having]
+    order = [(hoist(key), desc) for key, desc in q.order_by]
+
+    if aggs or q.group_by:
         # GROUP BY (expr AS ?v): extend BEFORE grouping (§18.2.4.1)
         for gexpr, gname in q.group_exprs:
             if gname in result.columns:
                 raise SparqlError(
                     f"GROUP BY alias ?{gname} is already bound")
-            gmissing = [v for v in sorted(_expr_vars(gexpr))
-                        if v not in result.columns]
-            if gmissing:
-                raise SparqlError(
-                    f"GROUP BY expression references unbound "
-                    f"variables {gmissing}")
+            _check_bound(gexpr, result.columns, "GROUP BY expression")
             result = result.withColumn(gname, _expr_term(gexpr))
-        all_aggs = [*q.aggregates, *agg_order, *q.having_aggs]
-        hidden.extend(a.alias for a in q.having_aggs)
-        agg_vars = []
-        for a in all_aggs:
-            if a.expr is not None:
-                agg_vars += sorted(_expr_vars(a.expr))
-            elif a.var is not None:
-                agg_vars.append(a.var)
-        missing = [v for v in q.group_by if v not in result.columns] + \
-            [v for v in agg_vars if v not in result.columns]
+        missing = [v for v in q.group_by if v not in result.columns]
         if missing:
             raise SparqlError(
                 f"aggregation references unbound variables {missing}")
-        exprs = [_agg_expr(a) for a in all_aggs]
+        for a, _ in aggs:
+            if a.arg is not None:
+                _check_bound(a.arg, result.columns, "aggregation")
+        exprs = [_agg_expr(a, name) for a, name in aggs]
         # grouping keys are the *rendered* terms (SPARQL groups by RDF
         # term identity); the keys are lexical-stripped on output below
         if not exprs:
@@ -2086,39 +1985,34 @@ def _exec_select(quads: DataFrame, q: SelectQuery,
         else:
             result = (result.groupBy(*q.group_by).agg(*exprs)
                       if q.group_by else result.agg(*exprs))
-        agg_outputs = {a.alias for a in q.aggregates}
-        for var, op, value in q.having:
-            result = _apply_filter(result, var, op, value)
+        for cond in having:
+            _check_bound(cond, result.columns, "HAVING")
+            result = result.where(_bool(cond))
 
     # scalar select expressions (§18.2.4.4 Extend): after grouping so
     # they can reference aggregate aliases, before ORDER BY so sort
     # keys can reference them
-    for alias, expr in q.select_exprs:
+    for alias, expr in extends:
         if alias in result.columns:
             raise SparqlError(f"select expression rebinds ?{alias}")
-        missing = [v for v in sorted(_expr_vars(expr))
-                   if v not in result.columns]
-        if missing:
-            raise SparqlError(
-                f"select expression references unbound variables {missing}")
+        _check_bound(expr, result.columns, "select expression")
         result = result.withColumn(alias, _expr_term(expr))
 
-    for name, _, expr in norm_order:
-        if expr is None:
+    # a variable key sorts in place; any other key is a hidden column
+    sort_keys: list[tuple[str, bool]] = []
+    for idx, (key, desc) in enumerate(order):
+        if key[0] == "var":
+            sort_keys.append((key[1], desc))
             continue
-        missing = [v for v in sorted(_expr_vars(expr))
-                   if v not in result.columns]
-        if missing:
-            raise SparqlError(
-                f"ORDER BY references unbound variables {missing}")
-        result = result.withColumn(name, _expr_term(expr))
+        _check_bound(key, result.columns, "ORDER BY")
+        hidden.append(f"__ord{idx}")
+        result = result.withColumn(hidden[-1], _expr_term(key))
+        sort_keys.append((hidden[-1], desc))
 
     out_vars = q.variables or [c for c in result.columns
                                if c != "__one" and c not in hidden]
     missing = [v for v in out_vars if v not in result.columns] + \
-        [name for name, _, expr in norm_order
-         if expr is None and name not in result.columns
-         and name not in hidden]
+        [name for name, _ in sort_keys if name not in result.columns]
     if missing:
         raise SparqlError(f"projection references unbound variables {missing}")
     result = result.select(*out_vars, *hidden)
@@ -2135,13 +2029,13 @@ def _exec_select(quads: DataFrame, q: SelectQuery,
         # projection alone is value-safe
         result = (result.dropDuplicates(out_vars) if hidden
                   else result.distinct())
-    if norm_order:
+    if sort_keys:
         # numeric-aware ordering: each key sorts by (numeric cast,
         # lexical form) so numeric bindings order numerically ('2' <
         # '10') while non-numeric bindings (null numeric key) keep a
         # deterministic lexical order among themselves
         keys = []
-        for name, d, _ in norm_order:
+        for name, d in sort_keys:
             num = _numeric(F.col(name))
             keys.append(num.desc() if d else num.asc())
             keys.append(F.col(name).desc() if d else F.col(name).asc())

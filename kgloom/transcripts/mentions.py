@@ -1,14 +1,7 @@
 """Mention detection + entity-link scoring over transcript text.
 
-Two interchangeable implementations of detection:
-
-- ``detect_mentions(..., use_arrow=False)`` — pure Catalyst:
-  ``regexp_extract_all`` + ``explode``; whole-stage-codegen'd JVM path,
-  the default for the regex-pattern grammar.
-- ``use_arrow=True`` — Arrow-vectorized pandas UDF (`mapInPandas`-style
-  batched extraction).  Same output; this is the slot where a real NLP
-  mention model (which can't be a regex) would plug in, per the
-  north-star requirement of *batched* Arrow UDFs, never per-row Python.
+Detection is pure Catalyst: ``regexp_extract_all`` + ``explode``, a
+whole-stage-codegen'd JVM path with no Python worker.
 
 Entity-link scoring is a Catalyst expression producing a
 deterministic confidence in [0,1] per (surface, candidate) pair.
@@ -16,29 +9,18 @@ deterministic confidence in [0,1] per (surface, candidate) pair.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 #: one alternation covering every surface-form variant the generator
 #: emits (kgloom/transcripts/generate.py VARIANT_FMTS)
 MENTION_PATTERN = r"(?:Entity_[0-9]+|entity [0-9]+|E-[0-9]+|ENT:[0-9]+)"
 
-_MENTION_RE = re.compile(MENTION_PATTERN)
 
-
-def detect_mentions(turns: DataFrame, use_arrow: bool = False) -> DataFrame:
+def detect_mentions(turns: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, text, ...) → one row per mention occurrence:
     (conv_id, turn_idx, surface, norm_key)."""
-    if use_arrow:
-        extract = F.pandas_udf(
-            lambda s: s.map(lambda v: _MENTION_RE.findall(v or "")),
-            ArrayType(StringType()))
-        surfaces = extract(F.col("text"))
-    else:
-        surfaces = F.regexp_extract_all("text", F.lit(MENTION_PATTERN), 0)
+    surfaces = F.regexp_extract_all("text", F.lit(MENTION_PATTERN), 0)
     out = (turns
            .select("conv_id", "turn_idx",
                    F.explode(surfaces).alias("surface"))

@@ -156,11 +156,10 @@ class PipelineResult:
 class TranscriptPipeline:
     def __init__(self, spark: SparkSession, store_root: str,
                  shuffle_partitions: Optional[int] = None,
-                 salt_buckets: int = 16, use_arrow_mentions: bool = False):
+                 salt_buckets: int = 16):
         self.spark = spark
         self.store = SnapshotStore(spark, store_root)
         self.salt_buckets = salt_buckets
-        self.use_arrow_mentions = use_arrow_mentions
         if shuffle_partitions:
             spark.conf.set("spark.sql.shuffle.partitions",
                            str(shuffle_partitions))
@@ -237,8 +236,7 @@ class TranscriptPipeline:
 
         m_snap = self._stage(
             "mentions", parents=[in_snap.snapshot_id],
-            build=lambda: detect_mentions(
-                turns, use_arrow=self.use_arrow_mentions),
+            build=lambda: detect_mentions(turns),
             resume=resume)
         mentions = self.store.read("mentions")
 
@@ -332,7 +330,6 @@ def main() -> None:
     p.add_argument("--master", default="local[*]")
     p.add_argument("--shuffle-partitions", type=int, default=32)
     p.add_argument("--resume", action="store_true")
-    p.add_argument("--arrow-mentions", action="store_true")
     p.add_argument("--driver-memory", default="24g")
     args = p.parse_args()
 
@@ -346,8 +343,7 @@ def main() -> None:
              .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     pipe = TranscriptPipeline(spark, args.root,
-                              shuffle_partitions=args.shuffle_partitions,
-                              use_arrow_mentions=args.arrow_mentions)
+                              shuffle_partitions=args.shuffle_partitions)
     transcripts = None if args.resume else generate_transcripts(
         spark, args.turns, n_convs=args.convs)
     result = pipe.run(transcripts=transcripts, resume=args.resume)

@@ -105,10 +105,13 @@ def test_document_lines_and_determinism(spark):
 
 
 def test_ntriples_only_escapes_emit_valid_json(spark):
-    """\\' and \\UXXXXXXXX are N-Triples escapes JSON lacks: every
+    """\\' and \\UXXXXXXXX are N-Triples escapes JSON lacks: read through
+    the N-Quads reader (which writes literals in canonical form), every
     emitted line still parses, to the literal's own characters,
     whatever the literal's kind; an escaped backslash before ' or U
     stays an escaped backslash."""
+    from kgloom.exec.rdfsource import parse_nquads_lines
+
     s, p = "<http://ex.org/s>", "<http://ex.org/p>"
     objs = {
         '"it\\\'s \\U0001F600"': "it's \U0001F600",
@@ -116,8 +119,8 @@ def test_ntriples_only_escapes_emit_valid_json(spark):
         '"\\U0010FFFF\\\'"^^<http://ex.org/dt>': "\U0010FFFF'",
         '"a\\\\\' \\\\U0001F600"': "a\\' \\U0001F600",
     }
-    df = spark.createDataFrame([(s, p, o) for o in objs],
-                               ["subj", "pred", "obj"])
+    df = parse_nquads_lines(spark.createDataFrame(
+        [(f"{s} {p} {o} .",) for o in objs], "value string"))
     lines = [r.value for r in jsonld_document_lines(df).collect()]
     assert len(lines) == 1
     values = json.loads(lines[0])["http://ex.org/p"]

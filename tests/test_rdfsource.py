@@ -31,8 +31,8 @@ EXPECT = [
     ("<http://ex.com/s>", "<http://ex.com/name>", '"Alice Smith"', None),
     ("<http://ex.com/s>", "<http://ex.com/says>",
      '"hi \\"there\\" . bye"', None),
-    ("<http://ex.com/s>", "<http://ex.com/label>",
-     '"caf\\u00e9"@en-GB', None),
+    # \uXXXX decodes: literals are read in canonical form
+    ("<http://ex.com/s>", "<http://ex.com/label>", '"café"@en-GB', None),
     ("<http://ex.com/s>", "<http://ex.com/age>",
      '"30"^^<http://www.w3.org/2001/XMLSchema#integer>', None),
     ("<http://ex.com/s>", "<http://ex.com/p>", "<http://ex.com/o2>",
@@ -82,6 +82,21 @@ def test_parse_is_codegen_only(spark):
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
     assert "EvalPython" not in plan
+
+
+def test_literals_read_in_canonical_form(spark):
+    """N-Triples escapes decode on read, so a dump's literal equals the
+    SPARQL constant for the same text; only the serializer's five
+    escapes are re-escaped (an escaped backslash stays one)."""
+    from kgloom.sparql import sparql_select
+    lines = [r'<http://s> <http://p> "\u0041" .',
+             r'<http://s> <http://q> "it\'s \U0001F600 \u000A\u0022 \\u0041 '
+             r'\b"@en .']
+    quads = parse_nquads_lines(_lines_df(spark, lines))
+    assert sorted(r.obj for r in quads.collect()) == [
+        '"A"', '"it\'s \U0001F600 \\n\\" \\\\u0041 \b"@en']
+    rows = sparql_select(quads, 'SELECT ?s WHERE { ?s <http://p> "A" }')
+    assert [r.s for r in rows.collect()] == ["http://s"]
 
 
 def test_roundtrip_preserves_turn_text_escapes(spark):

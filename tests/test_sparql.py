@@ -1,12 +1,15 @@
 """SPARQL SELECT subset over quad DataFrames (kgloom/sparql.py) —
 makes the reference's enum-only SPARQL formulation executable."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from kgloom.sparql import SparqlError, parse_sparql, sparql_select
 
 EX = "http://ex.com/"
+FIXTURES = Path(__file__).parent / "fixtures"
 
 
 @pytest.fixture(scope="module")
@@ -696,9 +699,13 @@ def test_aggregate_expression_unbound_errors(quads):
         sparql_select(quads, f"""PREFIX ex: <{EX}>
             SELECT (SUM(?nope + 1) AS ?x)
             WHERE {{ ?s ex:age ?age }}""")
-    with pytest.raises(SparqlError):  # arithmetic around an aggregate
+    with pytest.raises(SparqlError):  # an aggregate outside a projection
         sparql_select(quads, f"""PREFIX ex: <{EX}>
-            SELECT (SUM(?age) + 1 AS ?x)
+            SELECT ?s WHERE {{ ?s ex:age ?age
+                               FILTER(SUM(?age) > 1) }}""")
+    with pytest.raises(SparqlError):  # an aggregate inside an aggregate
+        sparql_select(quads, f"""PREFIX ex: <{EX}>
+            SELECT (SUM(COUNT(?age)) AS ?x)
             WHERE {{ ?s ex:age ?age }}""")
 
 
@@ -1335,6 +1342,68 @@ def test_filter_is_tests_and_lang(quads):
         SELECT ?s WHERE {{ ?s ex:age ?a . FILTER(LANG(?a) != "en") }}
     """).collect()
     assert len(rows) == 3  # plain literals have no lang tag
+
+
+def test_filter_expression_operands(quads):
+    """A comparison takes an expression on either side; a number on
+    either side compares by value."""
+    def subjects(cond, pattern="?s ex:age ?o"):
+        return sorted(r.s for r in sparql_select(quads, f"""
+            PREFIX ex: <{EX}>
+            SELECT ?s WHERE {{ {pattern} FILTER({cond}) }}""").collect())
+    # lexical lengths: <…/bob> is 17 characters, "Bob" 3
+    assert subjects("STRLEN(?o) > 3", "?s ex:knows|ex:name ?o") == \
+        [EX + "alice"]
+    assert subjects("26 < ?o") == [EX + "alice", EX + "carol"]
+    assert subjects("?o + 1 = 26") == [EX + "bob"]
+    assert subjects("?o * 2 >= 60 && !(?o IN (41))") == [EX + "alice"]
+    assert subjects("UCASE(?o) = \"BOB\"", "?s ex:name ?o") == [EX + "bob"]
+    with pytest.raises(SparqlError, match="unbound"):
+        subjects("STRLEN(?nope) > 1")
+
+
+def test_having_conjunction_and_aggregate_arithmetic(quads):
+    """HAVING (… && …) and arithmetic over aggregates in the
+    projection: alice and bob have 3 triples, carol 1."""
+    def rows(tail, proj="?s"):
+        return [tuple(r) for r in sparql_select(quads, f"""
+            SELECT {proj} WHERE {{ ?s ?p ?o }} GROUP BY ?s {tail}
+            """).collect()]
+    assert sorted(rows("HAVING (COUNT(?o) > 1 && COUNT(?o) < 5)")) == \
+        [(EX + "alice",), (EX + "bob",)]
+    assert rows("HAVING (COUNT(?o) >= 1 && COUNT(?o) < 3)") == \
+        [(EX + "carol",)]
+    assert sorted(rows("", "?s (COUNT(?o)*2 AS ?n)")) == [
+        (EX + "alice", "6.0"), (EX + "bob", "6.0"), (EX + "carol", "2.0")]
+    # count minus IRI length: bob 3 - 17, alice 3 - 19, carol 1 - 19
+    assert rows("ORDER BY DESC(COUNT(?o) - STRLEN(?s))",
+                "?s (COUNT(?o) AS ?n)") == [
+        (EX + "bob", 3), (EX + "alice", 3), (EX + "carol", 1)]
+    total = sparql_select(quads, f"""PREFIX ex: <{EX}>
+        SELECT (SUM(?age) + 1 AS ?x) WHERE {{ ?s ex:age ?age }}""")
+    assert [r.x for r in total.collect()] == ["97.0"]
+
+
+def test_bare_number_is_a_typed_literal(spark, quads):
+    """A bare number is an xsd:integer / xsd:decimal term in patterns
+    and VALUES, and still compares by value in a FILTER."""
+    from kgloom.engine import run_rml_file
+    case = str(FIXTURES / "rml" / "json_null_datatype")
+    kg = run_rml_file(spark, f"{case}/mapping.ttl", base_dir=case)
+    rows = sparql_select(kg, "SELECT ?s WHERE { "
+                             "?s <http://example.com/age> 30 }").collect()
+    assert [r.s for r in rows] == ["http://example.com/person/1"]
+    rows = sparql_select(kg, "SELECT ?s ?a WHERE { ?s "
+                             "<http://example.com/age> ?a VALUES ?a { 30 } }",
+                         raw_terms=True).collect()
+    assert [r.a for r in rows] == [
+        '"30"^^<http://www.w3.org/2001/XMLSchema#integer>']
+    # the plain "30" of the fixture quads still passes a numeric FILTER
+    rows = sparql_select(quads, f"""PREFIX ex: <{EX}>
+        SELECT ?s ?d WHERE {{ ?s ex:age ?a FILTER(?a = 30)
+                              BIND(2.5 AS ?d) }}""", raw_terms=True)
+    assert [(r.s, r.d) for r in rows.collect()] == [
+        (f"<{EX}alice>", '"2.5"^^<http://www.w3.org/2001/XMLSchema#decimal>')]
 
 
 def test_negated_property_set_forward(quads):

@@ -8,10 +8,17 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from kgloom.sparql import SparqlError, _Parser, parse_sparql
+from kgloom.sparql import AggExpr, SparqlError, _Parser, parse_sparql
 
 #: stands in for the content under test; occurs in no other tree leaf
 TWIN = "zq0"
+XSD = "http://www.w3.org/2001/XMLSchema#"
+O, S = ("var", "o"), ("var", "s")
+
+
+def _num(lexical: str, value: float, dtype: str = "integer"):
+    """The expression node of a number token."""
+    return ("num", f'"{lexical}"^^<{XSD}{dtype}>', value)
 
 
 def _replaced(tree, old: str, new: str):
@@ -92,7 +99,7 @@ def test_parenthesis_inside_iri_is_content():
     q = _parses_like_twin(
         parse_sparql,
         "SELECT ?s WHERE { ?s <p> ?o FILTER(?o = <http://e/@I@>) }", I="a(b")
-    assert q.filters == [("cmp", "o", "=", "<http://e/a(b>")]
+    assert q.filters == [("cmp", "=", O, ("const", "<http://e/a(b>"))]
 
 
 def test_where_brace_inside_projection_literal_is_content():
@@ -110,12 +117,14 @@ def test_filter_values_are_resolved_terms():
           ?s ex:p ?o . FILTER(?o != ex:z && ?o > -2.5 && ?o = ?s)
           BIND(IF(?o = "x"@en, 1, 2) AS ?b)
         } GROUP BY ?s HAVING (?s != ex:y) (COUNT(?o) >= 2)""")
-    assert q.filters[0] == ("and", [("cmp", "o", "!=", "<http://ex/z>"),
-                                    ("cmp", "o", ">", -2.5),
-                                    ("cmp", "o", "=", q.patterns[0][0])])
-    assert q.group.binds[0][0][2][0] == (
-        "cond", ("cmp", "o", "=", '"x"@en'))
-    assert q.having == [("s", "!=", "<http://ex/y>"), ("__hv0", ">=", 2.0)]
+    assert q.filters[0] == ("and", [
+        ("cmp", "!=", O, ("const", "<http://ex/z>")),
+        ("cmp", ">", O, _num("-2.5", -2.5, "decimal")),
+        ("cmp", "=", O, S)])
+    assert q.group.binds[0][0][2][0] == ("cmp", "=", O, ("const", '"x"@en'))
+    assert q.having == [
+        ("cmp", "!=", S, ("const", "<http://ex/y>")),
+        ("cmp", ">=", ("agg", AggExpr("count", O, False)), _num("2", 2.0))]
 
 
 def test_prefixed_name_stops_before_the_triple_dot():
@@ -133,8 +142,12 @@ def test_literal_escapes_decode_once():
 
 def test_every_having_condition_is_kept():
     q = parse_sparql("SELECT ?s WHERE { ?s <p> ?o } GROUP BY ?s "
-                     "HAVING (?s > 1) (?s < 5)")
-    assert q.having == [("s", ">", 1.0), ("s", "<", 5.0)]
+                     "HAVING (?s > 1) (?s < 5) (COUNT(?o) > 1 && ?s != 3)")
+    count = ("agg", AggExpr("count", O, False))
+    assert q.having == [
+        ("cmp", ">", S, _num("1", 1.0)), ("cmp", "<", S, _num("5", 5.0)),
+        ("and", [("cmp", ">", count, _num("1", 1.0)),
+                 ("cmp", "!=", S, _num("3", 3.0))])]
 
 
 # --- property: keywords and punctuation inside terms never parse -----------
@@ -165,6 +178,11 @@ _FORMS = [
      'WHERE { GRAPH <http://e/@I@> { ?s ?p ?o } '
      'FILTER(REGEX(?o, "@L@") || CONTAINS(STR(?o), "@L@")) } '
      'GROUP BY ?s HAVING (?s != <http://e/@I@>)'),
+    (parse_sparql, 'SELECT ?s (COUNT(?o) * 2 AS ?n) WHERE { ?s ?p ?o '
+     'FILTER(STRLEN(CONCAT(?o, "@L@")) > 3 && 3 < ?o + 1 '
+     '&& UCASE(?o) NOT IN ("@L@", <http://e/@I@>)) } GROUP BY ?s '
+     'HAVING (COUNT(?o) > 1 && MIN(?o) != "@L@") '
+     'ORDER BY DESC(MAX(CONCAT(?o, "@L@")))'),
     (_form(_Parser.ask), 'ASK { ?s <http://e/@I@> "@L@" '
      'MINUS { ?s ?p "@L@" } FILTER(?s IN (<http://e/@I@>, "@L@")) }'),
     (_construct, 'CONSTRUCT { ?s <http://e/@I@> "@L@" } '

@@ -1,12 +1,15 @@
 """North-rule pipeline tests: determinism, invariants, ER correctness,
 checkpoint/resume with lineage (SURVEY.md §5 our-test-plan items c/d)."""
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
 from kgloom.transcripts.er import canonical_map, connected_components
 from kgloom.transcripts.generate import generate_transcripts
-from kgloom.transcripts.mentions import detect_mentions, normalize_surface
+from kgloom.transcripts.mentions import (MENTION_PATTERN, detect_mentions,
+                                         normalize_surface)
 from kgloom.transcripts.pipeline import TranscriptPipeline, ordered_turns
 
 N_TURNS = 3000
@@ -49,13 +52,19 @@ def test_ts_monotone_within_conversation(turns):
     assert bad == 0
 
 
-def test_mention_detection_both_paths(spark, turns):
-    jvm = detect_mentions(turns, use_arrow=False)
-    arrow = detect_mentions(turns, use_arrow=True)
-    assert jvm.count() > N_TURNS  # ≥1 mention/turn, some have 2
-    assert set(map(tuple, jvm.collect())) == set(map(tuple, arrow.collect()))
+def test_mention_detection_matches_driver_regex(spark, turns):
+    """The Catalyst rows equal the same pattern run by Python's ``re``
+    over the collected turns, occurrence for occurrence."""
+    got = detect_mentions(turns)
+    rows = sorted(map(tuple, got.collect()))
+    want = sorted(
+        (t.conv_id, t.turn_idx, s, re.sub("[^0-9]", "", s.lower()))
+        for t in turns.select("conv_id", "turn_idx", "text").collect()
+        for s in re.findall(MENTION_PATTERN, t.text or ""))
+    assert len(rows) > N_TURNS  # ≥1 mention/turn, some have 2
+    assert rows == want
     # every mention normalizes to a digit key
-    assert jvm.where(~F.col("norm_key").rlike("^[0-9]+$")).count() == 0
+    assert got.where(~F.col("norm_key").rlike("^[0-9]+$")).count() == 0
 
 
 @pytest.mark.parametrize("driver_max_edges", [2_000_000, 0],
