@@ -8,14 +8,25 @@ and the north-rule transcript derivation.  Every entry has a matching
 ANSI-SQL oracle in ``oracle_sql()`` — including simhash (exact O(n²)
 Hamming oracle; the banded Spark result is provably equal for d+1
 blocks) and the multimodal mapInPandas plumbing (the synthetic asset
-table is regenerable in pure SQL).
+table is regenerable in pure SQL).  ``queries()`` is derived: every
+module-level ``q_<name>`` function is the query ``<name>``.
+
+Derived inputs are built once per side.  The Spark queries share
+``_entity_incidence`` / ``_comention_edges`` (the co-mention graph),
+``_kg_edges`` (the turn KG's IRI→IRI edges), ``_turn_succession`` /
+``_turn_dag`` (the turn-succession DAG), ``_turn_quads`` and
+``_turn_kg_sparql`` (SPARQL over the turn KG).  The oracles share the
+CTE text ``_MENTION_CTES``, ``_kg_edges_sql``, ``_TURN_DAG_CTES`` /
+``_turn_ball_ctes``, ``_TURN_TRIPLES_UNION`` and ``_SHINGLES_CTE``.  A
+Spark helper and an oracle helper never share code or call each other:
+each oracle is an independent SQL replay of what its query computes.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgloom.algebra import (
@@ -272,6 +283,33 @@ def q_transcripts_turn_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("subj", "pred", "obj")
 
 
+def _turn_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The turn KG with a null (default) ``graph`` column."""
+    return q_transcripts_turn_triples(spark, sf_dir).withColumn(
+        "graph", F.lit(None).cast("string"))
+
+
+def _turn_kg_sparql(spark: SparkSession, sf_dir: str, query: str,
+                    kg: DataFrame | None = None, run=None) -> DataFrame:
+    """``query`` with the ``kg:`` prefix declared, run by
+    ``sparql_select`` (or ``run``) over the turn KG (or ``kg``)."""
+    from kgloom.sparql import sparql_select
+    if kg is None:
+        kg = q_transcripts_turn_triples(spark, sf_dir)
+    return (run or sparql_select)(kg, f"PREFIX kg: <{_KGO}>" + query)
+
+
+def _tool_use_annotations(tri: DataFrame) -> DataFrame:
+    """RDF-star provenance ``<< turn usedTool tool >> kg:inConv conv``
+    for every usedTool triple of the turn KG ``tri``."""
+    from kgloom.ops.star import annotate
+    used = tri.where(F.col("pred") == f"<{_KGO}usedTool>")
+    part = (tri.where(F.col("pred") == f"<{_KGO}partOf>")
+            .select("subj", F.col("obj").alias("__conv")))
+    return annotate(used.join(part, "subj"), f"<{_KGO}inConv>",
+                    F.col("__conv"))
+
+
 def q_rdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serializer → parser round trip: the turn KG rendered to N-Quads
     text lines (kgloom/exec/binder.to_nquads_lines) and re-parsed by
@@ -282,9 +320,7 @@ def q_rdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal escaping of the turn text."""
     from kgloom.exec.binder import to_nquads_lines
     from kgloom.exec.rdfsource import parse_nquads_lines
-    triples = q_transcripts_turn_triples(spark, sf_dir).withColumn(
-        "graph", F.lit(None).cast("string"))
-    return (parse_nquads_lines(to_nquads_lines(triples))
+    return (parse_nquads_lines(to_nquads_lines(_turn_quads(spark, sf_dir)))
             .select("subj", "pred", "obj"))
 
 
@@ -387,6 +423,79 @@ def q_transcripts_chat_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Graph inputs shared by the graph queries.  The DuckDB oracles build the
+# same graphs from their own CTE text (_MENTION_CTES, _kg_edges_sql,
+# _TURN_DAG_CTES); the two sides share no code.
+# ---------------------------------------------------------------------------
+
+def _entity_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (conv_id, canonical): the canonical entities (after ER
+    canonicalization) each conversation mentions."""
+    from kgloom.transcripts.er import canonical_map
+    m = detect_mentions(transcripts_from_events(spark, sf_dir))
+    return (m.join(canonical_map(m), "surface")
+            .select("conv_id", "canonical").distinct())
+
+
+def _comention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-mention graph: (src, dst) canonical entities that share a
+    conversation, src < dst."""
+    ents = _entity_incidence(spark, sf_dir)
+    a, b = ents.alias("a"), ents.alias("b")
+    return (a.join(b, "conv_id")
+            .where(F.col("a.canonical") < F.col("b.canonical"))
+            .select(F.col("a.canonical").alias("src"),
+                    F.col("b.canonical").alias("dst")))
+
+
+def _thinned(edges: DataFrame, max_prefix: str) -> DataFrame:
+    """Distinct edges kept by an md5(src|dst) hex-prefix draw — an
+    engine-replayable Bernoulli thinning."""
+    return (edges.distinct()
+            .where(F.substring(F.md5(F.concat_ws("|", "src", "dst")),
+                               1, 2) <= max_prefix))
+
+
+def _kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The turn KG's IRI→IRI edges (partOf + usedTool) as (src, dst)."""
+    triples = q_transcripts_turn_triples(spark, sf_dir)
+    return (triples.where(F.col("obj").startswith("<"))
+            .select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
+
+
+def _tool_nodes(edges: DataFrame) -> DataFrame:
+    """The distinct tool IRIs among ``edges``' targets, as ``node``."""
+    return (edges.select(F.col("dst").alias("node"))
+            .where(F.col("node").startswith("<http://kg.example/tool/"))
+            .distinct())
+
+
+def _turn_iri(idx: Column) -> Column:
+    return F.concat(F.lit("<http://kg.example/conv/"), F.col("conv_id"),
+                    F.lit("/turn/"), idx.cast("string"), F.lit(">"))
+
+
+def _turn_succession(turns: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The turn-succession DAG as two (src, dst) edge sets: each turn to
+    its conversation's next turn, and each tool turn to its tool IRI."""
+    from pyspark.sql.window import Window
+    turn = _turn_iri(F.col("turn_idx"))
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    nxt = (turns.select(turn.alias("src"), F.lead(turn).over(w).alias("dst"))
+           .where(F.col("dst").isNotNull()))
+    tool = (turns.where(F.col("tool").isNotNull())
+            .select(turn.alias("src"),
+                    F.concat(F.lit("<http://kg.example/tool/"),
+                             F.col("tool"), F.lit(">")).alias("dst")))
+    return nxt, tool
+
+
+def _turn_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
+    nxt, tool = _turn_succession(transcripts_from_events(spark, sf_dir))
+    return nxt.unionByName(tool)
+
+
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-entity triangle counts over the co-mention graph (round-4,
     kgloom/ops/graph.py:triangle_count — degree-ordered node-iterator,
@@ -396,19 +505,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle replays the count with the naive rank-free
     lexicographic orientation — triangle counts are
     orientation-independent, so the two must agree exactly."""
-    from kgloom.transcripts.er import canonical_map
     from kgloom.ops.graph import triangle_count
-    turns = transcripts_from_events(spark, sf_dir)
-    m = detect_mentions(turns)
-    cmap = canonical_map(m)
-    ents = (m.join(cmap, "surface")
-            .select("conv_id", "canonical").distinct())
-    a, b = ents.alias("a"), ents.alias("b")
-    edges = (a.join(b, "conv_id")
-             .where(F.col("a.canonical") < F.col("b.canonical"))
-             .select(F.col("a.canonical").alias("src"),
-                     F.col("b.canonical").alias("dst")))
-    return triangle_count(edges)
+    return triangle_count(_comention_edges(spark, sf_dir))
 
 
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -423,11 +521,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph's peeling depth (the peel is idempotent at fixpoint, so
     extra rounds are no-ops)."""
     from kgloom.ops.graph import k_core
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    edges = (triples.where(F.col("obj").startswith("<"))
-             .select(F.col("subj").alias("src"),
-                     F.col("obj").alias("dst")))
-    return k_core(edges, k=2)
+    return k_core(_kg_edges(spark, sf_dir), k=2)
 
 
 def q_transcripts_tool_attr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -452,14 +546,9 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin is a recursive reachability CTE with MIN(level); integer
     levels, exact by construction."""
     from kgloom.ops.graph import bfs_levels
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    edges = (triples.where(F.col("obj").startswith("<"))
-             .select(F.col("subj").alias("src"),
-                     F.col("obj").alias("dst")))
-    seeds = (edges.select(F.col("dst").alias("node"))
-             .where(F.col("node").startswith("<http://kg.example/tool/"))
-             .distinct())
-    return bfs_levels(edges, seeds, max_depth=8, directed=False)
+    edges = _kg_edges(spark, sf_dir)
+    return bfs_levels(edges, _tool_nodes(edges), max_depth=8,
+                      directed=False)
 
 
 def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,11 +561,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift.  Per round: two hash joins + two hash aggregates, the same
     shuffle profile as one PageRank iteration."""
     from kgloom.ops.graph import hits
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    edges = (triples.where(F.col("obj").startswith("<"))
-             .select(F.col("subj").alias("src"),
-                     F.col("obj").alias("dst")))
-    return hits(edges, iterations=2)
+    return hits(_kg_edges(spark, sf_dir), iterations=2)
 
 
 def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -493,21 +578,8 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     via a recursive reachability CTE; component labels (the minimal
     member) are canonical, so both engines must agree exactly."""
     from kgloom.ops.graph import connected_components
-    from kgloom.transcripts.er import canonical_map
-    turns = transcripts_from_events(spark, sf_dir)
-    m = detect_mentions(turns)
-    cmap = canonical_map(m)
-    ents = (m.join(cmap, "surface")
-            .select("conv_id", "canonical").distinct())
-    a, b = ents.alias("a"), ents.alias("b")
-    edges = (a.join(b, "conv_id")
-             .where(F.col("a.canonical") < F.col("b.canonical"))
-             .select(F.col("a.canonical").alias("src"),
-                     F.col("b.canonical").alias("dst"))
-             .distinct()
-             .where(F.substring(F.md5(F.concat_ws("|", "src", "dst")),
-                                1, 2) <= "02"))
-    return connected_components(edges, driver_max_edges=0)
+    return connected_components(_thinned(_comention_edges(spark, sf_dir),
+                                         "02"), driver_max_edges=0)
 
 
 def q_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,21 +591,8 @@ def q_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the smallest label, fixed 3 synchronous rounds; the DuckDB
     twin unrolls the same rounds and must agree exactly."""
     from kgloom.ops.graph import label_propagation
-    turns = transcripts_from_events(spark, sf_dir)
-    m = detect_mentions(turns)
-    from kgloom.transcripts.er import canonical_map
-    cmap = canonical_map(m)
-    ents = (m.join(cmap, "surface")
-            .select("conv_id", "canonical").distinct())
-    a, b = ents.alias("a"), ents.alias("b")
-    edges = (a.join(b, "conv_id")
-             .where(F.col("a.canonical") < F.col("b.canonical"))
-             .select(F.col("a.canonical").alias("src"),
-                     F.col("b.canonical").alias("dst"))
-             .distinct()
-             .where(F.substring(F.md5(F.concat_ws("|", "src", "dst")),
-                                1, 2) <= "0a"))
-    return label_propagation(edges, rounds=3)
+    return label_propagation(_thinned(_comention_edges(spark, sf_dir), "0a"),
+                             rounds=3)
 
 
 def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,11 +606,7 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (staged conv, the Spark 4.1.2 fused-expression hazard) and one
     equi-join on (source, rank) — no hub fan-out."""
     from kgloom.ops.graph import random_walks
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    edges = (triples.where(F.col("obj").startswith("<"))
-             .select(F.col("subj").alias("src"),
-                     F.col("obj").alias("dst")))
-    return random_walks(edges, n_walks=2, walk_len=3)
+    return random_walks(_kg_edges(spark, sf_dir), n_walks=2, walk_len=3)
 
 
 def q_graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -568,19 +623,9 @@ def q_graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub-heavy turn→tool KG (tool degree ~30k at sf0.1) would explode
     the candidate set — the bounded-degree entity graph is the honest
     demonstration surface for this operator."""
-    from kgloom.transcripts.er import canonical_map
     from kgloom.ops.graph import biased_walks
-    turns = transcripts_from_events(spark, sf_dir)
-    m = detect_mentions(turns)
-    cmap = canonical_map(m)
-    ents = (m.join(cmap, "surface")
-            .select("conv_id", "canonical").distinct())
-    a, b = ents.alias("a"), ents.alias("b")
-    edges = (a.join(b, "conv_id")
-             .where(F.col("a.canonical") < F.col("b.canonical"))
-             .select(F.col("a.canonical").alias("src"),
-                     F.col("b.canonical").alias("dst")))
-    return biased_walks(edges, p=4.0, q=0.25, n_walks=1, walk_len=3)
+    return biased_walks(_comention_edges(spark, sf_dir), p=4.0, q=0.25,
+                        n_walks=1, walk_len=3)
 
 
 def q_graph_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -601,14 +646,9 @@ def q_graph_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     confidence that prunes coincidental co-mention edges before KG
     entry.  Count arithmetic plus one ln per pair; no float sums, so
     the DuckDB twin is exact."""
-    from kgloom.transcripts.er import canonical_map
     from kgloom.ops.graph import pmi_pairs
-    turns = transcripts_from_events(spark, sf_dir)
-    m = detect_mentions(turns)
-    cmap = canonical_map(m)
-    inc = (m.join(cmap, "surface")
-           .select("conv_id", "canonical").distinct())
-    return pmi_pairs(inc, bag="conv_id", item="canonical")
+    return pmi_pairs(_entity_incidence(spark, sf_dir), bag="conv_id",
+                     item="canonical")
 
 
 def q_graph_linkpred_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -623,19 +663,9 @@ def q_graph_linkpred_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     common neighbors in the training half and the ranks are
     informative (on the tree-like turn→conv KG nothing is reachable
     at distance 2, so every rank would be null)."""
-    from kgloom.transcripts.er import canonical_map
     from kgloom.ops.graph import link_prediction_ranks
-    turns = transcripts_from_events(spark, sf_dir)
-    m = detect_mentions(turns)
-    cmap = canonical_map(m)
-    ents = (m.join(cmap, "surface")
-            .select("conv_id", "canonical").distinct())
-    a, b = ents.alias("a"), ents.alias("b")
-    edges = (a.join(b, "conv_id")
-             .where(F.col("a.canonical") < F.col("b.canonical"))
-             .select(F.col("a.canonical").alias("src"),
-                     F.col("b.canonical").alias("dst")))
-    return link_prediction_ranks(edges, test_fraction=0.2, salt="lp",
+    return link_prediction_ranks(_comention_edges(spark, sf_dir),
+                                 test_fraction=0.2, salt="lp",
                                  max_center_degree=100000)
 
 
@@ -662,11 +692,7 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-pair sum is the same ordered-fold discipline as the
     bigram LM, so the DuckDB twin matches bit-for-bit."""
     from kgloom.ops.graph import adamic_adar
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    edges = (triples.where(F.col("obj").startswith("<"))
-             .select(F.col("subj").alias("src"),
-                     F.col("obj").alias("dst")))
-    return adamic_adar(edges, max_center_degree=100)
+    return adamic_adar(_kg_edges(spark, sf_dir), max_center_degree=100)
 
 
 def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -679,11 +705,7 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-100 hub-center wedge guard as graph_adamic_adar, mirrored
     by the DuckDB twin."""
     from kgloom.ops.graph import jaccard_pairs
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    edges = (triples.where(F.col("obj").startswith("<"))
-             .select(F.col("subj").alias("src"),
-                     F.col("obj").alias("dst")))
-    return jaccard_pairs(edges, max_center_degree=100)
+    return jaccard_pairs(_kg_edges(spark, sf_dir), max_center_degree=100)
 
 
 def q_kg_predicate_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -702,10 +724,7 @@ def q_sparql_kg_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     turn triples, then answer a two-pattern BGP (join on ?turn) with a
     constant-object pattern (tool turns carry role "tool") — the SPARQL reference formulation
     executing end-to-end (kgloom/sparql.py)."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?turn ?tool WHERE {
           ?turn kg:usedTool ?tool ;
                 kg:role "tool" .
@@ -721,18 +740,10 @@ def q_sparql_kg_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposes it in-plan (regexp_extract, codegen), unifies ?turn
     with the asserted role pattern, and projects lexical forms.  The
     reference has no RDF-star surface at all."""
-    from kgloom.ops.star import annotate
-    from kgloom.sparql import sparql_select
     tri = q_transcripts_turn_triples(spark, sf_dir)
-    used = tri.where(F.col("pred") == f"<{_KGO}usedTool>")
-    part = (tri.where(F.col("pred") == f"<{_KGO}partOf>")
-            .select("subj", F.col("obj").alias("__conv")))
-    ann = annotate(used.join(part, "subj"), f"<{_KGO}inConv>",
-                   F.col("__conv"))
     kg = tri.withColumn("graph", F.lit(None).cast("string")) \
-        .unionByName(ann)
-    return sparql_select(kg, """
-        PREFIX kg: <http://kg.example/ontology/>
+        .unionByName(_tool_use_annotations(tri))
+    return _turn_kg_sparql(spark, sf_dir, kg=kg, query="""
         SELECT ?turn ?tool ?conv ?role WHERE {
           << ?turn kg:usedTool ?tool >> kg:inConv ?conv .
           ?turn kg:role ?role .
@@ -744,10 +755,7 @@ def q_sparql_kg_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL OPTIONAL over the constructed KG (kgloom/sparql.py): every
     turn with its role, plus the tool it used when one exists — the
     left-join compilation of OPTIONAL, nulls for turns without tools."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?turn ?role ?tool WHERE {
           ?turn kg:role ?role .
           OPTIONAL { ?turn kg:usedTool ?tool }
@@ -758,10 +766,7 @@ def q_sparql_kg_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sparql_kg_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL UNION over the constructed KG: each turn's tool IRI and
     role literal as one binding stream (unionByName compilation)."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?turn ?v WHERE {
           { ?turn kg:usedTool ?v } UNION { ?turn kg:role ?v }
         }
@@ -775,10 +780,7 @@ def q_sparql_kg_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tool turns), plus a HAVING group filter — the aggregate subset
     (COUNT/SUM/AVG/MIN/MAX, GROUP BY, HAVING) compiled to a Spark
     groupBy/agg."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?conv (COUNT(?turn) AS ?n_turns)
                      (COUNT(?tool) AS ?n_tool_turns) WHERE {
           ?turn kg:partOf ?conv .
@@ -797,7 +799,6 @@ def q_sparql_kg_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode; snapshots are immutable, so point-in-time analyses are
     reproducible).  The oracle replays the v1 content directly."""
     import tempfile
-    from kgloom.sparql import sparql_select
     from kgloom.tables import SnapshotStore
     triples = q_transcripts_turn_triples(spark, sf_dir)
     store = SnapshotStore(spark, tempfile.mkdtemp(prefix="kgloom_asof_"))
@@ -805,8 +806,7 @@ def q_sparql_kg_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pred") == f"<{_KGO}usedTool>"))
     store.write("kg", triples)                  # pointer moves on
     asof = store.read_at("kg", s1.snapshot_id)
-    return sparql_select(asof, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, kg=asof, query="""
         SELECT ?tool (COUNT(?turn) AS ?n_uses) WHERE {
           ?turn kg:usedTool ?tool .
         } GROUP BY ?tool
@@ -853,9 +853,7 @@ def q_sparql_kg_construct(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a set), returned as a quad DataFrame so the result can feed the
     serializer or another mapping."""
     from kgloom.sparql import sparql_construct
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_construct(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, run=sparql_construct, query="""
         CONSTRUCT { ?conv kg:toolUsed ?tool }
         WHERE { ?turn kg:partOf ?conv ; kg:usedTool ?tool . }
     """).select("subj", "pred", "obj")
@@ -866,10 +864,7 @@ def q_sparql_kg_bind(spark: SparkSession, sf_dir: str) -> DataFrame:
     a VALUES inline-data join, then derive a label with
     BIND(CONCAT(UCASE(...))) — expression compilation to pure Column
     ops (no Python row path)."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?turn ?label WHERE {
           ?turn kg:role ?role .
           VALUES ?role { "user" "assistant" }
@@ -888,17 +883,12 @@ def _kg_with_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples = q_transcripts_turn_triples(spark, sf_dir)
     turns = transcripts_from_events(spark, sf_dir)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-
-    def turn_iri(idx):
-        return F.concat(F.lit("<http://kg.example/conv/"), F.col("conv_id"),
-                        F.lit("/turn/"), idx.cast("string"), F.lit(">"))
-
     nxt = (turns
            .withColumn("next_idx", F.lead("turn_idx").over(w))
            .where(F.col("next_idx").isNotNull())
-           .select(turn_iri(F.col("turn_idx")).alias("subj"),
+           .select(_turn_iri(F.col("turn_idx")).alias("subj"),
                    F.lit("<http://kg.example/ontology/next>").alias("pred"),
-                   turn_iri(F.col("next_idx")).alias("obj")))
+                   _turn_iri(F.col("next_idx")).alias("obj")))
     # the SPARQL engine scans the input several times (edge extraction
     # for the closure, the non-path BGPs, the CC pass) — persist the
     # constructed KG once instead of re-running the construction
@@ -913,10 +903,8 @@ def q_sparql_kg_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds for chain length L) joined with a ``kg:next/kg:usedTool``
     sequence path: every turn pair (a strictly-before b) where b's
     successor turn invoked a tool."""
-    from kgloom.sparql import sparql_select
-    quads = _kg_with_next(spark, sf_dir)
-    return sparql_select(quads, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, kg=_kg_with_next(spark, sf_dir),
+                           query="""
         SELECT DISTINCT ?a ?b ?tool WHERE {
           ?a kg:next+ ?b .
           ?b kg:next/kg:usedTool ?tool .
@@ -934,10 +922,8 @@ def q_sparql_kg_path_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
     work scales with the REACHABLE region — conv-1's own chain — not
     the whole graph's closure, unlike the both-ends-variable
     ``sparql_kg_path``."""
-    from kgloom.sparql import sparql_select
-    quads = _kg_with_next(spark, sf_dir)
-    return sparql_select(quads, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, kg=_kg_with_next(spark, sf_dir),
+                           query="""
         SELECT DISTINCT ?b ?role WHERE {
           <http://kg.example/conv/conv-1/turn/0> kg:next+ ?b .
           ?b kg:role ?role .
@@ -951,10 +937,8 @@ def q_sparql_kg_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``DESC(COUNT(?t))``), a tie-breaking key, OFFSET-free LIMIT —
     evaluated bottom-up, then natural-joined back to every tool turn
     of those conversations in the enclosing group."""
-    from kgloom.sparql import sparql_select
-    quads = _kg_with_next(spark, sf_dir)
-    return sparql_select(quads, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, kg=_kg_with_next(spark, sf_dir),
+                           query="""
         SELECT ?conv ?turn ?tool WHERE {
           { SELECT ?conv (COUNT(?t) AS ?ntool) WHERE {
               ?t kg:partOf ?conv . ?t kg:usedTool ?any .
@@ -975,9 +959,7 @@ def q_sparql_kg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes, anti-join + union inserts — only touched data pays dedup),
     which the DuckDB oracle replays with plain set operations."""
     from kgloom.sparql import sparql_update
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_update(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, run=sparql_update, query="""
         INSERT DATA {
           <http://kg.example/dataset> kg:version "r4"
         } ;
@@ -995,10 +977,7 @@ def q_sparql_kg_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition with an OPTIONAL variable, and SHA256 fingerprinting —
     all compiled to pure Catalyst Columns (when/instr/substring/
     floor/sha2), no Python row path."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?turn ?cid ?halflen ?kind ?fp WHERE {
           ?turn kg:partOf ?conv .
           ?turn kg:role ?role .
@@ -1018,10 +997,8 @@ def q_sparql_kg_path_alt(spark: SparkSession, sf_dir: str) -> DataFrame:
     every tool IRI or role literal of their turns via
     ``^kg:partOf/(kg:usedTool|kg:role)`` — inverse edge walk into a
     unioned alternative, compiled to a constant-pred scan join/union."""
-    from kgloom.sparql import sparql_select
-    quads = _kg_with_next(spark, sf_dir)
-    return sparql_select(quads, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, kg=_kg_with_next(spark, sf_dir),
+                           query="""
         SELECT DISTINCT ?conv ?v WHERE {
           ?conv ^kg:partOf/(kg:usedTool|kg:role) ?v .
         }
@@ -1121,10 +1098,7 @@ def q_sparql_kg_minus_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     of turns, MINUS the tool-invoking turns (anti join on the shared
     ?turn), NOT EXISTS the assistant turns — leaving exactly the user
     turns, each negation compiled to a distinct left-anti join."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?turn ?role WHERE {
           ?turn kg:role ?role .
           MINUS { ?turn kg:usedTool ?tool }
@@ -1162,13 +1136,7 @@ def q_kg_rdfstar_annotate(spark: SparkSession, sf_dir: str) -> DataFrame:
     no Python."""
     from kgloom.exec.binder import to_nquads_lines
     from kgloom.exec.rdfsource import parse_nquads_lines
-    from kgloom.ops.star import annotate
-    tri = q_transcripts_turn_triples(spark, sf_dir)
-    used = tri.where(F.col("pred") == f"<{_KGO}usedTool>")
-    part = (tri.where(F.col("pred") == f"<{_KGO}partOf>")
-            .select("subj", F.col("obj").alias("__conv")))
-    ann = annotate(used.join(part, "subj"), f"<{_KGO}inConv>",
-                   F.col("__conv"))
+    ann = _tool_use_annotations(q_transcripts_turn_triples(spark, sf_dir))
     return (parse_nquads_lines(to_nquads_lines(ann))
             .select("subj", "pred", "obj"))
 
@@ -1213,10 +1181,7 @@ def q_sparql_kg_values_undef(spark: SparkSession, sf_dir: str) -> DataFrame:
     different marks (bag semantics of the §10.2 compatibility join).
     The UNDEF-aware join compiles to a broadcast theta join
     (null-or-equal per shared var) + coalesce merge."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?turn ?role ?mark WHERE {
           ?turn kg:role ?role .
           VALUES (?role ?mark) {
@@ -1235,10 +1200,7 @@ def q_sparql_kg_group_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregation extend, plus a per-bucket count and average
     length.  The DuckDB twin replays the same floor/length arithmetic
     (numeric results surface as double lexicals in both engines)."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?lenb (COUNT(*) AS ?n_turns)
                (AVG(STRLEN(?txt)) AS ?avg_len) WHERE {
           ?turn kg:text ?txt .
@@ -1254,10 +1216,7 @@ def q_sparql_kg_having_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIFFERENT from the projected one, compiled as a hidden grouping
     output (the ORDER-BY-aggregate machinery) and dropped after the
     filter.  DuckDB replays it natively."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?conv (COUNT(*) AS ?n_tool_turns) WHERE {
           ?turn kg:partOf ?conv ;
                 kg:usedTool ?tool .
@@ -1272,10 +1231,7 @@ def q_sparql_kg_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOUND and isIRI — chat turns about Entity_7* plus tool turns in the
     turn-10s — every predicate compiled to a codegen'd Column (rlike /
     contains / startswith / isNotNull), no Python row path."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples, """
-        PREFIX kg: <http://kg.example/ontology/>
+    return _turn_kg_sparql(spark, sf_dir, """
         SELECT ?turn ?role ?txt WHERE {
           ?turn kg:role ?role ;
                 kg:text ?txt .
@@ -1534,10 +1490,7 @@ def q_graph_pagerank(spark, sf_dir):
     redistribution, one shuffle per round, lineage truncated via
     localCheckpoint (kgloom/ops/graph.py)."""
     from kgloom.ops.graph import pagerank
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    edges = (triples.where(F.col("obj").startswith("<"))
-             .select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
-    return pagerank(edges, damping=0.85, iterations=3)
+    return pagerank(_kg_edges(spark, sf_dir), damping=0.85, iterations=3)
 
 
 def q_graph_shortest_paths(spark, sf_dir):
@@ -1549,27 +1502,16 @@ def q_graph_shortest_paths(spark, sf_dir):
     paths, the exact BF round semantics).  The DAG has a unique path
     per reached node, so the DuckDB twin replays it with a bounded
     recursive CTE."""
-    from pyspark.sql.window import Window
     from kgloom.ops.graph import shortest_paths
     turns = transcripts_from_events(spark, sf_dir)
-    turn_iri = F.concat(F.lit("<http://kg.example/conv/"),
-                        F.col("conv_id"), F.lit("/turn/"),
-                        F.col("turn_idx").cast("string"), F.lit(">"))
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    nxt = (turns.select(turn_iri.alias("src"),
-                        F.lead(turn_iri).over(w).alias("dst"))
-           .where(F.col("dst").isNotNull())
-           .withColumn("w", F.lit(1).cast("long")))
-    tool = (turns.where(F.col("tool").isNotNull())
-            .select(turn_iri.alias("src"),
-                    F.concat(F.lit("<http://kg.example/tool/"),
-                             F.col("tool"), F.lit(">")).alias("dst"))
-            .withColumn("w", F.lit(3).cast("long")))
+    nxt, tool = _turn_succession(turns)
     sources = (turns.where((F.col("turn_idx") == 0) &
                            F.col("conv_id").endswith("0"))
-               .select(turn_iri.alias("node")))
-    return shortest_paths(nxt.unionByName(tool), sources,
-                          weight="w", max_rounds=12)
+               .select(_turn_iri(F.col("turn_idx")).alias("node")))
+    return shortest_paths(
+        nxt.withColumn("w", F.lit(1).cast("long")).unionByName(
+            tool.withColumn("w", F.lit(3).cast("long"))),
+        sources, weight="w", max_rounds=12)
 
 
 def q_graph_reach_synopsis(spark, sf_dir):
@@ -1582,21 +1524,8 @@ def q_graph_reach_synopsis(spark, sf_dir):
     and replays the same md5 estimate bit-for-bit.  Early turns
     (balls > k) exercise the estimator branch, late turns and tool
     leaves the exact branch."""
-    from pyspark.sql.window import Window
     from kgloom.ops.graph import reach_synopsis
-    turns = transcripts_from_events(spark, sf_dir)
-    turn_iri = F.concat(F.lit("<http://kg.example/conv/"),
-                        F.col("conv_id"), F.lit("/turn/"),
-                        F.col("turn_idx").cast("string"), F.lit(">"))
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    nxt = (turns.select(turn_iri.alias("src"),
-                        F.lead(turn_iri).over(w).alias("dst"))
-           .where(F.col("dst").isNotNull()))
-    tool = (turns.where(F.col("tool").isNotNull())
-            .select(turn_iri.alias("src"),
-                    F.concat(F.lit("<http://kg.example/tool/"),
-                             F.col("tool"), F.lit(">")).alias("dst")))
-    return reach_synopsis(nxt.unionByName(tool), radius=6, k=8)
+    return reach_synopsis(_turn_dag(spark, sf_dir), radius=6, k=8)
 
 
 def q_graph_harmonic(spark, sf_dir):
@@ -1608,21 +1537,8 @@ def q_graph_harmonic(spark, sf_dir):
     one-row-per-node accumulator.  The DuckDB twin enumerates every
     ≤4-hop ball and replays the identical per-radius estimate and
     harmonic sum."""
-    from pyspark.sql.window import Window
     from kgloom.ops.graph import harmonic_centrality
-    turns = transcripts_from_events(spark, sf_dir)
-    turn_iri = F.concat(F.lit("<http://kg.example/conv/"),
-                        F.col("conv_id"), F.lit("/turn/"),
-                        F.col("turn_idx").cast("string"), F.lit(">"))
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    nxt = (turns.select(turn_iri.alias("src"),
-                        F.lead(turn_iri).over(w).alias("dst"))
-           .where(F.col("dst").isNotNull()))
-    tool = (turns.where(F.col("tool").isNotNull())
-            .select(turn_iri.alias("src"),
-                    F.concat(F.lit("<http://kg.example/tool/"),
-                             F.col("tool"), F.lit(">")).alias("dst")))
-    return harmonic_centrality(nxt.unionByName(tool), radius=4, k=8)
+    return harmonic_centrality(_turn_dag(spark, sf_dir), radius=4, k=8)
 
 
 def q_graph_eff_diameter(spark, sf_dir):
@@ -1634,21 +1550,8 @@ def q_graph_eff_diameter(spark, sf_dir):
     distribution is 5 scalars; nothing node-sized reaches the driver.
     The DuckDB twin enumerates the balls and replays the same sums and
     interpolation."""
-    from pyspark.sql.window import Window
     from kgloom.ops.graph import effective_diameter
-    turns = transcripts_from_events(spark, sf_dir)
-    turn_iri = F.concat(F.lit("<http://kg.example/conv/"),
-                        F.col("conv_id"), F.lit("/turn/"),
-                        F.col("turn_idx").cast("string"), F.lit(">"))
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    nxt = (turns.select(turn_iri.alias("src"),
-                        F.lead(turn_iri).over(w).alias("dst"))
-           .where(F.col("dst").isNotNull()))
-    tool = (turns.where(F.col("tool").isNotNull())
-            .select(turn_iri.alias("src"),
-                    F.concat(F.lit("<http://kg.example/tool/"),
-                             F.col("tool"), F.lit(">")).alias("dst")))
-    return effective_diameter(nxt.unionByName(tool), max_radius=4, k=8)
+    return effective_diameter(_turn_dag(spark, sf_dir), max_radius=4, k=8)
 
 
 def q_graph_ppr(spark, sf_dir):
@@ -1662,16 +1565,10 @@ def q_graph_ppr(spark, sf_dir):
     symmetrized graphs have no sinks — which the oracle replays
     identically).  DuckDB twin: unrolled restart-damped CTE rounds."""
     from kgloom.ops.graph import personalized_pagerank
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    fwd = (triples.where(F.col("obj").startswith("<"))
-           .select(F.col("subj").alias("src"),
-                   F.col("obj").alias("dst")))
+    fwd = _kg_edges(spark, sf_dir)
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    seeds = (fwd.select(F.col("dst").alias("node"))
-             .where(F.col("node").startswith("<http://kg.example/tool/"))
-             .distinct())
-    return personalized_pagerank(edges, seeds, damping=0.85,
+    return personalized_pagerank(edges, _tool_nodes(fwd), damping=0.85,
                                  iterations=3)
 
 
@@ -2029,20 +1926,17 @@ def q_sparql_kg_group_concat(spark, sf_dir):
     (kgloom/sparql.py): per conversation, the sorted comma-joined set
     of distinct tool IRIs, a sample role, and the tool-turn count —
     all one groupBy/agg."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(
-        triples.withColumn("graph", F.lit(None).cast("string")), f"""
-        PREFIX kg: <{_KGO}>
+    return _turn_kg_sparql(spark, sf_dir, kg=_turn_quads(spark, sf_dir),
+                           query="""
         SELECT ?conv
                (GROUP_CONCAT(DISTINCT ?tool; SEPARATOR=",") AS ?tools)
                (SAMPLE(?role) AS ?arole)
                (COUNT(*) AS ?n_tool_turns)
-        WHERE {{
+        WHERE {
           ?turn kg:partOf ?conv ;
                 kg:role ?role ;
                 kg:usedTool ?tool .
-        }} GROUP BY ?conv
+        } GROUP BY ?conv
     """)
 
 
@@ -2089,11 +1983,9 @@ def q_sparql_kg_nps(spark, sf_dir):
     (kgloom/sparql.py): every edge whose predicate is NOT kg:text or
     kg:role — i.e. the partOf + usedTool structure without enumerating
     it — compiled to one NOT-IN-filtered scan."""
-    from kgloom.sparql import sparql_select
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    return sparql_select(triples.withColumn("graph", F.lit(None).cast("string")), f"""
-        PREFIX kg: <{_KGO}>
-        SELECT ?s ?o WHERE {{ ?s !(kg:text|kg:role) ?o . }}
+    return _turn_kg_sparql(spark, sf_dir, kg=_turn_quads(spark, sf_dir),
+                           query="""
+        SELECT ?s ?o WHERE { ?s !(kg:text|kg:role) ?o . }
     """)
 
 
@@ -2103,11 +1995,9 @@ def q_sparql_kg_describe(spark, sf_dir):
     of its outgoing triples — via DESCRIBE ?turn WHERE {{ role "tool" }};
     the resource set stays distributed (two semi joins, no collect)."""
     from kgloom.sparql import sparql_describe
-    triples = q_transcripts_turn_triples(spark, sf_dir)
-    quads = triples.withColumn("graph", F.lit(None).cast("string"))
-    return sparql_describe(quads, f"""
-        PREFIX kg: <{_KGO}>
-        DESCRIBE ?turn WHERE {{ ?turn kg:role "tool" . }}
+    return _turn_kg_sparql(spark, sf_dir, kg=_turn_quads(spark, sf_dir),
+                           run=sparql_describe, query="""
+        DESCRIBE ?turn WHERE { ?turn kg:role "tool" . }
     """).select("subj", "pred", "obj")
 
 
@@ -2835,170 +2725,120 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "kg_extend_template": q_kg_extend_template,
-        "kg_join_refobject": q_kg_join_refobject,
-        "kg_rename_project": q_kg_rename_project,
-        "kg_graph_classes": q_kg_graph_classes,
-        "kg_theta_join": q_kg_theta_join,
-        "kg_scalar_functions": q_kg_scalar_functions,
-        "kg_fragment_multi": q_kg_fragment_multi,
-        "transcripts_turn_triples": q_transcripts_turn_triples,
-        "rdf_roundtrip": q_rdf_roundtrip,
-        "kg_vertical_store": q_kg_vertical_store,
-        "transcripts_asof_tool": q_transcripts_asof_tool,
-        "kg_tool_intervals": q_kg_tool_intervals,
-        "kg_graph_delta": q_kg_graph_delta,
-        "kg_merge_upsert": q_kg_merge_upsert,
-        "text_fim_split": q_text_fim_split,
-        "sketch_kmv_distinct": q_sketch_kmv_distinct,
-        "sketch_kmv_incremental": q_sketch_kmv_incremental,
-        "sketch_heavy_hitters": q_sketch_heavy_hitters,
-        "sketch_mg_incremental": q_sketch_mg_incremental,
-        "sketch_kmv_setops": q_sketch_kmv_setops,
-        "stats_table_profile": q_stats_table_profile,
-        "stats_profile_incremental": q_stats_profile_incremental,
-        "events_funnel": q_events_funnel,
-        "events_transitions": q_events_transitions,
-        "events_retention": q_events_retention,
-        "events_json_schema": q_events_json_schema,
-        "sketch_kll_quantiles": q_sketch_kll_quantiles,
-        "stats_doc_quantiles": q_stats_doc_quantiles,
-        "transcripts_mentions": q_transcripts_mentions,
-        "transcripts_entity_degree": q_transcripts_entity_degree,
-        "stats_key_skew": q_stats_key_skew,
-        "transcripts_sessions": q_transcripts_sessions,
-        "transcripts_tool_attr": q_transcripts_tool_attr,
-        "transcripts_chat_render": q_transcripts_chat_render,
-        "transcripts_sft_pairs": q_transcripts_sft_pairs,
-        "sparql_kg_select": q_sparql_kg_select,
-        "sparql_kg_star": q_sparql_kg_star,
-        "sparql_kg_optional": q_sparql_kg_optional,
-        "sparql_kg_union": q_sparql_kg_union,
-        "sparql_kg_agg": q_sparql_kg_agg,
-        "sparql_kg_asof": q_sparql_kg_asof,
-        "sparql_kg_construct": q_sparql_kg_construct,
-        "sparql_kg_bind": q_sparql_kg_bind,
-        "sparql_kg_path": q_sparql_kg_path,
-        "sparql_kg_path_anchored": q_sparql_kg_path_anchored,
-        "sparql_kg_path_alt": q_sparql_kg_path_alt,
-        "sparql_kg_subquery": q_sparql_kg_subquery,
-        "sparql_kg_update": q_sparql_kg_update,
-        "sparql_kg_update_graphs": q_sparql_kg_update_graphs,
-        "sparql_kg_functions": q_sparql_kg_functions,
-        "sparql_kg_graph": q_sparql_kg_graph,
-        "sparql_kg_dataset": q_sparql_kg_dataset,
-        "sparql_kg_minus_exists": q_sparql_kg_minus_exists,
-        "sparql_kg_values_undef": q_sparql_kg_values_undef,
-        "sparql_kg_group_expr": q_sparql_kg_group_expr,
-        "sparql_kg_having_agg": q_sparql_kg_having_agg,
-        "kg_turtle_render": q_kg_turtle_render,
-        "kg_jsonld_render": q_kg_jsonld_render,
-        "kg_allen_relations": q_kg_allen_relations,
-        "kg_rdfstar_annotate": q_kg_rdfstar_annotate,
-        "sparql_kg_filter": q_sparql_kg_filter,
-        "sparql_kg_group_concat": q_sparql_kg_group_concat,
-        "sparql_kg_nps": q_sparql_kg_nps,
-        "sparql_kg_describe": q_sparql_kg_describe,
-        "reason_rdfs_closure": q_reason_rdfs_closure,
-        "reason_ifp_sameas": q_reason_ifp_sameas,
-        "reason_sameas_fusion": q_reason_sameas_fusion,
-        "reason_sameas_incremental": q_reason_sameas_incremental,
-        "reason_shacl": q_reason_shacl,
-        "reason_shacl_incremental": q_reason_shacl_incremental,
-        "kg_wl_signatures": q_kg_wl_signatures,
-        "kg_entity_summary": q_kg_entity_summary,
-        "kg_bucketed_star": q_kg_bucketed_star,
-        "reason_owl_properties": q_reason_owl_properties,
-        "reason_owl_equiv": q_reason_owl_equiv,
-        "dedup_exact": q_dedup_exact,
-        "dedup_substring_spans": q_dedup_substring_spans,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_keep_best": q_dedup_keep_best,
-        "dedup_stream_gate": q_dedup_stream_gate,
-        "kg_rdf_merge": q_kg_rdf_merge,
-        "dedup_contamination": q_dedup_contamination,
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "curation_pipeline": q_curation_pipeline,
-        "curate_stratified_sample": q_curate_stratified_sample,
-        "curate_temperature_mix": q_curate_temperature_mix,
-        "curate_hash_split": q_curate_hash_split,
-        "curate_dsir": q_curate_dsir,
-        "curate_group_sample": q_curate_group_sample,
-        "curate_label_vote": q_curate_label_vote,
-        "text_normalize": q_text_normalize,
-        "pack_concat_chunk": q_pack_concat_chunk,
-        "pack_greedy": q_pack_greedy,
-        "text_token_stats": q_text_token_stats,
-        "text_chunks": q_text_chunks,
-        "text_quality": q_text_quality,
-        "text_quality_logit": q_text_quality_logit,
-        "kg_negative_samples": q_kg_negative_samples,
-        "retrieval_hybrid_rrf": q_retrieval_hybrid_rrf,
-        "ann_hard_negatives": q_ann_hard_negatives,
-        "text_bigram_lm": q_text_bigram_lm,
-        "text_bpe_merges": q_text_bpe_merges,
-        "text_apply_bpe": q_text_apply_bpe,
-        "text_repetition": q_text_repetition,
-        "text_commonness": q_text_commonness,
-        "text_language_id": q_text_language_id,
-        "text_fingerprint": q_text_fingerprint,
-        "text_subwords": q_text_subwords,
-        "text_redact_pii": q_text_redact_pii,
-        "text_winnow": q_text_winnow,
-        "text_bm25": q_text_bm25,
-        "graph_pagerank": q_graph_pagerank,
-        "graph_shortest_paths": q_graph_shortest_paths,
-        "graph_reach_synopsis": q_graph_reach_synopsis,
-        "graph_harmonic": q_graph_harmonic,
-        "graph_eff_diameter": q_graph_eff_diameter,
-        "graph_ppr": q_graph_ppr,
-        "ann_rp_sketch": q_ann_rp_sketch,
-        "graph_kg_profile": q_graph_kg_profile,
-        "graph_triangles": q_graph_triangles,
-        "graph_kcore": q_graph_kcore,
-        "graph_hits": q_graph_hits,
-        "graph_components": q_graph_components,
-        "graph_communities": q_graph_communities,
-        "graph_bfs_levels": q_graph_bfs_levels,
-        "graph_adamic_adar": q_graph_adamic_adar,
-        "graph_jaccard": q_graph_jaccard,
-        "graph_linkpred_ranks": q_graph_linkpred_ranks,
-        "kg_negative_samples_subj": q_kg_negative_samples_subj,
-        "kg_predicate_profile": q_kg_predicate_profile,
-        "graph_pmi": q_graph_pmi,
-        "graph_random_walks": q_graph_random_walks,
-        "graph_skipgram_pairs": q_graph_skipgram_pairs,
-        "graph_node2vec_walks": q_graph_node2vec_walks,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_quantized_topk": q_ann_quantized_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "ann_ivf_kmeans_topk": q_ann_ivf_kmeans_topk,
-        "multimodal_features": q_multimodal_features,
-    }
+    """Every module-level ``q_<name>`` function, keyed by ``<name>``."""
+    return {name[2:]: fn for name, fn in globals().items()
+            if name.startswith("q_") and callable(fn)}
+
+
+# ---------------------------------------------------------------------------
+# Oracle CTE text for the derived graphs.  Each replays in SQL an input the
+# Spark queries build with their own helpers (_entity_incidence /
+# _comention_edges, _kg_edges, _turn_succession); the two sides share no
+# code, so every oracle stays an independent replay.
+# ---------------------------------------------------------------------------
+
+#: entity mentions as CTEs over TRANSCRIPTS_SQL: `tr`; `m` (conv_id,
+#: turn_idx, surface, norm_key), one mention per turn; `canon` (norm_key →
+#: canonical) — every surface variant on this corpus scores above the 0.5
+#: ER link threshold, so canonical_map's components are exactly the
+#: norm_key groups and the canonical is the group's min surface (the
+#: driver union-find and the distributed CC share the min-label rule);
+#: `ents` (distinct conv_id, ent); `ce`, the co-mention edges (u < v)
+_MENTION_CTES = f"""tr AS ({TRANSCRIPTS_SQL}),
+m AS (
+  SELECT conv_id, turn_idx, 'Entity_' || CAST(CAST(k AS BIGINT) AS VARCHAR)
+           AS surface, k AS norm_key
+  FROM (SELECT *, regexp_extract(text, 'Entity_([0-9]+)', 1) AS k FROM tr)),
+canon AS (
+  SELECT norm_key, MIN(surface) AS canonical
+  FROM (SELECT DISTINCT surface, norm_key FROM m)
+  GROUP BY norm_key),
+ents AS (
+  SELECT DISTINCT m.conv_id, c.canonical AS ent
+  FROM m JOIN canon c USING (norm_key)),
+ce AS (
+  SELECT DISTINCT a.ent AS u, b.ent AS v
+  FROM ents a JOIN ents b ON a.conv_id = b.conv_id AND a.ent < b.ent)"""
+
+
+def _kg_edges_sql(a: str, b: str) -> str:
+    """The turn KG's IRI→IRI edges (turn→conv, turn→tool), distinct, as
+    columns ``a``, ``b`` — a self-contained query over TRANSCRIPTS_SQL."""
+    turn = ("'<http://kg.example/conv/' || conv_id || '/turn/'"
+            " || CAST(turn_idx AS VARCHAR) || '>'")
+    return f"""
+        WITH tr AS ({TRANSCRIPTS_SQL})
+        SELECT DISTINCT {turn} AS {a},
+               '<http://kg.example/conv/' || conv_id || '>' AS {b}
+        FROM tr
+        UNION
+        SELECT DISTINCT {turn}, '<http://kg.example/tool/' || tool || '>'
+        FROM tr WHERE tool IS NOT NULL"""
+
+
+#: the symmetrized, loop-free edge set of an `ec` (u, v) CTE
+_SYMMETRIC_EC = """SELECT DISTINCT u, v FROM (
+    SELECT u, v FROM ec UNION ALL SELECT v, u FROM ec)
+  WHERE u != v"""
+
+#: the turn-succession DAG as CTEs over TRANSCRIPTS_SQL: `tr`; `iri` (each
+#: turn with its IRI `t`); `e0` (src, dst): each turn to its
+#: conversation's next turn (dst NULL after the last) and each tool turn
+#: to its tool IRI
+_TURN_DAG_CTES = f"""tr AS ({TRANSCRIPTS_SQL}),
+iri AS (SELECT conv_id, turn_idx, tool,
+               '<http://kg.example/conv/' || conv_id || '/turn/'
+                 || CAST(turn_idx AS VARCHAR) || '>' AS t
+        FROM tr),
+e0 AS (SELECT t AS src,
+              LEAD(t) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS dst
+       FROM iri
+       UNION ALL
+       SELECT t, '<http://kg.example/tool/' || tool || '>'
+       FROM iri WHERE tool IS NOT NULL)"""
+
+
+def _turn_ball_ctes(radius: int) -> str:
+    """_TURN_DAG_CTES plus `e` (its distinct non-null, loop-free edges),
+    `n` (its nodes) and the recursive `ball(root, node, hop)`: every
+    node within ``radius`` hops of each root (for WITH RECURSIVE)."""
+    return _TURN_DAG_CTES + f""",
+e AS (SELECT DISTINCT src, dst FROM e0
+      WHERE dst IS NOT NULL AND src <> dst),
+n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+ball(root, node, hop) AS (
+    SELECT node, node, 0 FROM n
+    UNION ALL
+    SELECT ball.root, e.dst, hop + 1
+    FROM ball JOIN e ON e.src = ball.node
+    WHERE hop < {radius})"""
+
+
+def _ball_estimate_ctes(radius: int) -> str:
+    """After _turn_ball_ctes(radius): `est(root, r, est)`, the KMV (k=8)
+    size estimate of each root's r-ball for r = 0..radius, from the same
+    md5 fractions as the engine."""
+    return f"""
+bm AS (SELECT root, node, MIN(hop) AS hop FROM ball GROUP BY 1, 2),
+rad AS (SELECT unnest(generate_series(0, {radius})) AS r),
+h AS (SELECT bm.root, rad.r,
+             CAST('0x' || substr(md5(bm.node), 1, 15) AS BIGINT)
+               / 1152921504606846976.0 AS f
+      FROM bm JOIN rad ON bm.hop <= rad.r),
+rr AS (SELECT root, r, f,
+              ROW_NUMBER() OVER (PARTITION BY root, r ORDER BY f) AS rn
+       FROM h),
+m AS (SELECT root, r, CAST(COUNT(*) AS BIGINT) AS n_minima, MAX(f) AS f_k
+      FROM rr WHERE rn <= 8 GROUP BY 1, 2),
+est AS (SELECT root, r,
+               CASE WHEN n_minima < 8 THEN CAST(n_minima AS DOUBLE)
+                    ELSE 7.0 / f_k END AS est
+        FROM m)"""
 
 
 _RANDOM_WALKS_SQL = f"""
-            WITH ec AS MATERIALIZED (
-              WITH tr AS ({TRANSCRIPTS_SQL})
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>' AS u,
-                     '<http://kg.example/conv/' || conv_id || '>' AS v
-              FROM tr
-              UNION
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>',
-                     '<http://kg.example/tool/' || tool || '>'
-              FROM tr WHERE tool IS NOT NULL),
-            e AS MATERIALIZED (
-              SELECT DISTINCT u, v FROM (
-                SELECT u, v FROM ec UNION ALL SELECT v, u FROM ec)
-              WHERE u != v),
+            WITH ec AS MATERIALIZED ({_kg_edges_sql("u", "v")}),
+            e AS MATERIALIZED ({_SYMMETRIC_EC}),
             nbr AS MATERIALIZED (
               SELECT u AS ns, v AS nd,
                      ROW_NUMBER() OVER (PARTITION BY u ORDER BY v) - 1
@@ -3091,10 +2931,7 @@ def _node2vec_sql(edges_cte: str, walk_len: int = 3) -> str:
     identically no matter how either engine associates the additions;
     every float literal is cast to DOUBLE (DuckDB decimals otherwise)."""
     ctes = [f"""ec AS MATERIALIZED ({edges_cte}),
-e AS MATERIALIZED (
-  SELECT DISTINCT u, v FROM (
-    SELECT u, v FROM ec UNION ALL SELECT v, u FROM ec)
-  WHERE u != v),
+e AS MATERIALIZED ({_SYMMETRIC_EC}),
 nbr AS MATERIALIZED (
   SELECT u AS ns, v AS nd,
          ROW_NUMBER() OVER (PARTITION BY u ORDER BY v) AS rank
@@ -3151,9 +2988,7 @@ def _kcore_sql(edges_cte: str, k: int, rounds: int) -> str:
     # AS MATERIALIZED is load-bearing: each round references the
     # previous round 3x, so inlined CTEs would expand 3^rounds scans
     ctes = [f"""ec AS MATERIALIZED ({edges_cte}),
-e0 AS MATERIALIZED (SELECT DISTINCT u, v FROM (
-         SELECT u, v FROM ec UNION ALL SELECT v, u FROM ec)
-       WHERE u != v)"""]
+e0 AS MATERIALIZED ({_SYMMETRIC_EC})"""]
     for i in range(1, rounds + 1):
         p = i - 1
         ctes.append(f"""e{i} AS MATERIALIZED (
@@ -3545,11 +3380,6 @@ def oracle_sql() -> dict[str, str]:
             WITH tr AS ({TRANSCRIPTS_SQL})
             SELECT DISTINCT * FROM ({_TURN_TRIPLES_UNION})
         """,
-        # ER replay: every surface variant on this corpus scores above
-        # the 0.5 link threshold, so canonical_map's components are
-        # exactly the norm_key groups and the canonical is the group's
-        # min surface (both the driver union-find and the distributed
-        # CC use the same min-label rule)
         # skew histogram replay: per-key count -> floor(log10) rollup
         "stats_key_skew": f"""
             WITH tr AS ({TRANSCRIPTS_SQL}),
@@ -3651,25 +3481,8 @@ def oracle_sql() -> dict[str, str]:
         # orientation (u < v names; the engine uses degree-rank
         # orientation — counts are orientation-independent)
         "graph_triangles": f"""
-            WITH tr AS ({TRANSCRIPTS_SQL}),
-            m AS (
-              SELECT conv_id,
-                     'Entity_' || CAST(
-                       CAST(regexp_extract(text, 'Entity_([0-9]+)', 1)
-                            AS BIGINT) AS VARCHAR) AS surface,
-                     regexp_extract(text, 'Entity_([0-9]+)', 1) AS norm_key
-              FROM tr),
-            canon AS (
-              SELECT norm_key, MIN(surface) AS canonical
-              FROM (SELECT DISTINCT surface, norm_key FROM m)
-              GROUP BY norm_key),
-            ents AS (
-              SELECT DISTINCT m.conv_id, c.canonical AS ent
-              FROM m JOIN canon c USING (norm_key)),
-            e AS (
-              SELECT DISTINCT a.ent AS u, b.ent AS v
-              FROM ents a JOIN ents b
-                ON a.conv_id = b.conv_id AND a.ent < b.ent),
+            WITH {_MENTION_CTES},
+            e AS (SELECT u, v FROM ce),
             deg AS (
               SELECT node FROM (
                 SELECT u AS node FROM e UNION ALL SELECT v FROM e)
@@ -3693,19 +3506,7 @@ def oracle_sql() -> dict[str, str]:
         # edges, restart mass uniform over the tool IRIs, 3 unrolled
         # restart-damped rounds
         "graph_ppr": _ppr_sql(f"""
-            WITH tr AS ({TRANSCRIPTS_SQL}),
-            fwd AS (
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>' AS src,
-                     '<http://kg.example/conv/' || conv_id || '>' AS dst
-              FROM tr
-              UNION
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>',
-                     '<http://kg.example/tool/' || tool || '>'
-              FROM tr WHERE tool IS NOT NULL)
+            WITH fwd AS ({_kg_edges_sql("src", "dst")})
             SELECT src, dst FROM fwd
             UNION SELECT dst, src FROM fwd""", f"""
             WITH tr AS ({TRANSCRIPTS_SQL})
@@ -3719,19 +3520,10 @@ def oracle_sql() -> dict[str, str]:
         # BFS-levels replay: recursive reachability with MIN(level)
         # over the symmetrized KG edges, seeded at the tool IRIs
         "graph_bfs_levels": f"""
-            WITH RECURSIVE tr AS ({TRANSCRIPTS_SQL}),
-            fwd AS (
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>' AS a,
-                     '<http://kg.example/conv/' || conv_id || '>' AS b
-              FROM tr
-              UNION
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>',
-                     '<http://kg.example/tool/' || tool || '>'
-              FROM tr WHERE tool IS NOT NULL),
+            WITH RECURSIVE fwd AS (
+              -- DuckDB 1.0 loses a nested WITH over a UNION directly
+              -- under WITH RECURSIVE; the subquery keeps its scope
+              SELECT * FROM ({_kg_edges_sql("a", "b")})),
             bi AS (SELECT a, b FROM fwd WHERE a != b
                    UNION SELECT b, a FROM fwd WHERE a != b),
             seeds AS (
@@ -3749,43 +3541,13 @@ def oracle_sql() -> dict[str, str]:
         # HITS replay: same partOf/usedTool KG edges, 2 unrolled
         # rounds of all-integer hub/authority sums (exact by
         # construction — no float normalization anywhere)
-        "graph_hits": _hits_sql(f"""
-            WITH tr AS ({TRANSCRIPTS_SQL})
-            SELECT DISTINCT
-                   '<http://kg.example/conv/' || conv_id || '/turn/'
-                     || CAST(turn_idx AS VARCHAR) || '>' AS s,
-                   '<http://kg.example/conv/' || conv_id || '>' AS d
-            FROM tr
-            UNION
-            SELECT DISTINCT
-                   '<http://kg.example/conv/' || conv_id || '/turn/'
-                     || CAST(turn_idx AS VARCHAR) || '>',
-                   '<http://kg.example/tool/' || tool || '>'
-            FROM tr WHERE tool IS NOT NULL""", iterations=2),
+        "graph_hits": _hits_sql(_kg_edges_sql("s", "d"), iterations=2),
         # label-propagation replay: same md5-thinned co-mention edges
         # (4.3% keep), 3 unrolled synchronous vote rounds — integer
         # counts + smallest-label tie-break, exact by construction
         "graph_communities": _lpa_sql(f"""
-            WITH tr AS ({TRANSCRIPTS_SQL}),
-            m AS (
-              SELECT conv_id,
-                     'Entity_' || CAST(
-                       CAST(regexp_extract(text, 'Entity_([0-9]+)', 1)
-                            AS BIGINT) AS VARCHAR) AS surface,
-                     regexp_extract(text, 'Entity_([0-9]+)', 1) AS norm_key
-              FROM tr),
-            canon AS (
-              SELECT norm_key, MIN(surface) AS canonical
-              FROM (SELECT DISTINCT surface, norm_key FROM m)
-              GROUP BY norm_key),
-            ents AS (
-              SELECT DISTINCT m.conv_id, c.canonical AS ent
-              FROM m JOIN canon c USING (norm_key)),
-            e1 AS (
-              SELECT DISTINCT a.ent AS u, b.ent AS v
-              FROM ents a JOIN ents b
-                ON a.conv_id = b.conv_id AND a.ent < b.ent)
-            SELECT u, v FROM e1
+            WITH {_MENTION_CTES}
+            SELECT u, v FROM ce
             WHERE substring(md5(u || '|' || v), 1, 2) <= '0a'""",
             rounds=3),
         # connected-components replay: same md5-thinned co-mention
@@ -3793,27 +3555,9 @@ def oracle_sql() -> dict[str, str]:
         # reachability CTE (component labels are canonical minima,
         # independent of the engine's propagation order)
         "graph_components": f"""
-            WITH RECURSIVE tr AS ({TRANSCRIPTS_SQL}),
-            m AS (
-              SELECT conv_id,
-                     'Entity_' || CAST(
-                       CAST(regexp_extract(text, 'Entity_([0-9]+)', 1)
-                            AS BIGINT) AS VARCHAR) AS surface,
-                     regexp_extract(text, 'Entity_([0-9]+)', 1) AS norm_key
-              FROM tr),
-            canon AS (
-              SELECT norm_key, MIN(surface) AS canonical
-              FROM (SELECT DISTINCT surface, norm_key FROM m)
-              GROUP BY norm_key),
-            ents AS (
-              SELECT DISTINCT m.conv_id, c.canonical AS ent
-              FROM m JOIN canon c USING (norm_key)),
-            e0 AS (
-              SELECT DISTINCT a.ent AS u, b.ent AS v
-              FROM ents a JOIN ents b
-                ON a.conv_id = b.conv_id AND a.ent < b.ent),
+            WITH RECURSIVE {_MENTION_CTES},
             e AS (
-              SELECT u, v FROM e0
+              SELECT u, v FROM ce
               WHERE substring(md5(u || '|' || v), 1, 2) <= '02'),
             bi AS (
               SELECT u AS a, v AS b FROM e
@@ -3829,20 +3573,7 @@ def oracle_sql() -> dict[str, str]:
         # k-core replay: same partOf/usedTool KG edges as pagerank,
         # peel unrolled past the graph's peeling depth (idempotent at
         # the fixpoint, so overshooting is safe)
-        "graph_kcore": _kcore_sql(f"""
-            WITH tr AS ({TRANSCRIPTS_SQL})
-            SELECT DISTINCT
-                   '<http://kg.example/conv/' || conv_id || '/turn/'
-                     || CAST(turn_idx AS VARCHAR) || '>' AS u,
-                   '<http://kg.example/conv/' || conv_id || '>' AS v
-            FROM tr
-            UNION
-            SELECT DISTINCT
-                   '<http://kg.example/conv/' || conv_id || '/turn/'
-                     || CAST(turn_idx AS VARCHAR) || '>',
-                   '<http://kg.example/tool/' || tool || '>'
-            FROM tr WHERE tool IS NOT NULL
-        """, k=2, rounds=12),
+        "graph_kcore": _kcore_sql(_kg_edges_sql("u", "v"), k=2, rounds=12),
         # Adamic-Adar replay: same symmetrized edges, same <=100
         # center cap, wedge self-join, anti-join against edges, and
         # the ordered-fold weight sum (list ORDER BY center +
@@ -3851,23 +3582,8 @@ def oracle_sql() -> dict[str, str]:
         # Jaccard replay: same symmetrized edges + center cap as the
         # AA twin; all-integer wedge counts and degrees, one division
         "graph_jaccard": f"""
-            WITH ec AS MATERIALIZED (
-              WITH tr AS ({TRANSCRIPTS_SQL})
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>' AS u,
-                     '<http://kg.example/conv/' || conv_id || '>' AS v
-              FROM tr
-              UNION
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>',
-                     '<http://kg.example/tool/' || tool || '>'
-              FROM tr WHERE tool IS NOT NULL),
-            e AS MATERIALIZED (
-              SELECT DISTINCT u, v FROM (
-                SELECT u, v FROM ec UNION ALL SELECT v, u FROM ec)
-              WHERE u != v),
+            WITH ec AS MATERIALIZED ({_kg_edges_sql("u", "v")}),
+            e AS MATERIALIZED ({_SYMMETRIC_EC}),
             deg AS (SELECT u AS w, COUNT(*) AS deg_w FROM e GROUP BY u),
             adj AS MATERIALIZED (
               SELECT e.u AS w, e.v AS x
@@ -3892,23 +3608,8 @@ def oracle_sql() -> dict[str, str]:
             JOIN deg dv ON ne.v = dv.w
         """,
         "graph_adamic_adar": f"""
-            WITH ec AS MATERIALIZED (
-              WITH tr AS ({TRANSCRIPTS_SQL})
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>' AS u,
-                     '<http://kg.example/conv/' || conv_id || '>' AS v
-              FROM tr
-              UNION
-              SELECT DISTINCT
-                     '<http://kg.example/conv/' || conv_id || '/turn/'
-                       || CAST(turn_idx AS VARCHAR) || '>',
-                     '<http://kg.example/tool/' || tool || '>'
-              FROM tr WHERE tool IS NOT NULL),
-            e AS MATERIALIZED (
-              SELECT DISTINCT u, v FROM (
-                SELECT u, v FROM ec UNION ALL SELECT v, u FROM ec)
-              WHERE u != v),
+            WITH ec AS MATERIALIZED ({_kg_edges_sql("u", "v")}),
+            e AS MATERIALIZED ({_SYMMETRIC_EC}),
             deg AS (SELECT u AS w, COUNT(*) AS deg_w FROM e GROUP BY u),
             centers AS (SELECT * FROM deg WHERE deg_w <= 100),
             adj AS MATERIALIZED (
@@ -3935,27 +3636,8 @@ def oracle_sql() -> dict[str, str]:
         # id-ordered ranks, same md5 slot draw per unrolled step
         "graph_random_walks": _RANDOM_WALKS_SQL,
         # node2vec replay: unrolled biased steps, exact-binary weights
-        "graph_node2vec_walks": _node2vec_sql(f"""
-            WITH tr AS ({TRANSCRIPTS_SQL}),
-            m AS (
-              SELECT conv_id,
-                     'Entity_' || CAST(
-                       CAST(regexp_extract(text, 'Entity_([0-9]+)', 1)
-                            AS BIGINT) AS VARCHAR) AS surface,
-                     regexp_extract(text, 'Entity_([0-9]+)', 1)
-                       AS norm_key
-              FROM tr),
-            canon0 AS (
-              SELECT norm_key, MIN(surface) AS canonical
-              FROM (SELECT DISTINCT surface, norm_key FROM m)
-              GROUP BY norm_key),
-            ents AS (
-              SELECT DISTINCT m.conv_id, c.canonical AS ent
-              FROM m JOIN canon0 c USING (norm_key))
-            SELECT DISTINCT a.ent AS u, b.ent AS v
-            FROM ents a JOIN ents b
-              ON a.conv_id = b.conv_id AND a.ent < b.ent
-        """, walk_len=3),
+        "graph_node2vec_walks": _node2vec_sql(
+            f"WITH {_MENTION_CTES} SELECT u, v FROM ce", walk_len=3),
         # skip-gram replay: the walks CTE + one self-join on the walk
         # identity with the bounded step-offset band
         "graph_skipgram_pairs": f"""
@@ -3969,21 +3651,8 @@ def oracle_sql() -> dict[str, str]:
         # PMI replay: distinct incidence, bag self-join pair counts,
         # item counts, one ln with the engine's exact operand shape
         "graph_pmi": f"""
-            WITH tr AS ({TRANSCRIPTS_SQL}),
-            m AS (
-              SELECT conv_id,
-                     'Entity_' || CAST(
-                       CAST(regexp_extract(text, 'Entity_([0-9]+)', 1)
-                            AS BIGINT) AS VARCHAR) AS surface,
-                     regexp_extract(text, 'Entity_([0-9]+)', 1) AS norm_key
-              FROM tr),
-            canon AS (
-              SELECT norm_key, MIN(surface) AS canonical
-              FROM (SELECT DISTINCT surface, norm_key FROM m)
-              GROUP BY norm_key),
-            inc AS MATERIALIZED (
-              SELECT DISTINCT m.conv_id AS bg, c.canonical AS i
-              FROM m JOIN canon c USING (norm_key)),
+            WITH {_MENTION_CTES},
+            inc AS MATERIALIZED (SELECT conv_id AS bg, ent AS i FROM ents),
             nb AS (SELECT COUNT(DISTINCT bg) AS n_bags FROM inc),
             cnt AS (SELECT i, COUNT(*) AS n_i FROM inc GROUP BY i),
             pairs AS (
@@ -4025,18 +3694,7 @@ def oracle_sql() -> dict[str, str]:
             FROM outs JOIN ins USING (pred)
         """,
         "transcripts_entity_degree": f"""
-            WITH tr AS ({TRANSCRIPTS_SQL}),
-            m AS (
-              SELECT conv_id, turn_idx,
-                     'Entity_' || CAST(
-                       CAST(regexp_extract(text, 'Entity_([0-9]+)', 1)
-                            AS BIGINT) AS VARCHAR) AS surface,
-                     regexp_extract(text, 'Entity_([0-9]+)', 1) AS norm_key
-              FROM tr),
-            canon AS (
-              SELECT norm_key, MIN(surface) AS canonical
-              FROM (SELECT DISTINCT surface, norm_key FROM m)
-              GROUP BY norm_key)
+            WITH {_MENTION_CTES}
             SELECT c.canonical AS entity,
                    COUNT(*) AS n_mentions,
                    COUNT(DISTINCT m.conv_id) AS n_convs
@@ -4270,10 +3928,8 @@ def oracle_sql() -> dict[str, str]:
         # (closure commutes with inversion), the symmetric property as
         # both orientations of its base edges
         "reason_owl_properties": f"""
-            WITH RECURSIVE tr AS ({TRANSCRIPTS_SQL}),
-            k(i) AS (SELECT DISTINCT CAST(
-                       regexp_extract(text, 'Entity_([0-9]+)', 1) AS INT)
-                     FROM tr),
+            WITH RECURSIVE {_MENTION_CTES},
+            k(i) AS (SELECT DISTINCT CAST(norm_key AS INT) FROM m),
             e(a, b) AS (SELECT k1.i, k2.i FROM k k1
                         JOIN k k2 ON k2.i = k1.i + 1),
             c(a, b) AS (SELECT a, b FROM e
@@ -4329,11 +3985,7 @@ def oracle_sql() -> dict[str, str]:
             FROM k a JOIN k b ON a.key = b.key AND a.node < b.node
         """,
         "reason_sameas_fusion": f"""
-            WITH tr AS ({TRANSCRIPTS_SQL}),
-            m AS (SELECT DISTINCT conv_id, turn_idx,
-                         regexp_extract(text, 'Entity_([0-9]+)', 1)
-                           AS norm_key
-                  FROM tr)
+            WITH {_MENTION_CTES}
             SELECT DISTINCT * FROM (
               SELECT '<http://kg.example/conv/' || conv_id || '/turn/'
                        || CAST(turn_idx AS VARCHAR) || '>' AS subj,
@@ -4505,13 +4157,8 @@ def oracle_sql() -> dict[str, str]:
               SELECT 'http://kg.example/conv/' || conv_id, role FROM tr)
         """,
         "transcripts_mentions": f"""
-            WITH tr AS ({TRANSCRIPTS_SQL})
-            SELECT conv_id, turn_idx,
-                   'Entity_' || CAST(
-                     CAST(regexp_extract(text, 'Entity_([0-9]+)', 1) AS BIGINT)
-                     AS VARCHAR) AS surface,
-                   regexp_extract(text, 'Entity_([0-9]+)', 1) AS norm_key
-            FROM tr
+            WITH {_MENTION_CTES}
+            SELECT conv_id, turn_idx, surface, norm_key FROM m
         """,
         "dedup_exact": """
             SELECT md5(text) AS text_md5, COUNT(*) AS n_dups,
@@ -5019,27 +4666,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         # linkpred replay: hex split at 0.2 (0x33333333), AA over the
         # train half, per-test-edge candidate rank
-        "graph_linkpred_ranks": _linkpred_sql(f"""
-            WITH tr AS ({TRANSCRIPTS_SQL}),
-            m AS (
-              SELECT conv_id,
-                     'Entity_' || CAST(
-                       CAST(regexp_extract(text, 'Entity_([0-9]+)', 1)
-                            AS BIGINT) AS VARCHAR) AS surface,
-                     regexp_extract(text, 'Entity_([0-9]+)', 1)
-                       AS norm_key
-              FROM tr),
-            canon0 AS (
-              SELECT norm_key, MIN(surface) AS canonical
-              FROM (SELECT DISTINCT surface, norm_key FROM m)
-              GROUP BY norm_key),
-            ents AS (
-              SELECT DISTINCT m.conv_id, c.canonical AS ent
-              FROM m JOIN canon0 c USING (norm_key))
-            SELECT DISTINCT a.ent AS u, b.ent AS v
-            FROM ents a JOIN ents b
-              ON a.conv_id = b.conv_id AND a.ent < b.ent
-        """, cap=100000, thresh_hex="33333333"),
+        "graph_linkpred_ranks": _linkpred_sql(
+            f"WITH {_MENTION_CTES} SELECT u, v FROM ce", cap=100000,
+            thresh_hex="33333333"),
         # subject-corruption replay: same vocabulary/draw, collision
         # EXISTS on the corrupted-subject side
         "kg_negative_samples_subj": f"""
@@ -5436,20 +5065,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # PageRank replay: the KG's IRI→IRI edges (partOf + usedTool),
         # 3 unrolled power-iteration rounds
-        "graph_pagerank": _pagerank_sql(f"""
-            WITH tr AS ({TRANSCRIPTS_SQL})
-            SELECT DISTINCT
-                   '<http://kg.example/conv/' || conv_id || '/turn/'
-                     || CAST(turn_idx AS VARCHAR) || '>' AS src,
-                   '<http://kg.example/conv/' || conv_id || '>' AS dst
-            FROM tr
-            UNION
-            SELECT DISTINCT
-                   '<http://kg.example/conv/' || conv_id || '/turn/'
-                     || CAST(turn_idx AS VARCHAR) || '>',
-                   '<http://kg.example/tool/' || tool || '>'
-            FROM tr WHERE tool IS NOT NULL""",
-            damping=0.85, iterations=3),
+        "graph_pagerank": _pagerank_sql(_kg_edges_sql("src", "dst"),
+                                        damping=0.85, iterations=3),
         # quantize -> exact integer dot -> rank replay (all integer
         # inputs stay below 2^53, so the double dot sums are exact and
         # engine-identical)
@@ -5942,19 +5559,11 @@ def oracle_sql() -> dict[str, str]:
     # unique path and MIN(d) is the same <=12-edge-path optimum the
     # 12 Bellman-Ford rounds compute
     oracles["graph_shortest_paths"] = f"""
-        WITH RECURSIVE tr AS ({TRANSCRIPTS_SQL}),
-        iri AS (SELECT conv_id, turn_idx, tool,
-                       '<http://kg.example/conv/' || conv_id || '/turn/'
-                         || CAST(turn_idx AS VARCHAR) || '>' AS t
-                FROM tr),
-        e AS (SELECT t AS src,
-                     LEAD(t) OVER (PARTITION BY conv_id
-                                   ORDER BY turn_idx) AS dst,
-                     1 AS w
-              FROM iri
-              UNION ALL
-              SELECT t, '<http://kg.example/tool/' || tool || '>', 3
-              FROM iri WHERE tool IS NOT NULL),
+        WITH RECURSIVE {_TURN_DAG_CTES},
+        e AS (SELECT src, dst,
+                     CASE WHEN dst LIKE '<http://kg.example/tool/%'
+                          THEN 3 ELSE 1 END AS w
+              FROM e0),
         s AS (SELECT t AS node FROM iri
               WHERE turn_idx = 0 AND conv_id LIKE '%0'),
         walk(node, d, hop) AS (
@@ -5966,53 +5575,10 @@ def oracle_sql() -> dict[str, str]:
         SELECT node, CAST(MIN(d) AS BIGINT) AS dist
         FROM walk GROUP BY node
     """
-    # reach-ball replay: enumerate each node's <=6-hop ball (unique
-    # paths on the turn DAG), then the same md5 k-minima arithmetic —
-    # equal to the engine's 6-round fold by KMV mergeability
     # effective-diameter replay: same per-radius KMV estimates,
     # same neighborhood-function sums and 0.9 interpolation
     oracles["graph_eff_diameter"] = f"""
-        WITH RECURSIVE tr AS ({TRANSCRIPTS_SQL}),
-        iri AS (SELECT conv_id, turn_idx, tool,
-                       '<http://kg.example/conv/' || conv_id || '/turn/'
-                         || CAST(turn_idx AS VARCHAR) || '>' AS t
-                FROM tr),
-        e0 AS (SELECT t AS src,
-                      LEAD(t) OVER (PARTITION BY conv_id
-                                    ORDER BY turn_idx) AS dst
-               FROM iri
-               UNION ALL
-               SELECT t, '<http://kg.example/tool/' || tool || '>'
-               FROM iri WHERE tool IS NOT NULL),
-        e AS (SELECT DISTINCT src, dst FROM e0
-              WHERE dst IS NOT NULL AND src <> dst),
-        n AS (SELECT src AS node FROM e
-              UNION SELECT dst FROM e),
-        ball(root, node, hop) AS (
-            SELECT node, node, 0 FROM n
-            UNION ALL
-            SELECT ball.root, e.dst, hop + 1
-            FROM ball JOIN e ON e.src = ball.node
-            WHERE hop < 4),
-        bm AS (SELECT root, node, MIN(hop) AS hop
-               FROM ball GROUP BY 1, 2),
-        rad AS (SELECT unnest(generate_series(0, 4)) AS r),
-        h AS (SELECT bm.root, rad.r,
-                     CAST('0x' || substr(md5(bm.node), 1, 15) AS BIGINT)
-                       / 1152921504606846976.0 AS f
-              FROM bm JOIN rad ON bm.hop <= rad.r),
-        rr AS (SELECT root, r, f,
-                      ROW_NUMBER() OVER (PARTITION BY root, r
-                                         ORDER BY f) AS rn
-               FROM h),
-        m AS (SELECT root, r, CAST(COUNT(*) AS BIGINT) AS n_minima,
-                     MAX(f) AS f_k
-              FROM rr WHERE rn <= 8 GROUP BY 1, 2),
-        est AS (SELECT root, r,
-                       CASE WHEN n_minima < 8
-                            THEN CAST(n_minima AS DOUBLE)
-                            ELSE 7.0 / f_k END AS est
-                FROM m),
+        WITH RECURSIVE {_turn_ball_ctes(4)},{_ball_estimate_ctes(4)},
         nf AS (SELECT r, SUM(est) AS nr FROM est GROUP BY r),
         mx AS (SELECT MAX(nr) AS m FROM nf),
         dd AS (SELECT r, nr, LAG(nr) OVER (ORDER BY r) AS pe FROM nf),
@@ -6027,47 +5593,7 @@ def oracle_sql() -> dict[str, str]:
     # harmonic replay: per-radius balls from the same hop-tracked
     # CTE, identical KMV estimate per radius, LAG-differenced sum
     oracles["graph_harmonic"] = f"""
-        WITH RECURSIVE tr AS ({TRANSCRIPTS_SQL}),
-        iri AS (SELECT conv_id, turn_idx, tool,
-                       '<http://kg.example/conv/' || conv_id || '/turn/'
-                         || CAST(turn_idx AS VARCHAR) || '>' AS t
-                FROM tr),
-        e0 AS (SELECT t AS src,
-                      LEAD(t) OVER (PARTITION BY conv_id
-                                    ORDER BY turn_idx) AS dst
-               FROM iri
-               UNION ALL
-               SELECT t, '<http://kg.example/tool/' || tool || '>'
-               FROM iri WHERE tool IS NOT NULL),
-        e AS (SELECT DISTINCT src, dst FROM e0
-              WHERE dst IS NOT NULL AND src <> dst),
-        n AS (SELECT src AS node FROM e
-              UNION SELECT dst FROM e),
-        ball(root, node, hop) AS (
-            SELECT node, node, 0 FROM n
-            UNION ALL
-            SELECT ball.root, e.dst, hop + 1
-            FROM ball JOIN e ON e.src = ball.node
-            WHERE hop < 4),
-        bm AS (SELECT root, node, MIN(hop) AS hop
-               FROM ball GROUP BY 1, 2),
-        rad AS (SELECT unnest(generate_series(0, 4)) AS r),
-        h AS (SELECT bm.root, rad.r,
-                     CAST('0x' || substr(md5(bm.node), 1, 15) AS BIGINT)
-                       / 1152921504606846976.0 AS f
-              FROM bm JOIN rad ON bm.hop <= rad.r),
-        rr AS (SELECT root, r, f,
-                      ROW_NUMBER() OVER (PARTITION BY root, r
-                                         ORDER BY f) AS rn
-               FROM h),
-        m AS (SELECT root, r, CAST(COUNT(*) AS BIGINT) AS n_minima,
-                     MAX(f) AS f_k
-              FROM rr WHERE rn <= 8 GROUP BY 1, 2),
-        est AS (SELECT root, r,
-                       CASE WHEN n_minima < 8
-                            THEN CAST(n_minima AS DOUBLE)
-                            ELSE 7.0 / f_k END AS est
-                FROM m),
+        WITH RECURSIVE {_turn_ball_ctes(4)},{_ball_estimate_ctes(4)},
         d AS (SELECT root, r, est,
                      LAG(est) OVER (PARTITION BY root ORDER BY r)
                        AS pe
@@ -6077,29 +5603,11 @@ def oracle_sql() -> dict[str, str]:
         FROM d WHERE r >= 1
         GROUP BY root
     """
+    # reach-ball replay: enumerate each node's <=6-hop ball (unique
+    # paths on the turn DAG), then the same md5 k-minima arithmetic —
+    # equal to the engine's 6-round fold by KMV mergeability
     oracles["graph_reach_synopsis"] = f"""
-        WITH RECURSIVE tr AS ({TRANSCRIPTS_SQL}),
-        iri AS (SELECT conv_id, turn_idx, tool,
-                       '<http://kg.example/conv/' || conv_id || '/turn/'
-                         || CAST(turn_idx AS VARCHAR) || '>' AS t
-                FROM tr),
-        e0 AS (SELECT t AS src,
-                      LEAD(t) OVER (PARTITION BY conv_id
-                                    ORDER BY turn_idx) AS dst
-               FROM iri
-               UNION ALL
-               SELECT t, '<http://kg.example/tool/' || tool || '>'
-               FROM iri WHERE tool IS NOT NULL),
-        e AS (SELECT DISTINCT src, dst FROM e0
-              WHERE dst IS NOT NULL AND src <> dst),
-        n AS (SELECT src AS node FROM e
-              UNION SELECT dst FROM e),
-        ball(root, node, hop) AS (
-            SELECT node, node, 0 FROM n
-            UNION ALL
-            SELECT ball.root, e.dst, hop + 1
-            FROM ball JOIN e ON e.src = ball.node
-            WHERE hop < 6),
+        WITH RECURSIVE {_turn_ball_ctes(6)},
         h AS (SELECT DISTINCT root,
                      CAST('0x' || substr(md5(node), 1, 15) AS BIGINT)
                        / 1152921504606846976.0 AS f

@@ -29,10 +29,11 @@ rendered N-Triples-style strings:
     "lex"^^<dt>    → {"@type":"dt","@value":"lex"}
     rdf:type obj   → bare "iri" inside the @type array
 
-A literal's quoted lexical form embeds verbatim: the engine's
-canonical spelling escapes only \\" \\\\ \\n \\r \\t, which are JSON string
-escapes too (the N-Quads reader decodes every other N-Triples escape,
-:mod:`kgloom.exec.rdfsource`).
+A literal's quoted lexical form embeds verbatim, except that a raw
+control character U+0000–U+001F becomes its ``\\u00XX`` JSON escape: the
+engine's canonical spelling escapes only \\" \\\\ \\n \\r \\t, which are
+JSON string escapes too (the N-Quads reader decodes every other
+N-Triples escape, :mod:`kgloom.exec.rdfsource`).
 """
 
 from __future__ import annotations
@@ -50,9 +51,23 @@ def _strip_iri(col: Column) -> Column:
     return F.regexp_extract(col, r"^<(.*)>$", 1)
 
 
+#: raw control characters a JSON string may not hold; \n \r \t reach
+#: here already escaped
+_CONTROL_CODES = [c for c in range(0x20) if chr(c) not in "\n\r\t"]
+
+
+def _escape_controls(col: Column) -> Column:
+    out = col
+    for c in _CONTROL_CODES:
+        out = F.regexp_replace(out, f"\\x{c:02x}", f"\\\\u{c:04x}")
+    return F.when(col.rlike("[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"),
+                  out).otherwise(col)
+
+
 def value_json(o: Column) -> Column:
-    """Rendered object term → its deterministic JSON-LD value object
-    (see module docstring for the mapping)."""
+    """Rendered object term, its control characters already escaped →
+    its deterministic JSON-LD value object (see module docstring for
+    the mapping)."""
     dt = F.regexp_extract(o, _DT_RE, 2)
     dtlex = F.regexp_extract(o, _DT_RE, 1)
     lang = F.regexp_extract(o, _LANG_RE, 2)
@@ -77,7 +92,11 @@ def jsonld_nodes(df: DataFrame) -> DataFrame:
     slot at the node level; a ``graph`` column is ignored (wrap lines
     per graph in ``{"@id": g, "@graph": [...]}`` downstream when quad
     fidelity matters)."""
-    t = df.select("subj", "pred", "obj").distinct()
+    # escaped once per row, below the distinct: value_json reads its
+    # term in every branch, and the replace chain inlined there doubled
+    # kg_jsonld_render's time
+    t = df.select("subj", "pred",
+                  _escape_controls(F.col("obj")).alias("obj")).distinct()
     typed = F.col("pred") == _RDF_TYPE
     key = F.when(typed, F.lit("@type")) \
            .otherwise(_strip_iri(F.col("pred")))

@@ -151,7 +151,11 @@ def _extract_logical_source(graph: Graph, subj: Term) -> LogicalSource:
     rf_term = graph.object(ls_node, RML + "referenceFormulation")
     rf = "CSVRows"
     if rf_term is not None:
-        rf = _REF_FORMULATIONS.get(rf_term[1], rf_term[1])
+        if rf_term[1] not in _REF_FORMULATIONS:
+            raise RmlValidationError(
+                f"triples map {subj[1]}: logical source {ls_node[1]} has "
+                f"an unknown rml:referenceFormulation <{rf_term[1]}>")
+        rf = _REF_FORMULATIONS[rf_term[1]]
     iterator = _lit(graph.object(ls_node, RML + "iterator"))
     if iterator is None:
         # SQLQuery sources carry the statement in rml:query / rr:sqlQuery

@@ -311,8 +311,7 @@ def translate_to_plan(doc: Document,
             config["iterator"] = tm.logical_source.iterator
         if source_overrides and tm.logical_source.source in source_overrides:
             config.update(source_overrides[tm.logical_source.source])
-        rf = _FORMULATION_MAP.get(tm.logical_source.reference_formulation,
-                                  ReferenceFormulation.CSV_ROWS)
+        rf = _FORMULATION_MAP[tm.logical_source.reference_formulation]
         # document sources (JSONPath/XMLPath): the referenced attributes
         # double as the iterator's field spec (alias = reference path),
         # feeding the docsource loader's nested-path resolution

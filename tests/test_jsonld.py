@@ -125,3 +125,23 @@ def test_ntriples_only_escapes_emit_valid_json(spark):
     assert len(lines) == 1
     values = json.loads(lines[0])["http://ex.org/p"]
     assert sorted(v["@value"] for v in values) == sorted(objs.values())
+
+
+def test_control_characters_emit_valid_json(spark):
+    """A literal holding raw control characters other than \\n \\r \\t
+    (which JSON strings may not contain) still yields a line that
+    parses, to the literal's own characters, whatever its kind."""
+    s, p = "<http://ex.org/s>", "<http://ex.org/p>"
+    controls = "".join(chr(c) for c in range(0x20) if chr(c) not in "\n\r\t")
+    objs = {
+        '"a\x08b"': "a\x08b",
+        '"a\x01b"@en': "a\x01b",
+        f'"{controls}"^^<http://ex.org/dt>': controls,
+        '"x\\ny\x1f"': "x\ny\x1f",
+    }
+    df = spark.createDataFrame([(s, p, o) for o in objs],
+                               ["subj", "pred", "obj"])
+    lines = [r.value for r in jsonld_document_lines(df).collect()]
+    assert len(lines) == 1
+    values = json.loads(lines[0])["http://ex.org/p"]
+    assert sorted(v["@value"] for v in values) == sorted(objs.values())

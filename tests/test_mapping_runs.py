@@ -119,3 +119,22 @@ def test_blank_node_source_rejected_at_extraction(spark):
             compile_rml(text)
 
     assert spark_jobs(spark, "csvw-bnode", compile_mapping) == 0
+
+
+def test_unknown_reference_formulation_rejected_at_extraction(spark):
+    """An rml:referenceFormulation IRI the engine does not know (here
+    the W3C RML namespace's JSONPath) is rejected while the mapping is
+    extracted, naming the triples map and the IRI, before any Spark job
+    runs — not read as CSV and failed at bind on missing columns."""
+    from kgloom.rml import RmlValidationError
+    case = os.path.join(os.path.dirname(CASE),
+                        "unknown_reference_formulation")
+    with open(f"{case}/mapping.ttl", encoding="utf-8") as f:
+        text = f.read()
+
+    def run_mapping():
+        with pytest.raises(RmlValidationError,
+                           match=r"Person.*<http://w3id\.org/rml/JSONPath>"):
+            run_rml(spark, text, base_dir=case)
+
+    assert spark_jobs(spark, "unknown-formulation", run_mapping) == 0
