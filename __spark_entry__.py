@@ -15,9 +15,10 @@ Derived inputs are built once per side.  The Spark queries share
 ``_entity_incidence`` / ``_comention_edges`` (the co-mention graph),
 ``_kg_edges`` (the turn KG's IRI→IRI edges), ``_turn_succession`` /
 ``_turn_dag`` (the turn-succession DAG), ``_turn_quads`` and
-``_turn_kg_sparql`` (SPARQL over the turn KG).  The oracles share the
-CTE text ``_MENTION_CTES``, ``_kg_edges_sql``, ``_TURN_DAG_CTES`` /
-``_turn_ball_ctes``, ``_TURN_TRIPLES_UNION`` and ``_SHINGLES_CTE``.  A
+``_turn_kg_select`` (SPARQL over the turn KG; ``_KG_PREFIX`` declares
+``kg:``).  The oracles share the CTE text ``_MENTION_CTES``,
+``_kg_edges_sql``, ``_TURN_DAG_CTES`` / ``_turn_ball_ctes`` /
+``_ball_estimate_ctes``, ``_TURN_TRIPLES_UNION`` and ``_SHINGLES_CTE``.  A
 Spark helper and an oracle helper never share code or call each other:
 each oracle is an independent SQL replay of what its query computes.
 """
@@ -289,14 +290,11 @@ def _turn_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
         "graph", F.lit(None).cast("string"))
 
 
-def _turn_kg_sparql(spark: SparkSession, sf_dir: str, query: str,
-                    kg: DataFrame | None = None, run=None) -> DataFrame:
-    """``query`` with the ``kg:`` prefix declared, run by
-    ``sparql_select`` (or ``run``) over the turn KG (or ``kg``)."""
+def _turn_kg_select(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
+    """SPARQL SELECT ``query`` over the turn KG, ``kg:`` declared."""
     from kgloom.sparql import sparql_select
-    if kg is None:
-        kg = q_transcripts_turn_triples(spark, sf_dir)
-    return (run or sparql_select)(kg, f"PREFIX kg: <{_KGO}>" + query)
+    return sparql_select(q_transcripts_turn_triples(spark, sf_dir),
+                         _KG_PREFIX + query)
 
 
 def _tool_use_annotations(tri: DataFrame) -> DataFrame:
@@ -724,7 +722,7 @@ def q_sparql_kg_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     turn triples, then answer a two-pattern BGP (join on ?turn) with a
     constant-object pattern (tool turns carry role "tool") — the SPARQL reference formulation
     executing end-to-end (kgloom/sparql.py)."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?turn ?tool WHERE {
           ?turn kg:usedTool ?tool ;
                 kg:role "tool" .
@@ -740,10 +738,10 @@ def q_sparql_kg_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposes it in-plan (regexp_extract, codegen), unifies ?turn
     with the asserted role pattern, and projects lexical forms.  The
     reference has no RDF-star surface at all."""
-    tri = q_transcripts_turn_triples(spark, sf_dir)
-    kg = tri.withColumn("graph", F.lit(None).cast("string")) \
-        .unionByName(_tool_use_annotations(tri))
-    return _turn_kg_sparql(spark, sf_dir, kg=kg, query="""
+    from kgloom.sparql import sparql_select
+    kg = _turn_quads(spark, sf_dir)
+    kg = kg.unionByName(_tool_use_annotations(kg))
+    return sparql_select(kg, _KG_PREFIX + """
         SELECT ?turn ?tool ?conv ?role WHERE {
           << ?turn kg:usedTool ?tool >> kg:inConv ?conv .
           ?turn kg:role ?role .
@@ -755,7 +753,7 @@ def q_sparql_kg_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL OPTIONAL over the constructed KG (kgloom/sparql.py): every
     turn with its role, plus the tool it used when one exists — the
     left-join compilation of OPTIONAL, nulls for turns without tools."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?turn ?role ?tool WHERE {
           ?turn kg:role ?role .
           OPTIONAL { ?turn kg:usedTool ?tool }
@@ -766,7 +764,7 @@ def q_sparql_kg_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sparql_kg_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL UNION over the constructed KG: each turn's tool IRI and
     role literal as one binding stream (unionByName compilation)."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?turn ?v WHERE {
           { ?turn kg:usedTool ?v } UNION { ?turn kg:role ?v }
         }
@@ -780,7 +778,7 @@ def q_sparql_kg_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tool turns), plus a HAVING group filter — the aggregate subset
     (COUNT/SUM/AVG/MIN/MAX, GROUP BY, HAVING) compiled to a Spark
     groupBy/agg."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?conv (COUNT(?turn) AS ?n_turns)
                      (COUNT(?tool) AS ?n_tool_turns) WHERE {
           ?turn kg:partOf ?conv .
@@ -806,7 +804,8 @@ def q_sparql_kg_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pred") == f"<{_KGO}usedTool>"))
     store.write("kg", triples)                  # pointer moves on
     asof = store.read_at("kg", s1.snapshot_id)
-    return _turn_kg_sparql(spark, sf_dir, kg=asof, query="""
+    from kgloom.sparql import sparql_select
+    return sparql_select(asof, _KG_PREFIX + """
         SELECT ?tool (COUNT(?turn) AS ?n_uses) WHERE {
           ?turn kg:usedTool ?tool .
         } GROUP BY ?tool
@@ -853,7 +852,8 @@ def q_sparql_kg_construct(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a set), returned as a quad DataFrame so the result can feed the
     serializer or another mapping."""
     from kgloom.sparql import sparql_construct
-    return _turn_kg_sparql(spark, sf_dir, run=sparql_construct, query="""
+    kg = q_transcripts_turn_triples(spark, sf_dir)
+    return sparql_construct(kg, _KG_PREFIX + """
         CONSTRUCT { ?conv kg:toolUsed ?tool }
         WHERE { ?turn kg:partOf ?conv ; kg:usedTool ?tool . }
     """).select("subj", "pred", "obj")
@@ -864,7 +864,7 @@ def q_sparql_kg_bind(spark: SparkSession, sf_dir: str) -> DataFrame:
     a VALUES inline-data join, then derive a label with
     BIND(CONCAT(UCASE(...))) — expression compilation to pure Column
     ops (no Python row path)."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?turn ?label WHERE {
           ?turn kg:role ?role .
           VALUES ?role { "user" "assistant" }
@@ -879,16 +879,10 @@ def _kg_with_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``turn_idx`` order) — the chain relation the property-path queries
     traverse.  One window pass (partitioned by conversation), rendered
     IRIs, unioned with the engine-constructed KG; pure Catalyst."""
-    from pyspark.sql.window import Window
     triples = q_transcripts_turn_triples(spark, sf_dir)
-    turns = transcripts_from_events(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    nxt = (turns
-           .withColumn("next_idx", F.lead("turn_idx").over(w))
-           .where(F.col("next_idx").isNotNull())
-           .select(_turn_iri(F.col("turn_idx")).alias("subj"),
-                   F.lit("<http://kg.example/ontology/next>").alias("pred"),
-                   _turn_iri(F.col("next_idx")).alias("obj")))
+    nxt = _turn_succession(transcripts_from_events(spark, sf_dir))[0].select(
+        F.col("src").alias("subj"), F.lit(f"<{_KGO}next>").alias("pred"),
+        F.col("dst").alias("obj"))
     # the SPARQL engine scans the input several times (edge extraction
     # for the closure, the non-path BGPs, the CC pass) — persist the
     # constructed KG once instead of re-running the construction
@@ -903,8 +897,8 @@ def q_sparql_kg_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds for chain length L) joined with a ``kg:next/kg:usedTool``
     sequence path: every turn pair (a strictly-before b) where b's
     successor turn invoked a tool."""
-    return _turn_kg_sparql(spark, sf_dir, kg=_kg_with_next(spark, sf_dir),
-                           query="""
+    from kgloom.sparql import sparql_select
+    return sparql_select(_kg_with_next(spark, sf_dir), _KG_PREFIX + """
         SELECT DISTINCT ?a ?b ?tool WHERE {
           ?a kg:next+ ?b .
           ?b kg:next/kg:usedTool ?tool .
@@ -922,8 +916,8 @@ def q_sparql_kg_path_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
     work scales with the REACHABLE region — conv-1's own chain — not
     the whole graph's closure, unlike the both-ends-variable
     ``sparql_kg_path``."""
-    return _turn_kg_sparql(spark, sf_dir, kg=_kg_with_next(spark, sf_dir),
-                           query="""
+    from kgloom.sparql import sparql_select
+    return sparql_select(_kg_with_next(spark, sf_dir), _KG_PREFIX + """
         SELECT DISTINCT ?b ?role WHERE {
           <http://kg.example/conv/conv-1/turn/0> kg:next+ ?b .
           ?b kg:role ?role .
@@ -937,8 +931,8 @@ def q_sparql_kg_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``DESC(COUNT(?t))``), a tie-breaking key, OFFSET-free LIMIT —
     evaluated bottom-up, then natural-joined back to every tool turn
     of those conversations in the enclosing group."""
-    return _turn_kg_sparql(spark, sf_dir, kg=_kg_with_next(spark, sf_dir),
-                           query="""
+    from kgloom.sparql import sparql_select
+    return sparql_select(_kg_with_next(spark, sf_dir), _KG_PREFIX + """
         SELECT ?conv ?turn ?tool WHERE {
           { SELECT ?conv (COUNT(?t) AS ?ntool) WHERE {
               ?t kg:partOf ?conv . ?t kg:usedTool ?any .
@@ -959,7 +953,8 @@ def q_sparql_kg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes, anti-join + union inserts — only touched data pays dedup),
     which the DuckDB oracle replays with plain set operations."""
     from kgloom.sparql import sparql_update
-    return _turn_kg_sparql(spark, sf_dir, run=sparql_update, query="""
+    kg = q_transcripts_turn_triples(spark, sf_dir)
+    return sparql_update(kg, _KG_PREFIX + """
         INSERT DATA {
           <http://kg.example/dataset> kg:version "r4"
         } ;
@@ -977,7 +972,7 @@ def q_sparql_kg_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition with an OPTIONAL variable, and SHA256 fingerprinting —
     all compiled to pure Catalyst Columns (when/instr/substring/
     floor/sha2), no Python row path."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?turn ?cid ?halflen ?kind ?fp WHERE {
           ?turn kg:partOf ?conv .
           ?turn kg:role ?role .
@@ -997,8 +992,8 @@ def q_sparql_kg_path_alt(spark: SparkSession, sf_dir: str) -> DataFrame:
     every tool IRI or role literal of their turns via
     ``^kg:partOf/(kg:usedTool|kg:role)`` — inverse edge walk into a
     unioned alternative, compiled to a constant-pred scan join/union."""
-    return _turn_kg_sparql(spark, sf_dir, kg=_kg_with_next(spark, sf_dir),
-                           query="""
+    from kgloom.sparql import sparql_select
+    return sparql_select(_kg_with_next(spark, sf_dir), _KG_PREFIX + """
         SELECT DISTINCT ?conv ?v WHERE {
           ?conv ^kg:partOf/(kg:usedTool|kg:role) ?v .
         }
@@ -1098,7 +1093,7 @@ def q_sparql_kg_minus_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     of turns, MINUS the tool-invoking turns (anti join on the shared
     ?turn), NOT EXISTS the assistant turns — leaving exactly the user
     turns, each negation compiled to a distinct left-anti join."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?turn ?role WHERE {
           ?turn kg:role ?role .
           MINUS { ?turn kg:usedTool ?tool }
@@ -1181,7 +1176,7 @@ def q_sparql_kg_values_undef(spark: SparkSession, sf_dir: str) -> DataFrame:
     different marks (bag semantics of the §10.2 compatibility join).
     The UNDEF-aware join compiles to a broadcast theta join
     (null-or-equal per shared var) + coalesce merge."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?turn ?role ?mark WHERE {
           ?turn kg:role ?role .
           VALUES (?role ?mark) {
@@ -1200,7 +1195,7 @@ def q_sparql_kg_group_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregation extend, plus a per-bucket count and average
     length.  The DuckDB twin replays the same floor/length arithmetic
     (numeric results surface as double lexicals in both engines)."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?lenb (COUNT(*) AS ?n_turns)
                (AVG(STRLEN(?txt)) AS ?avg_len) WHERE {
           ?turn kg:text ?txt .
@@ -1216,7 +1211,7 @@ def q_sparql_kg_having_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIFFERENT from the projected one, compiled as a hidden grouping
     output (the ORDER-BY-aggregate machinery) and dropped after the
     filter.  DuckDB replays it natively."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?conv (COUNT(*) AS ?n_tool_turns) WHERE {
           ?turn kg:partOf ?conv ;
                 kg:usedTool ?tool .
@@ -1231,7 +1226,7 @@ def q_sparql_kg_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOUND and isIRI — chat turns about Entity_7* plus tool turns in the
     turn-10s — every predicate compiled to a codegen'd Column (rlike /
     contains / startswith / isNotNull), no Python row path."""
-    return _turn_kg_sparql(spark, sf_dir, """
+    return _turn_kg_select(spark, sf_dir, """
         SELECT ?turn ?role ?txt WHERE {
           ?turn kg:role ?role ;
                 kg:text ?txt .
@@ -1855,6 +1850,7 @@ def q_multimodal_features(spark, sf_dir):
 
 
 _KGO = "http://kg.example/ontology/"
+_KG_PREFIX = f"PREFIX kg: <{_KGO}>"
 
 #: relational replay of the turn-triples plan (one SELECT per template
 #: line) against a `tr` CTE of TRANSCRIPTS_SQL — shared by the
@@ -1926,8 +1922,8 @@ def q_sparql_kg_group_concat(spark, sf_dir):
     (kgloom/sparql.py): per conversation, the sorted comma-joined set
     of distinct tool IRIs, a sample role, and the tool-turn count —
     all one groupBy/agg."""
-    return _turn_kg_sparql(spark, sf_dir, kg=_turn_quads(spark, sf_dir),
-                           query="""
+    from kgloom.sparql import sparql_select
+    return sparql_select(_turn_quads(spark, sf_dir), _KG_PREFIX + """
         SELECT ?conv
                (GROUP_CONCAT(DISTINCT ?tool; SEPARATOR=",") AS ?tools)
                (SAMPLE(?role) AS ?arole)
@@ -1983,8 +1979,8 @@ def q_sparql_kg_nps(spark, sf_dir):
     (kgloom/sparql.py): every edge whose predicate is NOT kg:text or
     kg:role — i.e. the partOf + usedTool structure without enumerating
     it — compiled to one NOT-IN-filtered scan."""
-    return _turn_kg_sparql(spark, sf_dir, kg=_turn_quads(spark, sf_dir),
-                           query="""
+    from kgloom.sparql import sparql_select
+    return sparql_select(_turn_quads(spark, sf_dir), _KG_PREFIX + """
         SELECT ?s ?o WHERE { ?s !(kg:text|kg:role) ?o . }
     """)
 
@@ -1995,8 +1991,7 @@ def q_sparql_kg_describe(spark, sf_dir):
     of its outgoing triples — via DESCRIBE ?turn WHERE {{ role "tool" }};
     the resource set stays distributed (two semi joins, no collect)."""
     from kgloom.sparql import sparql_describe
-    return _turn_kg_sparql(spark, sf_dir, kg=_turn_quads(spark, sf_dir),
-                           run=sparql_describe, query="""
+    return sparql_describe(_turn_quads(spark, sf_dir), _KG_PREFIX + """
         DESCRIBE ?turn WHERE { ?turn kg:role "tool" . }
     """).select("subj", "pred", "obj")
 
@@ -2815,10 +2810,10 @@ ball(root, node, hop) AS (
 
 
 def _ball_estimate_ctes(radius: int) -> str:
-    """After _turn_ball_ctes(radius): `est(root, r, est)`, the KMV (k=8)
+    """_turn_ball_ctes(radius) plus `est(root, r, est)`, the KMV (k=8)
     size estimate of each root's r-ball for r = 0..radius, from the same
-    md5 fractions as the engine."""
-    return f"""
+    md5 fractions as the engine (for WITH RECURSIVE)."""
+    return _turn_ball_ctes(radius) + f""",
 bm AS (SELECT root, node, MIN(hop) AS hop FROM ball GROUP BY 1, 2),
 rad AS (SELECT unnest(generate_series(0, {radius})) AS r),
 h AS (SELECT bm.root, rad.r,
@@ -5578,7 +5573,7 @@ def oracle_sql() -> dict[str, str]:
     # effective-diameter replay: same per-radius KMV estimates,
     # same neighborhood-function sums and 0.9 interpolation
     oracles["graph_eff_diameter"] = f"""
-        WITH RECURSIVE {_turn_ball_ctes(4)},{_ball_estimate_ctes(4)},
+        WITH RECURSIVE {_ball_estimate_ctes(4)},
         nf AS (SELECT r, SUM(est) AS nr FROM est GROUP BY r),
         mx AS (SELECT MAX(nr) AS m FROM nf),
         dd AS (SELECT r, nr, LAG(nr) OVER (ORDER BY r) AS pe FROM nf),
@@ -5593,7 +5588,7 @@ def oracle_sql() -> dict[str, str]:
     # harmonic replay: per-radius balls from the same hop-tracked
     # CTE, identical KMV estimate per radius, LAG-differenced sum
     oracles["graph_harmonic"] = f"""
-        WITH RECURSIVE {_turn_ball_ctes(4)},{_ball_estimate_ctes(4)},
+        WITH RECURSIVE {_ball_estimate_ctes(4)},
         d AS (SELECT root, r, est,
                      LAG(est) OVER (PARTITION BY root ORDER BY r)
                        AS pe

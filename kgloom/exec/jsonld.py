@@ -51,17 +51,20 @@ def _strip_iri(col: Column) -> Column:
     return F.regexp_extract(col, r"^<(.*)>$", 1)
 
 
-#: raw control characters a JSON string may not hold; \n \r \t reach
+#: a raw control character a JSON string may not hold; \n \r \t reach
 #: here already escaped
-_CONTROL_CODES = [c for c in range(0x20) if chr(c) not in "\n\r\t"]
+_CONTROL = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"
 
 
 def _escape_controls(col: Column) -> Column:
-    out = col
-    for c in _CONTROL_CODES:
-        out = F.regexp_replace(out, f"\\x{c:02x}", f"\\\\u{c:04x}")
-    return F.when(col.rlike("[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"),
-                  out).otherwise(col)
+    """``col`` with each raw control character as its ``\\u00xx`` JSON
+    escape: split around the control characters, escape the pieces that
+    are one, rejoin."""
+    parts = F.split(col, f"(?<={_CONTROL})|(?={_CONTROL})")
+    return F.array_join(F.transform(parts, lambda p: F.when(
+        p.rlike(f"^{_CONTROL}$"),
+        F.concat(F.lit("\\u00"), F.lower(F.lpad(F.hex(F.ascii(p)), 2, "0"))))
+        .otherwise(p)), "")
 
 
 def value_json(o: Column) -> Column:
@@ -93,8 +96,7 @@ def jsonld_nodes(df: DataFrame) -> DataFrame:
     per graph in ``{"@id": g, "@graph": [...]}`` downstream when quad
     fidelity matters)."""
     # escaped once per row, below the distinct: value_json reads its
-    # term in every branch, and the replace chain inlined there doubled
-    # kg_jsonld_render's time
+    # term in every branch
     t = df.select("subj", "pred",
                   _escape_controls(F.col("obj")).alias("obj")).distinct()
     typed = F.col("pred") == _RDF_TYPE
