@@ -16,11 +16,13 @@ signatures a real decoder drops into.
 from __future__ import annotations
 
 import importlib.util
+import sys
 from collections.abc import Iterator
 
 _HAS_PIL = importlib.util.find_spec("PIL") is not None
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -50,6 +52,11 @@ FEATURE_SCHEMA = StructType([
     StructField("n_bytes", IntegerType(), True),
     StructField("feature", ArrayType(FloatType()), True),
 ])
+
+# the batch kernels and the decoders they call reach the Python workers
+# by value: a worker need not import kgloom, which a driver may have
+# loaded from a sys.path entry the workers do not inherit
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _fake_decode_image(payload: bytes, dim: int = 8) -> list[float]:

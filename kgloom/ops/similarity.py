@@ -52,29 +52,47 @@ def pair_dot(a, b) -> F.Column:
     return _dot(_as_double(a), _as_double(b))
 
 
+def _scored(queries: DataFrame, corpus: DataFrame,
+            on: str | None = None) -> DataFrame:
+    """(query_id, q, sq, neighbor_id, e, se, sim): every pair of a query
+    and a corpus vector (both ``vec_id``/``embedding`` rows), self-pairs
+    dropped, scored by cosine.  The query side is broadcast and
+    crossed with the corpus, or joined to it on column ``on``; each
+    vector's self-dot is computed once, before the join."""
+    def side(df: DataFrame, id_col: str, vec: str, sq: str) -> DataFrame:
+        return df.select(F.col("vec_id").alias(id_col),
+                         F.col("embedding").alias(vec),
+                         *([on] if on else []),
+                         self_dot(F.col("embedding")).alias(sq))
+    q = F.broadcast(side(queries, "query_id", "q", "sq"))
+    c = side(corpus, "neighbor_id", "e", "se")
+    pairs = (q.crossJoin(c) if on is None else q.join(c, on)).where(
+        F.col("query_id") != F.col("neighbor_id"))
+    return pairs.withColumn("sim", cosine_from(
+        pair_dot(F.col("q"), F.col("e")), F.col("sq"), F.col("se")))
+
+
+def _top(scored: DataFrame, k: int) -> DataFrame:
+    """``scored`` with each query's ``k`` best pairs ranked 1..k by
+    descending ``sim``, ties by ``neighbor_id``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))
+
+
+def _only(emb: DataFrame, query_ids: list[int] | None) -> DataFrame:
+    return emb if query_ids is None else \
+        emb.where(F.col("vec_id").isin(query_ids))
+
+
 def cosine_topk(emb: DataFrame, k: int = 5,
                 query_ids: list[int] | None = None,
                 round_to: int = 3) -> DataFrame:
     """(query_id, neighbor_id, rank, sim): exact top-k cosine neighbors
     for each query vector (default: all vectors as queries)."""
-    queries = emb.select(F.col("vec_id").alias("query_id"),
-                         F.col("embedding").alias("q"),
-                         self_dot(F.col("embedding")).alias("sq"))
-    if query_ids is not None:
-        queries = queries.where(F.col("query_id").isin(query_ids))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("e"),
-                        self_dot(F.col("embedding")).alias("se"))
-    scored = (F.broadcast(queries).crossJoin(corpus)
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("sim", cosine_from(
-                  pair_dot(F.col("q"), F.col("e")),
-                  F.col("sq"), F.col("se"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("sim", round_to).alias("sim")))
+    return _top(_scored(_only(emb, query_ids), emb), k).select(
+        "query_id", "neighbor_id", "rank",
+        F.round("sim", round_to).alias("sim"))
 
 
 def ivf_topk(emb: DataFrame, k: int = 3,
@@ -82,26 +100,10 @@ def ivf_topk(emb: DataFrame, k: int = 3,
              round_to: int = 3) -> DataFrame:
     """IVF-pruned top-k: only corpus vectors in the query's coarse cell
     (the ``label`` column) are scored."""
-    queries = emb.select(F.col("vec_id").alias("query_id"),
-                         F.col("embedding").alias("q"),
-                         F.col("label").alias("cell"),
-                         self_dot(F.col("embedding")).alias("sq"))
-    if query_ids is not None:
-        queries = queries.where(F.col("query_id").isin(query_ids))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("e"),
-                        F.col("label").alias("cell"),
-                        self_dot(F.col("embedding")).alias("se"))
-    scored = (F.broadcast(queries).join(corpus, "cell")
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("sim", cosine_from(
-                  pair_dot(F.col("q"), F.col("e")),
-                  F.col("sq"), F.col("se"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("sim", round_to).alias("sim")))
+    scored = _scored(_only(emb, query_ids), emb, on="label")
+    return _top(scored, k).select(
+        "query_id", "neighbor_id", "rank",
+        F.round("sim", round_to).alias("sim"))
 
 
 # --- k-means IVF (the 100 TB scale path) ---------------------------------
@@ -167,29 +169,14 @@ def ivf_topk_kmeans(emb: DataFrame, k: int = 3, n_cells: int = 8,
     cdf = spark.createDataFrame(
         kmeans_centroids(emb, n_cells, max_iter),
         "cell int, centroid array<double>")
-    corpus = _assign(emb, cdf).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("e"), "cell",
-        self_dot(F.col("embedding")).alias("se"))
-    queries = emb
-    if query_ids is not None:
-        queries = queries.where(F.col("vec_id").isin(query_ids))
-    queries = _assign(queries, cdf, n_probe=n_probe).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q"),
-        "cell", self_dot(F.col("embedding")).alias("sq"))
-    scored = (F.broadcast(queries).join(corpus, "cell")
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              # a (query, neighbor) pair can match in several probed
-              # cells — dedup on the narrow id pair before ranking
-              .dropDuplicates(["query_id", "neighbor_id"])
-              .withColumn("sim", cosine_from(
-                  pair_dot(F.col("q"), F.col("e")),
-                  F.col("sq"), F.col("se"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("sim", round_to).alias("sim")))
+    queries = _assign(_only(emb, query_ids), cdf, n_probe=n_probe)
+    # a (query, neighbor) pair can match in several probed cells —
+    # dedup on the narrow id pair before ranking
+    scored = _scored(queries, _assign(emb, cdf), on="cell").dropDuplicates(
+        ["query_id", "neighbor_id"])
+    return _top(scored, k).select(
+        "query_id", "neighbor_id", "rank",
+        F.round("sim", round_to).alias("sim"))
 
 
 # --- int8 scalar quantization (the 100 TB storage/IO path) ----------------
@@ -282,24 +269,9 @@ def hard_negative_pairs(emb: DataFrame, lo: float = 0.25,
     per-query window so out-of-band pairs never reach the shuffle.
     Composes with IVF cell pruning at scale exactly like the top-k
     path; this brute variant is the verification baseline."""
-    queries = emb.select(F.col("vec_id").alias("query_id"),
-                         F.col("embedding").alias("q"),
-                         self_dot(F.col("embedding")).alias("sq"))
-    if query_ids is not None:
-        queries = queries.where(F.col("query_id").isin(query_ids))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("e"),
-                        self_dot(F.col("embedding")).alias("se"))
-    scored = (F.broadcast(queries).crossJoin(corpus)
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              .withColumn("sim", cosine_from(
-                  pair_dot(F.col("q"), F.col("e")),
-                  F.col("sq"), F.col("se")))
-              .where((F.col("sim") >= lo) & (F.col("sim") < hi)))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    scored = _scored(_only(emb, query_ids), emb).where(
+        (F.col("sim") >= lo) & (F.col("sim") < hi))
+    return _top(scored, k).select("query_id", "neighbor_id", "rank")
 
 
 def rademacher_signs(out_dim: int, in_dim: int,

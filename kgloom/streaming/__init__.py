@@ -10,7 +10,6 @@ from .fusion import (  # noqa: F401
     fuse_batch,
     read_alias_map,
     read_fused,
-    read_fusion_metrics,
     read_triple_stream,
     stream_fused_triples,
 )

@@ -36,14 +36,10 @@ from ..ops.sketch import kmv_estimate, kmv_minima
 from . import state
 
 
-def _ddl(keys: list[str]) -> str:
-    return ", ".join(f"{k} string" for k in keys) + ", __f double"
-
-
 def read_minima(spark: SparkSession, state_path: str, keys: list[str],
                 before: Optional[int] = None) -> Optional[DataFrame]:
-    return state.read_latest(spark, state_path, "minima", _ddl(keys),
-                             before)
+    return state.read_latest(spark, state_path, "minima",
+                             state.keyed_ddl(keys, "__f double"), before)
 
 
 def fold_minima(prev: Optional[DataFrame], batch_df: DataFrame,
@@ -77,20 +73,11 @@ def distinct_batch(spark: SparkSession, state_path: str,
 
 def stream_kmv_distinct(spark: SparkSession, stream_df: DataFrame,
                         state_path: str, checkpoint_path: str,
-                        keys: list[str], value: str, k: int = 64,
-                        available_now: bool = True):
+                        keys: list[str], value: str, k: int = 64):
     """Fold a streaming DataFrame into KMV minima state; read the
     current estimates any time with :func:`read_distinct`."""
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        distinct_batch(spark, state_path, batch_df, batch_id, keys,
-                       value, k=k)
-
-    writer = (stream_df.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(stream_df, checkpoint_path, lambda df, i: (
+        distinct_batch(spark, state_path, df, i, keys, value, k=k)))
 
 
 def read_distinct(spark: SparkSession, state_path: str, keys: list[str],

@@ -9,9 +9,9 @@ components is a GLOBAL equivalence relation, and any grouping key
 splits it.  The scalable exact design is incremental view maintenance
 via ``foreachBatch``:
 
-- **raw store** (append-only, one ``batch=<id>`` dir per micro-batch,
-  per-batch ``overwrite`` → retry-idempotent): the batch's data
-  triples, stored UN-rewritten.  Original terms are stable under
+- **raw store** (append-only, one ``v=<batch_id>`` dir per
+  micro-batch, read as the union of every complete one): the batch's
+  data triples, stored UN-rewritten.  Original terms are stable under
   future merges, so no stored byte is ever invalidated.
 - **alias map** (versioned, one ``v=<batch_id>`` dir per batch): the
   global (node, canonical) map after folding in the batch's sameAs
@@ -45,7 +45,6 @@ the incremental-materialization semantics those targets would need.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,8 +103,7 @@ def fuse_batch(spark: SparkSession, state_path: str,
     observed_df, observed = state.observe(
         batch_df, n_data=F.count_if(~is_edge),
         n_edges=F.count_if(is_edge & (F.col("subj") != F.col("obj"))))
-    observed_df.where(~is_edge).write.mode("overwrite").parquet(
-        os.path.join(state_path, "raw", f"batch={batch_id}"))
+    state.commit(observed_df.where(~is_edge), state_path, "raw", batch_id)
 
     batch_edges = (batch_df.where(is_edge)
                    .select(F.col("subj").alias("src"),
@@ -129,7 +127,6 @@ def fuse_batch(spark: SparkSession, state_path: str,
 def stream_fused_triples(spark: SparkSession, input_path: str,
                          state_path: str, checkpoint_path: str,
                          same_as_pred: str = OWL_SAMEAS,
-                         available_now: bool = True,
                          max_files_per_trigger: int = 1):
     """Streaming incremental sameAs fusion: triple stream →
     ``fuse_batch`` per micro-batch.  Read the result with
@@ -137,34 +134,21 @@ def stream_fused_triples(spark: SparkSession, input_path: str,
     full input — pinned by ``tests/test_streaming_fusion.py``,
     including components that merge ACROSS batches)."""
     triples = read_triple_stream(spark, input_path, max_files_per_trigger)
-
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        fuse_batch(spark, state_path, batch_df, batch_id, same_as_pred)
-
-    writer = (triples.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(triples, checkpoint_path, lambda df, i: (
+        fuse_batch(spark, state_path, df, i, same_as_pred)))
 
 
 def read_fused(spark: SparkSession, state_path: str) -> DataFrame:
     """The fused view: all raw batches rewritten through the latest
     alias map.  O(data) with two broadcast-sized joins; no history
     rewrite ever happens at ingest time."""
-    raw = (spark.read.schema(TRIPLE_DDL)
-           .option("basePath", os.path.join(state_path, "raw"))
-           .parquet(os.path.join(state_path, "raw"))
-           .select("subj", "pred", "obj"))
+    raw = state.read_all(spark, state_path, "raw", TRIPLE_DDL)
+    if raw is None:
+        raise ValueError(f"no complete raw state under {state_path}")
     mapping = read_alias_map(spark, state_path)
     if mapping is None:
         return raw.distinct()
     return rewrite_canonical(raw, mapping)
-
-
-def read_fusion_metrics(spark: SparkSession, state_path: str) -> DataFrame:
-    return state.read_metrics(spark, state_path)
 
 
 def compact_fused(spark: SparkSession, state_path: str,

@@ -41,15 +41,6 @@ from pyspark.sql.window import Window
 from . import state
 
 
-def _summ_ddl(keys: list[str], value: str) -> str:
-    return ", ".join(f"{k} string" for k in keys) + \
-        f", {value} string, cnt bigint"
-
-
-def _tot_ddl(keys: list[str]) -> str:
-    return ", ".join(f"{k} string" for k in keys) + ", n_total bigint"
-
-
 def mg_compress(counters: DataFrame, keys: list[str], value: str,
                 m: int) -> DataFrame:
     """Compress a per-group counter table to ≤ ``m`` counters: subtract
@@ -86,14 +77,14 @@ def fold_summary(prev: Optional[DataFrame], batch_df: DataFrame,
 def read_summary(spark: SparkSession, state_path: str, keys: list[str],
                  value: str,
                  before: Optional[int] = None) -> Optional[DataFrame]:
-    return state.read_latest(spark, state_path, "summ",
-                             _summ_ddl(keys, value), before)
+    return state.read_latest(spark, state_path, "summ", state.keyed_ddl(
+        keys, f"{value} string, cnt bigint"), before)
 
 
 def _read_totals(spark: SparkSession, state_path: str, keys: list[str],
                  before: Optional[int] = None) -> Optional[DataFrame]:
-    return state.read_latest(spark, state_path, "tot", _tot_ddl(keys),
-                             before)
+    return state.read_latest(spark, state_path, "tot",
+                             state.keyed_ddl(keys, "n_total bigint"), before)
 
 
 def heavy_batch(spark: SparkSession, state_path: str,
@@ -117,20 +108,11 @@ def heavy_batch(spark: SparkSession, state_path: str,
 
 def stream_mg_heavy(spark: SparkSession, stream_df: DataFrame,
                     state_path: str, checkpoint_path: str,
-                    keys: list[str], value: str, m: int = 64,
-                    available_now: bool = True):
+                    keys: list[str], value: str, m: int = 64):
     """Fold a streaming DataFrame into MG heavy-hitter state; read the
     current counters + error bounds any time with :func:`read_heavy`."""
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        heavy_batch(spark, state_path, batch_df, batch_id, keys,
-                    value, m=m)
-
-    writer = (stream_df.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(stream_df, checkpoint_path, lambda df, i: (
+        heavy_batch(spark, state_path, df, i, keys, value, m=m)))
 
 
 def read_heavy(spark: SparkSession, state_path: str, keys: list[str],

@@ -18,14 +18,14 @@ drop-the-larger-id-of-every-pair — regardless of batch boundaries
 semantics become first-arrival-wins, which is what an ingest gate
 means operationally.
 
-State layout mirrors the fusion / distinct / quantiles siblings:
-per-batch directories (``bands/batch={id}``, ``flags/batch={id}``)
-written with overwrite — deterministic in (state before id, batch
-contents), so retry-idempotent under Structured Streaming's replay
-contract.  State size is O(bands × documents seen) — rows of three
-short strings; the per-trigger work is one join of the batch's cells
-against the store (shuffle on band_key; a real deployment bucket-sorts
-the store by band_key so the join prunes).
+State is two append-only parquet tables (``bands/`` and ``flags/``,
+one ``v={batch_id}`` version per batch) kept by
+:mod:`kgloom.streaming.state`: deterministic in (state before
+batch_id, batch contents), so retry-idempotent under Structured
+Streaming's replay contract.  State size is O(bands × documents
+seen) — rows of three short strings; the per-trigger work is one join
+of the batch's cells against the store (shuffle on band_key; a real
+deployment bucket-sorts the store by band_key so the join prunes).
 
 The per-batch band-bucket skew cap (``max_band_bucket``) of the batch
 operator applies WITHIN each batch here; the historical join is
@@ -35,14 +35,13 @@ fans out only for colliding batch docs).
 
 from __future__ import annotations
 
-import glob
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops.dedup import minhash_signatures
+from . import state
 
 _BANDS_DDL = "doc_id string, band int, band_key string"
 _FLAGS_DDL = "doc_id string, is_dup boolean, via_history boolean"
@@ -64,25 +63,9 @@ def doc_bands(docs: DataFrame, num_hashes: int = 8,
             .select("doc_id", "bb.band", "bb.band_key"))
 
 
-def _dirs(state_path: str, sub: str, before: Optional[int] = None):
-    out = []
-    for d in glob.glob(os.path.join(state_path, sub, "batch=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            out.append((v, d))
-    return [d for _, d in sorted(out)]
-
-
 def read_bands(spark: SparkSession, state_path: str,
                before: Optional[int] = None) -> Optional[DataFrame]:
-    dirs = _dirs(state_path, "bands", before)
-    if not dirs:
-        return None
-    return spark.read.schema(_BANDS_DDL).parquet(*dirs)
+    return state.read_all(spark, state_path, "bands", _BANDS_DDL, before)
 
 
 def flag_against(history: Optional[DataFrame], batch_docs: DataFrame,
@@ -125,36 +108,26 @@ def dedup_batch(spark: SparkSession, state_path: str,
                 num_hashes: int = 8, band_size: int = 2,
                 n: int = 3) -> None:
     """Fold one micro-batch: write its admission flags and append its
-    band cells to the store (per-batch overwrite dirs → idempotent)."""
+    band cells to the store."""
     history = read_bands(spark, state_path, before=batch_id)
     flags, bands = flag_against(history, batch_docs,
                                 num_hashes, band_size, n)
-    flags.write.mode("overwrite").parquet(
-        os.path.join(state_path, "flags", f"batch={batch_id}"))
-    bands.write.mode("overwrite").parquet(
-        os.path.join(state_path, "bands", f"batch={batch_id}"))
+    state.commit(flags, state_path, "flags", batch_id)
+    state.commit(bands, state_path, "bands", batch_id)
 
 
 def stream_near_dedup(spark: SparkSession, stream_docs: DataFrame,
                       state_path: str, checkpoint_path: str,
                       num_hashes: int = 8, band_size: int = 2,
-                      n: int = 3, available_now: bool = True):
+                      n: int = 3):
     """Run the ingest gate over a streaming (doc_id, text) DataFrame;
     read per-document admissions any time with :func:`read_flags`."""
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_batch(spark, state_path, batch_df, batch_id,
-                    num_hashes, band_size, n)
-
-    writer = (stream_docs.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(stream_docs, checkpoint_path, lambda df, i: (
+        dedup_batch(spark, state_path, df, i, num_hashes, band_size, n)))
 
 
 def read_flags(spark: SparkSession, state_path: str) -> DataFrame:
-    dirs = _dirs(state_path, "flags")
-    if not dirs:
+    flags = state.read_all(spark, state_path, "flags", _FLAGS_DDL)
+    if flags is None:
         raise FileNotFoundError(f"no flags under {state_path!r}")
-    return spark.read.schema(_FLAGS_DDL).parquet(*dirs)
+    return flags

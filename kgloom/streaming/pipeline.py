@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from ..transcripts.mentions import MENTION_PATTERN, normalize_surface
+from .state import start
 
 TRANSCRIPT_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -68,8 +69,7 @@ def _turn_triple_columns(turns: DataFrame) -> DataFrame:
 
 def stream_turn_triples(spark: SparkSession, input_path: str,
                         output_path: str, checkpoint_path: str,
-                        watermark: str = "10 minutes",
-                        available_now: bool = True):
+                        watermark: str = "10 minutes"):
     """File-source stream of turns → (subj, pred, obj, graph) triples,
     deduplicated within the watermark, appended to parquet."""
     turns = read_transcript_stream(spark, input_path)
@@ -80,14 +80,13 @@ def stream_turn_triples(spark: SparkSession, input_path: str,
         .withWatermark("ts", watermark) \
         .dropDuplicatesWithinWatermark(["subj", "pred", "obj"]) \
         .drop("ts")
-    writer = (triples.writeStream
-              .format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (triples.writeStream
+            .format("parquet")
+            .option("path", output_path)
+            .option("checkpointLocation", checkpoint_path)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
 
 
 def stream_mention_window_counts(turns: DataFrame,
@@ -223,8 +222,7 @@ def stream_session_state(turns: DataFrame) -> DataFrame:
 
 def stream_closed_triples(spark: SparkSession, input_path: str,
                           output_path: str, checkpoint_path: str,
-                          ontology: DataFrame,
-                          available_now: bool = True):
+                          ontology: DataFrame):
     """Streaming INCREMENTAL RDFS materialization: file-source turns →
     turn triples → per-micro-batch ρdf closure under ``ontology`` →
     parquet append.
@@ -263,9 +261,4 @@ def stream_closed_triples(spark: SparkSession, input_path: str,
          .write.mode("overwrite")
          .parquet(f"{output_path}/batch={batch_id}"))
 
-    writer = (triples.writeStream
-              .foreachBatch(_close_batch)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(triples, checkpoint_path, _close_batch)

@@ -8,8 +8,11 @@ Composes the three mergeable folds this package already pins:
   (associative integer addition; exact forever);
 - KMV minima      — :func:`kgloom.streaming.distinct.fold_minima`
   (BIT-identical to batch ``kmv_distinct`` over everything streamed);
-- MG summaries    — :func:`kgloom.streaming.heavyhitters.fold_summary`
+- MG summaries    — :func:`kgloom.streaming.heavyhitters.heavy_batch`
   (every value with count > N/(m+1) present; ``cnt ≤ true ≤ cnt+err``).
+
+The last two are those modules' own folds and readers, keyed by the
+column name ``c``.
 
 The batch is MELTED to long form (column-name, value-as-string) once
 per trigger, so every per-column statistic is one grouped pass and
@@ -35,14 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..ops.sketch import kmv_estimate
 from . import state
-from .distinct import fold_minima
-from .heavyhitters import fold_summary
+from .distinct import fold_minima, read_minima
+from .heavyhitters import heavy_batch, read_heavy
 
 _CNT_DDL = "c string, n_rows bigint, n_nulls bigint"
-_MIN_DDL = "c string, __f double"
-_SUMM_DDL = "c string, v string, cnt bigint"
-_TOT_DDL = "c string, n_total bigint"
 
 
 def _melt(batch_df: DataFrame, cols: list[str]) -> DataFrame:
@@ -72,41 +73,19 @@ def profile_batch(spark: SparkSession, state_path: str,
                     F.sum("n_nulls").alias("n_nulls")))
     state.commit(cnt, state_path, "cnt", batch_id)
 
-    pmin = state.read_latest(spark, state_path, "minima", _MIN_DDL,
-                             before=batch_id)
+    pmin = read_minima(spark, state_path, ["c"], before=batch_id)
     state.commit(fold_minima(pmin, nn, ["c"], "v", k=k), state_path,
                  "minima", batch_id)
-
-    psum = state.read_latest(spark, state_path, "summ", _SUMM_DDL,
-                             before=batch_id)
-    state.commit(fold_summary(psum, nn, ["c"], "v", m=m), state_path,
-                 "summ", batch_id)
-
-    tot = nn.groupBy("c").agg(F.count(F.lit(1)).alias("n_total"))
-    ptot = state.read_latest(spark, state_path, "tot", _TOT_DDL,
-                             before=batch_id)
-    if ptot is not None:
-        tot = (tot.unionByName(ptot).groupBy("c")
-               .agg(F.sum("n_total").alias("n_total")))
-    state.commit(tot, state_path, "tot", batch_id)
+    heavy_batch(spark, state_path, nn, batch_id, ["c"], "v", m=m)
 
 
 def stream_profile(spark: SparkSession, stream_df: DataFrame,
                    state_path: str, checkpoint_path: str,
-                   cols: list[str], k: int = 64, m: int = 64,
-                   available_now: bool = True):
+                   cols: list[str], k: int = 64, m: int = 64):
     """Fold a streaming DataFrame into profile state; read the current
     statistics any time with :func:`read_profile`."""
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        profile_batch(spark, state_path, batch_df, batch_id, cols,
-                      k=k, m=m)
-
-    writer = (stream_df.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(stream_df, checkpoint_path, lambda df, i: (
+        profile_batch(spark, state_path, df, i, cols, k=k, m=m)))
 
 
 def read_profile(spark: SparkSession, state_path: str, k: int = 64,
@@ -116,27 +95,14 @@ def read_profile(spark: SparkSession, state_path: str, k: int = 64,
     cnt = state.read_latest(spark, state_path, "cnt", _CNT_DDL)
     if cnt is None:
         raise ValueError(f"no complete profile state under {state_path}")
-    minima = state.read_latest(spark, state_path, "minima", _MIN_DDL)
-    summ = state.read_latest(spark, state_path, "summ", _SUMM_DDL)
-    tot = state.read_latest(spark, state_path, "tot", _TOT_DDL)
-
-    agg = minima.groupBy("c").agg(
-        F.count(F.lit(1)).alias("n_minima"), F.max("__f").alias("f_k"))
-    dist = agg.select(
-        "c", F.when(F.col("n_minima") < k,
-                    F.col("n_minima").cast("double"))
-        .otherwise(F.lit(float(k - 1)) / F.col("f_k"))
-        .alias("distinct_est"))
-
-    kept = summ.groupBy("c").agg(F.sum("cnt").alias("__kept"))
+    dist = kmv_estimate(read_minima(spark, state_path, ["c"]), ["c"], k=k)
     w = Window.partitionBy("c").orderBy(F.desc("cnt"), "v")
-    top = (summ.withColumn("__rk", F.row_number().over(w))
-           .where(F.col("__rk") == 1)
-           .join(tot, "c").join(kept, "c")
-           .select("c", F.col("v").alias("top_value"),
-                   F.col("cnt").alias("top_cnt"),
-                   F.floor((F.col("n_total") - F.col("__kept"))
-                           / (m + 1)).alias("top_err")))
+    top = (read_heavy(spark, state_path, ["c"], "v", m=m)
+           .withColumn("__rk", F.row_number().over(w))
+           .where(F.col("__rk") == 1))
     return (cnt.join(dist, "c", "left").join(top, "c", "left")
             .select(F.col("c").alias("column"), "n_rows", "n_nulls",
-                    "distinct_est", "top_value", "top_cnt", "top_err"))
+                    F.col("estimate").alias("distinct_est"),
+                    F.col("v").alias("top_value"),
+                    F.col("cnt").alias("top_cnt"),
+                    F.col("err").alias("top_err")))

@@ -34,20 +34,16 @@ from pyspark.sql import functions as F
 from ..ops.sketch import kll_extract, kll_merge, kll_sketch
 from . import state
 
-_CENT_DDL_SUFFIX = "bucket int, cnt bigint, vsum bigint, " \
-    "lo bigint, hi bigint, avg double"
-
-
-def _cent_ddl(keys: list[str]) -> str:
-    return ", ".join(f"{k} string" for k in keys) + ", " + _CENT_DDL_SUFFIX
+_CENT_DDL = "bucket int, cnt bigint, vsum bigint, lo bigint, hi bigint, " \
+    "avg double"
 
 
 def read_centroids(spark: SparkSession, state_path: str, keys: list[str],
                    before: Optional[int] = None) -> Optional[DataFrame]:
     """The newest complete centroid version (< ``before`` if given),
     or None before the first batch."""
-    return state.read_latest(spark, state_path, "cent", _cent_ddl(keys),
-                             before)
+    return state.read_latest(spark, state_path, "cent",
+                             state.keyed_ddl(keys, _CENT_DDL), before)
 
 
 def sketch_batch(spark: SparkSession, state_path: str,
@@ -71,19 +67,12 @@ def sketch_batch(spark: SparkSession, state_path: str,
 
 def stream_kll(spark: SparkSession, stream_df: DataFrame, state_path: str,
                checkpoint_path: str, keys: list[str], value: str,
-               k: int = 64, n_salts: int = 8, available_now: bool = True):
+               k: int = 64, n_salts: int = 8):
     """Fold a streaming DataFrame into incremental quantile state;
     read results any time with :func:`read_quantiles`."""
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        sketch_batch(spark, state_path, batch_df, batch_id, keys, value,
-                     k=k, n_salts=n_salts)
-
-    writer = (stream_df.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(stream_df, checkpoint_path, lambda df, i: (
+        sketch_batch(spark, state_path, df, i, keys, value, k=k,
+                     n_salts=n_salts)))
 
 
 def read_quantiles(spark: SparkSession, state_path: str, keys: list[str],

@@ -1,13 +1,25 @@
-"""Versioned parquet state shared by the streaming folds.
+"""The micro-batch runner and the parquet state of the streaming folds.
+
+Every fold runs through :func:`start`: ``foreachBatch`` over the
+stream with an ``availableNow`` trigger, which folds each micro-batch
+of the input available at start and then stops.  A fold module keeps
+only its recurrence, ``*_batch(spark, state_path, batch_df, batch_id,
+…)``.
 
 A fold keeps each of its state tables under ``{state_path}/{table}``
-as one directory per micro-batch, ``v={batch_id}``, rewritten whole by
-that batch's trigger.  A version is visible only once Spark's
-``_SUCCESS`` marker exists, so a trigger that dies mid-write is
-recomputed on replay from the newest complete version strictly older
-than its batch id: every fold is deterministic in (state before
-batch_id, batch contents) and therefore retry-idempotent under
-Structured Streaming's replay contract.
+as one directory per micro-batch, ``v={batch_id}``, written by that
+batch's trigger (:func:`commit`).  A table is one of two kinds:
+
+- **versioned** — each version is the whole state after its batch,
+  and a reader takes the newest (:func:`read_latest`);
+- **append-only** — each version holds only its batch's rows, and a
+  reader takes the union of all of them (:func:`read_all`).
+
+A version is visible only once Spark's ``_SUCCESS`` marker exists, so
+a trigger that dies mid-write is recomputed on replay from the
+complete versions strictly older than its batch id: every fold is
+deterministic in (state before batch_id, batch contents) and therefore
+retry-idempotent under Structured Streaming's replay contract.
 
 A trigger launches only the Spark jobs of its state writes.  The
 counts in its metrics row cost no job of their own: batch-side counts
@@ -25,16 +37,18 @@ from typing import Callable, Optional
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from ..tables import footer_counts
 
 
-def versions(state_path: str, table: str,
-             before: Optional[int] = None) -> list[int]:
-    """Complete versions of ``table`` (< ``before`` if given),
-    ascending.  Listing uses the local filesystem; DFS-resident state
-    needs only this listing swapped to the Hadoop FileSystem API — the
-    layout itself is filesystem-agnostic."""
+def _complete(state_path: str, table: str,
+              before: Optional[int] = None) -> list[str]:
+    """The directories of the complete versions of ``table`` (<
+    ``before`` if given), oldest first.  Listing uses the local
+    filesystem; DFS-resident state needs only this listing swapped to
+    the Hadoop FileSystem API — the layout itself is
+    filesystem-agnostic."""
     out = []
     for d in glob.glob(os.path.join(state_path, table, "v=*")):
         try:
@@ -43,20 +57,41 @@ def versions(state_path: str, table: str,
             continue
         if os.path.exists(os.path.join(d, "_SUCCESS")) and \
                 (before is None or v < before):
-            out.append(v)
-    return sorted(out)
+            out.append((v, d))
+    return [d for _, d in sorted(out)]
+
+
+def keyed_ddl(keys: list[str], rest: str) -> str:
+    """The DDL of a table keyed by string columns ``keys``, followed by
+    the columns ``rest``."""
+    return ", ".join(f"{k} string" for k in keys) + ", " + rest
 
 
 def read_latest(spark: SparkSession, state_path: str, table: str,
                 ddl: str, before: Optional[int] = None
                 ) -> Optional[DataFrame]:
-    """The newest complete version of ``table`` (< ``before`` if
-    given), or None before its first write."""
-    vs = versions(state_path, table, before)
-    if not vs:
-        return None
-    return spark.read.schema(ddl).parquet(
-        os.path.join(state_path, table, f"v={vs[-1]}"))
+    """The newest complete version of a versioned ``table`` (<
+    ``before`` if given), or None before its first write."""
+    paths = _complete(state_path, table, before)
+    return spark.read.schema(ddl).parquet(paths[-1]) if paths else None
+
+
+def read_all(spark: SparkSession, state_path: str, table: str, ddl: str,
+             before: Optional[int] = None) -> Optional[DataFrame]:
+    """The union of every complete version of an append-only ``table``
+    (< ``before`` if given), or None before its first write."""
+    paths = _complete(state_path, table, before)
+    return spark.read.schema(ddl).parquet(*paths) if paths else None
+
+
+def start(stream_df: DataFrame, checkpoint_path: str,
+          fold_batch: Callable[[DataFrame, int], None]) -> StreamingQuery:
+    """Run ``fold_batch(batch_df, batch_id)`` on each micro-batch of
+    ``stream_df`` until the input available at start is consumed,
+    with progress checkpointed under ``checkpoint_path``."""
+    return (stream_df.writeStream.foreachBatch(fold_batch)
+            .option("checkpointLocation", checkpoint_path)
+            .trigger(availableNow=True).start())
 
 
 def commit(df: DataFrame, state_path: str, table: str,

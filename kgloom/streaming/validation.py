@@ -93,21 +93,12 @@ def validate_batch(spark: SparkSession, state_path: str,
 
 def stream_shacl(spark: SparkSession, stream_df: DataFrame,
                  state_path: str, checkpoint_path: str,
-                 shapes: Sequence[NodeShape],
-                 available_now: bool = True):
+                 shapes: Sequence[NodeShape]):
     """Fold a streaming triple DataFrame into validation state; read
     the current report any time with :func:`read_report`."""
     shapes = tuple(shapes)
-
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        validate_batch(spark, state_path, batch_df, batch_id, shapes)
-
-    writer = (stream_df.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(stream_df, checkpoint_path, lambda df, i: (
+        validate_batch(spark, state_path, df, i, shapes)))
 
 
 def read_report(spark: SparkSession, state_path: str,

@@ -1,5 +1,10 @@
 """Composed curation chain + multimodal resize plumbing."""
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,6 +76,32 @@ def test_multimodal_real_mode_gates_on_pil(spark):
             M.resize_images(assets, batch_fake=False)
     else:
         assert M.extract_features(assets, batch_fake=False) is not None
+
+
+def test_multimodal_features_run_outside_the_checkout(tmp_path):
+    """A driver that imports kgloom from a ``sys.path`` entry and runs
+    from another directory, with no ``PYTHONPATH``, still gets its
+    features: the feature kernel reaches the Python workers, which
+    cannot import kgloom, by value."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "drive.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from pyspark.sql import SparkSession
+        from kgloom.ops.multimodal import extract_features, synth_assets
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        rows = extract_features(synth_assets(spark, 6)).collect()
+        print(len(rows), sum(len(r.feature) for r in rows))
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split()[-2:] == ["6", "48"]
 
 
 def test_multimodal_real_decoder_with_pil(spark):

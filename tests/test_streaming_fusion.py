@@ -3,6 +3,9 @@ streaming case: components MERGE ACROSS micro-batches, so previously
 ingested triples must re-canonicalize.  Exactness gate: the fused view
 after the stream equals batch ``same_as_fusion`` over the full input."""
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from kgloom.ops.reasoning import OWL_SAMEAS, same_as_fusion
@@ -10,9 +13,9 @@ from kgloom.streaming import (
     fuse_batch,
     read_alias_map,
     read_fused,
-    read_fusion_metrics,
     stream_fused_triples,
 )
+from kgloom.streaming.state import read_metrics
 
 SAME = OWL_SAMEAS
 
@@ -59,7 +62,7 @@ def test_fuse_batch_sequence_cross_batch_merge(spark, tmp_path):
     # incremental metrics: batch 0 adds b->a; batch 1 adds d->c;
     # batch 2 adds c->a AND re-points d from c to a (the merge audit)
     metrics = {r.batch_id: r for r in
-               read_fusion_metrics(spark, state).collect()}
+               read_metrics(spark, state).collect()}
     assert [metrics[i].n_changed for i in range(3)] == [1, 1, 2]
     assert [metrics[i].n_map for i in range(3)] == [1, 2, 3]
 
@@ -71,7 +74,7 @@ def test_fuse_batch_replay_idempotent(spark, tmp_path):
     before = _rows(read_fused(spark, state))
     m_before = _rows(read_alias_map(spark, state))
     # replay the last micro-batch (failure-recovery path): the map is
-    # recomputed from v=1, raw/batch=2 is overwritten — state unchanged
+    # recomputed from v=1, raw/v=2 is overwritten — state unchanged
     fuse_batch(spark, state, _df(spark, BATCHES[2]), 2)
     assert _rows(read_fused(spark, state)) == before
     assert _rows(read_alias_map(spark, state)) == m_before
@@ -95,6 +98,12 @@ def test_read_fused_no_sameas_yet(spark, tmp_path):
     only_data = [("<e:x>", "<p:label>", '"x"')]
     fuse_batch(spark, state, _df(spark, only_data), 0)
     assert _rows(read_fused(spark, state)) == sorted(map(tuple, only_data))
+
+
+def test_read_fused_before_any_batch_raises(spark, tmp_path):
+    state = str(tmp_path / "state")
+    with pytest.raises(ValueError, match=re.escape(state)):
+        read_fused(spark, state)
 
 
 def test_compact_fused_snapshot(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Streaming incremental near-dedup ingest gate
 (kgloom/streaming/neardedup.py): stream == batch drop rule, retry
-idempotency, and the foreachBatch plumbing."""
+idempotency, incomplete versions, and the foreachBatch plumbing."""
 
 import os
 
@@ -68,7 +68,42 @@ def test_batch_retry_is_idempotent(spark, tmp_path):
         read_bands(spark, state).distinct().count()
 
 
-def test_streaming_plumbing_available_now(spark, tmp_path):
+def test_incomplete_version_is_invisible(spark, tmp_path):
+    """A bands or flags version without Spark's ``_SUCCESS`` marker (a
+    trigger that died mid-write) is seen by neither reader nor by the
+    next trigger's history; replaying its batch repairs it."""
+    state = str(tmp_path / "st")
+
+    def fold(rows, i):
+        dedup_batch(spark, state,
+                    spark.createDataFrame(rows, ["doc_id", "text"]), i)
+    for i, batch in enumerate(BATCHES[:2]):
+        fold(batch, i)
+    for table in ("bands", "flags"):
+        os.remove(os.path.join(state, table, "v=1", "_SUCCESS"))
+    assert sorted(map(tuple, read_bands(spark, state).collect())) == \
+        sorted(map(tuple, read_bands(spark, state, before=1).collect()))
+    assert {r.doc_id for r in read_flags(spark, state).collect()} == \
+        {"d01", "d02"}
+
+    # d08 repeats d04 (batch 1, unseen), d09 repeats d02 (batch 0)
+    late = [("d08", BATCHES[1][1][1]), ("d09", BATCHES[0][1][1])]
+    fold(late, 2)
+    flags = {r.doc_id: (r.is_dup, r.via_history)
+             for r in read_flags(spark, state).collect()}
+    assert set(flags) == {"d01", "d02", "d08", "d09"}
+    assert flags["d08"] == (False, False)
+    assert flags["d09"] == (True, True)
+
+    fold(BATCHES[1], 1)
+    fold(late, 2)
+    flags = {r.doc_id: (r.is_dup, r.via_history)
+             for r in read_flags(spark, state).collect()}
+    assert len(flags) == 7
+    assert flags["d08"] == (True, True)
+
+
+def test_stream_near_dedup_plumbing(spark, tmp_path):
     inp = str(tmp_path / "in")
     df = _all_docs(spark)
     df.coalesce(1).write.mode("overwrite").parquet(inp)
