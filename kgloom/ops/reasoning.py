@@ -69,8 +69,7 @@ OWL_SAMEAS = "<http://www.w3.org/2002/07/owl#sameAs>"
 _SCHEMA_PREDS = (RDFS_SUBCLASS, RDFS_SUBPROP, RDFS_DOMAIN, RDFS_RANGE)
 
 
-def _transitive_pairs(pairs: DataFrame, max_rounds: int = 16,
-                      drop_self: bool = True) -> DataFrame:
+def _transitive_pairs(pairs: DataFrame) -> DataFrame:
     """Distinct transitive closure of a small (a, b) relation —
     broadcast-hinted path doubling from the engine-wide closure module
     (:func:`kgloom.ops.closure.doubling_closure`).  STRICTLY for
@@ -81,12 +80,12 @@ def _transitive_pairs(pairs: DataFrame, max_rounds: int = 16,
     size-gated :func:`kgloom.ops.closure.transitive_closure` instead
     (see :func:`owl_property_closure`).
 
-    A ``RuntimeError`` is raised if ``max_rounds`` (2^16-length
-    hierarchies) is exhausted before the fixpoint."""
+    Self pairs are dropped, and a ``RuntimeError`` is raised if 16
+    rounds (2^16-length hierarchies) end before the fixpoint."""
     from .closure import doubling_closure
 
-    return doubling_closure(pairs.select("a", "b"), drop_self=drop_self,
-                            broadcast_hint=True, max_rounds=max_rounds)
+    return doubling_closure(pairs.select("a", "b"), drop_self=True,
+                            broadcast_hint=True, max_rounds=16)
 
 
 def schema_closure(schema: DataFrame) -> DataFrame:
@@ -369,8 +368,8 @@ def _owl_propagation_map(axiom_rows: list) -> list:
 _PRED_SEP = "\x00"
 
 
-def owl_property_closure(triples: DataFrame, schema: DataFrame,
-                         max_rounds: int = 16) -> DataFrame:
+def owl_property_closure(triples: DataFrame, schema: DataFrame
+                         ) -> DataFrame:
     """Materialize the OWL-Horst (pD*) PROPERTY rules over ``triples``:
     rdfp8 (``owl:inverseOf``, both directions), rdfp3
     (``owl:SymmetricProperty``) and rdfp4 (``owl:TransitiveProperty``).
@@ -422,20 +421,21 @@ def owl_property_closure(triples: DataFrame, schema: DataFrame,
     trans_props = sorted({s for s, p, o in axiom_rows
                           if p == RDF_TYPE and o == OWL_TRANSITIVE})
 
-    spark = triples.sparkSession
-    if prop_map:
-        pmap = spark.createDataFrame(
-            prop_map, "p string, r string, flip boolean")
-        mapped = (inst.join(F.broadcast(pmap), inst["pred"] == pmap["p"])
-                  .select(F.when(F.col("flip"), F.col("obj"))
-                          .otherwise(F.col("subj")).alias("subj"),
-                          F.col("r").alias("pred"),
-                          F.when(F.col("flip"), F.col("subj"))
-                          .otherwise(F.col("obj")).alias("obj")))
-        all_edges = inst.unionByName(mapped).distinct()
-    else:
-        all_edges = inst
-    all_edges = tracked_persist(all_edges)
+    pmap = triples.sparkSession.createDataFrame(
+        prop_map, "p string, r string, flip boolean") if prop_map else None
+
+    def propagate(edges: DataFrame) -> DataFrame:
+        """Copy every edge to each property and orientation the map
+        carries it to — one broadcast join."""
+        return (edges.join(F.broadcast(pmap), edges["pred"] == pmap["p"])
+                .select(F.when(F.col("flip"), F.col("obj"))
+                        .otherwise(F.col("subj")).alias("subj"),
+                        F.col("r").alias("pred"),
+                        F.when(F.col("flip"), F.col("subj"))
+                        .otherwise(F.col("obj")).alias("obj")))
+
+    all_edges = tracked_persist(
+        inst.unionByName(propagate(inst)).distinct() if prop_map else inst)
 
     out = all_edges
     if trans_props:
@@ -458,16 +458,7 @@ def owl_property_closure(triples: DataFrame, schema: DataFrame,
             split_b.getItem(1).alias("obj"))
         out = out.unionByName(derived)
         if prop_map:
-            pmap = spark.createDataFrame(
-                prop_map, "p string, r string, flip boolean")
-            re_mapped = (derived.join(F.broadcast(pmap),
-                                      derived["pred"] == pmap["p"])
-                         .select(F.when(F.col("flip"), F.col("obj"))
-                                 .otherwise(F.col("subj")).alias("subj"),
-                                 F.col("r").alias("pred"),
-                                 F.when(F.col("flip"), F.col("subj"))
-                                 .otherwise(F.col("obj")).alias("obj")))
-            out = out.unionByName(re_mapped)
+            out = out.unionByName(propagate(derived))
     return out.distinct()
 
 

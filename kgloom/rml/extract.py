@@ -103,6 +103,16 @@ def extract_document(graph: Graph) -> Document:
     doc = Document(base=graph.base)
     for subj in tm_subjects:
         doc.triples_maps.append(_extract_triples_map(graph, subj))
+    # a referencing object map must name a triples map of this document
+    known = {tm.identifier for tm in doc.triples_maps}
+    for tm in doc.triples_maps:
+        for pom in tm.po_maps:
+            for om in pom.object_maps:
+                if om.parent_tm is not None and om.parent_tm not in known:
+                    raise RmlValidationError(
+                        f"triples map {tm.identifier}: object map "
+                        f"{om.tm_info.identifier} names rr:parentTriplesMap "
+                        f"{om.parent_tm}, which is not a triples map")
     # RMLTC0012c: a mapping with POMs but no subject map anywhere is invalid.
     if not doc.triples_maps and graph.subjects_with(RR + "predicateObjectMap"):
         raise RmlValidationError("predicateObjectMap without any subjectMap")

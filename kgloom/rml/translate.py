@@ -5,16 +5,31 @@ Parity target: `OptimizedRMLDocumentTranslator::translate_to_plan`
 helpers:
 
 - per-TriplesMap Source + Projection (mod.rs:314-428; projection =
-  term-map references + incoming join-condition parent attrs,
-  util.rs:11-40),
+  term-map references + incoming join-condition parent attrs +
+  same-row parent subject references, util.rs:11-40),
 - variable map ``tm{i}_sm`` / ``tm{i}_p{pom}_{pm}`` / ``tm{i}_o{pom}_{om}``
   / ``..._gm{g}`` (translator/src/rmlalgebra/util.rs:268-340),
-- POM partitioning into join/non-join (mod.rs:122-147),
-- non-join branch: Extend → Serializer → Target (mod.rs:149-201),
-- join branch: alias ``join_{n}``, join-flavor selection (mod.rs:249-261:
-  explicit condition → inner equi-join; same logical source → natural;
-  else cross), parent subject-map attribute prefixing (mod.rs:263-266)
-  then Extend → Serializer → Target (mod.rs:203-313),
+- object-map classification (the reference's POM partitioning into
+  join/non-join, mod.rs:122-147, done per object map), in one pass that
+  also collects every Projection's attributes.  Each object map is one
+  of three kinds:
+
+  * plain — a column of its TriplesMap's own Extend;
+  * same-row — a referencing object map whose parent shares the logical
+    source and has no join condition: also a column of the child's own
+    Extend (the deviation below);
+  * join — an inner equi-join on its join condition, else a cross join
+    (mod.rs:249-261), alias ``join_{n}``, parent subject-map attribute
+    prefixing (mod.rs:263-266), then its own Extend (mod.rs:203-313),
+
+  so every object map of a POM generates triples (R2RML §11.1), whatever
+  kinds its siblings are,
+- own branch: Extend → Serializer → Target (mod.rs:149-201), built when
+  the TriplesMap has classes or plain/same-row object maps,
+- fan-out (plan.rs:284-313, fragment.rs:18-34): a TriplesMap's
+  Projection has one reader per branch emitted from it — its own Extend
+  and each join it takes part in, as child or as parent — and a
+  FragmentOp with one output per reader when there are several,
 - ``rml:logicalTarget`` routing (util.rs:137-236 generate_lt_quads +
   sanitize): per-term-map targets receive their quads through per-target
   Serializer→Target branches fanned out by a FragmentOp; term maps
@@ -32,7 +47,7 @@ the binder for IR completeness.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import Iterator, Optional
 
 from ..algebra import (
     DataFormat,
@@ -40,6 +55,7 @@ from ..algebra import (
     FragmentOp,
     Function,
     IOType,
+    IterField,
     ProjectOp,
     ReferenceFormulation,
     SerializerOp,
@@ -60,9 +76,7 @@ from .model import (
     Document,
     GraphMap,
     LogicalTarget,
-    ObjectMap,
     PredicateObjectMap,
-    SubjectMap,
     TermMapInfo,
     TriplesMap,
 )
@@ -130,22 +144,10 @@ def _term_function(tm_info: TermMapInfo, base: Optional[str],
     template-substituted values only (RMLTC0019a vs RMLTC0020a: a
     reference-valued IRI is not encoded, a template substitution is —
     handled inside the binder's TemplateString compiler via the
-    ``UriEncode`` wrapper being interpreted per-part for templates)."""
-    if tm_info.term_map_type == TM_CONSTANT:
-        inner = Function.constant(tm_info.term_value)
-    elif tm_info.term_map_type == TM_REFERENCE:
-        inner = Function.reference(tm_info.term_value)
-    elif tm_info.term_map_type == TM_TEMPLATE:
-        inner = Function.template(tm_info.term_value)
-    elif tm_info.term_map_type == TM_FUNCTION:
-        # params are raw value functions (no term-kind wrapping — the
-        # wrapper applies to the FnO *result*, not its inputs)
-        params = {p: _value_function(om.tm_info, base)
-                  for p, om in tm_info.fun_map.param_om_pairs}
-        inner = Function.fno(tm_info.fun_map.function_iri, params)
-    else:
-        raise ValueError(tm_info.term_map_type)
-
+    ``UriEncode`` wrapper being interpreted per-part for templates).
+    An FnO function's parameters stay raw value functions: the wrapper
+    applies to the function's result, not its inputs."""
+    inner = _value_function(tm_info, base)
     if tm_info.term_type == KIND_IRI:
         if tm_info.term_map_type == TM_CONSTANT:
             # constant IRIs are already resolved absolute IRIs — no
@@ -165,32 +167,6 @@ def _term_function(tm_info: TermMapInfo, base: Optional[str],
     if tm_info.term_type == KIND_BLANK:
         return Function.blank_node(inner)
     raise ValueError(tm_info.term_type)
-
-
-def _partition_poms(tm: TriplesMap) -> tuple[list[PredicateObjectMap],
-                                             list[PredicateObjectMap]]:
-    """mod.rs:122-147 — split POMs into non-join and join POMs.
-
-    A POM whose object maps reference a parent TM *with the same logical
-    source and no join condition* is same-row (see module docstring) and
-    is treated as non-join after object rewriting."""
-    non_join, join_poms = [], []
-    for pom in tm.po_maps:
-        if any(om.parent_tm is not None and om.join_condition is not None
-               for om in pom.object_maps):
-            join_poms.append(pom)
-        elif any(om.parent_tm is not None for om in pom.object_maps):
-            join_poms.append(pom)
-        else:
-            non_join.append(pom)
-    return non_join, join_poms
-
-
-class _TmBranch:
-    def __init__(self, plan: Plan, tm: TriplesMap, var_prefix: str):
-        self.plan = plan
-        self.tm = tm
-        self.var_prefix = var_prefix
 
 
 class _LtRouter:
@@ -265,47 +241,100 @@ def translate_to_plan(doc: Document,
     tm_index: dict[str, TriplesMap] = {t.identifier: t for t in doc.triples_maps}
     router = _LtRouter(default_target)
 
-    # --- incoming parent-side join attributes per TM (util.rs:11-40) ----
-    incoming_parent_attrs: dict[str, set[str]] = {t: set() for t in tm_index}
-    same_row_parents: dict[str, set[str]] = {t: set() for t in tm_index}
-    for tm in doc.triples_maps:
-        for pom in tm.po_maps:
-            for om in pom.object_maps:
-                if om.parent_tm is None:
-                    continue
-                ptm = tm_index.get(om.parent_tm)
-                if ptm is None:
-                    raise ValueError(f"unknown parentTriplesMap {om.parent_tm}")
-                if om.join_condition is not None:
-                    incoming_parent_attrs[ptm.identifier].update(
-                        om.join_condition.parent_attributes)
-                elif tm.logical_source.same_as(ptm.logical_source):
-                    # same-row case: child must project parent sm refs
-                    same_row_parents[tm.identifier].update(
-                        ptm.subject_map.tm_info.references())
-
-    # --- per-TM: Source → Project branch (mod.rs:314-428) ---------------
-    branches: dict[str, _TmBranch] = {}
+    # --- one pass over every object map: plain and same-row ones are
+    #     columns of their TM's own Extend, the rest are joins; the pass
+    #     collects every Projection's attributes (util.rs:11-40) --------
+    attrs: dict[str, set[str]] = {t: set() for t in tm_index}
+    own: dict[str, tuple[dict, dict]] = {}  # TM → own Extend pairs, quads
+    joins: dict[str, list[tuple]] = {t: [] for t in tm_index}  # by child TM
+    n_joins = 0
     for i, tm in enumerate(doc.triples_maps):
         var_prefix = f"tm{i}"
         compiled.variable_map[tm.identifier] = var_prefix
+        sm = tm.subject_map
+        sm_var = f"{var_prefix}_sm"
+        sm_fn = _term_function(sm.tm_info, doc.base)
+        sm_graph_vars = _graph_vars(sm.graph_maps, sm_var, doc.base)
+        tm_attrs = attrs[tm.identifier]
+        tm_attrs |= sm.tm_info.references()
+        for gm in sm.graph_maps:
+            tm_attrs |= gm.tm_info.references()
 
-        attrs: set[str] = set(tm.subject_map.tm_info.references())
-        for gm in tm.subject_map.graph_maps:
-            attrs |= gm.tm_info.references()
-        for pom in tm.po_maps:
-            for pm in pom.predicate_maps:
-                attrs |= pm.tm_info.references()
-            for om in pom.object_maps:
-                if om.parent_tm is None:
-                    attrs |= om.tm_info.references()
-                elif om.join_condition is not None:
-                    attrs |= set(om.join_condition.child_attributes)
-            for gm in pom.graph_maps:
-                attrs |= gm.tm_info.references()
-        attrs |= incoming_parent_attrs[tm.identifier]
-        attrs |= same_row_parents[tm.identifier]
+        def add_pom(pairs: dict, quads: dict, p_idx: int,
+                    pom: PredicateObjectMap, columns: list) -> None:
+            """Extend ``pairs`` and ``quads`` with every predicate map of
+            ``pom`` times every (om_var, Function, ObjectMap) column."""
+            pom_graph_vars = _graph_vars(pom.graph_maps,
+                                         f"{var_prefix}_p{p_idx}", doc.base)
+            for pm_idx, pm in enumerate(pom.predicate_maps):
+                pm_var = f"{var_prefix}_p{p_idx}_{pm_idx}"
+                pairs[pm_var] = _term_function(pm.tm_info, doc.base)
+                for om_var, fn, om in columns:
+                    pairs[om_var] = fn
+                    routes = router.route_ids(sm.tm_info, pm.tm_info,
+                                              om.tm_info)
+                    _emit_quads(quads, routes, sm_var, pm_var, om_var,
+                                sm_graph_vars, pom_graph_vars)
+            for name, fn in {**sm_graph_vars, **pom_graph_vars}.items():
+                pairs.setdefault(name, fn)
 
+        pairs: dict[str, Function] = {sm_var: sm_fn}
+        quads: dict[str, list[Quad]] = {}
+        # class quads (mod.rs:149-201: subject classes extend)
+        if sm.classes:
+            type_var = f"{var_prefix}_type"
+            pairs[type_var] = Function.iri(Function.constant(RDF_TYPE_IRI))
+            sm_routes = router.route_ids(sm.tm_info)
+            for c, cls in enumerate(sm.classes):
+                cls_var = f"{var_prefix}_cls{c}"
+                pairs[cls_var] = Function.iri(Function.constant(cls))
+                _emit_quads(quads, sm_routes, sm_var, type_var, cls_var,
+                            sm_graph_vars, {})
+        for p_idx, pom in enumerate(tm.po_maps):
+            for m in pom.predicate_maps + pom.graph_maps:
+                tm_attrs |= m.tm_info.references()
+            columns = []
+            for om_idx, om in enumerate(pom.object_maps):
+                om_var = f"{var_prefix}_o{p_idx}_{om_idx}"
+                if om.parent_tm is None:  # plain
+                    tm_attrs |= om.tm_info.references()
+                    columns.append((om_var, _term_function(
+                        om.tm_info, doc.base, om.data_type, om.language), om))
+                    continue
+                ptm = tm_index[om.parent_tm]
+                jc = om.join_condition
+                if jc is None and tm.logical_source.same_as(ptm.logical_source):
+                    # same-row: the parent subject computed on the child row
+                    tm_attrs |= ptm.subject_map.tm_info.references()
+                    columns.append((om_var, _term_function(
+                        ptm.subject_map.tm_info, doc.base), om))
+                    continue
+                # join (mod.rs:203-313): equi-join on the join condition,
+                # else cross; the parent subject map reads alias-prefixed
+                # attributes (mod.rs:263-266)
+                if jc is not None:
+                    tm_attrs.update(jc.child_attributes)
+                    attrs[ptm.identifier].update(jc.parent_attributes)
+                n_joins += 1
+                alias = f"join_{n_joins}"
+                parent_fn = _term_function(
+                    ptm.subject_map.tm_info.prefix_attributes(alias), doc.base)
+                j_pairs = {sm_var: sm_fn, om_var: parent_fn}
+                j_quads: dict[str, list[Quad]] = {}
+                add_pom(j_pairs, j_quads, p_idx, pom, [(om_var, parent_fn, om)])
+                joins[tm.identifier].append(
+                    (alias, jc, ptm.identifier, j_pairs, j_quads))
+            if columns:
+                add_pom(pairs, quads, p_idx, pom, columns)
+        for name, fn in sm_graph_vars.items():
+            pairs.setdefault(name, fn)
+        if quads:
+            own[tm.identifier] = (pairs, quads)
+
+    # --- per-TM: Source → Project branch (mod.rs:314-428) ---------------
+    projections: list[Plan] = []
+    for tm in doc.triples_maps:
+        tm_attrs = attrs[tm.identifier]
         config = {"source": tm.logical_source.source}
         if tm.logical_source.iterator:
             config["iterator"] = tm.logical_source.iterator
@@ -318,181 +347,58 @@ def translate_to_plan(doc: Document,
         fields: tuple = ()
         if rf in (ReferenceFormulation.JSON_PATH,
                   ReferenceFormulation.XML_PATH):
-            from ..algebra import IterField
             fields = tuple(IterField(alias=a, reference=a)
-                           for a in sorted(attrs))
+                           for a in sorted(tm_attrs))
         source_op = SourceOp.make(
             config,
             IOType.TABLE if rf == ReferenceFormulation.TABLE else IOType.FILE,
             SourceIterator(reference=tm.logical_source.iterator,
                            reference_formulation=rf, fields=fields))
         plan = Plan(graph).source(source_op)
-        plan = plan.apply(ProjectOp(projection_attributes=frozenset(attrs)),
-                          "Projection")
-        branches[tm.identifier] = _TmBranch(plan, tm, var_prefix)
+        projections.append(plan.apply(
+            ProjectOp(projection_attributes=frozenset(tm_attrs)), "Projection"))
 
-    # --- fragmentation: fan-out counting (plan.rs:284-313, fragment
-    #     elision translator/src/rmlalgebra/operators/fragment.rs:18-34) --
-    consumers: dict[str, int] = {t: 0 for t in tm_index}
-    join_counter = 0
+    # --- fragmentation (plan.rs:284-313, fragment elision
+    #     translator/src/rmlalgebra/operators/fragment.rs:18-34): one
+    #     output per branch emitted below — the own Extend, each join the
+    #     TM takes part in as child or as parent ------------------------
+    consumers = {t: int(t in own) + len(joins[t]) for t in tm_index}
+    for tm_joins in joins.values():
+        for _, _, parent_id, _, _ in tm_joins:
+            consumers[parent_id] += 1
+    outputs: dict[str, Iterator[Plan]] = {}
+    for tm, plan in zip(doc.triples_maps, projections):
+        frags = [DEFAULT_FRAGMENT] + [
+            f"frag_{k}" for k in range(1, consumers[tm.identifier])]
+        if len(frags) > 1:
+            plan = plan.fragment(FragmentOp(from_fragment=DEFAULT_FRAGMENT,
+                                            to_fragments=tuple(frags)))
+        # readers take frag_1, frag_2, … in emission order, the last
+        # one takes the default output
+        outputs[tm.identifier] = iter(
+            [plan.with_fragment(f) for f in frags[1:]] + [plan])
+
+    # --- emit Extend → Serializer → Target per branch -------------------
     for tm in doc.triples_maps:
-        non_join, join_poms = _partition_poms(tm)
-        if non_join or tm.subject_map.classes or not tm.po_maps:
-            consumers[tm.identifier] += 1
-        for pom in join_poms:
-            for om in pom.object_maps:
-                if om.parent_tm is not None and om.join_condition is not None:
-                    consumers[tm.identifier] += 1
-                    consumers[om.parent_tm] += 1
-                elif om.parent_tm is not None:
-                    consumers[tm.identifier] += 1
-
-    fragments: dict[str, list[str]] = {}
-    for tm_id, n in consumers.items():
-        if n > 1:
-            frags = [DEFAULT_FRAGMENT] + [f"frag_{k}" for k in range(1, n)]
-            branch = branches[tm_id]
-            branch.plan = branch.plan.fragment(
-                FragmentOp(from_fragment=DEFAULT_FRAGMENT,
-                           to_fragments=tuple(frags)))
-            fragments[tm_id] = frags[1:]
-
-    def take_fragment(tm_id: str) -> Plan:
-        branch = branches[tm_id]
-        if tm_id in fragments and fragments[tm_id]:
-            return branch.plan.with_fragment(fragments[tm_id].pop(0))
-        return branch.plan
-
-    # --- emit extend/serialize/sink per TM -------------------------------
-    for i, tm in enumerate(doc.triples_maps):
-        var_prefix = branches[tm.identifier].var_prefix
-        non_join, join_poms = _partition_poms(tm)
-
-        sm_graph_vars = _graph_vars(compiled, doc, tm.subject_map.graph_maps,
-                                    f"{var_prefix}_sm")
-
-        # ---- non-join branch (mod.rs:149-201) ----
-        same_row_poms: list[tuple[PredicateObjectMap, ObjectMap, TriplesMap]] = []
-        for pom in join_poms:
-            for om in pom.object_maps:
-                if om.parent_tm is not None and om.join_condition is None and \
-                        tm.logical_source.same_as(
-                            tm_index[om.parent_tm].logical_source):
-                    same_row_poms.append((pom, om, tm_index[om.parent_tm]))
-
-        if non_join or tm.subject_map.classes or same_row_poms or not tm.po_maps:
-            extend_pairs: dict[str, Function] = {}
-            lt_quads: dict[str, list[Quad]] = {}
-            sm_routes = router.route_ids(tm.subject_map.tm_info)
-            sm_var = f"{var_prefix}_sm"
-            extend_pairs[sm_var] = _term_function(tm.subject_map.tm_info,
-                                                  doc.base)
-            # class quads (mod.rs:149-201: subject classes extend)
-            if tm.subject_map.classes:
-                type_var = f"{var_prefix}_type"
-                extend_pairs[type_var] = Function.iri(
-                    Function.constant(RDF_TYPE_IRI))
-                for c, cls in enumerate(tm.subject_map.classes):
-                    cls_var = f"{var_prefix}_cls{c}"
-                    extend_pairs[cls_var] = Function.iri(Function.constant(cls))
-                    _emit_quads(lt_quads, sm_routes, sm_var, type_var, cls_var,
-                                sm_graph_vars, [])
-            for p_idx, pom in enumerate(tm.po_maps):
-                if pom in join_poms and not any(
-                        om.parent_tm is not None and om.join_condition is None
-                        and tm.logical_source.same_as(
-                            tm_index[om.parent_tm].logical_source)
-                        for om in pom.object_maps):
-                    continue
-                pom_graph_vars = _graph_vars(compiled, doc, pom.graph_maps,
-                                             f"{var_prefix}_p{p_idx}")
-                for pm_idx, pm in enumerate(pom.predicate_maps):
-                    pm_var = f"{var_prefix}_p{p_idx}_{pm_idx}"
-                    extend_pairs[pm_var] = _term_function(pm.tm_info, doc.base)
-                    for om_idx, om in enumerate(pom.object_maps):
-                        om_var = f"{var_prefix}_o{p_idx}_{om_idx}"
-                        if om.parent_tm is not None:
-                            if om.join_condition is not None:
-                                continue  # handled in join branch
-                            ptm = tm_index[om.parent_tm]
-                            if not tm.logical_source.same_as(
-                                    ptm.logical_source):
-                                continue  # cross-join branch
-                            # same-row: parent subject function on child rows
-                            extend_pairs[om_var] = _term_function(
-                                ptm.subject_map.tm_info, doc.base)
-                        else:
-                            extend_pairs[om_var] = _term_function(
-                                om.tm_info, doc.base, om.data_type, om.language)
-                        routes = router.route_ids(tm.subject_map.tm_info,
-                                                  pm.tm_info, om.tm_info)
-                        _emit_quads(lt_quads, routes, sm_var, pm_var, om_var,
-                                    sm_graph_vars, pom_graph_vars)
-                for name, fn in {**sm_graph_vars, **pom_graph_vars}.items():
-                    extend_pairs.setdefault(name, fn)
-            for name, fn in sm_graph_vars.items():
-                extend_pairs.setdefault(name, fn)
-
-            if any(lt_quads.values()):
-                plan = take_fragment(tm.identifier)
-                plan = plan.apply(ExtendOp.make(extend_pairs), "Extend")
-                router.sink_quads(plan, lt_quads)
-
-        # ---- join branches (mod.rs:203-313) ----
-        for p_idx, pom in enumerate(tm.po_maps):
-            if pom not in join_poms:
-                continue
-            pom_graph_vars = _graph_vars(compiled, doc, pom.graph_maps,
-                                         f"{var_prefix}_p{p_idx}")
-            for om_idx, om in enumerate(pom.object_maps):
-                if om.parent_tm is None:
-                    continue
-                ptm = tm_index[om.parent_tm]
-                if om.join_condition is None and \
-                        tm.logical_source.same_as(ptm.logical_source):
-                    continue  # compiled as same-row above
-                join_counter += 1
-                alias = f"join_{join_counter}"
-                child_plan = take_fragment(tm.identifier)
-                parent_plan = take_fragment(ptm.identifier)
-                jb = plan_join(child_plan, parent_plan).alias(alias)
-                if om.join_condition is not None:
-                    joined = jb.where_by(om.join_condition.child_attributes) \
-                               .compared_to(om.join_condition.parent_attributes)
-                else:
-                    joined = jb.cross_join()
-
-                extend_pairs = {}
-                lt_quads = {}
-                sm_var = f"{var_prefix}_sm"
-                extend_pairs[sm_var] = _term_function(tm.subject_map.tm_info,
-                                                      doc.base)
-                om_var = f"{var_prefix}_o{p_idx}_{om_idx}"
-                # parent subject map with alias-prefixed attrs (mod.rs:263-266)
-                ptm_sm = ptm.subject_map.tm_info.prefix_attributes(alias)
-                extend_pairs[om_var] = _term_function(ptm_sm, doc.base)
-                for pm_idx, pm in enumerate(pom.predicate_maps):
-                    pm_var = f"{var_prefix}_p{p_idx}_{pm_idx}"
-                    extend_pairs[pm_var] = _term_function(pm.tm_info, doc.base)
-                    routes = router.route_ids(tm.subject_map.tm_info,
-                                              pm.tm_info, om.tm_info)
-                    _emit_quads(lt_quads, routes, sm_var, pm_var, om_var,
-                                sm_graph_vars, pom_graph_vars)
-                for name, fn in {**sm_graph_vars, **pom_graph_vars}.items():
-                    extend_pairs.setdefault(name, fn)
-                plan = joined.apply(ExtendOp.make(extend_pairs), "Extend")
-                router.sink_quads(plan, lt_quads)
+        if tm.identifier in own:
+            pairs, quads = own[tm.identifier]
+            plan = next(outputs[tm.identifier])
+            router.sink_quads(plan.apply(ExtendOp.make(pairs), "Extend"), quads)
+        for alias, jc, parent_id, pairs, quads in joins[tm.identifier]:
+            jb = plan_join(next(outputs[tm.identifier]),
+                           next(outputs[parent_id])).alias(alias)
+            joined = jb.where_by(jc.child_attributes).compared_to(
+                jc.parent_attributes) if jc is not None else jb.cross_join()
+            router.sink_quads(joined.apply(ExtendOp.make(pairs), "Extend"),
+                              quads)
 
     return compiled
 
 
-def _graph_vars(compiled: CompiledMapping, doc: Document,
-                graph_maps: list[GraphMap], prefix: str) -> dict[str, Function]:
-    out: dict[str, Function] = {}
-    for g_idx, gm in enumerate(graph_maps):
-        var = f"{prefix}_gm{g_idx}"
-        out[var] = _term_function(gm.tm_info, doc.base)
-    return out
+def _graph_vars(graph_maps: list[GraphMap], prefix: str,
+                base: Optional[str]) -> dict[str, Function]:
+    return {f"{prefix}_gm{g_idx}": _term_function(gm.tm_info, base)
+            for g_idx, gm in enumerate(graph_maps)}
 
 
 def _emit_quads(lt_quads: dict[str, list[Quad]], routes: tuple[str, ...],

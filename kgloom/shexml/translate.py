@@ -167,11 +167,13 @@ class _ShapeResolver:
         C-value in C's iterator, null (→ suppressed triple) otherwise.
 
         Compiled as a LEFT equi-join of this branch against C's
-        iterator projected to the join field: the parent side is
-        deduplicated by the binder, so the joined column equals the
-        left value on match and null on miss — the expression simply
-        references the joined column.  Other expressions' triples for
-        unmatched rows survive (an inner join would drop them)."""
+        iterator projected to the join field, so the joined column
+        equals the left value on match and null on miss — the
+        expression simply references the joined column.  The parent
+        side is not deduplicated: a value several parent rows hold
+        repeats the child row, and the run's one distinct removes the
+        repeated triples.  Other expressions' triples for unmatched rows
+        survive (an inner join would drop them)."""
         if len(cols) != 1:
             return None  # concatenated left side: not join-keyable by attr
         bits = part.join_path.split(".")
@@ -397,8 +399,8 @@ def shexml_to_plan(doc: ShExMLDocument,
         plan = plan.apply(RenameOp.make(dict(resolver.renames)), "Rename")
         # cross-source JOIN clauses: LEFT equi-join per join target
         # (see _ShapeResolver._resolve_join for the null-suppression
-        # semantics); the parent is projected to its join field, which
-        # the binder deduplicates before the shuffle
+        # semantics); the parent is projected to its join field and not
+        # deduplicated — the run's one distinct drops repeated triples
         for jalias, (left_col, jsrc, jit, jfield) in resolver.joins.items():
             parent = Plan(graph).source(branch_source_op(jsrc, jit))
             parent = parent.apply(

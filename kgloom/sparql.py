@@ -161,6 +161,7 @@ from typing import Optional, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ops import closure
 from .ops.star import UNQUOTE_RE
 
 
@@ -1210,26 +1211,6 @@ def _graph_nodes(quads: DataFrame) -> DataFrame:
             .distinct())
 
 
-#: per-component edge budget for the in-partition closure path: a
-#: component at the cap emits at most ~edge_cap² ≈ 1M pairs from one
-#:  task (a few tens of MB of Arrow batch), safely inside executor
-#: memory.  Components above it take the distributed doubling path.
-CLOSURE_LOCAL_MAX_EDGES = 1_000
-
-
-def _transitive_closure(edges: DataFrame) -> DataFrame:
-    """Distinct transitive closure of an ``(__ps, __po)`` relation,
-    sized per connected component — delegates to the engine-wide
-    dispatcher :func:`kgloom.ops.closure.transitive_closure` (local
-    in-task BFS for components ≤ :data:`CLOSURE_LOCAL_MAX_EDGES`
-    edges, distributed doubling for giants).  The gate is read at call
-    time so tests (and callers) can tune this module's knob."""
-    from kgloom.ops.closure import transitive_closure
-
-    return transitive_closure(edges.select("__ps", "__po"),
-                              local_max_edges=CLOSURE_LOCAL_MAX_EDGES)
-
-
 def _path_pairs(quads: DataFrame, path) -> DataFrame:
     """All ``(__ps, __po)`` node pairs the path connects.  Atoms scan
     the quad DataFrame constant-filtered on ``pred`` (the filter
@@ -1262,12 +1243,13 @@ def _path_pairs(quads: DataFrame, path) -> DataFrame:
     if isinstance(path, PathClosure):
         inner = _path_pairs(quads, path.inner)
         if path.mod == "+":
-            return _transitive_closure(inner)
+            return closure.transitive_closure(inner)
         zero = _graph_nodes(quads).select(
             F.col("__node").alias("__ps"), F.col("__node").alias("__po"))
         if path.mod == "?":
             return inner.distinct().unionByName(zero).distinct()
-        return _transitive_closure(inner).unionByName(zero).distinct()
+        return closure.transitive_closure(inner).unionByName(zero) \
+            .distinct()
     if isinstance(path, PathNeg):
         parts = []
         if path.fwd:
@@ -1302,14 +1284,12 @@ def _exec_path_pattern(quads: DataFrame, s: Term, path, o: Term
     anchored = (isinstance(path, PathClosure) and path.mod in "+*"
                 and not (isinstance(s, Var) and isinstance(o, Var)))
     if anchored:
-        from kgloom.ops.closure import anchored_closure
-
         inner = _path_pairs(quads, path.inner)
         if not isinstance(s, Var):
-            df = anchored_closure(inner, [s], forward=True)
+            df = closure.anchored_closure(inner, [s], forward=True)
             ground = s
         else:
-            df = anchored_closure(inner, [o], forward=False)
+            df = closure.anchored_closure(inner, [o], forward=False)
             ground = o
         if path.mod == "*":
             # SPARQL §18.4 ZeroLengthPath: a ground term connects to

@@ -138,3 +138,24 @@ def test_unknown_reference_formulation_rejected_at_extraction(spark):
             run_rml(spark, text, base_dir=case)
 
     assert spark_jobs(spark, "unknown-formulation", run_mapping) == 0
+
+
+def test_unknown_parent_triples_map_rejected_at_extraction(spark):
+    """An rr:parentTriplesMap that names no triples map of the document
+    is rejected while the mapping is extracted, naming the object map
+    and the missing triples map, before any Spark job runs."""
+    from kgloom.rml import RmlValidationError, extract_document
+    from kgloom.rml.turtle import parse_turtle
+    case = os.path.join(os.path.dirname(CASE), "mixed_plain_join_pom")
+    with open(f"{case}/mapping.ttl", encoding="utf-8") as f:
+        text = f.read().replace("rr:parentTriplesMap <#Parent>",
+                                "rr:parentTriplesMap <#Missing>")
+    graph = parse_turtle(text)
+
+    def extract():
+        with pytest.raises(RmlValidationError,
+                           match=r"Person: object map \S+ names "
+                                 r"rr:parentTriplesMap \S+#Missing"):
+            extract_document(graph)
+
+    assert spark_jobs(spark, "unknown-parent", extract) == 0

@@ -6,6 +6,9 @@ scan, broadcasts on small sides, scan sharing across plan branches, and
 no Python evaluation nodes in the default triple hot path.
 """
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -86,13 +89,54 @@ def test_scan_sharing_across_branches(spark):
     assert all(v == 1 for v in seen.values()) and len(seen) == 1
 
 
-def test_join_parent_side_deduplicated(spark):
-    """The ref-object join's parent side carries a dedup before the
-    join (shuffle shrink, semantics-safe under RDF set output)."""
+def test_join_sides_not_deduplicated(spark):
+    """Neither side of the ref-object join is deduplicated: the
+    optimized plan holds ONE Aggregate, the run's RDF-set distinct,
+    above the Join and none below it (a dedup of the parent side would
+    be one more shuffle for a set that distinct establishes anyway)."""
     import __spark_entry__ as em
     df = em.queries()["kg_join_refobject"](spark, SF)
-    plan = explain_str(df)
-    assert "HashAggregate" in plan or "Deduplicate" in plan
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    ops = [ln.lstrip(" :+-").split(" ")[0] for ln in lines]
+    aggs = [i for i, op in enumerate(ops) if op == "Aggregate"]
+    joins = [i for i, op in enumerate(ops) if op == "Join"]
+    assert len(aggs) == 1 and len(joins) == 1, lines
+    # the Aggregate is an ancestor of the Join: every line from it down
+    # to the Join is nested deeper than the Aggregate
+    (a,), (j,) = aggs, joins
+    assert a < j and all(d > depth[a] for d in depth[a + 1:j + 1]), lines
+
+
+RML_FIXTURES = sorted(os.path.dirname(p) for p in glob.glob(os.path.join(
+    os.path.dirname(__file__), "fixtures", "rml", "*", "output.nq")))
+
+
+@pytest.mark.parametrize("case", RML_FIXTURES,
+                         ids=[os.path.basename(c) for c in RML_FIXTURES])
+def test_fixture_plan_reads_every_output_once(case):
+    """Every FragmentOp of a compiled fixture mapping splits into at
+    least 2 outputs, each read by exactly one edge, and every other
+    operator feeds exactly one edge: no fragment output is left unread
+    and no output is read twice without a FragmentOp.  The one
+    exception is the Projection of a triples map that no branch reads
+    (the parent of a same-row reference with no triples of its own):
+    every triples map keeps its Source → Projection, as in the
+    reference (mod.rs:314-428)."""
+    from kgloom.algebra import FragmentOp, ProjectOp, TargetOp
+    from kgloom.engine import compile_rml
+    with open(f"{case}/mapping.ttl", encoding="utf-8") as f:
+        graph = compile_rml(f.read()).graph
+    for node in graph.nodes.values():
+        op, out = node.operator, graph.successors(node.id)
+        if isinstance(op, FragmentOp):
+            assert len(op.to_fragments) >= 2, node.id
+            assert sorted(e.fragment for e in out) == \
+                sorted(op.to_fragments), (node.id, out)
+        elif isinstance(op, ProjectOp) and not out:
+            continue
+        elif not isinstance(op, TargetOp):
+            assert len(out) == 1, (node.id, out)
 
 
 def test_aqe_enabled_in_pipeline(spark, tmp_path):

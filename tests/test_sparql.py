@@ -1010,11 +1010,11 @@ def test_path_in_construct_where_not_template(chain):
 def test_path_closure_doubling_fallback_matches(chain, monkeypatch):
     """Forcing every component above the local gate routes the closure
     through the distributed path-doubling fallback — same pairs."""
-    import kgloom.sparql as sp
+    import kgloom.ops.closure as cl
     E = "http://ex.com/"
     q = f"PREFIX ex: <{E}> SELECT ?s ?o WHERE {{ ?s ex:next+ ?o . }}"
     local = {(r.s, r.o) for r in sparql_select(chain, q).collect()}
-    monkeypatch.setattr(sp, "CLOSURE_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(cl, "CLOSURE_LOCAL_MAX_EDGES", 0)
     doubled = {(r.s, r.o) for r in sparql_select(chain, q).collect()}
     assert local == doubled and len(local) == 8
 
