@@ -36,6 +36,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..algebra import Function, template_split
+from ..syntax import LITERAL_ESCAPES
 
 _ABS_IRI_PATTERN = "^[A-Za-z][A-Za-z0-9+.-]*:"
 _INVALID_IRI_CHARS = "[\\x00-\\x20<>\"{}|^`\\\\]"
@@ -95,13 +96,11 @@ def uri_encode(col: Column) -> Column:
 
 # --- N-Triples literal escaping --------------------------------------------
 
-_LITERAL_ESCAPES = (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"),
-                    ("\r", "\\r"), ("\t", "\\t"))
-
-
 def escape_literal(sql: str) -> str:
+    """SQL for the lexical form ``sql`` with the escapes of the
+    canonical rendered literal (:data:`kgloom.syntax.LITERAL_ESCAPES`)."""
     out = f"CAST({sql} AS STRING)"
-    for raw, esc in _LITERAL_ESCAPES:
+    for raw, esc in LITERAL_ESCAPES:
         out = f"replace({out}, {sql_string(raw)}, {sql_string(esc)})"
     return out
 

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops.star import QUOTED_TRIPLE, UNQUOTE_RE
-from .functions import _LITERAL_ESCAPES
+from ..syntax import LITERAL_ESCAPES
 
 #: literal with escape-aware quoting and optional @lang / ^^<datatype>
 _LIT = (r'"(?:[^"\\]|\\.)*"'
@@ -73,7 +73,7 @@ def _canonical_literal(term: F.Column) -> F.Column:
         code = F.unhex(F.substring(t, 3, 8))
         char = F.when(F.length(t) == 10, F.decode(code, "UTF-32")) \
             .otherwise(F.decode(code, "UTF-16BE"))
-        for raw, esc in _LITERAL_ESCAPES:
+        for raw, esc in LITERAL_ESCAPES:
             char = F.replace(char, F.lit(raw), F.lit(esc))
         return (F.when(t.startswith("\\") & (F.length(t) > 2), char)
                 .when(t == "\\'", F.lit("'"))

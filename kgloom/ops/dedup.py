@@ -121,6 +121,24 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+def lsh_bands(docs: DataFrame, num_hashes: int = 8, band_size: int = 2,
+              n: int = 3) -> DataFrame:
+    """(doc_id, band, band_key): every LSH band cell of every document,
+    the band key being the band's hashes joined by ``|``.  ONE pass over
+    the signature aggregate: explode an array of (band, band_key)
+    structs per doc (a union of per-band selects would re-run the
+    signature aggregation once per band)."""
+    sig = minhash_signatures(docs, num_hashes, n)
+    entries = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws("|", *[F.col(f"h{b * band_size + i}")
+                               for i in range(band_size)]).alias("band_key"))
+        for b in range(num_hashes // band_size)]
+    return (sig.select("doc_id", F.explode(F.array(*entries)).alias("e"))
+            .select("doc_id", "e.band", "e.band_key"))
+
+
 def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8,
                       band_size: int = 2, n: int = 3,
                       max_band_bucket: int | None = 1000) -> DataFrame:
@@ -141,20 +159,8 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8,
     (quadratic-bucket) semantics explicitly.  The driver oracle
     reproduces the SAME cap, so capped results stay hash-matched.
     """
-    sig = minhash_signatures(docs, num_hashes, n)
-    n_bands = num_hashes // band_size
-    # ONE pass over the signature aggregate: explode an array of
-    # (band, band_key) structs per doc (a union of per-band selects
-    # would re-run the signature aggregation once per band)
-    entries = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws("|", *[F.col(f"h{b * band_size + i}")
-                               for i in range(band_size)]).alias("band_key"))
-        for b in range(n_bands)]
     bands = tracked_persist(  # both self-join sides read the banded table
-        sig.select("doc_id", F.explode(F.array(*entries)).alias("e"))
-           .select("doc_id", "e.band", "e.band_key"))
+        lsh_bands(docs, num_hashes, band_size, n))
     if max_band_bucket is not None:
         ok = (bands.groupBy("band", "band_key").count()
               .where(F.col("count") <= max_band_bucket)

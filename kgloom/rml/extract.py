@@ -18,6 +18,9 @@ Validation (the corpus' invalid-mapping cases must yield no triples):
 - language tags must look like BCP-47   (RMLTC0015b: "english" invalid)
 - rml:source is a path or an IRI; a blank-node description (a
   csvw:Table) is rejected here rather than failing at bind time
+- a predicate-object map has a predicate map and an object map, and an
+  object map has no graph map (R2RML §6, §9): neither is compiled into
+  a plan that silently generates nothing or the wrong graph
 """
 
 from __future__ import annotations
@@ -349,6 +352,13 @@ def _extract_pom(graph: Graph, node: Term) -> PredicateObjectMap:
 
     oms: list[ObjectMap] = []
     for om_node in graph.objects(node, RR + "objectMap"):
+        if graph.objects(om_node, RR + "graphMap") or \
+                graph.objects(om_node, RR + "graph"):
+            # R2RML §9: graph maps belong to subject maps and
+            # predicate-object maps only
+            raise RmlValidationError(
+                f"object map {om_node[1]}: a graph map is allowed only on "
+                f"a subject map or a predicate-object map")
         parent = graph.object(om_node, RR + "parentTriplesMap")
         if parent is not None:
             jc = None
@@ -366,8 +376,7 @@ def _extract_pom(graph: Graph, node: Term) -> PredicateObjectMap:
                                     term_type=KIND_IRI,
                                     logical_targets=_extract_logical_targets(
                                         graph, om_node)),
-                parent_tm=_term_id(parent), join_condition=jc,
-                graph_maps=_extract_graph_maps(graph, om_node)))
+                parent_tm=_term_id(parent), join_condition=jc))
             continue
         tm_info = _extract_tm_info(graph, om_node, "object")
         lang = _lit(graph.object(om_node, RR + "language"))
@@ -380,8 +389,7 @@ def _extract_pom(graph: Graph, node: Term) -> PredicateObjectMap:
                     f"{om_node}: language tag on non-literal")
         dtype_term = graph.object(om_node, RR + "datatype")
         dtype = dtype_term[1] if dtype_term is not None else None
-        oms.append(ObjectMap(tm_info=tm_info, data_type=dtype, language=lang,
-                             graph_maps=_extract_graph_maps(graph, om_node)))
+        oms.append(ObjectMap(tm_info=tm_info, data_type=dtype, language=lang))
     for o in graph.objects(node, RR + "object"):
         kind = {"iri": KIND_IRI, "literal": KIND_LITERAL,
                 "bnode": KIND_BLANK}[o[0]]
@@ -390,6 +398,10 @@ def _extract_pom(graph: Graph, node: Term) -> PredicateObjectMap:
             term_map_type=TM_CONSTANT, term_value=o[1], term_type=kind),
             data_type=o[2] if kind == KIND_LITERAL else None,
             language=o[3] if kind == KIND_LITERAL else None))
-
+    if not pms or not oms:
+        # R2RML §6: at least one predicate map and one object map
+        raise RmlValidationError(
+            f"predicate-object map {node[1]}: needs a predicate map and an "
+            f"object map, found {len(pms)} and {len(oms)}")
     return PredicateObjectMap(predicate_maps=pms, object_maps=oms,
                               graph_maps=_extract_graph_maps(graph, node))

@@ -123,7 +123,6 @@ class PredicateMap:
     """term_map.rs:159-163."""
 
     tm_info: TermMapInfo
-    graph_maps: list[GraphMap] = field(default_factory=list)
 
 
 @dataclass
@@ -143,7 +142,6 @@ class ObjectMap:
     join_condition: Optional[JoinCondition] = None
     data_type: Optional[str] = None
     language: Optional[str] = None
-    graph_maps: list[GraphMap] = field(default_factory=list)
 
 
 @dataclass

@@ -10,8 +10,10 @@ recursive-descent parser for the Turtle subset RML mappings use:
 - the ``a`` keyword, ``;`` predicate lists, ``,`` object lists,
 - anonymous blank nodes ``[ ... ]`` (nested) and labeled ``_:b`` nodes,
 - RDF collections ``( ... )``,
-- string literals (single/triple quoted) with ``\\``-escapes, ``@lang``
-  tags and ``^^`` datatypes, plus bare numeric/boolean literals.
+- string literals (single/triple quoted) with the escapes of
+  :func:`kgloom.syntax.unescape` (any other escape raises
+  :class:`TurtleParseError`), ``@lang`` tags and ``^^`` datatypes, plus
+  bare numeric/boolean literals.
 
 Output: a list of (subject, predicate, object) triples where each term is
 a tagged tuple: ``('iri', iri)``, ``('bnode', label)``, or
@@ -22,6 +24,8 @@ from __future__ import annotations
 
 import re
 from typing import Optional
+
+from ..syntax import Cursor, unescape
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_TYPE = ("iri", RDF + "type")
@@ -36,9 +40,9 @@ class TurtleParseError(Exception):
     pass
 
 
-_TOKEN_RE = re.compile(
+_TOKEN = re.compile(
     r"""
-      (?P<COMMENT>\#[^\n]*)
+      (?P<skip>\s+|\#[^\n]*)
     | (?P<IRIREF><[^<>"{}|^`\\\x00-\x20]*>)
     | (?P<STRING3>\"\"\"(?:[^"\\]|\\.|\"(?!\"\"))*\"\"\"|'''(?:[^'\\]|\\.|'(?!''))*''')
     | (?P<STRING>\"(?:[^"\\\n]|\\.)*\"|'(?:[^'\\\n]|\\.)*')
@@ -49,44 +53,15 @@ _TOKEN_RE = re.compile(
     | (?P<INTEGER>[+-]?\d+)
     | (?P<DTYPE>\^\^)
     | (?P<BNODE>_:[A-Za-z0-9_][A-Za-z0-9_.-]*)
-    | (?P<PNAME>[A-Za-z0-9_][A-Za-z0-9_.-]*)?:(?:[A-Za-z0-9_:%]|[.-](?=[A-Za-z0-9_:%.-])|\\[-_~.!$&'()*+,;=/?\#@%])*
+    | (?P<PNAME>(?:[A-Za-z0-9_][A-Za-z0-9_.-]*)?:(?:[A-Za-z0-9_:%]|[.-](?=[A-Za-z0-9_:%.-])|\\[-_~.!$&'()*+,;=/?\#@%])*)
     | (?P<KEYWORD>\b(?:a|true|false)\b)
     | (?P<PUNCT>[;,.\[\]()])
-    | (?P<WS>\s+)
     """,
     re.VERBOSE,
 )
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
-
-_ESCAPES = {
-    "t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f",
-    '"': '"', "'": "'", "\\": "\\",
-}
-
-
-def _unescape(s: str) -> str:
-    out = []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "\\" and i + 1 < len(s):
-            n = s[i + 1]
-            if n in _ESCAPES:
-                out.append(_ESCAPES[n])
-                i += 2
-                continue
-            if n == "u" and i + 6 <= len(s):
-                out.append(chr(int(s[i + 2:i + 6], 16)))
-                i += 6
-                continue
-            if n == "U" and i + 10 <= len(s):
-                out.append(chr(int(s[i + 2:i + 10], 16)))
-                i += 10
-                continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+_NUMERIC = {"INTEGER": "integer", "DECIMAL": "decimal", "DOUBLE": "double"}
 
 
 _ABS_IRI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
@@ -107,42 +82,12 @@ def resolve_iri(iri: str, base: Optional[str]) -> str:
     return base + iri
 
 
-class _Tokenizer:
+class _Parser(Cursor):
+    grammar = _TOKEN
+    error = TurtleParseError
+
     def __init__(self, text: str):
-        self.tokens: list[tuple[str, str]] = []
-        pos = 0
-        while pos < len(text):
-            m = _TOKEN_RE.match(text, pos)
-            if not m or m.end() == pos:
-                raise TurtleParseError(
-                    f"unexpected character at offset {pos}: {text[pos:pos+30]!r}")
-            kind = m.lastgroup
-            if kind is None:  # PNAME alternative without named group
-                kind = "PNAME_FULL"
-            if kind not in ("WS", "COMMENT"):
-                self.tokens.append((kind, m.group(0)))
-            pos = m.end()
-        self.i = 0
-
-    def peek(self) -> Optional[tuple[str, str]]:
-        return self.tokens[self.i] if self.i < len(self.tokens) else None
-
-    def next(self) -> tuple[str, str]:
-        tok = self.peek()
-        if tok is None:
-            raise TurtleParseError("unexpected end of input")
-        self.i += 1
-        return tok
-
-    def expect(self, value: str) -> None:
-        tok = self.next()
-        if tok[1] != value:
-            raise TurtleParseError(f"expected {value!r}, got {tok[1]!r}")
-
-
-class _Parser:
-    def __init__(self, text: str):
-        self.tz = _Tokenizer(text)
+        super().__init__(text)
         self.prefixes: dict[str, str] = {}
         self.base: Optional[str] = None
         self.triples: list[tuple[Term, Term, Term]] = []
@@ -153,75 +98,54 @@ class _Parser:
         return ("bnode", f"__anon{self._bnode_n}")
 
     def parse(self) -> None:
-        while self.tz.peek() is not None:
-            kind, val = self.tz.peek()
-            if kind == "PREFIX_DIRECTIVE":
+        while self.peek()[0] is not None:
+            if self.peek()[0] == "PREFIX_DIRECTIVE":
                 self._directive()
             else:
                 self._triples_block()
 
     def _directive(self) -> None:
-        _, val = self.tz.next()
-        sparql_style = val in ("PREFIX", "BASE")
+        _, val = self.next()
         if val in ("@prefix", "PREFIX"):
-            _, pname = self.tz.next()
+            _, pname = self.next()
             if not pname.endswith(":"):
                 raise TurtleParseError(f"bad prefix name {pname!r}")
-            kind, iritok = self.tz.next()
-            if kind != "IRIREF":
-                raise TurtleParseError("prefix IRI expected")
-            self.prefixes[pname[:-1]] = resolve_iri(iritok[1:-1], self.base)
+            self.prefixes[pname[:-1]] = self._iri("prefix")
         else:  # @base / BASE
-            kind, iritok = self.tz.next()
-            if kind != "IRIREF":
-                raise TurtleParseError("base IRI expected")
-            self.base = resolve_iri(iritok[1:-1], self.base)
-        if not sparql_style:
-            self.tz.expect(".")
+            self.base = self._iri("base")
+        if val.startswith("@"):
+            self.expect(".")
+
+    def _iri(self, what: str) -> str:
+        kind, iritok = self.next()
+        if kind != "IRIREF":
+            raise TurtleParseError(f"{what} IRI expected")
+        return resolve_iri(iritok[1:-1], self.base)
 
     def _triples_block(self) -> None:
-        subj = self._term(subject_position=True)
+        subj = self._term()
         self._predicate_object_list(subj)
-        self.tz.expect(".")
+        self.expect(".")
 
     def _predicate_object_list(self, subj: Term) -> None:
         while True:
-            pred = self._verb()
-            self._object_list(subj, pred)
-            tok = self.tz.peek()
-            if tok and tok[1] == ";":
-                self.tz.next()
-                # allow trailing ';' before '.' or ']'
-                nxt = self.tz.peek()
-                if nxt and nxt[1] in (".", "]", ";"):
-                    while self.tz.peek() and self.tz.peek()[1] == ";":
-                        self.tz.next()
-                    return
-                continue
-            return
+            pred = RDF_TYPE if self.accept("a") else self._term()
+            self.triples.append((subj, pred, self._term()))
+            while self.accept(","):
+                self.triples.append((subj, pred, self._term()))
+            if not self.accept(";"):
+                return
+            # trailing ';'s before '.' or ']'
+            while self.accept(";"):
+                pass
+            if self.at(".", "]"):
+                return
 
-    def _verb(self) -> Term:
-        kind, val = self.tz.peek()
-        if kind == "KEYWORD" and val == "a":
-            self.tz.next()
-            return RDF_TYPE
-        return self._term()
-
-    def _object_list(self, subj: Term, pred: Term) -> None:
-        while True:
-            obj = self._term()
-            self.triples.append((subj, pred, obj))
-            tok = self.tz.peek()
-            if tok and tok[1] == ",":
-                self.tz.next()
-                continue
-            return
-
-    def _term(self, subject_position: bool = False) -> Term:
-        kind, val = self.tz.next()
+    def _term(self) -> Term:
+        kind, val = self.next()
         if kind == "IRIREF":
-            return ("iri", resolve_iri(_unescape(val[1:-1]), self.base))
-        if kind in ("PNAME", "PNAME_FULL") or (kind is None and ":" in val):
+            return ("iri", resolve_iri(val[1:-1], self.base))
+        if kind == "PNAME":
             prefix, _, local = val.partition(":")
             if prefix not in self.prefixes:
                 raise TurtleParseError(f"undefined prefix {prefix!r} in {val!r}")
@@ -229,49 +153,36 @@ class _Parser:
             return ("iri", self.prefixes[prefix] + local)
         if kind == "BNODE":
             return ("bnode", val[2:])
-        if kind == "PUNCT" and val == "[":
+        if val == "[":
             node = self.fresh_bnode()
-            if self.tz.peek() and self.tz.peek()[1] == "]":
-                self.tz.next()
-                return node
-            self._predicate_object_list(node)
-            self.tz.expect("]")
+            if not self.accept("]"):
+                self._predicate_object_list(node)
+                self.expect("]")
             return node
-        if kind == "PUNCT" and val == "(":
+        if val == "(":
             return self._collection()
         if kind in ("STRING", "STRING3"):
             q = 3 if kind == "STRING3" else 1
-            lex = _unescape(val[q:-q])
-            tok = self.tz.peek()
-            if tok and tok[0] == "LANGTAG":
-                self.tz.next()
-                return ("literal", lex, None, tok[1][1:])
-            if tok and tok[0] == "DTYPE":
-                self.tz.next()
+            lex = unescape(val[q:-q], TurtleParseError)
+            if self.peek()[0] == "LANGTAG":
+                return ("literal", lex, None, self.next()[1][1:])
+            if self.accept("^^"):
                 dt = self._term()
                 if dt[0] != "iri":
                     raise TurtleParseError("datatype must be an IRI")
                 return ("literal", lex, dt[1], None)
             return ("literal", lex, None, None)
-        if kind == "INTEGER":
-            return ("literal", val, XSD + "integer", None)
-        if kind == "DECIMAL":
-            return ("literal", val, XSD + "decimal", None)
-        if kind == "DOUBLE":
-            return ("literal", val, XSD + "double", None)
+        if kind in _NUMERIC:
+            return ("literal", val, XSD + _NUMERIC[kind], None)
         if kind == "KEYWORD" and val in ("true", "false"):
             return ("literal", val, XSD + "boolean", None)
         raise TurtleParseError(f"unexpected token {val!r}")
 
     def _collection(self) -> Term:
         items: list[Term] = []
-        while True:
-            tok = self.tz.peek()
-            if tok is None:
+        while not self.accept(")"):
+            if self.peek()[0] is None:
                 raise TurtleParseError("unterminated collection")
-            if tok[1] == ")":
-                self.tz.next()
-                break
             items.append(self._term())
         if not items:
             return RDF_NIL

@@ -26,6 +26,8 @@ import re
 from dataclasses import dataclass, field
 from typing import Optional
 
+from ..syntax import Cursor
+
 
 class ShExMLParseError(Exception):
     pass
@@ -148,51 +150,24 @@ class ShExMLDocument:
         return self.prefixes[name]
 
 
-_TOKENS = re.compile(r"""
-      (?P<COMMENT>//[^\n]*|\#[^\n]*)
+_TOKEN = re.compile(r"""
+      (?P<skip>\s+|//[^\n]*|\#[^\n]*)
     | (?P<KW>\b(?:PREFIX|SOURCE|ITERATOR|FIELD|PUSHED_FIELD|POPPED_FIELD|
                 EXPRESSION|MATCHER|AUTOINCREMENT|FUNCTIONS|QUERY)\b)
     | (?P<ANGLE><[^<>]*>)
     | (?P<STRING>"[^"\n]*")
     | (?P<NAME>[A-Za-z_][A-Za-z0-9_.-]*)
     | (?P<PUNCT>[:;{}\[\]()@,+])
-    | (?P<WS>\s+)
     """, re.VERBOSE)
 
 
-def _tokenize(text: str) -> list[tuple[str, str]]:
-    out, pos = [], 0
-    while pos < len(text):
-        m = _TOKENS.match(text, pos)
-        if not m or m.end() == pos:
-            raise ShExMLParseError(
-                f"unexpected character at {pos}: {text[pos:pos+30]!r}")
-        if m.lastgroup not in ("WS", "COMMENT"):
-            out.append((m.lastgroup, m.group(0)))
-        pos = m.end()
-    return out
+class _P(Cursor):
+    grammar = _TOKEN
+    error = ShExMLParseError
 
-
-class _P:
     def __init__(self, text: str):
-        self.toks = _tokenize(text)
-        self.i = 0
+        super().__init__(text)
         self.doc = ShExMLDocument()
-
-    def peek(self, k=0):
-        return self.toks[self.i + k] if self.i + k < len(self.toks) else (None, None)
-
-    def next(self):
-        t = self.peek()
-        if t[0] is None:
-            raise ShExMLParseError("unexpected end of input")
-        self.i += 1
-        return t
-
-    def expect(self, val):
-        t = self.next()
-        if t[1] != val:
-            raise ShExMLParseError(f"expected {val!r}, got {t[1]!r}")
 
     # ------------------------------------------------------------------
     def parse(self) -> ShExMLDocument:
@@ -231,10 +206,7 @@ class _P:
 
     def _kw_prefix(self):
         self.next()  # PREFIX
-        k, v = self.peek()
-        name = ""
-        if k == "NAME":
-            name = self.next()[1]
+        name = self.next()[1] if self.peek()[0] == "NAME" else ""
         self.expect(":")
         self.doc.prefixes[name] = self._angle()
 
@@ -288,14 +260,13 @@ class _P:
     def _field_block(self) -> list[SxField]:
         self.expect("{")
         fields: list[SxField] = []
-        while self.peek()[1] != "}":
+        while not self.accept("}"):
             kind, val = self.peek()
-            if kind == "KW" and val in ("FIELD", "PUSHED_FIELD", "POPPED_FIELD"):
-                self.next()
+            if kind == "KW" and self.accept("FIELD", "PUSHED_FIELD",
+                                            "POPPED_FIELD"):
                 alias = self.next()[1]
                 fields.append(SxField(alias=alias, query=self._angle()))
-            elif kind == "KW" and val == "ITERATOR":
-                self.next()
+            elif kind == "KW" and self.accept("ITERATOR"):
                 alias = self.next()[1]
                 spec = self._angle()
                 _, q = self._iterator_spec(spec)
@@ -304,7 +275,6 @@ class _P:
                 fields.append(sub)
             else:
                 raise ShExMLParseError(f"unexpected token in iterator: {val!r}")
-        self.expect("}")
         return fields
 
     def _kw_expression(self):
@@ -407,14 +377,9 @@ class _P:
     # -- shapes ----------------------------------------------------------
     def _prefixed_name(self) -> tuple[str, str]:
         """Parse ``prefix:local`` or ``:local``; returns (prefix, local)."""
-        k, v = self.peek()
-        prefix = ""
-        if k == "NAME":
-            prefix = self.next()[1]
+        prefix = self.next()[1] if self.peek()[0] == "NAME" else ""
         self.expect(":")
-        local = ""
-        if self.peek()[0] == "NAME":
-            local = self.next()[1]
+        local = self.next()[1] if self.peek()[0] == "NAME" else ""
         return prefix, local
 
     def _shape(self, graph: Optional[str] = None):
@@ -422,9 +387,9 @@ class _P:
         shape_name = f"{prefix}:{local}"
         # graph shape: `:MyGraph [[ ...shapes... ]]` (parser/type.rs
         # graph_shapes) — shapes inside land in that named graph
-        if self.peek()[1] == "[" and self.peek(1)[1] == "[":
+        if self.at("[") and self.at("[", k=1):
             self.next(), self.next()
-            while not (self.peek()[1] == "]" and self.peek(1)[1] == "]"):
+            while not (self.at("]") and self.at("]", k=1)):
                 if self.peek()[0] is None:
                     raise ShExMLParseError("unterminated graph shape")
                 self._shape(graph=shape_name)
@@ -435,11 +400,9 @@ class _P:
                         subject_expression=s_expr, subject_constant=s_const,
                         graph=graph, subject_condition=s_cond)
         self.expect("{")
-        while self.peek()[1] != "}":
+        while not self.accept("}"):
             shape.predicate_objects.append(self._predicate_object())
-            if self.peek()[1] == ";":
-                self.next()
-        self.expect("}")
+            self.accept(";")
         self.doc.shapes[shape_name] = shape
 
     _COND_RE = re.compile(r"^\s*([\w.]+)\s*\(\s*(.*?)\s*\)\s*$")
@@ -460,13 +423,9 @@ class _P:
 
     def _subject(self) -> tuple[str, Optional[str], Optional[str],
                                 Optional[SxCondition]]:
-        k, v = self.peek()
-        prefix = ""
-        if k == "NAME":
-            prefix = self.next()[1]
+        prefix = self.next()[1] if self.peek()[0] == "NAME" else ""
         self.expect(":")
-        if self.peek()[1] == "[":
-            self.next()
+        if self.accept("["):
             expr, cond = self._split_condition(self._expr_until("]"))
             return prefix, expr, None, cond
         if self.peek()[0] == "NAME":  # constant subject (FilmsAlt)
@@ -475,17 +434,15 @@ class _P:
 
     def _expr_until(self, closer: str) -> str:
         parts = []
-        while self.peek()[1] != closer:
+        while not self.accept(closer):
             if self.peek()[0] is None:
                 raise ShExMLParseError(f"missing {closer}")
             parts.append(self.next()[1])
-        self.next()
         return " ".join(parts)
 
     def _predicate_object(self) -> SxPredicateObject:
         # `a` keyword predicate (rdf:type) unless 'a' is a declared prefix
-        if self.peek()[1] == "a" and "a" not in self.doc.prefixes:
-            self.next()
+        if "a" not in self.doc.prefixes and self.accept("a"):
             obj = self._object()
             return SxPredicateObject(predicate_prefix="__rdf_type__",
                                      predicate_local="type", obj=obj)
@@ -495,18 +452,16 @@ class _P:
                                  predicate_local=p_local, obj=obj)
 
     def _object(self) -> SxObject:
-        k, v = self.peek()
-        if v == "@":  # link or language-tagged? '@shape' link
-            self.next()
+        if self.accept("@"):  # '@shape' link
             prefix, local = self._prefixed_name()
             return SxObject(kind="link", link_shape=f"{prefix}:{local}")
-        if v == "[":  # plain literal expression
-            self.next()
+        if self.accept("["):  # plain literal expression
             expr, matcher, cond = self._expr_and_matcher()
             obj = SxObject(kind="expr", prefix=None, expression=expr,
                            matcher=matcher, condition=cond)
             self._suffixes(obj)
             return obj
+        k, v = self.peek()
         if k == "STRING":
             self.next()
             obj = SxObject(kind="literal", constant=v[1:-1])
@@ -514,13 +469,11 @@ class _P:
             return obj
         # prefixed: either prefix:[expr] (IRI from expr) or prefix:local
         prefix = ""
-        if k == "NAME" and self.peek(1)[1] == ":":
+        if k == "NAME" and self.at(":", k=1):
             prefix = self.next()[1]
-        if self.peek()[1] != ":":
+        if not self.accept(":"):
             raise ShExMLParseError(f"unexpected object token {v!r}")
-        self.next()  # ':'
-        if self.peek()[1] == "[":
-            self.next()
+        if self.accept("["):
             expr, matcher, cond = self._expr_and_matcher()
             return SxObject(kind="expr", prefix=prefix, expression=expr,
                             matcher=matcher, condition=cond)
@@ -536,11 +489,9 @@ class _P:
         return body.strip(), None, cond
 
     def _suffixes(self, obj: SxObject) -> None:
-        k, v = self.peek()
-        if v == "@":  # language tag
-            self.next()
+        if self.accept("@"):  # language tag
             obj.language = self.next()[1]
-        elif k == "NAME" and self.peek(1)[1] == ":":
+        elif self.peek()[0] == "NAME" and self.at(":", k=1):
             prefix = self.next()[1]
             self.next()
             local = self.next()[1]

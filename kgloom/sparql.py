@@ -163,6 +163,7 @@ from pyspark.sql import functions as F
 
 from .ops import closure
 from .ops.star import UNQUOTE_RE
+from .syntax import LITERAL_ESCAPES, Cursor, render_literal, unescape
 
 
 class SparqlError(Exception):
@@ -312,20 +313,6 @@ class SelectQuery:
         return self.group.filters
 
 
-_ESCAPES = {"\\": "\\\\", '"': '\\"', "\n": "\\n", "\r": "\\r", "\t": "\\t"}
-
-
-def _render_literal(lex: str, lang: Optional[str], dtype: Optional[str]) -> str:
-    for src, dst in _ESCAPES.items():
-        lex = lex.replace(src, dst)
-    out = f'"{lex}"'
-    if lang:
-        out += f"@{lang}"
-    elif dtype:
-        out += f"^^<{dtype}>"
-    return out
-
-
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _XSD = "http://www.w3.org/2001/XMLSchema#"
 
@@ -352,35 +339,11 @@ _LIT = re.compile(r'"((?:[^"\\]|\\.)*)"(?:@([A-Za-z0-9-]+)|\^\^<([^>]*)>'
                   r'|\^\^(\S+))?$', re.DOTALL)
 
 
-def _tokenize(text: str) -> list[tuple[str, str]]:
-    out, pos = [], 0
-    while pos < len(text):
-        m = _TOKEN.match(text, pos)
-        if m is None:
-            raise SparqlError(f"cannot tokenize at: {text[pos:pos + 30]!r}")
-        pos = m.end()
-        if m.lastgroup != "skip":
-            out.append((m.lastgroup, m.group()))
-    return out
-
-
 def _quoted(s: Term, p: Term, o: Term) -> Term:
     """``<< s p o >>``: a :class:`QuotedPattern`, or its rendered
     string term when ground."""
     q = QuotedPattern(s, p, o)
     return q if q.vars() else f"<< {s} {p} {o} >>"
-
-
-_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f"}
-
-
-def _unescape(lex: str) -> str:
-    """Decode the escapes of a literal's lexical form: ``\\uXXXX``,
-    ``\\UXXXXXXXX`` and the string escapes (``\\"`` → ``"`` ...)."""
-    return re.sub(r"\\(u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8}|.)",
-                  lambda m: chr(int(m.group(1)[1:], 16))
-                  if len(m.group(1)) > 1 else
-                  _ECHAR.get(m.group(1), m.group(1)), lex, flags=re.DOTALL)
 
 
 class _DefaultGraphOnly:
@@ -423,14 +386,18 @@ _EXPR_FUNCS: dict[str, object] = {
 }
 
 
-class _Parser:
+class _Parser(Cursor):
     """Recursive descent over the token list of one request.  The
     prologue's prefixes resolve every prefixed name as it is read, so
-    the trees it returns hold rendered terms only."""
+    the trees it returns hold rendered terms only.  Keywords match
+    case-insensitively."""
+
+    grammar = _TOKEN
+    error = SparqlError
+    keyword_kind = "name"
 
     def __init__(self, text: str):
-        self.toks = _tokenize(text)
-        self.i = 0
+        super().__init__(text)
         self.prefixes: dict[str, str] = {}
         self.aggs_ok = False   # inside a projection, HAVING or ORDER BY
 
@@ -442,32 +409,6 @@ class _Parser:
             raise SparqlError(f"unexpected {self.toks[self.i][1]!r} after "
                               f"the end of the request")
         return out
-
-    # --- token cursor ------------------------------------------------------
-
-    def peek(self, k: int = 0) -> tuple:
-        j = self.i + k
-        return self.toks[j] if j < len(self.toks) else (None, None)
-
-    def next(self) -> tuple:
-        if self.i >= len(self.toks):
-            raise SparqlError("unexpected end of query")
-        self.i += 1
-        return self.toks[self.i - 1]
-
-    def at(self, *vals: str, k: int = 0) -> bool:
-        """Token ``k`` ahead is one of ``vals``; keywords match
-        case-insensitively."""
-        kind, val = self.peek(k)
-        return val in vals or kind == "name" and val.upper() in vals
-
-    def accept(self, *vals: str) -> Optional[str]:
-        return self.next()[1].upper() if self.at(*vals) else None
-
-    def expect(self, val: str, msg: Optional[str] = None) -> None:
-        if not self.accept(val):
-            raise SparqlError(msg or f"expected {val!r}, got "
-                              f"{self.peek()[1] or 'the end of the query'!r}")
 
     def var(self) -> str:
         kind, val = self.next()
@@ -509,12 +450,13 @@ class _Parser:
         if kind == "pname":
             return f"<{self.expand(val)}>"
         if kind == "num":
-            return _render_literal(val, None, _XSD + (
+            return render_literal(val, None, _XSD + (
                 "decimal" if "." in val else "integer"))
         if kind == "lit":
             m = _LIT.match(val)
             dtype = self.expand(m.group(4)) if m.group(4) else m.group(3)
-            return _render_literal(_unescape(m.group(1)), m.group(2), dtype)
+            return render_literal(unescape(m.group(1), SparqlError),
+                                  m.group(2), dtype)
         raise SparqlError(f"unexpected term {val!r}")
 
     def integer(self, what: str) -> int:
@@ -1462,20 +1404,20 @@ def _check_bound(e: Expr, columns: list[str], what: str) -> None:
 
 
 def _unrender(term: str) -> str:
-    """Python-side inverse of :func:`_render_literal` for a constant
-    literal (used where an expression argument must be a plain string,
-    e.g. REPLACE patterns)."""
+    """Python-side inverse of :func:`~kgloom.syntax.render_literal`
+    for a constant literal (used where an expression argument must be a
+    plain string, e.g. REPLACE patterns)."""
     m = re.match(r'^"((?:[^"\\]|\\.)*)"', term)
     if m is None:
         raise SparqlError(f"expected a string literal, got {term!r}")
-    return _unescape(m.group(1))
+    return unescape(m.group(1), SparqlError)
 
 
 def _escape_lit(col: F.Column) -> F.Column:
     """Rendered-literal escaping of a plain string column (the Column
-    mirror of :func:`_render_literal`)."""
-    for src, dst in _ESCAPES.items():
-        col = F.replace(col, F.lit(src), F.lit(dst))
+    mirror of :func:`~kgloom.syntax.render_literal`)."""
+    for raw, esc in LITERAL_ESCAPES:
+        col = F.replace(col, F.lit(raw), F.lit(esc))
     return col
 
 

@@ -40,27 +40,11 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ops.dedup import minhash_signatures
+from ..ops.dedup import lsh_bands
 from . import state
 
 _BANDS_DDL = "doc_id string, band int, band_key string"
 _FLAGS_DDL = "doc_id string, is_dup boolean, via_history boolean"
-
-
-def doc_bands(docs: DataFrame, num_hashes: int = 8,
-              band_size: int = 2, n: int = 3) -> DataFrame:
-    """(doc_id, band, band_key): every LSH band cell of every
-    document — the unit of both matching and state."""
-    sig = minhash_signatures(docs, num_hashes=num_hashes, n=n)
-    bands = []
-    for b in range(num_hashes // band_size):
-        cols = [F.col(f"h{b * band_size + i}")
-                for i in range(band_size)]
-        bands.append(F.struct(F.lit(b).alias("band"),
-                              F.concat_ws("|", *cols).alias("band_key")))
-    return (sig.select(F.col("doc_id").cast("string").alias("doc_id"),
-                       F.explode(F.array(*bands)).alias("bb"))
-            .select("doc_id", "bb.band", "bb.band_key"))
 
 
 def read_bands(spark: SparkSession, state_path: str,
@@ -74,7 +58,8 @@ def flag_against(history: Optional[DataFrame], batch_docs: DataFrame,
     """Pure fold step: returns (flags, bands) for one batch against a
     band-cell history (DataFrame-in/DataFrame-out so batch replays can
     drive the exact streaming recurrence without parquet state)."""
-    bands = doc_bands(batch_docs, num_hashes, band_size, n)
+    bands = lsh_bands(batch_docs, num_hashes, band_size, n).withColumn(
+        "doc_id", F.col("doc_id").cast("string"))
     if history is not None:
         hist_hits = (bands.join(
             history.select("band", "band_key").distinct(),

@@ -1,12 +1,14 @@
 """Count code lines of Python files.
 
-Usage: python scripts/loc.py PATH...
+Usage: python scripts/loc.py [PATH...]
 
 A code line is a physical line that holds at least one token that is
 not a comment and does not lie inside a docstring (the first string
 statement of a module, class or function).  Blank lines, comment-only
 lines and docstring lines are not counted.  Directories are walked for
-``*.py`` files.  Prints one line per file and the total.
+``*.py`` files.  Prints one line per file and the total.  With no
+PATH, counts the non-test tree: ``kgloom/``, ``__spark_entry__.py``,
+``bench.py`` and ``scripts/`` of the checkout this script sits in.
 """
 
 from __future__ import annotations
@@ -16,6 +18,9 @@ import io
 import os
 import sys
 import tokenize
+
+#: the non-test tree, relative to the checkout root
+DEFAULT_PATHS = ("kgloom", "__spark_entry__.py", "bench.py", "scripts")
 
 _SKIP = {tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
          tokenize.DEDENT, tokenize.ENCODING, tokenize.ENDMARKER}
@@ -68,5 +73,5 @@ def main(paths: list[str]) -> None:
 
 if __name__ == "__main__":
     if len(sys.argv) < 2:
-        sys.exit(__doc__.strip())
-    main(sys.argv[1:])
+        os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    main(sys.argv[1:] or list(DEFAULT_PATHS))

@@ -159,3 +159,27 @@ def test_unknown_parent_triples_map_rejected_at_extraction(spark):
             extract_document(graph)
 
     assert spark_jobs(spark, "unknown-parent", extract) == 0
+
+
+@pytest.mark.parametrize("fixture,message", [
+    ("pom_without_object_map",
+     r"predicate-object map .*found 1 and 0"),
+    ("object_map_graph_map",
+     r"object map .*graph map is allowed only on a subject map"),
+])
+def test_r2rml_shape_rejected_at_extraction(spark, fixture, message):
+    """R2RML §6 and §9 shapes the plan could only honour by generating
+    nothing (a predicate-object map without an object map) or the wrong
+    graph (a graph map on an object map) raise inside
+    ``extract_document``, before any Spark job runs."""
+    from kgloom.rml import RmlValidationError
+    from kgloom.rml.extract import extract_document
+    from kgloom.rml.turtle import parse_turtle_file
+    case = os.path.join(os.path.dirname(CASE), fixture)
+    graph = parse_turtle_file(f"{case}/mapping.ttl")
+
+    def extract():
+        with pytest.raises(RmlValidationError, match=message):
+            extract_document(graph)
+
+    assert spark_jobs(spark, fixture, extract) == 0
